@@ -1,0 +1,1 @@
+"""Track×grid benchmark; run ``python3 perfbench/run.py --help``."""
