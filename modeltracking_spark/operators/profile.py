@@ -12,12 +12,20 @@ point (N+1 loops); here the whole track resolves in ONE broadcast join
 against the grid table:
 
 - the track side (n_points x 9 neighbor keys) is tiny -> broadcast;
-- the grid scan streams once; depth truncation and the time-bucket set
-  push down as filters on grid columns;
+- the grid scan streams once, behind depth truncation as a filter on
+  grid columns;
 - the IDW reduce is a map-side-combinable hash aggregate.
 
-At 100 TB: grid partitioned by time_hours -> the time-bucket semi-join
-prunes partitions; lat/lon bucketing co-locates the neighborhood join.
+A single track (``track_col=None``) also states its footprint as plain
+filters on the grid: ``time_hours IN`` its time buckets and a
+``lat_idx``/``lon_idx`` box grown by the neighbourhood radius. The
+footprint comes from the tiny track side, so building a single-track
+plan runs one small Spark job. Any grid that takes filters prunes with
+it: the in-engine fixture's ranges, parquet, and the ``hycom_grid``
+DataSource with ``pushdown=true``, which then reads only that window (a
+few hundred KB over DAP instead of the whole grid). The fleet shape
+keeps the plain plan: a season's footprint covers nearly the whole grid,
+so the extra job would cost more than it prunes.
 """
 
 from __future__ import annotations
@@ -39,6 +47,26 @@ def nearest_time_bucket(t: F.Column, step: int) -> F.Column:
     forward (impossible for odd steps on integer inputs)."""
     return (
         F.floor((2 * t + F.lit(step)) / F.lit(2 * step)).cast("long") * step
+    )
+
+
+def _footprint(snapped: DataFrame, radius: int) -> F.Column:
+    """The grid rows one snapped track can join, as a filter: its set of
+    time buckets and its ``lat_idx``/``lon_idx`` box grown by
+    ``radius``. Computed with one small aggregate over the track."""
+    steps, la0, la1, lo0, lo1 = snapped.agg(
+        F.collect_set("t_sel"),
+        F.min("lat_idx"),
+        F.max("lat_idx"),
+        F.min("lon_idx"),
+        F.max("lon_idx"),
+    ).first()
+    if not steps or la0 is None or lo0 is None:
+        return F.lit(False)
+    return (
+        F.col("time_hours").isin(sorted(steps))
+        & F.col("lat_idx").between(la0 - radius, la1 + radius)
+        & F.col("lon_idx").between(lo0 - radius, lo1 + radius)
     )
 
 
@@ -70,6 +98,9 @@ def profile_neighbors(
     the broadcast side through the expand and join, so N storms profile
     in the SAME single grid scan + broadcast join — no per-track loop,
     and point_ids only need to be unique within a track.
+
+    ``track_col=None`` filters ``grid`` to the track's footprint (see
+    :func:`_footprint`), which runs one small job over ``track`` now.
     """
     tcols = [track_col] if track_col else []
     snapped = track.select(
@@ -85,6 +116,8 @@ def profile_neighbors(
         .cast("int")
         .alias("lon_idx"),
     )
+    if track_col is None:
+        grid = grid.where(_footprint(snapped, radius))
     nb = neighborhood_expand(snapped, radius=radius).withColumnsRenamed(
         {"lat": "p_lat", "lon": "p_lon"}
     )
@@ -147,6 +180,14 @@ def profile_along_track(
 
     Plain double Σwv/Σw for engine use; the oracle-checked query variant
     (``queries/track_q.py``) lifts the same rows to fixed point first.
+
+    A single track reads only its footprint of ``grid`` (module
+    docstring). With a ``hycom_grid`` DataFrame loaded with
+    ``pushdown=true`` that footprint is planned into the scan, and
+    pyspark reuses the last planned scan for a later filterless query on
+    the same DataFrame: ``grid.count()`` after this call counts the
+    footprint, not the grid. Profiling further tracks with the same
+    DataFrame is exact; use a fresh ``.load()`` for any other query.
     """
     keys = ([track_col] if track_col else []) + [
         "point_id", "depth_idx", "depth_m"

@@ -29,8 +29,9 @@ from modeltracking_spark.queries.common import T, cents, query, rank_median_sql
 )
 def grid_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: scan the grid through the CUSTOM Python DataSource
-    (``sources/grid_source.py`` — one InputPartition per time step, Arrow
-    RecordBatch emission) and aggregate per time step. The oracle
+    (``sources/grid_source.py`` — time steps packed into at most one
+    InputPartition per core, one Arrow RecordBatch per step) and
+    aggregate per time step. The oracle
     recomputes the grid from the SQL formula, so a hash match proves the
     DataSource emits the fixture byte-for-byte."""
     from pyspark.errors import PySparkException
@@ -73,8 +74,9 @@ def grid_netcdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader (``sources/netcdf_classic.py``) — closing the reference's one
     capability without an executable twin (``trackplot_hycom.py:144``
     ``netCDF4.Dataset(url)`` + server-side slicing ``:110``). Each of
-    the 28 partitions seeks to its timestep's record byte range and
-    reads only that slice. The fixture file is materialized once
+    the 28 time steps is read from its record byte range alone, and
+    the steps are packed into at most one partition per core. The
+    fixture file is materialized once
     (driver-side, streamed record-by-record) and holds the formula
     grid, so the formula oracle checks the netCDF encode->decode->scan
     pipeline end to end. In production the path is shared storage; in
@@ -111,6 +113,7 @@ def grid_netcdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     gen_src = (
         inspect.getsource(_gs._partition_arrays)
+        + inspect.getsource(_gs._box_mesh)
         + inspect.getsource(_gs.write_grid_netcdf)
         + inspect.getsource(_nc.write_classic)
     )
@@ -221,6 +224,7 @@ def dap_grid_mode_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     gen_src = (
         inspect.getsource(_gs._partition_arrays)
+        + inspect.getsource(_gs._box_mesh)
         + inspect.getsource(_gs.write_grid_netcdf)
         + inspect.getsource(_nc.write_classic)
     )
@@ -268,12 +272,12 @@ def grid_netcdf_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     THREDDS actually serves its hypercubes: physics variables stored as
     int16 with CF scale_factor/add_offset/missing_value attributes (¼
     the bytes), unpacked transparently by the partition loader
-    (read_slice(apply_cf=True) + sentinel restore — netCDF4's auto
+    (cf_unpack + sentinel restore — netCDF4's auto
     mask-and-scale, now in OUR reader). The fixture values are exact
     multiples of 0.1, so packing is LOSSLESS and the SAME formula
     oracle attests the packed encode -> CF-unpack -> scan pipeline
     bit-exactly (sources/grid_source.py:write_grid_netcdf_packed /
-    _physics_slice; packed==formula parity pinned per-column in
+    _physics_block; packed==formula parity pinned per-column in
     tests/test_netcdf.py)."""
     import hashlib
     import inspect
@@ -298,8 +302,9 @@ def grid_netcdf_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     gen_src = (
         inspect.getsource(_gs._partition_arrays)
+        + inspect.getsource(_gs._box_mesh)
         + inspect.getsource(_gs.write_grid_netcdf_packed)
-        + inspect.getsource(_gs._physics_slice)
+        + inspect.getsource(_gs._physics_block)
         + inspect.getsource(_nc.write_classic)
     )
     key = (

@@ -11,14 +11,14 @@ spec (NetCDF Classic Format Specification, Unidata) — header parse plus
 variable seeks to ``begin + t * recsize`` and reads one record's bytes,
 never the whole variable. That per-slice read is the local-file analog
 of the reference's DAP slicing, and it is what
-``sources/grid_source.py`` partitions do per task when given a
-``path`` option.
+``sources/grid_source.py`` does per time step when given a ``path``
+option.
 
 Scale posture: the reader holds only (a) the parsed header (KBs) and
 (b) one record slice per call. A 100 TB hypercube read through the grid
-DataSource schedules one task per timestep; each task opens the file
-(or object-store range-GET in a real deployment), reads its record's
-byte range, and emits one Arrow batch.
+DataSource schedules one task per run of timesteps; each task opens the
+file (or object-store range-GET in a real deployment), reads each
+record's byte range, and emits one Arrow batch per record.
 
 Format notes (classic, from the public spec):
 - big-endian throughout; names/attr values/data blocks padded to 4 bytes

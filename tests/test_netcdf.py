@@ -134,7 +134,13 @@ def test_datasource_netcdf_backend_and_pruning(spark, tmp_path_factory):
     )
     one = gp.where(F.col("time_hours") == GRID_TIME_STEP * 2)
     assert one.count() == 30 * 81 * 81
-    assert one.rdd.getNumPartitions() == 1  # 3 of 4 timesteps pruned
+    # 3 of 4 timesteps pruned: only the kept step is read, in
+    # min(kept, cores) = 1 partition
+    assert [r[0] for r in one.select("time_hours").distinct().collect()] \
+        == [GRID_TIME_STEP * 2]
+    assert one.rdd.getNumPartitions() == 1
+    # the unfiltered file scan packs its 4 steps into min(4, cores)
+    assert g.rdd.getNumPartitions() == min(4, len(os.sched_getaffinity(0)))
 
 
 # ---------------------------------------------------------------------------
