@@ -9,7 +9,9 @@ Reference: ``zip_variable3D`` + ``hycomScrubber`` + ``IDW_Slice_nc4``
 (``trackplot_hycom.py:199-223``, ``:135-148``, ``:88-115``). The
 reference re-opens the remote dataset and scans all grid nodes per track
 point (N+1 loops); here the whole track resolves in ONE broadcast join
-against the grid table:
+against the grid table and ONE hash aggregate (a fleet keyed by a
+non-integral id adds a small dictionary join after the aggregate, see
+below):
 
 - the track side (n_points x 9 neighbor keys) is tiny -> broadcast;
 - the grid scan streams once, behind depth truncation as a filter on
@@ -26,6 +28,21 @@ DataSource with ``pushdown=true``, which then reads only that window (a
 few hundred KB over DAP instead of the whole grid). The fleet shape
 keeps the plain plan: a season's footprint covers nearly the whole grid,
 so the extra job would cost more than it prunes.
+
+Every per-row key is fixed-width:
+
+- the join matches on ONE ``long`` node key, ``(time_hours, lat_idx,
+  lon_idx)`` packed by :func:`_node_key` with the same expression on
+  both sides, so Spark builds a ``LongHashedRelation`` instead of probing
+  a three-column key. A track point outside the packed range gets a NULL
+  key and joins nothing, as an off-grid point always has; a grid row
+  outside it raises an error naming the column;
+- the fleet aggregate groups on an integral ``track_col`` as it is. Any
+  other id type (a storm name) is replaced by a 64-bit surrogate
+  (:func:`_track_surrogate`), and the ids come back through a small
+  broadcast dictionary built from the track side
+  (:func:`_track_dictionary`), which raises an error naming the column if
+  two ids share a surrogate. Only that shape adds the dictionary's jobs.
 """
 
 from __future__ import annotations
@@ -34,6 +51,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from modeltracking_spark.functions.geo import euclid_deg, inv_square_weight
 from modeltracking_spark.operators.aggregates import mask_sentinel
@@ -47,6 +65,73 @@ def nearest_time_bucket(t: F.Column, step: int) -> F.Column:
     forward (impossible for odd steps on integer inputs)."""
     return (
         F.floor((2 * t + F.lit(step)) / F.lit(2 * step)).cast("long") * step
+    )
+
+
+#: bits per grid index in the packed node key; time takes the 24 above
+_IDX_BITS = 20
+#: signed half-ranges of the packed fields: an index is stored as
+#: ``idx + 2^19`` in 20 bits, time as a signed 24-bit value
+_IDX_HALF = 1 << (_IDX_BITS - 1)
+_TIME_HALF = 1 << (63 - 2 * _IDX_BITS)
+#: the fleet aggregate's fixed-width stand-in for a non-integral track id
+_TRACK_KEY = "__track_key"
+
+
+def _node_key(
+    t: F.Column, lat_idx: F.Column, lon_idx: F.Column, names=None
+) -> F.Column:
+    """The grid node ``(t, lat_idx, lon_idx)`` packed into one ``long``:
+    ``t * 2^40 + (lat_idx + 2^19) * 2^20 + (lon_idx + 2^19)``. Distinct
+    in-range nodes get distinct keys. Out of range (an index outside
+    ``[-2^19, 2^19)`` or ``t`` outside ``[-2^23, 2^23)``) the key is NULL,
+    or, given the column ``names`` (the grid side), an error naming the
+    column. Never a wrapped key."""
+    fields = ((t, _TIME_HALF), (lat_idx, _IDX_HALF), (lon_idx, _IDX_HALF))
+    ok = [c.between(-half, half - 1) for c, half in fields]
+    key = (
+        F.shiftleft(t.cast("long"), 2 * _IDX_BITS)
+        + F.shiftleft(lat_idx.cast("long") + _IDX_HALF, _IDX_BITS)
+        + (lon_idx.cast("long") + _IDX_HALF)
+    )
+    out = F.when(ok[0] & ok[1] & ok[2], key)
+    for name, (c, half), good in zip(names or (), fields, ok):
+        out = out.when(~good, F.raise_error(F.format_string(
+            f"grid column {name} = %s is outside the packed node-key "
+            f"range [{-half}, {half})", c.cast("string"),
+        )))
+    return out
+
+
+def _track_surrogate(track_id: F.Column) -> F.Column:
+    """The 64-bit key a non-integral track id is grouped on. All NULL ids
+    map to one key, so they form one group, as in a plain ``groupBy``."""
+    return F.xxhash64(track_id)
+
+
+def _track_dictionary(track: DataFrame, track_col: str) -> DataFrame:
+    """``(_TRACK_KEY, track_col)``: one row per surrogate key, mapping it
+    back to its track id. Two distinct ids (NULL counts as one) with the
+    same key raise an error naming ``track_col`` when the dictionary is
+    built."""
+    tid = F.col(track_col)
+    lo, hi, nulls = F.col("__lo"), F.col("__hi"), F.col("__nulls")
+    one_id = lo.isNull() | ((lo == hi) & (nulls == 0))
+    clash = F.format_string(
+        f"track column {track_col}: distinct ids share the surrogate key "
+        "%d (ids %s .. %s, %d NULL)", F.col(_TRACK_KEY), lo, hi, nulls,
+    )
+    return (
+        track.groupBy(_track_surrogate(tid).alias(_TRACK_KEY))
+        .agg(
+            F.min(tid).alias("__lo"),
+            F.max(tid).alias("__hi"),
+            (F.count(F.lit(1)) - F.count(tid)).alias("__nulls"),
+        )
+        .select(
+            _TRACK_KEY,
+            F.when(one_id, lo).otherwise(F.raise_error(clash)).alias(track_col),
+        )
     )
 
 
@@ -101,6 +186,10 @@ def profile_neighbors(
 
     ``track_col=None`` filters ``grid`` to the track's footprint (see
     :func:`_footprint`), which runs one small job over ``track`` now.
+
+    The join key is the packed node key of :func:`_node_key`; a track
+    point outside its range matches nothing, a grid row outside it
+    raises. The ``track_col`` values ride the broadcast side unchanged.
     """
     tcols = [track_col] if track_col else []
     snapped = track.select(
@@ -118,26 +207,28 @@ def profile_neighbors(
     )
     if track_col is None:
         grid = grid.where(_footprint(snapped, radius))
-    nb = neighborhood_expand(snapped, radius=radius).withColumnsRenamed(
-        {"lat": "p_lat", "lon": "p_lon"}
+    nb = neighborhood_expand(snapped, radius=radius).select(
+        *tcols,
+        "point_id",
+        F.col("lat").alias("p_lat"),
+        F.col("lon").alias("p_lon"),
+        _node_key(
+            F.col("t_sel"), F.col("nb_lat_idx"), F.col("nb_lon_idx")
+        ).alias("__node"),
     )
     g = grid.where(F.col("depth_idx") < k_depths).select(
-        "time_hours",
+        _node_key(
+            F.col("time_hours"), F.col("lat_idx"), F.col("lon_idx"),
+            names=("time_hours", "lat_idx", "lon_idx"),
+        ).alias("__node"),
         "depth_idx",
         "depth_m",
-        F.col("lat_idx").alias("g_lat_idx"),
-        F.col("lon_idx").alias("g_lon_idx"),
         F.col("lat").alias("g_lat"),
         F.col("lon").alias("g_lon"),
         F.col(variable).alias("__var"),
         *carry_cols,
     )
-    j = g.join(
-        F.broadcast(nb),
-        (F.col("time_hours") == F.col("t_sel"))
-        & (F.col("g_lat_idx") == F.col("nb_lat_idx"))
-        & (F.col("g_lon_idx") == F.col("nb_lon_idx")),
-    )
+    j = g.join(F.broadcast(nb), "__node")
     d = euclid_deg("p_lat", "p_lon", "g_lat", "g_lon")
     return j.select(
         *tcols,
@@ -171,12 +262,21 @@ def profile_along_track(
 
     ``track_col=None`` is the single-track contract (one advisory
     track, the reference's shape). ``track_col="..."`` is the FLEET
-    shape (VERDICT r7 item 8): the id becomes an extra broadcast-side
-    key and group-by column, so a whole storm season profiles in ONE
-    grid scan + broadcast join + hash aggregate — the plan is identical
-    to the single-track plan, just with more (still tiny) broadcast
-    rows; no window, no per-track loop, no shuffle beyond the one
-    aggregate (plan-asserted in tests/test_scale_plans.py).
+    shape (VERDICT r7 item 8): the id rides the broadcast side and
+    becomes a group-by column, so a whole storm season profiles in ONE
+    grid scan + broadcast join + hash aggregate — no window, no
+    per-track loop, one shuffle over the join output (plan-asserted in
+    tests/test_idw_profile.py and tests/test_profile_keys.py). A
+    non-integral id adds only the small dictionary below, joined to the
+    aggregated rows.
+
+    Keys (module docstring): the join probes one packed ``long`` node
+    key. An integral ``track_col`` is grouped on as it is. Any other id
+    type is grouped on its 64-bit surrogate, and a small broadcast
+    dictionary built from ``track`` maps the result back to the ids:
+    ``track`` is read once more for it (two more Spark jobs), and two ids
+    sharing a surrogate raise an error naming ``track_col``. NULL ids form
+    one group with a NULL id, as they do when grouped directly.
 
     Plain double Σwv/Σw for engine use; the oracle-checked query variant
     (``queries/track_q.py``) lifts the same rows to fixed point first.
@@ -189,27 +289,36 @@ def profile_along_track(
     footprint, not the grid. Profiling further tracks with the same
     DataFrame is exact; use a fresh ``.load()`` for any other query.
     """
-    keys = ([track_col] if track_col else []) + [
+    if interp == "nearest":
+        geometry = {**geometry, "radius": 0}
+        aggs = (F.count("v").alias("n_valid"), F.first("v").alias("idw_value"))
+    elif interp == "idw":
+        valid_w = F.when(F.col("v").isNotNull(), F.col("w"))
+        aggs = (
+            F.count("v").alias("n_valid"),
+            (F.sum(valid_w * F.col("v")) / F.sum(valid_w)).alias("idw_value"),
+        )
+    else:
+        raise ValueError(f"unknown interp {interp!r}")
+    names = None
+    group_col = track_col
+    if track_col is not None and not isinstance(
+        track.schema[track_col].dataType, IntegralType
+    ):
+        names = _track_dictionary(track, track_col)
+        track = track.withColumn(_TRACK_KEY, _track_surrogate(F.col(track_col)))
+        group_col = _TRACK_KEY
+    rows = profile_neighbors(
+        track, grid, variable, k_depths, track_col=group_col, **geometry
+    )
+    keys = ([group_col] if group_col else []) + [
         "point_id", "depth_idx", "depth_m"
     ]
-    if interp == "nearest":
-        rows = profile_neighbors(
-            track, grid, variable, k_depths, radius=0,
-            track_col=track_col, **geometry
-        )
-        return rows.groupBy(*keys).agg(
-            F.count("v").alias("n_valid"),
-            F.first("v").alias("idw_value"),
-        )
-    if interp != "idw":
-        raise ValueError(f"unknown interp {interp!r}")
-    rows = profile_neighbors(
-        track, grid, variable, k_depths, track_col=track_col, **geometry
-    )
-    valid_w = F.when(F.col("v").isNotNull(), F.col("w"))
-    return rows.groupBy(*keys).agg(
-        F.count("v").alias("n_valid"),
-        (F.sum(valid_w * F.col("v")) / F.sum(valid_w)).alias("idw_value"),
+    prof = rows.groupBy(*keys).agg(*aggs)
+    if names is None:
+        return prof
+    return prof.join(F.broadcast(names), _TRACK_KEY).select(
+        track_col, "point_id", "depth_idx", "depth_m", "n_valid", "idw_value"
     )
 
 

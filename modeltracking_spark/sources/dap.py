@@ -48,6 +48,9 @@ has no Int64) stay typed rejects.
 Scale posture: one ``.dods`` round-trip per (variable, record) — the
 server does the hyperslab cut, the client never downloads the
 hypercube; ``n_fetches``/``n_bytes`` counters let tests assert it.
+Every request has a timeout and one retry (all of them are idempotent
+GETs), checks its body against ``Content-Length``, and fails with a
+:class:`DapRequestError` that names the URL and the constraint.
 """
 
 from __future__ import annotations
@@ -351,6 +354,18 @@ def _xdr_decode(buf: bytes, off: int, typ: str, n_expect: int):
     return a.astype(final_dtype), off + nbytes
 
 
+#: seconds a DAP request may wait on the server (to connect, or between
+#: bytes of the reply) before the attempt is abandoned
+DAP_TIMEOUT_S = 60.0
+#: attempts per DAP request: one retry, since every request is a GET
+DAP_ATTEMPTS = 2
+
+
+class DapRequestError(OSError):
+    """A DAP request that failed on every attempt; the message names the
+    URL and the constraint expression."""
+
+
 class DapDataset:
     """DAP 2.0 client over a dataset URL (no trailing ``.dds``/``.dods``).
 
@@ -379,10 +394,41 @@ class DapDataset:
         self.dims = list(seen.items())
 
     def _get(self, full_url: str) -> bytes:
+        """GET ``full_url`` with a :data:`DAP_TIMEOUT_S` timeout, tried
+        :data:`DAP_ATTEMPTS` times (every DAP request is an idempotent
+        read). A 4xx reply is not retried. A body shorter or longer than
+        its ``Content-Length`` counts as a failure. The final failure is a
+        :class:`DapRequestError` naming the URL and the constraint."""
+        import http.client
+        import urllib.error
+        import urllib.parse
         import urllib.request
 
-        with urllib.request.urlopen(full_url) as r:
-            body = r.read()
+        for attempt in range(1, DAP_ATTEMPTS + 1):
+            try:
+                with urllib.request.urlopen(
+                    full_url, timeout=DAP_TIMEOUT_S
+                ) as r:
+                    body = r.read()
+                    length = r.headers.get("Content-Length")
+                if length is not None and len(body) != int(length):
+                    raise ValueError(
+                        f"body is {len(body)} bytes, Content-Length "
+                        f"says {length}"
+                    )
+                break
+            except (OSError, http.client.HTTPException, ValueError) as exc:
+                client_error = (
+                    isinstance(exc, urllib.error.HTTPError) and exc.code < 500
+                )
+                if client_error or attempt == DAP_ATTEMPTS:
+                    base, _, query = full_url.partition("?")
+                    raise DapRequestError(
+                        f"DAP request failed after {attempt} attempt(s): "
+                        f"{base} constraint "
+                        f"{urllib.parse.unquote(query) or '(none)'!r}: "
+                        f"{exc!r}"
+                    ) from exc
         self.n_fetches += 1
         self.n_bytes += len(body)
         return body
