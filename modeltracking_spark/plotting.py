@@ -55,6 +55,13 @@ def track_map_frame(track: DataFrame):
     )
 
 
+def _profile_panel(profile: DataFrame, track: DataFrame):
+    from modeltracking_spark import figure
+
+    pdf = profile_plot_frame(profile, track)
+    return figure.render_profile_panel(figure.profile_matrix(pdf))
+
+
 def render_profile_png(profile: DataFrame, track: DataFrame, out_path: str) -> str:
     """Render the profile panel to a real PNG (the ``fig_test.png``
     twin, ``trackplot_hycom.py:266-279``) — NO plotting library: the
@@ -64,22 +71,10 @@ def render_profile_png(profile: DataFrame, track: DataFrame, out_path: str) -> s
     """
     from modeltracking_spark import figure
 
-    pdf = profile_plot_frame(profile, track)
-    img = figure.render_profile_panel(figure.profile_matrix(pdf))
-    return figure.write_png(img, out_path)
+    return figure.write_png(_profile_panel(profile, track), out_path)
 
 
-def render_track_map_png(
-    track: DataFrame,
-    grid: DataFrame,
-    out_path: str,
-    variable: str = "water_temp",
-) -> str:
-    """Render the track-over-field map panel (``trackplot_hycom.py:
-    281-303``): surface slice of the grid at its first time step as the
-    colormapped background, the track as a polyline + markers. The
-    ONLY driver-sized collects are the surface slice (n_lat x n_lon)
-    and the track itself."""
+def _track_map_panel(track: DataFrame, grid: DataFrame, variable: str):
     import numpy as np
 
     from modeltracking_spark import figure
@@ -111,8 +106,23 @@ def render_track_map_png(
             (pdf["lon"].to_numpy() - GRID_LON0) / GRID_LON_STEP,
         ]
     )
-    img = figure.render_track_map_panel(field, track_rc)
-    return figure.write_png(img, out_path)
+    return figure.render_track_map_panel(field, track_rc)
+
+
+def render_track_map_png(
+    track: DataFrame,
+    grid: DataFrame,
+    out_path: str,
+    variable: str = "water_temp",
+) -> str:
+    """Render the track-over-field map panel (``trackplot_hycom.py:
+    281-303``): surface slice of the grid at its first time step as the
+    colormapped background, the track as a polyline + markers. The
+    ONLY driver-sized collects are the surface slice (n_lat x n_lon)
+    and the track itself."""
+    from modeltracking_spark import figure
+
+    return figure.write_png(_track_map_panel(track, grid, variable), out_path)
 
 
 def render_figure_png(
@@ -124,18 +134,10 @@ def render_figure_png(
 
     from modeltracking_spark import figure
 
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        p1 = render_profile_png(profile, track, os.path.join(td, "p.png"))
-        p2 = render_track_map_png(track, grid, os.path.join(td, "m.png"))
-        from modeltracking_spark.operators.png import decode_png
-
-        imgs = []
-        for p in (p1, p2):
-            with open(p, "rb") as fh:
-                imgs.append(decode_png(fh.read()))
+    imgs = [
+        _profile_panel(profile, track),
+        _track_map_panel(track, grid, "water_temp"),
+    ]
     w = max(i.shape[1] for i in imgs)
     padded = []
     for i in imgs:

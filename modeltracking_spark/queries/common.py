@@ -56,7 +56,8 @@ def ensure_pkg_on_workers(spark: SparkSession) -> None:
     mapInPandas decode, pandas UDFs) cloudpickle functions BY REFERENCE
     to this package — workers must be able to import it. When the
     harness runs with a cwd outside the repo and no PYTHONPATH, they
-    can't; a one-time ~50 KB zip per SparkContext closes that hole."""
+    can't; a one-time zip of the package's ``.py`` files per
+    SparkContext (stored uncompressed, about 2.2 MB) closes that hole."""
     try:
         sc = spark.sparkContext
     except Exception:

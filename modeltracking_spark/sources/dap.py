@@ -48,8 +48,9 @@ has no Int64) stay typed rejects.
 Scale posture: one ``.dods`` round-trip per (variable, record) — the
 server does the hyperslab cut, the client never downloads the
 hypercube; ``n_fetches``/``n_bytes`` counters let tests assert it.
-Every request has a timeout and one retry (all of them are idempotent
-GETs), checks its body against ``Content-Length``, and fails with a
+Every request goes through :func:`http_get`, which the classic-netCDF
+HTTP range reader shares: a timeout and one retry (all of them are
+idempotent GETs), a body check against ``Content-Length``, and a
 :class:`DapRequestError` that names the URL and the constraint.
 """
 
@@ -354,16 +355,66 @@ def _xdr_decode(buf: bytes, off: int, typ: str, n_expect: int):
     return a.astype(final_dtype), off + nbytes
 
 
-#: seconds a DAP request may wait on the server (to connect, or between
-#: bytes of the reply) before the attempt is abandoned
+#: seconds a remote read (a DAP request or an HTTP range read) may wait
+#: on the server (to connect, or between bytes of the reply) before the
+#: attempt is abandoned
 DAP_TIMEOUT_S = 60.0
-#: attempts per DAP request: one retry, since every request is a GET
+#: attempts per remote read: one retry, since every request is a GET
 DAP_ATTEMPTS = 2
 
 
 class DapRequestError(OSError):
-    """A DAP request that failed on every attempt; the message names the
-    URL and the constraint expression."""
+    """A remote read that failed on every attempt; the message names the
+    URL and the DAP constraint or the byte range."""
+
+
+def http_get(url: str, byte_range: tuple[int, int] | None):
+    """GET ``url`` -> ``(status, headers, body)``; a ``byte_range``
+    (inclusive ``(first, last)``) is sent as a ``Range`` header.
+
+    The one HTTP path of the remote readers: :meth:`DapDataset._get` and
+    :class:`~modeltracking_spark.sources.netcdf_classic.HttpRangeReader`.
+    Each attempt times out after :data:`DAP_TIMEOUT_S`; a request is
+    tried :data:`DAP_ATTEMPTS` times (every read is idempotent). A 4xx
+    reply is not retried. A body shorter or longer than its
+    ``Content-Length`` counts as a failure. The final failure is a
+    :class:`DapRequestError` naming the URL and the constraint or range.
+    """
+    import http.client
+    import urllib.error
+    import urllib.parse
+    import urllib.request
+
+    headers = {}
+    if byte_range is not None:
+        headers["Range"] = f"bytes={byte_range[0]}-{byte_range[1]}"
+    for attempt in range(1, DAP_ATTEMPTS + 1):
+        try:
+            req = urllib.request.Request(url, headers=headers)
+            with urllib.request.urlopen(req, timeout=DAP_TIMEOUT_S) as r:
+                body = r.read()
+                status, reply = r.status, r.headers
+            length = reply.get("Content-Length")
+            if length is not None and len(body) != int(length):
+                raise ValueError(
+                    f"body is {len(body)} bytes, Content-Length "
+                    f"says {length}"
+                )
+            return status, reply, body
+        except (OSError, http.client.HTTPException, ValueError) as exc:
+            client_error = (
+                isinstance(exc, urllib.error.HTTPError) and exc.code < 500
+            )
+            if client_error or attempt == DAP_ATTEMPTS:
+                base, _, query = url.partition("?")
+                what = (
+                    f"range {headers['Range']}" if headers else
+                    f"constraint {urllib.parse.unquote(query) or '(none)'!r}"
+                )
+                raise DapRequestError(
+                    f"request failed after {attempt} attempt(s): "
+                    f"{base} {what}: {exc!r}"
+                ) from exc
 
 
 class DapDataset:
@@ -394,41 +445,9 @@ class DapDataset:
         self.dims = list(seen.items())
 
     def _get(self, full_url: str) -> bytes:
-        """GET ``full_url`` with a :data:`DAP_TIMEOUT_S` timeout, tried
-        :data:`DAP_ATTEMPTS` times (every DAP request is an idempotent
-        read). A 4xx reply is not retried. A body shorter or longer than
-        its ``Content-Length`` counts as a failure. The final failure is a
-        :class:`DapRequestError` naming the URL and the constraint."""
-        import http.client
-        import urllib.error
-        import urllib.parse
-        import urllib.request
-
-        for attempt in range(1, DAP_ATTEMPTS + 1):
-            try:
-                with urllib.request.urlopen(
-                    full_url, timeout=DAP_TIMEOUT_S
-                ) as r:
-                    body = r.read()
-                    length = r.headers.get("Content-Length")
-                if length is not None and len(body) != int(length):
-                    raise ValueError(
-                        f"body is {len(body)} bytes, Content-Length "
-                        f"says {length}"
-                    )
-                break
-            except (OSError, http.client.HTTPException, ValueError) as exc:
-                client_error = (
-                    isinstance(exc, urllib.error.HTTPError) and exc.code < 500
-                )
-                if client_error or attempt == DAP_ATTEMPTS:
-                    base, _, query = full_url.partition("?")
-                    raise DapRequestError(
-                        f"DAP request failed after {attempt} attempt(s): "
-                        f"{base} constraint "
-                        f"{urllib.parse.unquote(query) or '(none)'!r}: "
-                        f"{exc!r}"
-                    ) from exc
+        """GET ``full_url`` through :func:`http_get`, counting the
+        successful requests and their bytes."""
+        _, _, body = http_get(full_url, None)
         self.n_fetches += 1
         self.n_bytes += len(body)
         return body

@@ -81,7 +81,9 @@ class HttpRangeReader:
     Range (plain 200) still yields correct results via local slicing, but
     that downloads the whole file per call — fine for a header probe,
     wrong at scale — so it is accepted but counted (``n_full_downloads``)
-    for tests to assert against."""
+    for tests to assert against. Every request goes through
+    :func:`modeltracking_spark.sources.dap.http_get` (timeout, one retry,
+    ``Content-Length`` check, an error naming the URL and the range)."""
 
     def __init__(self, url: str):
         self.url = url
@@ -89,48 +91,34 @@ class HttpRangeReader:
         self.n_full_downloads = 0
 
     def size(self) -> int:
-        import urllib.request
+        """Total bytes, from the ``Content-Range`` of a 1-byte Range GET
+        (``bytes 0-0/TOTAL``), or the body itself if the server ignored
+        the Range."""
+        from modeltracking_spark.sources.dap import http_get
 
         if self._size is not None:
             return self._size
-        try:
-            req = urllib.request.Request(self.url, method="HEAD")
-            with urllib.request.urlopen(req) as r:
-                cl = r.headers["Content-Length"]
-                if cl is not None:
-                    self._size = int(cl)
-                    return self._size
-        except Exception:
-            pass  # HEAD rejected (common for presigned URLs) — fall through
-        # fallback: a 1-byte Range GET; Content-Range carries the total
-        # as 'bytes 0-0/TOTAL'
-        req = urllib.request.Request(self.url, headers={"Range": "bytes=0-0"})
-        with urllib.request.urlopen(req) as r:
-            cr = r.headers.get("Content-Range", "")
-            if "/" in cr and cr.rsplit("/", 1)[1].isdigit():
-                self._size = int(cr.rsplit("/", 1)[1])
-                return self._size
-            body = r.read()
-            if r.status == 200:  # server ignored Range: body IS the file
-                self._size = len(body)
-                return self._size
-        raise ValueError(
-            f"{self.url}: cannot determine size — no usable Content-Length "
-            "(HEAD) or Content-Range (Range GET) in the server's responses"
-        )
+        status, headers, body = http_get(self.url, (0, 0))
+        cr = headers.get("Content-Range", "")
+        if "/" in cr and cr.rsplit("/", 1)[1].isdigit():
+            self._size = int(cr.rsplit("/", 1)[1])
+        elif status == 200:  # server ignored Range: body IS the file
+            self._size = len(body)
+        else:
+            raise ValueError(
+                f"{self.url}: cannot determine size — no usable "
+                "Content-Range in the server's reply to a Range GET"
+            )
+        return self._size
 
     def read_range(self, off: int, nbytes: int) -> bytes:
-        import urllib.request
+        from modeltracking_spark.sources.dap import http_get
 
         if nbytes <= 0:
             return b""
-        req = urllib.request.Request(
-            self.url, headers={"Range": f"bytes={off}-{off + nbytes - 1}"}
-        )
-        with urllib.request.urlopen(req) as r:
-            body = r.read()
-            if r.status == 206:
-                return body
+        status, _, body = http_get(self.url, (off, off + nbytes - 1))
+        if status == 206:
+            return body
         self.n_full_downloads += 1
         return body[off : off + nbytes]
 

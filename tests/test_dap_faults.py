@@ -1,7 +1,9 @@
-"""DAP client robustness against a misbehaving server: a stalled reply
-times out and is retried once, so is an HTTP 500 or a truncated body, and
-a request that fails twice raises an error naming the URL and the
-constraint. The faults come from a subclass of the served handler."""
+"""Remote-read robustness against a misbehaving server, for the DAP
+client and the classic-netCDF HTTP range reader (both go through
+``dap.http_get``): a stalled reply times out and is retried once, so is
+an HTTP 500 or a truncated body, a request that fails twice raises an
+error naming the URL and the constraint or byte range, and a 4xx is not
+retried. The faults come from subclasses of the served handlers."""
 
 import http.server
 import re
@@ -17,7 +19,12 @@ from modeltracking_spark.sources.dap import (
     DapRequestError,
     make_dap_handler,
 )
-from modeltracking_spark.sources.netcdf_classic import write_classic
+from modeltracking_spark.sources.netcdf_classic import (
+    HttpRangeReader,
+    NcFile,
+    write_classic,
+)
+from tests.test_netcdf import _RangeHandler
 
 #: the client's timeout in these tests; a stalled reply waits longer
 TIMEOUT_S = 0.5
@@ -57,12 +64,37 @@ def faulty_handler(root: str, faults: list):
     return FaultyHandler
 
 
-@pytest.fixture
-def served(tmp_path, monkeypatch):
-    """``(base_url, faults)``: a tiny record grid behind the faulty
-    handler; append to ``faults`` to fail the next requests."""
+def faulty_range_handler(root: str, faults: list):
+    """The Range-capable file handler, failing the next GETs as
+    ``faults`` lists them (same fault names as :func:`faulty_handler`;
+    ``"truncate"`` promises 100 bytes and sends 10)."""
+
+    class FaultyRangeHandler(_RangeHandler):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, directory=root, **kw)
+
+        def do_GET(self):
+            fault = faults.pop(0) if faults else None
+            if fault == "stall":
+                time.sleep(STALL_S)
+                self.close_connection = True
+            elif fault == "500":
+                self.send_error(500, "upstream exploded")
+            elif fault == "truncate":
+                self.send_response(206)
+                self.send_header("Content-Length", "100")
+                self.end_headers()
+                self.wfile.write(bytes(10))
+                self.close_connection = True
+            else:
+                super().do_GET()
+
+    return FaultyRangeHandler
+
+
+def _write_grid(path):
     write_classic(
-        str(tmp_path / "g.nc"),
+        str(path),
         dims=[("time", 0), ("y", 2), ("x", 3)],
         variables=[(
             "grid", ("time", "y", "x"),
@@ -71,13 +103,37 @@ def served(tmp_path, monkeypatch):
         record_dim="time",
         n_records=3,
     )
+
+
+def _serve(handler):
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv
+
+
+@pytest.fixture
+def served(tmp_path, monkeypatch):
+    """``(base_url, faults)``: a tiny record grid behind the faulty
+    handler; append to ``faults`` to fail the next requests."""
+    _write_grid(tmp_path / "g.nc")
     monkeypatch.setattr(dap, "DAP_TIMEOUT_S", TIMEOUT_S)
     faults = []
-    srv = http.server.ThreadingHTTPServer(
-        ("127.0.0.1", 0), faulty_handler(str(tmp_path), faults)
-    )
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = _serve(faulty_handler(str(tmp_path), faults))
     yield f"dap+http://127.0.0.1:{srv.server_address[1]}/g.nc", faults
+    srv.shutdown()
+    srv.server_close()
+
+
+@pytest.fixture
+def served_file(tmp_path, monkeypatch):
+    """``(file_url, local_path, faults)``: the same grid as a plain file
+    behind the faulty Range handler."""
+    _write_grid(tmp_path / "g.nc")
+    monkeypatch.setattr(dap, "DAP_TIMEOUT_S", TIMEOUT_S)
+    faults = []
+    srv = _serve(faulty_range_handler(str(tmp_path), faults))
+    yield (f"http://127.0.0.1:{srv.server_address[1]}/g.nc",
+           str(tmp_path / "g.nc"), faults)
     srv.shutdown()
     srv.server_close()
 
@@ -122,3 +178,44 @@ def test_client_error_is_not_retried(served):
     missing = url.replace("g.nc", "missing.nc")
     with pytest.raises(DapRequestError, match="after 1 attempt.*missing.nc"):
         DapDataset(missing)
+
+
+@pytest.mark.parametrize("fault", ["stall", "500", "truncate"])
+def test_range_read_one_fault_is_retried(served_file, fault):
+    url, path, faults = served_file
+    faults.append(fault)  # the size probe fails once
+    remote = NcFile(url)
+    faults.append(fault)  # and so does the record read
+    np.testing.assert_array_equal(
+        remote.read_slice("grid", 1), NcFile(path).read_slice("grid", 1)
+    )
+    assert remote.reader.n_full_downloads == 0
+    assert not faults
+
+
+@pytest.mark.parametrize("fault, why", [
+    ("stall", "timed out"),
+    ("500", "500"),
+    ("truncate", "IncompleteRead|Content-Length"),
+])
+def test_range_read_two_faults_name_url_and_range(served_file, fault, why):
+    url, _, faults = served_file
+    reader = HttpRangeReader(url)
+    faults.extend([fault, fault])
+    t0 = time.perf_counter()
+    with pytest.raises(DapRequestError) as ei:
+        reader.read_range(8, 16)
+    msg = str(ei.value)
+    assert "after 2 attempt(s)" in msg
+    assert f"{url} range bytes=8-23" in msg
+    assert re.search(why, msg)
+    assert time.perf_counter() - t0 < 2 * STALL_S
+
+
+def test_range_read_client_error_is_not_retried(served_file):
+    url, _, _ = served_file
+    missing = url.replace("g.nc", "missing.nc")
+    with pytest.raises(
+        DapRequestError, match="after 1 attempt.*missing.nc range bytes=0-3"
+    ):
+        HttpRangeReader(missing).read_range(0, 4)

@@ -1,5 +1,6 @@
-"""Driver-contract smoke: entry() produces rows; every oracle key has a
-query; linear_fit operator agrees with the integer-exact formula."""
+"""Driver-contract smoke: entry() produces rows; every oracle key, and
+every name the priority window, bench.py and tools/dump_plans.py pin, has
+a query; linear_fit operator agrees with the integer-exact formula."""
 
 import sys
 
@@ -20,12 +21,25 @@ def test_entry_smoke(spark):
 
 
 def test_registry_consistency(spark):
+    import bench
+    from modeltracking_spark.queries import PRIORITY
+    from tools.dump_plans import NOTES
+
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     assert len(qs) >= 40
     assert set(oracles) <= set(qs)  # every oracle has a query
     # >= 40 oracled entries (the correctness gate)
     assert len(oracles) >= 40
+    # every list that names queries names registered ones only
+    for where, names in (
+        ("queries.PRIORITY", PRIORITY),
+        ("bench.HEADLINE", bench.HEADLINE),
+        ("bench.ANCHOR", bench.ANCHOR),
+        ("tools/dump_plans.py NOTES", NOTES),
+    ):
+        dangling = sorted(set(names) - set(qs))
+        assert not dangling, f"{where} names unregistered queries: {dangling}"
 
 
 def test_linear_fit_operator_matches_formula(spark):
