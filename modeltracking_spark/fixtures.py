@@ -3,15 +3,17 @@
 The HYCOM grid stand-in is formula-generated from integer indices so the
 exact same table can be built in Spark (``range`` cross joins) and in a
 DuckDB oracle (``range`` cross joins in SQL) — no parquet round trip, no
-nondeterminism. Matches ``HYCOM_GRID_SCHEMA`` (``schemas.py``) and the
+nondeterminism. Matches ``schemas.hycom_grid_schema`` and the
 reference's 4-D ``var[time, depth, lat, lon]`` model
-(``trackplot_hycom.py:110``).
+(``trackplot_hycom.py:110``), axis records included.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from modeltracking_spark.schemas import axis_metadata
 
 # Grid geometry: 3-hourly time axis, 5 m depth steps, uniform lat/lon mesh
 # offset from the synthetic track so no point sits exactly on a node
@@ -69,7 +71,7 @@ def hycom_grid_fixture(spark: SparkSession) -> DataFrame:
     :data:`HYCOM_GRID_SQL` run in DuckDB. Built lazily from four ``range``
     scans — at 100 TB this table would be a parquet store partitioned by
     ``time_hours`` with (lat_idx, lon_idx) bucketing; all downstream
-    operators only assume the long schema."""
+    operators only assume the long schema and its axis records."""
     t = spark.range(GRID_N_TIME).select(F.col("id").alias("ti"))
     d = spark.range(GRID_N_DEPTH).select(F.col("id").alias("di"))
     la = spark.range(GRID_N_LAT).select(F.col("id").alias("lai"))
@@ -99,13 +101,16 @@ def hycom_grid_fixture(spark: SparkSession) -> DataFrame:
         * F.lit(0.1)
     )
     return g.select(
-        (F.col("ti") * GRID_TIME_STEP).cast("long").alias("time_hours"),
+        (F.col("ti") * GRID_TIME_STEP).cast("long")
+        .alias("time_hours", metadata=axis_metadata(0, GRID_TIME_STEP)),
         F.col("di").cast("int").alias("depth_idx"),
         (F.col("di") * F.lit(GRID_DEPTH_STEP)).alias("depth_m"),
         F.col("lai").cast("int").alias("lat_idx"),
         F.col("loi").cast("int").alias("lon_idx"),
-        (F.lit(GRID_LAT0) + F.col("lai") * F.lit(GRID_LAT_STEP)).alias("lat"),
-        (F.lit(GRID_LON0) + F.col("loi") * F.lit(GRID_LON_STEP)).alias("lon"),
+        (F.lit(GRID_LAT0) + F.col("lai") * F.lit(GRID_LAT_STEP))
+        .alias("lat", metadata=axis_metadata(GRID_LAT0, GRID_LAT_STEP)),
+        (F.lit(GRID_LON0) + F.col("loi") * F.lit(GRID_LON_STEP))
+        .alias("lon", metadata=axis_metadata(GRID_LON0, GRID_LON_STEP)),
         temp.alias("water_temp"),
         sal.alias("salinity"),
     )

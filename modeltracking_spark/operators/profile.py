@@ -18,6 +18,21 @@ below):
   grid columns;
 - the IDW reduce is a map-side-combinable hash aggregate.
 
+The grid geometry comes from the grid itself. ``time_hours``, ``lat``
+and ``lon`` each carry an axis record, ``{origin, step}``, as column
+metadata (``schemas.axis_metadata``): the ``hycom_grid`` DataSource
+reads it from the dataset's own coordinate arrays, and
+``hycom_grid_fixture`` from its constants. A track point snaps to lat/lon
+node ``round((x - origin) / step)`` and to time bucket ``origin +
+nearest_time_bucket(t - origin, step)`` — the reference's
+``location_to_index``/``find_time_index`` (``trackplot_hycom.py:67-86``,
+``:186-197``) on a uniform axis. Reading the record touches only the
+schema, so no Spark job runs for it, and a grid without it (a column
+rebuilt by an expression loses its metadata) raises a ``ValueError``
+naming the column instead of profiling against guessed axes. Points
+whose snapped node or time bucket lies outside the grid's axes join no
+grid row, so they yield no profile rows.
+
 A single track (``track_col=None``) also states its footprint as plain
 filters on the grid: ``time_hours IN`` its time buckets and a
 ``lat_idx``/``lon_idx`` box grown by the neighbourhood radius. The
@@ -56,6 +71,7 @@ from pyspark.sql.types import IntegralType
 from modeltracking_spark.functions.geo import euclid_deg, inv_square_weight
 from modeltracking_spark.operators.aggregates import mask_sentinel
 from modeltracking_spark.operators.joins import neighborhood_expand
+from modeltracking_spark.schemas import GRID_AXIS_COLS, grid_axis
 
 
 def nearest_time_bucket(t: F.Column, step: int) -> F.Column:
@@ -67,6 +83,9 @@ def nearest_time_bucket(t: F.Column, step: int) -> F.Column:
         F.floor((2 * t + F.lit(step)) / F.lit(2 * step)).cast("long") * step
     )
 
+
+#: the IDW distance offset: a point on a node gets weight 1e12, not 1/0
+IDW_EPS = 1e-6
 
 #: bits per grid index in the packed node key; time takes the 24 above
 _IDX_BITS = 20
@@ -160,12 +179,6 @@ def profile_neighbors(
     grid: DataFrame,
     variable: str = "water_temp",
     k_depths: int = 25,
-    lat0: float = 14.95,
-    lat_step: float = 0.25,
-    lon0: float = 279.85,
-    lon_step: float = 0.6,
-    time_step: int = 3,
-    eps: float = 1e-6,
     radius: int = 1,
     carry_cols: Sequence[str] = (),
     track_col: str | None = None,
@@ -173,10 +186,13 @@ def profile_neighbors(
     """Per-neighbor rows for the IDW reduce: one row per (track point,
     depth level, 3x3 neighbor) with the masked value and IDW weight.
 
-    ``track``: (point_id, lat, lon, t_hours); ``grid``: HYCOM long form.
-    Returns point_id, depth_idx, depth_m, dist, w, v (NULL if sentinel),
-    plus any ``carry_cols`` passed through from the grid (e.g. a
-    ``variable`` label when the grid is unpivoted long-form).
+    ``track``: (point_id, lat, lon, t_hours); ``grid``: HYCOM long form
+    whose ``time_hours``/``lat``/``lon`` carry their axis records (module
+    docstring). Returns point_id, depth_idx, depth_m, dist,
+    w, v (NULL if sentinel), plus any ``carry_cols`` passed through from
+    the grid (e.g. a ``variable`` label when the grid is unpivoted
+    long-form). ``radius`` is the neighbourhood half-width: 1 for the
+    3x3 IDW stencil, 0 for the centre node alone.
 
     ``track_col`` is the FLEET shape (r8, mirroring
     :func:`resample_track_arclength`'s r7 ``track_col``): the id rides
@@ -191,13 +207,17 @@ def profile_neighbors(
     point outside its range matches nothing, a grid row outside it
     raises. The ``track_col`` values ride the broadcast side unchanged.
     """
+    (t0, t_step), (lat0, lat_step), (lon0, lon_step) = (
+        grid_axis(grid.schema, c) for c in GRID_AXIS_COLS
+    )
     tcols = [track_col] if track_col else []
     snapped = track.select(
         *tcols,
         "point_id",
         "lat",
         "lon",
-        nearest_time_bucket(F.col("t_hours"), time_step).alias("t_sel"),
+        (F.lit(t0) + nearest_time_bucket(F.col("t_hours") - F.lit(t0), t_step))
+        .alias("t_sel"),
         F.round((F.col("lat") - F.lit(lat0)) / F.lit(lat_step))
         .cast("int")
         .alias("lat_idx"),
@@ -236,7 +256,7 @@ def profile_neighbors(
         "depth_idx",
         "depth_m",
         d.alias("dist"),
-        inv_square_weight(d, eps=eps).alias("w"),
+        inv_square_weight(d, eps=IDW_EPS).alias("w"),
         mask_sentinel("__var").alias("v"),
         *carry_cols,
     )
@@ -249,7 +269,6 @@ def profile_along_track(
     k_depths: int = 25,
     interp: str = "idw",
     track_col: str | None = None,
-    **geometry,
 ) -> DataFrame:
     """Full pipeline -> long profile (point_id, depth_idx, depth_m,
     n_valid, idw_value): the engine twin of the reference's
@@ -278,6 +297,11 @@ def profile_along_track(
     sharing a surrogate raise an error naming ``track_col``. NULL ids form
     one group with a NULL id, as they do when grouped directly.
 
+    Geometry (module docstring): the snap reads the axis records on
+    ``grid``'s ``time_hours``/``lat``/``lon`` columns; a grid without
+    them raises a ``ValueError`` naming the column before any Spark job
+    runs. A point outside the axes in space or in time yields no rows.
+
     Plain double Σwv/Σw for engine use; the oracle-checked query variant
     (``queries/track_q.py``) lifts the same rows to fixed point first.
 
@@ -290,9 +314,10 @@ def profile_along_track(
     DataFrame is exact; use a fresh ``.load()`` for any other query.
     """
     if interp == "nearest":
-        geometry = {**geometry, "radius": 0}
+        radius = 0
         aggs = (F.count("v").alias("n_valid"), F.first("v").alias("idw_value"))
     elif interp == "idw":
+        radius = 1
         valid_w = F.when(F.col("v").isNotNull(), F.col("w"))
         aggs = (
             F.count("v").alias("n_valid"),
@@ -309,7 +334,7 @@ def profile_along_track(
         track = track.withColumn(_TRACK_KEY, _track_surrogate(F.col(track_col)))
         group_col = _TRACK_KEY
     rows = profile_neighbors(
-        track, grid, variable, k_depths, track_col=group_col, **geometry
+        track, grid, variable, k_depths, radius, track_col=group_col
     )
     keys = ([group_col] if group_col else []) + [
         "point_id", "depth_idx", "depth_m"

@@ -75,35 +75,36 @@ def render_profile_png(profile: DataFrame, track: DataFrame, out_path: str) -> s
 
 
 def _track_map_panel(track: DataFrame, grid: DataFrame, variable: str):
+    """The map panel: ``grid``'s surface slice at its first time step,
+    sized from the slice itself, and the track placed on it with the
+    grid's ``lat``/``lon`` axis records."""
     import numpy as np
 
     from modeltracking_spark import figure
-    from modeltracking_spark.sources.grid_source import (
-        GRID_LAT0,
-        GRID_LAT_STEP,
-        GRID_LON0,
-        GRID_LON_STEP,
-        GRID_N_LAT,
-        GRID_N_LON,
-        GRID_SENTINEL,
-    )
+    from modeltracking_spark.fixtures import GRID_SENTINEL
+    from modeltracking_spark.schemas import grid_axis
 
+    (lat0, lat_step), (lon0, lon_step) = (
+        grid_axis(grid.schema, c) for c in ("lat", "lon")
+    )
     t0 = grid.agg(F.min("time_hours")).collect()[0][0]
     surface = (
         grid.filter((F.col("time_hours") == t0) & (F.col("depth_idx") == 0))
         .select("lat_idx", "lon_idx", variable)
         .toPandas()
     )
-    field = np.full((GRID_N_LAT, GRID_N_LON), np.nan)
+    la = surface["lat_idx"].to_numpy()
+    lo = surface["lon_idx"].to_numpy()
+    field = np.full((la.max() + 1, lo.max() + 1), np.nan)
     vals = surface[variable].to_numpy(dtype=float)
     vals[vals <= GRID_SENTINEL + 1.0] = np.nan
-    field[surface["lat_idx"].to_numpy(), surface["lon_idx"].to_numpy()] = vals
+    field[la, lo] = vals
 
     pdf, _bbox = track_map_frame(track)
     track_rc = np.column_stack(
         [
-            (pdf["lat"].to_numpy() - GRID_LAT0) / GRID_LAT_STEP,
-            (pdf["lon"].to_numpy() - GRID_LON0) / GRID_LON_STEP,
+            (pdf["lat"].to_numpy() - lat0) / lat_step,
+            (pdf["lon"].to_numpy() - lon0) / lon_step,
         ]
     )
     return figure.render_track_map_panel(field, track_rc)

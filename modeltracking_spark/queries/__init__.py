@@ -113,7 +113,7 @@ PRIORITY: tuple[str, ...] = (
 #: queries whose semantics/plan changed THIS round: the staleness lint
 #: in tools/check_queries.py --window treats them as never-attested so
 #: their head-of-window placement does not trip the stalest-first
-#: invariant (their old attestation predates the change).  Round 16:
+#: invariant (their old attestation predates the change).  Round 17:
 #: empty — an optimization round: every change is plan-shape or
 #: kernel-level with the same arithmetic, and the full 269-query
 #: exact sweep at sf0.01 was re-run green on the final tree.

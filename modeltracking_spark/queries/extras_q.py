@@ -15,9 +15,7 @@ from modeltracking_spark.functions.timefn import hours_since_2000
 from modeltracking_spark.queries.common import T, cents, query, rank_median_sql
 
 
-@query(
-    "grid_datasource_scan",
-    oracle=f"""
+_GRID_SCAN_ORACLE = f"""
     SELECT time_hours,
            count(*) AS n_rows,
            count(*) FILTER (WHERE water_temp <= -4) AS n_sentinel,
@@ -25,16 +23,14 @@ from modeltracking_spark.queries.common import T, cents, query, rank_median_sql
                     THEN round(water_temp * 10)::BIGINT END)::BIGINT AS sum_temp_e1
     FROM ({HYCOM_GRID_SQL})
     GROUP BY 1
-    """,
-)
-def grid_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6: scan the grid through the CUSTOM Python DataSource
-    (``sources/grid_source.py`` — time steps packed into at most one
-    InputPartition per core, one Arrow RecordBatch per step) and
-    aggregate per time step. The oracle
-    recomputes the grid from the SQL formula, so a hash match proves the
-    DataSource emits the fixture byte-for-byte."""
+    """
+
+
+def _hycom_grid(spark: SparkSession, path: str | None = None) -> DataFrame:
+    """The ``hycom_grid`` DataSource over ``path`` (the formula backend
+    when None), registered in this session on first use."""
     from pyspark.errors import PySparkException
+
     from modeltracking_spark.queries.common import ensure_pkg_on_workers
     from modeltracking_spark.sources.grid_source import HycomGridDataSource
 
@@ -45,7 +41,12 @@ def grid_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(HycomGridDataSource)
     except PySparkException:
         pass  # already registered in this session
-    g = spark.read.format("hycom_grid").load()
+    reader = spark.read.format("hycom_grid")
+    return (reader if path is None else reader.option("path", path)).load()
+
+
+def _per_step_scan(g: DataFrame) -> DataFrame:
+    """Rows, sentinels and the e1 fixed-point temperature sum per step."""
     masked = F.when(
         F.col("water_temp") > -4, F.round(F.col("water_temp") * 10).cast("long")
     )
@@ -56,18 +57,60 @@ def grid_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "grid_netcdf_scan",
-    oracle=f"""
-    SELECT time_hours,
-           count(*) AS n_rows,
-           count(*) FILTER (WHERE water_temp <= -4) AS n_sentinel,
-           sum(CASE WHEN water_temp > -4
-                    THEN round(water_temp * 10)::BIGINT END)::BIGINT AS sum_temp_e1
-    FROM ({HYCOM_GRID_SQL})
-    GROUP BY 1
-    """,
-)
+def _grid_fixture_file(writer, prefix: str = "") -> str:
+    """The formula grid written once by ``writer`` (a ``grid_source``
+    netCDF writer) to a version-keyed path under /tmp. The key hashes the
+    oracle formula TEXT plus the SOURCE of the Python generator/encoder
+    chain that actually produces the bytes (``_formula_physics`` ->
+    ``writer`` -> ``write_classic``), so a change to ANY of them gets a
+    fresh file instead of silently reusing a stale fixture; a pid-unique
+    temp name + atomic rename makes concurrent writers (parallel test
+    sessions, bench) race-safe — losers just re-publish identical bytes.
+    In production the path is shared storage; in local mode /tmp is
+    shared between driver and executor workers."""
+    import hashlib
+    import inspect
+    import os
+
+    from modeltracking_spark.fixtures import (
+        GRID_N_DEPTH,
+        GRID_N_LAT,
+        GRID_N_LON,
+        GRID_N_TIME,
+        grid_fixture_fingerprint,
+    )
+    from modeltracking_spark.sources import grid_source as _gs
+    from modeltracking_spark.sources import netcdf_classic as _nc
+
+    gen_src = "".join(inspect.getsource(f) for f in (
+        _gs._formula_physics, _gs._FormulaGrid, _gs._box_mesh,
+        _gs._write_formula_grid, writer, _nc.write_classic,
+    ))
+    key = (
+        f"{prefix}{grid_fixture_fingerprint()}"
+        f"{hashlib.md5(gen_src.encode()).hexdigest()[:8]}_"
+        f"{GRID_N_TIME}x{GRID_N_DEPTH}x{GRID_N_LAT}x{GRID_N_LON}"
+    )
+    nc_path = f"/tmp/modeltracking_grid_fixture_{key}.nc"
+    if not os.path.exists(nc_path):
+        tmp = f"{nc_path}.{os.getpid()}.tmp"
+        writer(tmp)
+        os.replace(tmp, nc_path)
+    return nc_path
+
+
+@query("grid_datasource_scan", oracle=_GRID_SCAN_ORACLE)
+def grid_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S6: scan the grid through the CUSTOM Python DataSource
+    (``sources/grid_source.py`` — time steps packed into at most one
+    InputPartition per core, one Arrow RecordBatch per step) and
+    aggregate per time step. The oracle
+    recomputes the grid from the SQL formula, so a hash match proves the
+    DataSource emits the fixture byte-for-byte."""
+    return _per_step_scan(_hycom_grid(spark))
+
+
+@query("grid_netcdf_scan", oracle=_GRID_SCAN_ORACLE)
 def grid_netcdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 live-source parity: the SAME aggregate as grid_datasource_scan,
     but read from a REAL classic netCDF file through the pure-numpy
@@ -79,68 +122,11 @@ def grid_netcdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture file is materialized once
     (driver-side, streamed record-by-record) and holds the formula
     grid, so the formula oracle checks the netCDF encode->decode->scan
-    pipeline end to end. In production the path is shared storage; in
-    local mode /tmp is shared between driver and executor workers."""
-    import os
+    pipeline end to end."""
+    from modeltracking_spark.sources.grid_source import write_grid_netcdf
 
-    from pyspark.errors import PySparkException
-
-    from modeltracking_spark.fixtures import (
-        GRID_N_DEPTH,
-        GRID_N_LAT,
-        GRID_N_LON,
-        GRID_N_TIME,
-        grid_fixture_fingerprint,
-    )
-    from modeltracking_spark.queries.common import ensure_pkg_on_workers
-    from modeltracking_spark.sources.grid_source import (
-        HycomGridDataSource,
-        write_grid_netcdf,
-    )
-
-    # version-keyed path: the key hashes the oracle formula TEXT plus the
-    # SOURCE of the Python generator/encoder chain that actually produces
-    # the bytes (_partition_arrays -> write_grid_netcdf -> write_classic),
-    # so a change to ANY of them gets a fresh file instead of silently
-    # reusing a stale fixture; pid-unique temp name + atomic rename makes
-    # concurrent writers (parallel test sessions, bench) race-safe —
-    # losers just re-publish identical bytes
-    import hashlib
-    import inspect
-
-    from modeltracking_spark.sources import grid_source as _gs
-    from modeltracking_spark.sources import netcdf_classic as _nc
-
-    gen_src = (
-        inspect.getsource(_gs._partition_arrays)
-        + inspect.getsource(_gs._box_mesh)
-        + inspect.getsource(_gs.write_grid_netcdf)
-        + inspect.getsource(_nc.write_classic)
-    )
-    key = (
-        f"{grid_fixture_fingerprint()}"
-        f"{hashlib.md5(gen_src.encode()).hexdigest()[:8]}_"
-        f"{GRID_N_TIME}x{GRID_N_DEPTH}x{GRID_N_LAT}x{GRID_N_LON}"
-    )
-    nc_path = f"/tmp/modeltracking_grid_fixture_{key}.nc"
-    if not os.path.exists(nc_path):
-        tmp = f"{nc_path}.{os.getpid()}.tmp"
-        write_grid_netcdf(tmp)
-        os.replace(tmp, nc_path)
-    ensure_pkg_on_workers(spark)
-    try:
-        spark.dataSource.register(HycomGridDataSource)
-    except PySparkException:
-        pass  # already registered in this session
-    g = spark.read.format("hycom_grid").option("path", nc_path).load()
-    masked = F.when(
-        F.col("water_temp") > -4, F.round(F.col("water_temp") * 10).cast("long")
-    )
-    return g.groupBy("time_hours").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("water_temp") <= -4, 1).otherwise(0)).alias("n_sentinel"),
-        F.sum(masked).alias("sum_temp_e1"),
-    )
+    path = _grid_fixture_file(write_grid_netcdf)
+    return _per_step_scan(_hycom_grid(spark, path))
 
 
 _DAP_GRID_SERVERS: dict = {}
@@ -173,18 +159,7 @@ def _dap_grid_url(nc_path: str) -> str:
             f"{os.path.basename(nc_path)}")
 
 
-@query(
-    "dap_grid_mode_scan",
-    oracle=f"""
-    SELECT time_hours,
-           count(*) AS n_rows,
-           count(*) FILTER (WHERE water_temp <= -4) AS n_sentinel,
-           sum(CASE WHEN water_temp > -4
-                    THEN round(water_temp * 10)::BIGINT END)::BIGINT AS sum_temp_e1
-    FROM ({HYCOM_GRID_SQL})
-    GROUP BY 1
-    """,
-)
+@query("dap_grid_mode_scan", oracle=_GRID_SCAN_ORACLE)
 def dap_grid_mode_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-13 DAP GRID arm (VERDICT r12 item 8 — the former pydap
     plug-in point, sources/dap.py): the SAME aggregate as
@@ -199,74 +174,13 @@ def dap_grid_mode_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions each fetch one record slice over the live protocol.
     Sequence/Structure arms + the bare-grid instance wire shape are
     pinned in tests/test_netcdf.py."""
-    import os
+    from modeltracking_spark.sources.grid_source import write_grid_netcdf
 
-    from pyspark.errors import PySparkException
-
-    from modeltracking_spark.fixtures import (
-        GRID_N_DEPTH,
-        GRID_N_LAT,
-        GRID_N_LON,
-        GRID_N_TIME,
-        grid_fixture_fingerprint,
-    )
-    from modeltracking_spark.queries.common import ensure_pkg_on_workers
-    from modeltracking_spark.sources.grid_source import (
-        HycomGridDataSource,
-        write_grid_netcdf,
-    )
-
-    import hashlib
-    import inspect
-
-    from modeltracking_spark.sources import grid_source as _gs
-    from modeltracking_spark.sources import netcdf_classic as _nc
-
-    gen_src = (
-        inspect.getsource(_gs._partition_arrays)
-        + inspect.getsource(_gs._box_mesh)
-        + inspect.getsource(_gs.write_grid_netcdf)
-        + inspect.getsource(_nc.write_classic)
-    )
-    key = (
-        f"{grid_fixture_fingerprint()}"
-        f"{hashlib.md5(gen_src.encode()).hexdigest()[:8]}_"
-        f"{GRID_N_TIME}x{GRID_N_DEPTH}x{GRID_N_LAT}x{GRID_N_LON}"
-    )
-    nc_path = f"/tmp/modeltracking_grid_fixture_{key}.nc"
-    if not os.path.exists(nc_path):
-        tmp = f"{nc_path}.{os.getpid()}.tmp"
-        write_grid_netcdf(tmp)
-        os.replace(tmp, nc_path)
-    url = _dap_grid_url(nc_path)
-    ensure_pkg_on_workers(spark)
-    try:
-        spark.dataSource.register(HycomGridDataSource)
-    except PySparkException:
-        pass  # already registered in this session
-    g = spark.read.format("hycom_grid").option("path", url).load()
-    masked = F.when(
-        F.col("water_temp") > -4, F.round(F.col("water_temp") * 10).cast("long")
-    )
-    return g.groupBy("time_hours").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("water_temp") <= -4, 1).otherwise(0)).alias("n_sentinel"),
-        F.sum(masked).alias("sum_temp_e1"),
-    )
+    url = _dap_grid_url(_grid_fixture_file(write_grid_netcdf))
+    return _per_step_scan(_hycom_grid(spark, url))
 
 
-@query(
-    "grid_netcdf_packed_scan",
-    oracle=f"""
-    SELECT time_hours,
-           count(*) AS n_rows,
-           count(*) FILTER (WHERE water_temp <= -4) AS n_sentinel,
-           sum(CASE WHEN water_temp > -4
-                    THEN round(water_temp * 10)::BIGINT END)::BIGINT AS sum_temp_e1
-    FROM ({HYCOM_GRID_SQL})
-    GROUP BY 1
-    """,
-)
+@query("grid_netcdf_packed_scan", oracle=_GRID_SCAN_ORACLE)
 def grid_netcdf_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PACKED-int16 twin of ``grid_netcdf_scan`` — how real HYCOM
     THREDDS actually serves its hypercubes: physics variables stored as
@@ -279,58 +193,10 @@ def grid_netcdf_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exactly (sources/grid_source.py:write_grid_netcdf_packed /
     _physics_block; packed==formula parity pinned per-column in
     tests/test_netcdf.py)."""
-    import hashlib
-    import inspect
-    import os
+    from modeltracking_spark.sources.grid_source import write_grid_netcdf_packed
 
-    from pyspark.errors import PySparkException
-
-    from modeltracking_spark.fixtures import (
-        GRID_N_DEPTH,
-        GRID_N_LAT,
-        GRID_N_LON,
-        GRID_N_TIME,
-        grid_fixture_fingerprint,
-    )
-    from modeltracking_spark.queries.common import ensure_pkg_on_workers
-    from modeltracking_spark.sources import grid_source as _gs
-    from modeltracking_spark.sources import netcdf_classic as _nc
-    from modeltracking_spark.sources.grid_source import (
-        HycomGridDataSource,
-        write_grid_netcdf_packed,
-    )
-
-    gen_src = (
-        inspect.getsource(_gs._partition_arrays)
-        + inspect.getsource(_gs._box_mesh)
-        + inspect.getsource(_gs.write_grid_netcdf_packed)
-        + inspect.getsource(_gs._physics_block)
-        + inspect.getsource(_nc.write_classic)
-    )
-    key = (
-        f"packed_{grid_fixture_fingerprint()}"
-        f"{hashlib.md5(gen_src.encode()).hexdigest()[:8]}_"
-        f"{GRID_N_TIME}x{GRID_N_DEPTH}x{GRID_N_LAT}x{GRID_N_LON}"
-    )
-    nc_path = f"/tmp/modeltracking_grid_fixture_{key}.nc"
-    if not os.path.exists(nc_path):
-        tmp = f"{nc_path}.{os.getpid()}.tmp"
-        write_grid_netcdf_packed(tmp)
-        os.replace(tmp, nc_path)
-    ensure_pkg_on_workers(spark)
-    try:
-        spark.dataSource.register(HycomGridDataSource)
-    except PySparkException:
-        pass
-    g = spark.read.format("hycom_grid").option("path", nc_path).load()
-    masked = F.when(
-        F.col("water_temp") > -4, F.round(F.col("water_temp") * 10).cast("long")
-    )
-    return g.groupBy("time_hours").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("water_temp") <= -4, 1).otherwise(0)).alias("n_sentinel"),
-        F.sum(masked).alias("sum_temp_e1"),
-    )
+    path = _grid_fixture_file(write_grid_netcdf_packed, prefix="packed_")
+    return _per_step_scan(_hycom_grid(spark, path))
 
 
 @query(

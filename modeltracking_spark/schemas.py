@@ -241,21 +241,51 @@ IBTRACS_16_SCHEMA = StructType(
     ]
 )
 
-# Long/tall relational encoding of the HYCOM 4-D grid var[time,depth,lat,lon]
-# (trackplot_hycom.py:110; coord axes :98-100) — FIXTURES.md table 5.
-HYCOM_GRID_SCHEMA = StructType(
-    [
-        StructField("time_hours", LongType()),  # hours since 2000-01-01 UTC
-        StructField("depth_idx", IntegerType()),
-        StructField("depth_m", DoubleType()),
-        StructField("lat_idx", IntegerType()),
-        StructField("lon_idx", IntegerType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),  # [0, 360)
-        StructField("water_temp", DoubleType()),  # nullable; sentinel ≤ -4
-        StructField("salinity", DoubleType()),
-    ]
-)
+#: the grid columns that carry an axis record, in (time, lat, lon) order
+GRID_AXIS_COLS = ("time_hours", "lat", "lon")
+
+
+def axis_metadata(origin, step) -> dict:
+    """The column metadata of a uniform grid axis: node ``i`` sits at
+    ``origin + i * step``. ``time_hours`` records integer hours."""
+    return {"axis": {"origin": origin, "step": step}}
+
+
+def grid_axis(schema: StructType, col: str) -> tuple:
+    """``(origin, step)`` of the axis record on grid column ``col``, read
+    from the schema alone (no Spark job). A column without the record
+    raises a ``ValueError`` naming it: there is no default geometry."""
+    axis = schema[col].metadata.get("axis") if col in schema.names else None
+    if not axis:
+        raise ValueError(
+            f"grid column {col!r} carries no axis record ({{origin, step}} "
+            "column metadata); load the grid through hycom_grid or "
+            "hycom_grid_fixture, or attach one with schemas.axis_metadata"
+        )
+    return axis["origin"], axis["step"]
+
+
+def hycom_grid_schema(time_axis, lat_axis, lon_axis) -> StructType:
+    """Long/tall relational encoding of the HYCOM 4-D grid
+    var[time,depth,lat,lon] (trackplot_hycom.py:110; coord axes :98-100)
+    — FIXTURES.md table 5. Each ``*_axis`` is an ``(origin, step)`` pair,
+    attached to ``time_hours``/``lat``/``lon`` by :func:`axis_metadata`."""
+    return StructType(
+        [
+            # hours since 2000-01-01 UTC
+            StructField("time_hours", LongType(), metadata=axis_metadata(*time_axis)),
+            StructField("depth_idx", IntegerType()),
+            StructField("depth_m", DoubleType()),
+            StructField("lat_idx", IntegerType()),
+            StructField("lon_idx", IntegerType()),
+            StructField("lat", DoubleType(), metadata=axis_metadata(*lat_axis)),
+            # [0, 360)
+            StructField("lon", DoubleType(), metadata=axis_metadata(*lon_axis)),
+            StructField("water_temp", DoubleType()),  # nullable; sentinel ≤ -4
+            StructField("salinity", DoubleType()),
+        ]
+    )
+
 
 # Dataset-routing catalog for find_hycom_dir semantics
 # (trackplot_hycom.py:173-184) — FIXTURES.md table 6.

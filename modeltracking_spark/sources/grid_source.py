@@ -9,23 +9,37 @@ into at most as many contiguous partitions as the planning process has
 cores, because a Python task costs far more than the decode of one
 step. Each step is emitted as its own Arrow batch.
 
-Two backends, chosen by the ``path`` option:
+Three backends, chosen by the ``path`` option, behind one reader path:
 
 - no ``path`` (default): the deterministic formula fixture — the
-  correctness tier's in-memory twin of the parquet fixture.
+  correctness tier's in-memory twin of the parquet fixture, read like a
+  dataset (:class:`_FormulaGrid`).
 - ``.option("path", "/…/grid.nc")``: a REAL netCDF classic file read
   via ``sources/netcdf_classic.py``. Each step seeks to its record byte
   range (``begin + t*recsize``) and reads ONLY that slice — the
   local-file analog of the reference's server-side DAP slicing
   (``trackplot_hycom.py:110`` ships index ranges to the THREDDS server).
-  A ``dap+http://`` path fetches each run of steps in one hyperslab
+- a ``dap+http://`` path fetches each run of steps in one hyperslab
   request per physics variable.
+
+The grid geometry comes from the dataset. ``schema()`` reads the
+``time``, ``depth``, ``lat`` and ``lon`` coordinate vectors once per
+``.load()`` and attaches each of the ``time``/``lat``/``lon`` axes to
+its column as an axis record, ``{origin, step}``
+(``schemas.hycom_grid_schema``); the profile operator snaps track points
+with it. A non-uniform axis (or one with fewer than two values) raises
+a ``ValueError`` at load, naming the path and the axis. The vectors stay
+on the DataSource instance, which pyspark pickles to the planner, so
+``reader()`` reuses them and a DAP dataset's metadata requests are made
+once per load, not again per plan. A reader built without ``schema()``
+(a user-given schema, or a direct ``reader()`` call) reads them itself.
 
 With ``pushdown=true``, comparisons on ``time_hours`` prune steps before
 any task launches, and comparisons on ``depth_idx``/``lat_idx``/
 ``lon_idx`` narrow every step to an index box: the DAP backend asks the
-server for the box only, the file and formula backends cut it from the
-step they decode. Emitted ``*_idx`` columns keep full-grid numbering.
+server for the box only, the file backend cuts it from the record it
+reads, the formula backend computes only the box. Emitted ``*_idx``
+columns keep full-grid numbering.
 """
 
 from __future__ import annotations
@@ -57,11 +71,17 @@ from modeltracking_spark.fixtures import (
     GRID_SENTINEL,
     GRID_TIME_STEP,
 )
+from modeltracking_spark.schemas import hycom_grid_schema
 
-GRID_SCHEMA_DDL = (
-    "time_hours bigint, depth_idx int, depth_m double, lat_idx int, "
-    "lon_idx int, lat double, lon double, water_temp double, salinity double"
-)
+#: the coordinate vector behind each axis record, in schema order
+_AXIS_VARS = ("time", "lat", "lon")
+#: a lat/lon axis is uniform when every value lies within this fraction
+#: of a step of ``origin + i * step`` (float32-stored coordinates stay
+#: well inside it); a time axis must be exact
+_AXIS_TOL = 0.01
+#: significant digits kept of a lat/lon step: drops the rounding that
+#: ``(last - first) / (n - 1)`` adds to a decimal step such as 0.25
+_STEP_DIGITS = 10
 
 
 def _var_cf_attrs(nc, var: str) -> dict:
@@ -82,8 +102,9 @@ def _var_cf_attrs(nc, var: str) -> dict:
 def _physics_block(nc, var: str, t0: int, t1: int, box):
     """``var[t0..t1]`` cut to ``box`` (inclusive (lo, hi) index ranges of
     depth, lat, lon), shape (steps, depth, lat, lon). A DAP dataset ships
-    only the box, in one hyperslab request for the whole run; a file
-    reads each record slice and cuts the box from it. CF-unpacked when
+    only the box, in one hyperslab request for the whole run, and the
+    formula grid computes only the box; a file reads each record slice
+    and cuts the box from it. CF-unpacked when
     the variable is PACKED (int16 + scale/offset/missing attrs — how real
     HYCOM serves its hypercubes), over BOTH readers; missing values come
     back as the pipeline's sentinel either way, so downstream code sees
@@ -105,27 +126,60 @@ def _physics_block(nc, var: str, t0: int, t1: int, box):
     return a
 
 
-def _dataset_constants(path: str) -> dict:
-    """The per-dataset constants, read once on the planning side: the
-    time axis and the coordinate vectors, plus (for ``dap+http://``
-    backends) the parsed DDS/DAS client itself. They ride the pickled
-    reader into every task, so a task makes only the physics requests:
-    with many concurrent tasks against one DAP server, metadata round
-    trips queued on the server were the query's wall clock."""
+def _axis_record(path: str | None, name: str, values) -> tuple:
+    """``(origin, step)`` of the coordinate vector ``values``: node ``i``
+    at ``origin + i * step``. An axis that is not uniform, or has fewer
+    than two values, raises a ``ValueError`` naming ``path`` and ``name``."""
+    import numpy as np
+
+    a = np.asarray(values)
+    where = f"grid {path or '(formula fixture)'}: axis {name!r}"
+    if a.size < 2:
+        raise ValueError(f"{where} has {a.size} value(s); a uniform axis "
+                         "needs two to define its step")
+    if name == "time":
+        origin, step = int(a[0]), int(a[1] - a[0])
+        tol = 0
+    else:
+        origin = float(a[0])
+        step = float(f"{(a[-1] - a[0]) / (a.size - 1):.{_STEP_DIGITS}g}")
+        tol = _AXIS_TOL * abs(step)
+    off = np.abs(a - (origin + step * np.arange(a.size)))
+    if step == 0 or not off.max() <= tol:
+        i = int(np.argmax(off)) if step else 1
+        raise ValueError(
+            f"{where} is not uniform: value {a[i]!r} at index {i} is off "
+            f"origin + i * step = {origin!r} + {i} * {step!r}; the profile "
+            "operator snaps to uniform axes only"
+        )
+    return origin, step
+
+
+def _dataset_constants(path: str | None) -> dict:
+    """The per-dataset constants, read once per ``.load()``: the time axis,
+    the coordinate vectors, the axis record of ``time_hours``/``lat``/
+    ``lon`` (:func:`_axis_record`), plus the dataset client a task can
+    reuse — the parsed DDS/DAS of a ``dap+http://`` backend, or the
+    formula grid. They ride the pickled reader into every task, so a task
+    makes only the physics requests: with many concurrent tasks against
+    one DAP server, metadata round trips queued on the server were the
+    query's wall clock."""
     from modeltracking_spark.sources.dap import DapDataset, open_nc_or_dap
 
-    nc = open_nc_or_dap(path)
+    nc = _FormulaGrid() if path is None else open_nc_or_dap(path)
     shared = {
         "time": [int(v) for v in nc.read("time")],
         "depth": nc.read("depth"),
         "lat": nc.read("lat"),
         "lon": nc.read("lon"),
-        "ds": None,
+        "ds": nc if isinstance(nc, (DapDataset, _FormulaGrid)) else None,
     }
+    shared["axes"] = tuple(
+        _axis_record(path, v, shared[v]) for v in _AXIS_VARS
+    )
     if isinstance(nc, DapDataset):
         nc.var_attrs("water_temp")  # warm the .das cache
-        shared["ds"] = nc
-    else:
+    elif shared["ds"] is None:
         nc.close()
     return shared
 
@@ -142,11 +196,11 @@ def _runs(steps):
         yield run
 
 
-def _steps_from_netcdf(path: str, steps, shared: dict, box):
+def _read_steps(path: str | None, steps, shared: dict, box):
     """Long-form numpy columns of each step in ``steps``, cut to ``box``,
-    read from a classic netCDF file or a DAP server — slice reads only,
-    never the whole variable. One physics read per variable per run of
-    consecutive steps (see :func:`_physics_block`)."""
+    read from the dataset of ``shared`` (reopened from ``path`` for a
+    file) — slice reads only, never the whole variable. One physics read
+    per variable per run of consecutive steps (see :func:`_physics_block`)."""
     from modeltracking_spark.sources.dap import open_nc_or_dap
 
     nc = shared["ds"] if shared["ds"] is not None else open_nc_or_dap(path)
@@ -166,7 +220,7 @@ def _steps_from_netcdf(path: str, steps, shared: dict, box):
 def _partition_from_netcdf(path: str, ti: int):
     """One whole time step as numpy columns."""
     shared = _dataset_constants(path)
-    return next(_steps_from_netcdf(path, [ti], shared, _full_box(shared)))
+    return next(_read_steps(path, [ti], shared, _full_box(shared)))
 
 
 def _full_box(shared: dict):
@@ -207,66 +261,48 @@ def _grid_cols(t_hours, depth_m, lat_v, lon_v, temp, sal, box):
     }
 
 
-def write_grid_netcdf(path: str, n_time: int = GRID_N_TIME) -> None:
-    """Materialize the formula grid as a REAL classic netCDF file
-    (time = unlimited record dim; per-record streaming write, so the
-    full hypercube never exists in memory). Reading it back through the
-    ``path`` backend reproduces the fixture byte-for-byte — which is how
-    the netCDF pipeline gets an exact DuckDB oracle."""
+def _write_formula_grid(path: str, n_time: int, physics) -> None:
+    """Write the formula grid's first ``n_time`` steps as a classic
+    netCDF file (time = unlimited record dim; per-record streaming write,
+    so the full hypercube never exists in memory): the four coordinate
+    variables, then one record variable per ``(name, encode, attrs)`` of
+    ``physics``, where ``encode`` maps the float64 (depth, lat, lon) step
+    to the stored array."""
     import numpy as np
 
     from modeltracking_spark.sources.netcdf_classic import write_classic
 
-    # _partition_arrays materializes BOTH physics variables per call;
-    # memoize the last record so the two record-var callbacks for the
-    # same r share one formula evaluation instead of recomputing it
-    last: dict = {}
+    grid = _FormulaGrid()
+    coords = {v: grid.read(v) for v in ("depth", "lat", "lon")}
+    full = _full_box(coords)
 
-    def rec(var):
-        def f(r):
-            if last.get("r") != r:
-                last["r"], last["cols"] = r, _partition_arrays(r)
-            return last["cols"][var].reshape(
-                GRID_N_DEPTH, GRID_N_LAT, GRID_N_LON
-            )
-
-        return f
+    def record(var, encode):
+        return lambda r: encode(grid.read_strided(var, [(r, r), *full])[0])
 
     write_classic(
         path,
-        dims=[
-            ("time", 0),
-            ("depth", GRID_N_DEPTH),
-            ("lat", GRID_N_LAT),
-            ("lon", GRID_N_LON),
-        ],
+        dims=[("time", 0), *((v, len(a)) for v, a in coords.items())],
         variables=[
-            (
-                "time",
-                ("time",),
-                lambda r: np.array(r * GRID_TIME_STEP, dtype=np.int32),
-            ),
-            (
-                "depth",
-                ("depth",),
-                np.arange(GRID_N_DEPTH, dtype=np.float64) * GRID_DEPTH_STEP,
-            ),
-            (
-                "lat",
-                ("lat",),
-                GRID_LAT0 + np.arange(GRID_N_LAT, dtype=np.float64) * GRID_LAT_STEP,
-            ),
-            (
-                "lon",
-                ("lon",),
-                GRID_LON0 + np.arange(GRID_N_LON, dtype=np.float64) * GRID_LON_STEP,
-            ),
-            ("water_temp", ("time", "depth", "lat", "lon"), rec("water_temp")),
-            ("salinity", ("time", "depth", "lat", "lon"), rec("salinity")),
+            ("time", ("time",),
+             lambda r: np.array(r * GRID_TIME_STEP, dtype=np.int32)),
+            *((v, (v,), a) for v, a in coords.items()),
+            *((var, ("time", *coords), record(var, encode), attrs)
+              for var, encode, attrs in physics),
         ],
         record_dim="time",
         n_records=n_time,
     )
+
+
+def write_grid_netcdf(path: str, n_time: int = GRID_N_TIME) -> None:
+    """Materialize the formula grid as a REAL classic netCDF file.
+    Reading it back through the ``path`` backend reproduces the fixture
+    byte-for-byte — which is how the netCDF pipeline gets an exact DuckDB
+    oracle."""
+    _write_formula_grid(path, n_time, [
+        ("water_temp", lambda v: v, None),
+        ("salinity", lambda v: v, None),
+    ])
 
 
 def write_grid_netcdf_packed(path: str, n_time: int = GRID_N_TIME) -> None:
@@ -280,82 +316,73 @@ def write_grid_netcdf_packed(path: str, n_time: int = GRID_N_TIME) -> None:
     to the SAME oracle-checked rows as the unpacked one."""
     import numpy as np
 
-    from modeltracking_spark.sources.netcdf_classic import write_classic
+    def packed(offset):
+        return lambda v: np.where(
+            v <= -4.0,
+            np.int16(-30000),
+            np.round((v - offset) * 10.0).astype(np.int16),
+        ).astype(np.int16)
 
-    last: dict = {}
-
-    def packed(var, offset):
-        def f(r):
-            if last.get("r") != r:
-                last["r"], last["cols"] = r, _partition_arrays(r)
-            v = last["cols"][var].reshape(GRID_N_DEPTH, GRID_N_LAT, GRID_N_LON)
-            out = np.where(
-                v <= -4.0,
-                np.int16(-30000),
-                np.round((v - offset) * 10.0).astype(np.int16),
-            )
-            return out.astype(np.int16)
-
-        return f
-
-    write_classic(
-        path,
-        dims=[
-            ("time", 0),
-            ("depth", GRID_N_DEPTH),
-            ("lat", GRID_N_LAT),
-            ("lon", GRID_N_LON),
-        ],
-        variables=[
-            ("time", ("time",),
-             lambda r: np.array(r * GRID_TIME_STEP, dtype=np.int32)),
-            ("depth", ("depth",),
-             np.arange(GRID_N_DEPTH, dtype=np.float64) * GRID_DEPTH_STEP),
-            ("lat", ("lat",),
-             GRID_LAT0 + np.arange(GRID_N_LAT, dtype=np.float64) * GRID_LAT_STEP),
-            ("lon", ("lon",),
-             GRID_LON0 + np.arange(GRID_N_LON, dtype=np.float64) * GRID_LON_STEP),
-            ("water_temp", ("time", "depth", "lat", "lon"),
-             packed("water_temp", 0.0),
-             {"scale_factor": 0.1, "add_offset": 0.0,
-              "missing_value": [-30000], "units": "degC"}),
-            ("salinity", ("time", "depth", "lat", "lon"),
-             packed("salinity", 30.0),
-             {"scale_factor": 0.1, "add_offset": 30.0,
-              "missing_value": [-30000], "units": "psu"}),
-        ],
-        record_dim="time",
-        n_records=n_time,
-    )
+    _write_formula_grid(path, n_time, [
+        ("water_temp", packed(0.0),
+         {"scale_factor": 0.1, "add_offset": 0.0,
+          "missing_value": [-30000], "units": "degC"}),
+        ("salinity", packed(30.0),
+         {"scale_factor": 0.1, "add_offset": 30.0,
+          "missing_value": [-30000], "units": "psu"}),
+    ])
 
 
-#: the formula grid's whole (depth, lat, lon) index box
-FULL_BOX = ((0, GRID_N_DEPTH - 1), (0, GRID_N_LAT - 1), (0, GRID_N_LON - 1))
-
-
-def _partition_arrays(ti: int, box=FULL_BOX):
-    """One time step, cut to ``box``, as numpy columns — byte-identical
-    to the Spark/SQL fixture formulas (integer-derived doubles)."""
+def _formula_physics(var: str, ti: int, d, la, lo):
+    """``var`` of the formula grid at step ``ti`` and the full-grid
+    (depth, lat, lon) indices ``d``, ``la``, ``lo`` — byte-identical to
+    the Spark/SQL fixture formulas (integer-derived doubles)."""
     import numpy as np
 
-    d, la, lo = _box_mesh(box)
-    temp = ((la * 7 + lo * 11 + d * 5 + ti * 3) % 200).astype(np.float64) * 0.1
-    temp_sent = (la * 13 + lo * 7 + d * 3 + ti) % 37 == 0
-    temp[temp_sent] = GRID_SENTINEL
-    sal = 30.0 + ((la * 3 + lo * 5 + d * 7 + ti * 11) % 80).astype(np.float64) * 0.1
-    sal_sent = (la * 11 + lo * 3 + d * 5 + ti) % 41 == 0
-    sal[sal_sent] = GRID_SENTINEL
-    return {
-        "time_hours": np.full(d.shape, ti * GRID_TIME_STEP, dtype=np.int64),
-        "depth_idx": d.astype(np.int32),
-        "depth_m": d.astype(np.float64) * GRID_DEPTH_STEP,
-        "lat_idx": la.astype(np.int32),
-        "lon_idx": lo.astype(np.int32),
-        "lat": GRID_LAT0 + la.astype(np.float64) * GRID_LAT_STEP,
-        "lon": GRID_LON0 + lo.astype(np.float64) * GRID_LON_STEP,
-        "water_temp": temp,
-        "salinity": sal,
+    if var == "water_temp":
+        v = ((la * 7 + lo * 11 + d * 5 + ti * 3) % 200).astype(np.float64) * 0.1
+        v[(la * 13 + lo * 7 + d * 3 + ti) % 37 == 0] = GRID_SENTINEL
+    else:
+        v = 30.0 + ((la * 3 + lo * 5 + d * 7 + ti * 11) % 80).astype(np.float64) * 0.1
+        v[(la * 11 + lo * 3 + d * 5 + ti) % 41 == 0] = GRID_SENTINEL
+    return v
+
+
+def _partition_arrays(ti: int, box=None):
+    """One formula time step, cut to ``box`` (default: the whole grid),
+    as numpy columns — byte-identical to the Spark/SQL fixture formulas."""
+    shared = _dataset_constants(None)
+    return next(_read_steps(None, [ti], shared, box or _full_box(shared)))
+
+
+class _FormulaGrid:
+    """The formula fixture read like a dataset, so the reader has one path
+    for every backend: ``read`` gives a coordinate vector and
+    ``read_strided`` computes one physics variable over a run of steps
+    and an index box, as a DAP dataset would fetch it."""
+
+    #: (length, origin, step) of each coordinate vector
+    AXES = {
+        "time": (GRID_N_TIME, 0, GRID_TIME_STEP),
+        "depth": (GRID_N_DEPTH, 0.0, GRID_DEPTH_STEP),
+        "lat": (GRID_N_LAT, GRID_LAT0, GRID_LAT_STEP),
+        "lon": (GRID_N_LON, GRID_LON0, GRID_LON_STEP),
     }
+
+    def read(self, name: str):
+        import numpy as np
+
+        n, origin, step = self.AXES[name]
+        return origin + np.arange(n) * step
+
+    def read_strided(self, var: str, ranges):
+        import numpy as np
+
+        (t0, t1), *box = ranges
+        mesh = _box_mesh(box)
+        shape = [hi - lo + 1 for lo, hi in box]
+        return np.stack([_formula_physics(var, t, *mesh).reshape(shape)
+                         for t in range(t0, t1 + 1)])
 
 
 #: comparisons the pushdown reader satisfies exactly on an integer column
@@ -416,30 +443,14 @@ def _pack(steps: list[int], n: int) -> list[list[int]]:
 
 
 class HycomGridReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")  # netCDF or dap+http backend
-        if self.path:
-            # the time axis and coordinate vectors are KBs; reading them
-            # on the planning side lets pushed filters prune against the
-            # FILE's axes, not a formula assumption
-            self._shared = _dataset_constants(self.path)
-            self._time_values = self._shared["time"]
-            default_n = len(self._time_values)
-            full = _full_box(self._shared)
-        else:
-            default_n = GRID_N_TIME
-            self._time_values = None
-            self._shared = None
-            full = FULL_BOX
-        self.n_time = int(options.get("n_time", default_n))
+    def __init__(self, options, shared: dict):
+        self.path = options.get("path") or None
+        #: the dataset constants of :func:`_dataset_constants`: pushed
+        #: filters prune against the dataset's own time axis
+        self._shared = shared
         self._time_filters: list = []
         #: inclusive index range per _BOX_COLS column; narrowed by pushdown
-        self._box = dict(zip(_BOX_COLS, full))
-
-    def _time_hours_of(self, t: int) -> int:
-        if self._time_values is not None:
-            return self._time_values[t]
-        return t * GRID_TIME_STEP
+        self._box = dict(zip(_BOX_COLS, _full_box(shared)))
 
     def partitions(self):
         # pushed time filters prune steps before any task launches; the
@@ -447,11 +458,8 @@ class HycomGridReader(DataSourceReader):
         # core, since a Python task costs more than decoding a step
         keep = [
             t
-            for t in range(self.n_time)
-            if all(
-                _time_filter_match(f, self._time_hours_of(t))
-                for f in self._time_filters
-            )
+            for t, hours in enumerate(self._shared["time"])
+            if all(_time_filter_match(f, hours) for f in self._time_filters)
         ]
         if any(lo > hi for lo, hi in self._box.values()):
             keep = []
@@ -465,12 +473,7 @@ class HycomGridReader(DataSourceReader):
         if partition is None:
             return
         box = tuple(self._box[c] for c in _BOX_COLS)
-        steps = (
-            _steps_from_netcdf(self.path, partition.value, self._shared, box)
-            if self.path
-            else (_partition_arrays(t, box) for t in partition.value)
-        )
-        for cols in steps:
+        for cols in _read_steps(self.path, partition.value, self._shared, box):
             yield pa.RecordBatch.from_pydict(cols)
 
 
@@ -519,10 +522,17 @@ class HycomGridDataSource(DataSource):
     def name(cls) -> str:
         return "hycom_grid"
 
-    def schema(self) -> str:
-        return GRID_SCHEMA_DDL
+    def schema(self):
+        # the coordinate vectors are read here, once per .load(); the
+        # instance is pickled to the planner with them, so reader()
+        # reuses them instead of asking the dataset again
+        self._shared = _dataset_constants(self.options.get("path") or None)
+        return hycom_grid_schema(*self._shared["axes"])
 
     def reader(self, schema):
+        shared = getattr(self, "_shared", None)
+        if shared is None:  # no schema(): a user-given schema, or a direct call
+            shared = _dataset_constants(self.options.get("path") or None)
         if self.options.get("pushdown", "false").lower() == "true":
-            return HycomGridPushdownReader(self.options)
-        return HycomGridReader(self.options)
+            return HycomGridPushdownReader(self.options, shared)
+        return HycomGridReader(self.options, shared)

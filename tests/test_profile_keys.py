@@ -94,7 +94,8 @@ def test_grid_index_outside_packed_range_raises(spark, column, bad):
     grid = grid.withColumn(column, F.when(
         (F.col("lat_idx") == 5) & (F.col("lon_idx") == 5),
         F.lit(bad).cast(grid.schema[column].dataType),
-    ).otherwise(F.col(column)))
+    ).otherwise(F.col(column))).withMetadata(
+        column, grid.schema[column].metadata)  # keep time_hours' axis record
     track = spark.createDataFrame(
         [(7, 0, GRID_LAT0 + GRID_LAT_STEP, GRID_LON0 + GRID_LON_STEP, 0)],
         "storm_id int, " + TRACK_DDL,
