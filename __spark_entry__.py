@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` runs the paper's pipeline: the along-track IDW depth
+profile of a synthetic storm track against the in-engine HYCOM grid.
+It needs no test data. Each ``queries()[name]`` is compared at sf=0.01
+against the matching ``oracle_sql()[name]`` via DuckDB (row-count +
+schema + order-insensitive value hash; ``tools/check_queries.py``).
 
 All queries live in ``modeltracking_spark/queries/`` and register
 themselves through the ``@query`` decorator; this module only forwards
@@ -24,19 +25,19 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from modeltracking_spark.queries import load_registries
 
-SF0001 = "/root/testdata/sf0.001"
-
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
+    """The track×grid pipeline of SURVEY.md §7.6: the 80-point synthetic
+    track -> 3x3 grid neighbourhood join -> IDW aggregate over 25 depths.
 
-    The track-style temporal aggregate of SURVEY.md §7.1: ``events`` ->
-    sentinel mask (P3) -> hours-since-2000 day bucket (F1) -> grouped
-    min/max/avg/count (A1) per (day, event_type).
+    Returns the long profile ``(point_id, depth_idx, depth_m, n_valid,
+    idw_value)``, 2,000 rows.
     """
-    from modeltracking_spark.queries import core
+    from modeltracking_spark.fixtures import hycom_grid_fixture
+    from modeltracking_spark.operators.profile import profile_along_track
+    from modeltracking_spark.queries.timegeo import synthetic_track
 
-    return core.flagship_events_daily(spark, SF0001)
+    return profile_along_track(synthetic_track(spark), hycom_grid_fixture(spark))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

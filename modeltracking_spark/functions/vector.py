@@ -113,9 +113,9 @@ def dot_product_fxp_arrow(a: Column | str, b: Column | str) -> Column:
     # non-deterministic marker (guide §4.4): a threshold filter over the
     # resulting cosine otherwise re-evaluates the kernel below the
     # pushed-down filter AND in the projection — two ArrowEvalPython
-    # nodes per call site (observed; plans/r16).  The function is in
-    # fact deterministic; the marker only stops the optimizer from
-    # duplicating it.
+    # nodes per call site (observed in the executed plan).  The
+    # function is in fact deterministic; the marker only stops the
+    # optimizer from duplicating it.
     return F.pandas_udf(_fn, LongType()).asNondeterministic()(
         _col(a), _col(b))
 

@@ -618,7 +618,7 @@ def cosine_neardup_lsh(
     # consumer (the oversized-key aggregate, the anti/semi carve-outs),
     # and the checkpoint also truncates the multi-consumer plan the
     # optimizer was re-deriving per branch (measured: 6.8 s -> ~1.3 s
-    # at sf0.1, plan in plans/r16/).
+    # at sf0.1).
     sig_arr = hyperplane_signatures_all(vec_col, n_planes, dim, n_tables)
     cside = (
         widen_for_kernel(corpus.select(F.col(id_col).alias("id_b"), vec_col))

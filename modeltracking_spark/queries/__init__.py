@@ -6,15 +6,10 @@ the ``@query`` decorator in :mod:`modeltracking_spark.queries.common`.
 ``QUERIES`` / ``ORACLES`` dicts — the single entry point used by
 ``__spark_entry__.py``.
 
-**Ordering matters.** The driver's correctness run scores a bounded
-prefix of the registry (empirically the first 50 entries in round 3), so
-``PRIORITY`` below pins an explicit maximal-coverage ordering: one
-representative query per distinct operator tier inside the window, with
-same-operator variants (second as-of direction, profile re-shapes,
-per-function scalar demos that a suite query already covers…) after it.
-Everything not named in ``PRIORITY`` follows in module registration
-order. ``tools/check_queries.py --window`` audits this ordering against
-the latest CORRECTNESS artifact.
+``PRIORITY`` puts the track×grid pipeline's queries first, in pipeline
+order: track geometry, grid snap, the along-track profile, the grid
+readers, the depth display axis and KMZ placemark ingest. Everything
+not named in ``PRIORITY`` follows in module registration order.
 """
 
 from __future__ import annotations
@@ -41,86 +36,23 @@ QUERY_MODULES = (
     "modeltracking_spark.queries.corpus_q",
 )
 
-#: the scored window (driver cap observed at 50).
-#:
-#: ROUND-17 ROTATION (stalest-first invariant; optimization round, so
-#: no new registrations and no behavior changes — every name below is
-#: green in the driver union r1-r16 AND the r17 session-open full
-#: 269-query exact sweep at sf0.01).  Head = the 19 remaining r11-stale
-#: names (the cohort the r16 window could not fit), then 31 of the 50
-#: r12-stale names alphabetically.  After this window attests, no
-#: attestation is older than r12, and the 19 r12 names that slip
-#: (parquet_map_scan_events, parquet_nested_scan_events, parquet_page_pruned_scan_orders, parquet_struct_scan_events, ...) lead the r18 window — each has an in-window
-#: family sibling (the parquet scan tier is carried by
-#: parquet_decimal/int96/bloom-pruned, the ORC writers by
-#: orc_stream_sink_docs, the sketch tier by cms_user_counts +
-#: distinct_estimate_users + hist_quantiles_events).
+#: the track×grid queries, in pipeline order
 PRIORITY: tuple[str, ...] = (
-    # ---- r11-stale cohort (the 19 that slipped the r16 window) ----
-    "parquet_native_sink_docs",
-    "parquet_native_write_docs",
-    "parquet_stream_sink_docs",
-    "partition_prune_events",
-    "quality_logreg_docs",
-    "scalar_geo_suite",
-    "scd2_history_docs",
-    "text_quality_suite",
-    "tfidf_top_terms_docs",
-    "token_heavy_hitters",
-    "unigram_logprob_docs",
-    "vincenty_vs_haversine",
-    "winnow_fingerprints_docs",
-    "xpath_placemark_fields",
-    "xz_indexed_scan_docs",
-    "zlib_fdict_roundtrip_docs",
-    "zorder_layout_grid",
-    "zstd_seekable_coalesced_scan_docs",
-    "zstd_seekable_scan_docs",
-    # ---- r12-stale cohort (31 of 50, alphabetical) ----
-    "arrow_ipc_roundtrip_docs",
-    "bpe_first_merge_pairs",
-    "chi2_type_vs_weekday_events",
-    "cms_user_counts",
-    "curation_pipeline_docs",
-    "data_quality_events",
+    "track_step_haversine",
+    "track_resample_arclength",
+    "track_bounding_box",
+    "grid_snap_nearest_node",
+    "profile_along_track_temp",
+    "profile_multivariable_pivot",
+    "profile_flatten_roundtrip",
+    "profile_nearest_node",
+    "grid_datasource_scan",
+    "grid_netcdf_scan",
+    "grid_netcdf_packed_scan",
+    "dap_grid_mode_scan",
     "depth_display_axis",
-    "distinct_estimate_users",
-    "dsir_select_docs",
-    "edit_distance_pairs_docs",
-    "embedding_quantize_int8",
-    "fixed_n_per_lang_docs",
-    "funnel_conversion_events",
-    "gopher_rules_docs",
-    "grouped_agg_median_prices",
-    "hist_quantiles_events",
-    "hours_from_parts",
-    "html_extract_main_text",
-    "line_dedup_rewrite_docs",
-    "mad_outliers_events",
-    "mmr_diverse_topk",
-    "npz_roundtrip_embeddings",
-    "orc_bloom_pruned_scan_orders",
-    "orc_decimal_scan_orders",
-    "orc_map_scan_events",
-    "orc_nested_scan_events",
-    "orc_stream_sink_docs",
-    "orc_struct_scan_events",
-    "parquet_bloom_pruned_scan_orders",
-    "parquet_decimal_scan_orders",
-    "parquet_int96_scan_events",
+    "xpath_placemark_fields",
 )
-
-#: queries whose semantics/plan changed THIS round: the staleness lint
-#: in tools/check_queries.py --window treats them as never-attested so
-#: their head-of-window placement does not trip the stalest-first
-#: invariant (their old attestation predates the change).  Round 17:
-#: empty — an optimization round: every change is plan-shape or
-#: kernel-level with the same arithmetic, and the full 269-query
-#: exact sweep at sf0.01 was re-run green on the final tree.
-REATTEST: tuple[str, ...] = ()
-
-#: observed driver correctness cap (CORRECTNESS_r03 scored exactly 50)
-SCORED_WINDOW = 50
 
 
 def load_registries() -> tuple[dict, dict]:

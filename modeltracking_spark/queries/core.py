@@ -126,18 +126,18 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def topk_lineitems_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking/ordering suite, three ``src``-tagged arms in one scored slot:
+    """Ranking/ordering suite, three ``src``-tagged arms in one query:
 
     - ``grp``  W1/P5: per-group top-k via row_number (the k=25 depth
       truncation of ``trackplot_hycom.py:148`` generalized) — one shuffle
       on the group key.
     - ``glob`` P6/§2.7: global sort + limit (TakeOrderedAndProject — each
       partition contributes its local top-10, no full sort materializes);
-      carries ``orders_sort_limit`` (below the window).
+      carries ``orders_sort_limit``.
     - ``zip``  J5: positional zip of two independent orderings — the
       relational ``zip(hurrlat, hurrlon, hours)`` of
       ``trackplot_hycom.py:240`` via row_number alignment; carries
-      ``zip_positional_align`` (below the window).
+      ``zip_positional_align``.
     """
     li = T(spark, sf_dir, "lineitem")
     o = T(spark, sf_dir, "orders")
@@ -280,12 +280,11 @@ def orders_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def customer_order_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.8 set operations + §2.4 semi/anti joins in one scored slot:
+    """§2.8 set operations + §2.4 semi/anti joins in one query:
     intersect / except / union all over yearly customer cohorts
     (Catalyst plans these as aggregates/joins), plus ``with_orders`` /
     ``without_orders`` segments planned as left-semi / left-anti hash
-    joins (no fact-side fanout) — carrying ``semi_anti_customers``
-    (registered below the scored window)."""
+    joins (no fact-side fanout) — carrying ``semi_anti_customers``."""
     o = T(spark, sf_dir, "orders")
     c = T(spark, sf_dir, "customer")
 

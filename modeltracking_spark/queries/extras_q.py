@@ -292,11 +292,10 @@ def positional_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.5 grouping analytics suite: CUBE, ROLLUP and GROUPING SETS over
-    status x priority in one result, tagged by ``g_op`` — one scored slot
+    status x priority in one result, tagged by ``g_op`` — one query
     attests all three API paths (DataFrame ``.cube()``/``.rollup()`` and
     the SQL GROUPING SETS form; the region->nation rollup and orders
-    grouping-sets variants below the scored window exercise the same
-    operators). Each arm is a single Expand + hash aggregate."""
+    grouping-sets variants exercise the same operators). Each arm is a single Expand + hash aggregate."""
     o = T(spark, sf_dir, "orders")
 
     def agg(g, tag):
@@ -375,8 +374,8 @@ def array_functions_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The array ops stay in the plan, but the TOP-LEVEL output column is
     a joined string: the driver's canonicalizer pandas-sorts the frame
-    and crashes on unhashable list cells (CORRECTNESS_r08's one red
-    row), so every registered query emits atomic columns only —
+    and crashes on unhashable list cells (round 8's one red row), so
+    every registered query emits atomic columns only —
     ``tests/test_misc_coverage.py`` pins that invariant registry-wide.
     """
     e = T(spark, sf_dir, "events")

@@ -393,7 +393,7 @@ def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semi_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi/anti join surface: customers with vs without orders — planned
     as left-semi / left-anti hash joins (no fact-side fanout). The arm
-    builder is shared with the in-window ``customer_order_set_ops``
+    builder is shared with the ``customer_order_set_ops``
     suite (``common.semi_anti_arm``)."""
     from modeltracking_spark.queries.common import semi_anti_arm
 

@@ -568,11 +568,10 @@ def frame_sample_fake_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multi-row Arrow expansion a real ffmpeg stage performs, decode
     stubbed deterministically so even the Python stage is oracled.
 
-    Also carries the binary-metadata tier (``binary_metadata_docs``,
-    registered below the scored window): each frame row repeats its
-    payload's JVM-computed byte length, magic-byte format sniff, and
-    md5 digest — the 500-row metadata side joins the frame expansion
-    broadcast."""
+    Also carries the binary-metadata tier (``binary_metadata_docs``):
+    each frame row repeats its payload's JVM-computed byte length,
+    magic-byte format sniff, and md5 digest — the 500-row metadata side
+    joins the frame expansion broadcast."""
     d = attach_binary_payload(T(spark, sf_dir, "documents"))
     meta = binary_metadata(d).select(
         "doc_id", "n_bytes", "format", "payload_md5"

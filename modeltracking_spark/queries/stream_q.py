@@ -47,16 +47,15 @@ from modeltracking_spark.streaming.windows import (
     """,
 )
 def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time window suite, ``w_op``-tagged arms in one scored slot:
+    """Event-time window suite, ``w_op``-tagged arms in one query:
 
     - ``tumble`` 1-hour tumbling windows per type — epoch-aligned, so
       window.start ≡ date_trunc('hour').
     - ``slide``  2h/1h sliding windows — each event lands in exactly two
       windows (starts at trunc(ts) and trunc(ts)-1h), replayed in SQL by
-      a two-way unioned assignment; carries ``sliding_window_counts``
-      (registered below the scored window). The stream-vs-batch
-      equivalence of both window shapes is asserted in
-      tests/test_streaming.py.
+      a two-way unioned assignment; carries ``sliding_window_counts``.
+      The stream-vs-batch equivalence of both window shapes is asserted
+      in tests/test_streaming.py.
     """
     e = T(spark, sf_dir, "events")
     tum = tumbling_counts(e).select(

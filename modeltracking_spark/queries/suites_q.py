@@ -1,15 +1,11 @@
-"""Suite queries: several single-function demos folded into one scored
-query each.
+"""Suite queries: several single-function demos folded into one
+oracled query each.
 
-The driver's correctness run scores a bounded window of registered
-queries (50 in round 3), so every trivial scalar demo that occupies its
-own slot crowds a whole operator tier out of the window. These suites
-keep per-§2-row oracle evidence — each column is one row of SURVEY.md
-§2 — while spending one slot instead of three or four. The originals
-stay registered (below the window) for direct per-function runs.
+Each suite keeps per-§2-row oracle evidence — each column is one row of
+SURVEY.md §2 — in one query instead of three or four. The originals
+stay registered for direct per-function runs.
 
-Column -> §2 row mapping is stated in each docstring; COVERAGE.md points
-at these suites for the affected rows.
+Column -> §2 row mapping is stated in each docstring.
 """
 
 from __future__ import annotations
@@ -75,7 +71,7 @@ def scalar_geo_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     All per-row JVM expressions in one whole-stage-codegen projection.
     The single-function originals (``hours_from_parts``, ``lon_normalize``,
     ``depth_display_axis``, ``inv_square_weights``,
-    ``hours_epoch_roundtrip``) remain registered below the scored window.
+    ``hours_epoch_roundtrip``) remain registered.
     """
     o = T(spark, sf_dir, "orders")
     ts = F.make_timestamp(
@@ -160,7 +156,7 @@ def text_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the single fused "score every doc" pass a curation pipeline runs,
     rather than three separate scans. Single-function originals
     (``lang_id_docs``, ``quality_scores_docs``, ``bpe_token_counts``,
-    ``clean_normalize_docs``) remain registered below the scored window.
+    ``clean_normalize_docs``) remain registered.
     """
     from modeltracking_spark.functions.text import STOPWORDS, stopword_ratio, tokens
     from modeltracking_spark.operators.textops import lang_id_heuristic
@@ -253,8 +249,7 @@ def events_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact BIGINT sums (``np.polyfit`` deg-1,
     ``TrackPlotter_Hycom.ipynb:427``). Single-function originals
     (``event_type_stats``, ``events_json_props``, ``moving_frame_sums``,
-    ``try_cast_cleanup``, ``linear_fit_orders``) remain registered below
-    the scored window."""
+    ``try_cast_cleanup``, ``linear_fit_orders``) remain registered."""
     e = T(spark, sf_dir, "events")
     v = cents("value")
     k = F.get_json_object("props", "$.k").cast("long")

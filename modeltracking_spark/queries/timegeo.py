@@ -125,19 +125,14 @@ def track_step_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
     by ``trackplot_hycom.py:7-8``. Transcendental output rounded to 2
     decimals per the fixed-point doctrine."""
     t = synthetic_track(spark)
-    # single-track contract: this window is track-sized by construction
-    # (80 reference advisory points), so the all-to-one-partition
-    # WindowExec note is the DECLARED bound, not a scale hazard; a
-    # literal partition key would be constant-folded away anyway. The
-    # fleet-scale variant is resample_track_arclength(track_col=...).
-    w = Window.orderBy("point_id")
-    stepped = t.select(
-        "point_id",
-        "lat",
-        "lon",
-        F.lag("lat").over(w).alias("plat"),
-        F.lag("lon").over(w).alias("plon"),
+    # point ids are consecutive, so the previous point is an equi-join
+    # on point_id - 1: no all-to-one-partition window
+    prev = t.select(
+        (F.col("point_id") + 1).alias("point_id"),
+        F.col("lat").alias("plat"),
+        F.col("lon").alias("plon"),
     )
+    stepped = t.join(F.broadcast(prev), "point_id", "left")
     return stepped.select(
         "point_id",
         "lat",
@@ -253,12 +248,11 @@ def vincenty_vs_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Also carries A1 (``trackplot_hycom.py:236-237``): the track's
     bounding box — min/max lat/lon of the SAME track, broadcast onto
-    every step row — so ``track_bounding_box`` (registered below the
-    scored window) keeps in-window attestation."""
+    every step row."""
     from modeltracking_spark.operators.aggregates import bounding_box
 
     t = synthetic_track(spark)
-    # single-track contract — see track_step_haversine's window note
+    # single-track contract: the window is track-sized (80 points)
     w = Window.orderBy("point_id")
     stepped = t.select(
         "point_id",

@@ -123,8 +123,8 @@ def profile_multivariable_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ordered per-point array (``zip_variable3D``'s block,
     ``trackplot_hycom.py:199-223``) and posexploded back to long — the
     emitted ``pos`` ordinal comes from the array roundtrip, so R1 array
-    build and R2 tuple extraction are attested by this scored slot (the
-    standalone ``profile_flatten_roundtrip`` stays below the window).
+    build and R2 tuple extraction are attested by this query (the
+    standalone ``profile_flatten_roundtrip`` checks them alone too).
 
     The long grid goes through the SAME profile_neighbors geometry as the
     single-variable query — the ``variable`` label rides along via

@@ -1,7 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Used by tests and ``bench.py``. The driver's correctness harness passes its
-own session into ``queries()`` callables, so nothing in the query layer may
+Used by tests and ``perfbench/``. A caller of ``queries()`` may pass its
+own session into the callables, so nothing in the query layer may
 *depend* on these configs — they are performance posture only.
 
 Scale posture (local[32] here, 1000-executor cluster in spirit):

@@ -23,7 +23,10 @@ from modeltracking_spark.schemas import (
 
 def read_nhc_best_track(spark: SparkSession, path: str) -> DataFrame:
     """S1: NHC best-track CSV -> normalized track frame
-    (point_id, ts, t_hours, lat, lon[0,360), stormname, intensity).
+    (atcfdtg, ts, t_hours, lat, lon[0,360), stormname, intensity_kt).
+
+    There is no ``point_id`` column; the caller derives one (for example
+    ``F.col("t_hours").alias("point_id")``) before profiling.
 
     header=True replaces the reference's ``if i > 0`` row skip (P2); the
     yyyyMMddHH parse is F1; the lon fix is F4 (-19.4 -> 340.6,

@@ -274,8 +274,7 @@ def interval_join_from_events(
     how: str = "inner",
 ) -> DataFrame:
     """Watermark-STALL-PROOF interval join over one typed event stream
-    — the production guard the r8 left-outer test uncovered
-    (RESPONSES_r8.md): when each side's ``withWatermark`` sits AFTER
+    — the production guard the r8 left-outer test uncovered: when each side's ``withWatermark`` sits AFTER
     its event-type filter, a side whose type goes quiet (errors during
     a healthy period — exactly when the error-free-click detector
     matters most) stops advancing its watermark, the query's global

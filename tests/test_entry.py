@@ -1,6 +1,6 @@
-"""Driver-contract smoke: entry() produces rows; every oracle key, and
-every name the priority window, bench.py and tools/dump_plans.py pin, has
-a query; linear_fit operator agrees with the integer-exact formula."""
+"""Entry-point smoke: entry() is the exact track×grid profile; every
+oracle key has a query and PRIORITY leads the registry; linear_fit
+operator agrees with the integer-exact formula."""
 
 import sys
 
@@ -9,21 +9,26 @@ sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
 import pyspark.sql.functions as F
 
+from modeltracking_spark.fixtures import GRID_N_TIME
 from modeltracking_spark.operators.aggregates import linear_fit
+from modeltracking_spark.queries.timegeo import synthetic_track
+from perfbench import reference
 
 
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
-    assert df.count() > 0
     assert df.columns == [
-        "day_idx", "event_type", "n_events", "sum_cents", "min_cents", "max_cents",
+        "point_id", "depth_idx", "depth_m", "n_valid", "idw_value",
     ]
+    rows = df.collect()
+    assert len(rows) == 2000  # 80 track points x 25 depths
+    points = [tuple(r) for r in synthetic_track(spark).collect()]
+    want = reference.expected_profile(points, GRID_N_TIME)
+    assert reference.profile_mismatches(rows, want) == []
 
 
 def test_registry_consistency(spark):
-    import bench
     from modeltracking_spark.queries import PRIORITY
-    from tools.dump_plans import NOTES
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -31,15 +36,10 @@ def test_registry_consistency(spark):
     assert set(oracles) <= set(qs)  # every oracle has a query
     # >= 40 oracled entries (the correctness gate)
     assert len(oracles) >= 40
-    # every list that names queries names registered ones only
-    for where, names in (
-        ("queries.PRIORITY", PRIORITY),
-        ("bench.HEADLINE", bench.HEADLINE),
-        ("bench.ANCHOR", bench.ANCHOR),
-        ("tools/dump_plans.py NOTES", NOTES),
-    ):
-        dangling = sorted(set(names) - set(qs))
-        assert not dangling, f"{where} names unregistered queries: {dangling}"
+    # PRIORITY names registered queries only, and leads the registry
+    dangling = sorted(set(PRIORITY) - set(qs))
+    assert not dangling, f"queries.PRIORITY names unregistered queries: {dangling}"
+    assert list(qs)[:len(PRIORITY)] == list(PRIORITY)
 
 
 def test_linear_fit_operator_matches_formula(spark):

@@ -682,28 +682,20 @@ BOUNDED_WINDOW_SITES = {
 }
 
 
-def test_no_partitionless_window_over_full_table_in_plans_corpus():
-    """VERDICT r11 item 1: sweep every plan in PLANS.md (the headline
-    corpus tools/dump_plans.py regenerates each round) for ``Window``
-    nodes that have no partition spec AND no limit operator below
-    them — the all-rows-to-one-task sort shape that killed the old
-    positional-zip arm.  Only the declared bounded-by-construction
-    sites may carry one."""
-    import os
-    import re
-
+def test_no_partitionless_window_over_full_table_in_plans_corpus(spark):
+    """VERDICT r11 item 1: sweep the live executed plan of every
+    ``PRIORITY`` query (the track×grid pipeline) for ``Window`` nodes
+    that have no partition spec AND no limit operator below them — the
+    all-rows-to-one-task sort shape that killed the old positional-zip
+    arm.  Only the declared bounded-by-construction sites may carry
+    one."""
     from modeltracking_spark.plans.audit import partitionless_full_windows
+    from modeltracking_spark.queries import PRIORITY, load_registries
 
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "PLANS.md")
-    text = open(path, errors="replace").read()
+    qs, _ = load_registries()
     offenders = {}
-    for section in re.split(r"^## ", text, flags=re.M)[1:]:
-        name = section.splitlines()[0].strip()
-        m = re.search(r"```\n(.*?)```", section, re.S)
-        if not m:
-            continue
-        bad = partitionless_full_windows(m.group(1))
+    for name in PRIORITY:
+        bad = partitionless_full_windows(executed_plan(qs[name](spark, SF001)))
         if bad and name not in BOUNDED_WINDOW_SITES:
             offenders[name] = bad
     assert not offenders, (

@@ -129,107 +129,5 @@ def main(filters: list[str]) -> int:
     return 1 if n_fail else 0
 
 
-def window_audit() -> int:
-    """Registration-vs-scored diff (VERDICT r3 item 2).
-
-    The driver scores only the first SCORED_WINDOW registered queries.
-    This audit prints which registrations fall outside the window, diffs
-    the registry against the latest CORRECTNESS_r*.json, and fails if
-    more queries are registered than the window holds WITHOUT an explicit
-    PRIORITY ordering covering the whole window — the silent-unscored
-    trap that ate clean_normalize_docs in round 3.
-    """
-    import glob
-    import json
-
-    sys.path.insert(0, "/root/repo")
-    from modeltracking_spark.queries import (
-        PRIORITY,
-        REATTEST,
-        SCORED_WINDOW,
-        load_registries,
-    )
-
-    qs, oracles = load_registries()
-    names = list(qs)
-    window, outside = names[:SCORED_WINDOW], names[SCORED_WINDOW:]
-    print(f"registered: {len(names)}  window: {len(window)}  outside: {len(outside)}")
-    no_oracle_in_window = [n for n in window if n not in oracles]
-    if no_oracle_in_window:
-        print(f"window entries with rows-only checks: {no_oracle_in_window}")
-    if outside:
-        print("outside the scored window (pytest/r03-evidence only):")
-        for n in outside:
-            print(f"  {n}")
-
-    latest = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
-    if latest:
-        scored = set(json.load(open(latest[-1])))
-        unscored = [n for n in window if n not in scored]
-        print(f"\nvs {latest[-1].rsplit('/', 1)[-1]}:")
-        print(f"  window entries not in it (expected for newly promoted): {unscored}")
-
-    rc = 0
-    if len(names) > SCORED_WINDOW:
-        missing_priority = [n for n in window if n not in PRIORITY]
-        if missing_priority:
-            print(
-                f"\nERROR: {len(names)} registered > window {SCORED_WINDOW}, but the "
-                f"window is not fully pinned by PRIORITY — unpinned: {missing_priority}"
-            )
-            rc = 2
-        else:
-            print("\nwindow fully pinned by PRIORITY — ordering is explicit. OK")
-
-    # --- stalest-first rotation invariant (VERDICT r9 item 8) ---------
-    # A query hash-matched in round R is "attested at R"; never-attested
-    # queries are infinitely stale. The proposed window must not leave a
-    # strictly-staler query outside while a fresher (already-attested)
-    # one sits inside — the manual-counting regression that let the r9
-    # post-freeze cohort pile up. Never-attested queries are exempt from
-    # the *inside* check (new registrations are allowed to take slots).
-    last_attested: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        rnd = int("".join(ch for ch in path.rsplit("r", 1)[-1] if ch.isdigit()))
-        for q, res in json.load(open(path)).items():
-            if isinstance(res, dict) and res.get("hash_match"):
-                last_attested[q] = max(last_attested.get(q, 0), rnd)
-    # behavior-changed queries re-attest from scratch: their old green
-    # predates the change, so they count as never-attested here
-    for q in REATTEST:
-        last_attested.pop(q, None)
-    never_outside = [n for n in outside if n not in last_attested]
-    if never_outside:
-        print(
-            f"\nERROR: never-attested queries OUTSIDE the scored window "
-            f"(they can never attest): {never_outside}"
-        )
-        rc = 2
-    inside_attested = [n for n in window if n in last_attested]
-    if inside_attested and outside:
-        freshest_in = max(last_attested[n] for n in inside_attested)
-        worst_out = min(
-            (last_attested[n] for n in outside if n in last_attested), default=None
-        )
-        if worst_out is not None and worst_out < freshest_in:
-            stale_out = sorted(
-                n for n in outside if last_attested.get(n, 99) == worst_out
-            )
-            fresh_in = sorted(
-                n for n in inside_attested if last_attested[n] == freshest_in
-            )
-            print(
-                f"\nERROR: stalest-first violated — r{worst_out}-stale outside "
-                f"the window ({stale_out[:5]}…) while r{freshest_in}-attested "
-                f"inside ({fresh_in[:5]}…). Rotate the staler cohort in."
-            )
-            rc = 2
-    if rc == 0:
-        print("stalest-first rotation invariant holds. OK")
-    return rc
-
-
 if __name__ == "__main__":
-    if "--window" in sys.argv:
-        raise SystemExit(window_audit())
     raise SystemExit(main(sys.argv[1:]))

@@ -7,7 +7,7 @@ event log — the UI's Stages tab, flattened to stdout, for a box where
 the UI is disabled.
 
 Usage: python tools/profile_hot.py <query> [<query> ...]
-       SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS honored as in bench.py.
+       SPARK_GRAFT_SF_DIR (default sf0.1) / SPARK_GRAFT_CPUS honored.
 """
 
 from __future__ import annotations

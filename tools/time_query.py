@@ -1,6 +1,6 @@
 """Standalone single-query timer: warm once, then median/min of N timed
 noop-sink executions — the fast inner loop for optimization work
-(bench.py remains the protocol artifact; this is a dev tool).
+(a dev tool; perfbench/ is the benchmark).
 
 Usage: python tools/time_query.py <query> [<query> ...]
        SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS / SPARK_GRAFT_TQ_RUNS
