@@ -90,22 +90,3 @@ def char_shingles(text: Column | str, n: int = 5) -> Column:
             )
         ),
     )
-
-
-def word_ngrams(text: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles joined with '\\x01' (array<string>).
-
-    The token array is let-bound (see :func:`_let`) so tokenization
-    runs once per row, not once per n-gram.
-    """
-    return _let(
-        tokens(text),
-        lambda toks: F.when(
-            F.size(toks) - F.lit(n - 1) <= 0, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-                lambda i: F.array_join(F.slice(toks, i, n), "\x01"),
-            )
-        ),
-    )

@@ -118,42 +118,3 @@ def dot_product_fxp_arrow(a: Column | str, b: Column | str) -> Column:
     # optimizer from duplicating it.
     return F.pandas_udf(_fn, LongType()).asNondeterministic()(
         _col(a), _col(b))
-
-
-def dot_product_arrow(a: Column | str, b: Column | str) -> Column:
-    """:func:`dot_product` (double left-fold) as one Arrow kernel (r16).
-
-    The double accumulation is ORDER-SENSITIVE, so the kernel folds
-    dimension-by-dimension across the whole batch (vectorized over rows,
-    sequential over dims) — bit-identical to the expression's left fold
-    and to a sequential SQL fold; a numpy ``sum`` (pairwise summation)
-    could differ at ulp level and flip an oracle hash.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType
-
-    def _fn(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        try:
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in sa])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in sb])
-            P = A * B
-            acc = np.zeros(len(P), dtype=np.float64)
-            for d in range(P.shape[1]):  # left fold, exact order
-                acc = acc + P[:, d]
-            return pd.Series(acc)
-        except ValueError:
-            out = []
-            for x, y in zip(sa, sb):
-                acc = 0.0
-                for xv, yv in zip(x, y):
-                    acc = acc + float(xv) * float(yv)
-                out.append(acc)
-            return pd.Series(out, dtype="float64")
-
-    _fn.__annotations__ = {"sa": pd.Series, "sb": pd.Series,
-                           "return": pd.Series}
-    # see dot_product_fxp_arrow: deterministic in fact, marked to stop
-    # the optimizer's duplicate-below-filter rewrite (guide §4.4)
-    return F.pandas_udf(_fn, DoubleType()).asNondeterministic()(
-        _col(a), _col(b))

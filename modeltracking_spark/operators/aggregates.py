@@ -56,17 +56,6 @@ def idw_weighted_mean(
     )
 
 
-def weighted_mean(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value: Column | str,
-    weight: Column | str,
-    out_name: str = "wmean",
-) -> DataFrame:
-    """Generic Σwv/Σw (A2's shape over any weight column)."""
-    return idw_weighted_mean(df, group_cols, value, weight, out_name)
-
-
 def bounding_box(df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
     """A1: track bounding box (``trackplot_hycom.py:236-237``)."""
     return df.agg(

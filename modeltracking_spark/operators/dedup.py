@@ -380,80 +380,6 @@ def token_ids(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return toks.select("id", token_hash60("token").alias("token_id"))
 
 
-def minhash_signatures(
-    doc_tokens: DataFrame,
-    n_hashes: int = 16,
-) -> DataFrame:
-    """MinHash signatures from (id, token_id) rows.
-
-    h_i(t) = (a_i·(t mod p) + b_i) mod p, signature_i = min over the doc's
-    tokens. The inner ``mod p`` keeps the affine product within int64 for
-    any 60-bit token id (a_i ≤ 129, so a_i·(p−1) < 2^39) — identical
-    arithmetic in Spark and ANSI SQL. One explode (n_hashes×) + one
-    groupBy — map-side combinable. Output: (id, hash_idx, sig).
-    """
-    t = F.col("token_id") % F.lit(MINHASH_PRIME)
-    hashes = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("hash_idx"),
-                (
-                    (F.lit(MINHASH_A[i]) * t + F.lit(MINHASH_B[i]))
-                    % F.lit(MINHASH_PRIME)
-                ).alias("h"),
-            )
-            for i in range(n_hashes)
-        ]
-    )
-    return (
-        doc_tokens.withColumn("__h", F.explode(hashes))
-        .groupBy("id", F.col("__h.hash_idx").alias("hash_idx"))
-        .agg(F.min("__h.h").alias("sig"))
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Band the signatures and emit candidate pairs sharing any band.
-
-    Band key = the concatenated signature slice; docs agreeing on all
-    ``rows_per_band`` hashes of a band land in one bucket. A self-join on
-    (band, band_key) replaces the O(n²) comparison — capped per bucket
-    at ``max_bucket_size`` members (oversized buckets degrade to
-    sorted-neighbor chaining, see :func:`_capped_band_pairs`; audit the
-    drops with :func:`band_bucket_overflow`). Output: distinct
-    (id_a, id_b), id_a < id_b.
-    """
-    banded = (
-        signatures.withColumn("band", (F.col("hash_idx") / F.lit(rows_per_band)).cast("int"))
-        .where(F.col("band") < bands)
-        .groupBy("id", "band")
-        .agg(
-            # 64-bit hash of the ordered signature slice, not the string
-            # itself: the self-join shuffles 8-byte keys instead of long
-            # strings. A hash collision can only ADD a candidate pair,
-            # which the exact-Jaccard verify then prunes — the final
-            # result set is unchanged.
-            F.xxhash64(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("hash_idx", "sig"))
-                        ),
-                        lambda s: s["sig"].cast("string"),
-                    ),
-                    "_",
-                )
-            ).alias("band_key")
-        )
-    )
-    return _capped_band_pairs(banded, "id", (), max_bucket_size)
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,

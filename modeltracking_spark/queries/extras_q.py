@@ -170,8 +170,8 @@ def dap_grid_mode_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually serves (trackplot_hycom.py:176). The client parses the
     Grid DDS, projects the array FULLY QUALIFIED (``g.g[...]``) so
     only the hyperslab crosses the wire, and the grid DataSource
-    consumes the ``dap+http://`` URL unchanged — per-timestep
-    partitions each fetch one record slice over the live protocol.
+    consumes the ``dap+http://`` URL unchanged — each partition asks
+    for one hyperslab per physics variable per run of steps.
     Sequence/Structure arms + the bare-grid instance wire shape are
     pinned in tests/test_netcdf.py."""
     from modeltracking_spark.sources.grid_source import write_grid_netcdf
@@ -185,12 +185,12 @@ def grid_netcdf_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PACKED-int16 twin of ``grid_netcdf_scan`` — how real HYCOM
     THREDDS actually serves its hypercubes: physics variables stored as
     int16 with CF scale_factor/add_offset/missing_value attributes (¼
-    the bytes), unpacked transparently by the partition loader
-    (cf_unpack + sentinel restore — netCDF4's auto
-    mask-and-scale, now in OUR reader). The fixture values are exact
-    multiples of 0.1, so packing is LOSSLESS and the SAME formula
-    oracle attests the packed encode -> CF-unpack -> scan pipeline
-    bit-exactly (sources/grid_source.py:write_grid_netcdf_packed /
+    the bytes), unpacked by the grid reader (``cf_unpack`` over the
+    dataset's ``var_attrs``, missing values restored to the sentinel —
+    netCDF4's auto mask-and-scale, now in OUR reader). The fixture
+    values are exact multiples of 0.1, so packing is LOSSLESS and the
+    SAME formula oracle attests the packed encode -> CF-unpack -> scan
+    pipeline bit-exactly (sources/grid_source.py:write_grid_netcdf_packed /
     _physics_block; packed==formula parity pinned per-column in
     tests/test_netcdf.py)."""
     from modeltracking_spark.sources.grid_source import write_grid_netcdf_packed

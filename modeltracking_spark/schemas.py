@@ -182,11 +182,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every testdata table."""
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
 # ---------------------------------------------------------------------------
 # Fixture schemas from the reference's real inputs (FIXTURES.md)
 # ---------------------------------------------------------------------------

@@ -10,14 +10,17 @@ protocol itself (VERDICT r6 item 7):
 
 - ``encode_constraint`` — index slices -> the DAP hyperslab projection
   ``?var[t0:t1][y0:y1][x0:x1]`` (DAP 2.0 §5.3 constraint expressions);
-- ``DapDataset`` — fetches+parses ``.dds`` (dataset descriptor) and
-  sliced ``.dods`` (XDR data) responses, exposing the same
-  ``dims`` / ``read(var)`` / ``read_slice(var, t)`` surface as
-  :class:`~modeltracking_spark.sources.netcdf_classic.NcFile`, so the
-  grid DataSource can consume a DAP URL wherever it consumes a file;
+- ``DapDataset`` — fetches+parses ``.dds`` (dataset descriptor),
+  ``.das`` (attributes) and sliced ``.dods`` (XDR data) responses,
+  answering the same dataset contract as
+  :class:`~modeltracking_spark.sources.netcdf_classic.NcFile` —
+  ``read(var)``, ``read_strided(var, ranges)``, ``var_attrs(var)``,
+  ``close()`` — so the grid DataSource consumes a DAP URL wherever it
+  consumes a file;
 - ``make_dap_handler`` — an http.server handler that serves ``.dds`` /
-  ``.dods`` for classic-netCDF files via :class:`NcFile` (slice reads
-  only), the loopback test-server pattern of tests/test_netcdf.py.
+  ``.das`` / ``.dods`` for classic-netCDF files through the same
+  contract (``NcFile.read_strided``: slice reads only), the loopback
+  test-server pattern of tests/test_netcdf.py.
 
 Wire format implemented from the spec: DDS text grammar (``Dataset {
 Float64 var[dim = n]...; } name;``), and the ``.dods`` response = the
@@ -45,9 +48,10 @@ URL-percent-encoded on the wire and unquoted by the server — the
 full round-trip is exercised live. Unknown declarations (DAP 2.0
 has no Int64) stay typed rejects.
 
-Scale posture: one ``.dods`` round-trip per (variable, record) — the
-server does the hyperslab cut, the client never downloads the
-hypercube; ``n_fetches``/``n_bytes`` counters let tests assert it.
+Scale posture: the grid reader asks for one ``.dods`` hyperslab per
+physics variable per run of consecutive steps — the server does the
+cut, the client never downloads the hypercube; ``n_fetches``/``n_bytes``
+counters let tests assert it.
 Every request goes through :func:`http_get`, which the classic-netCDF
 HTTP range reader shares: a timeout and one retry (all of them are
 idempotent GETs), a body check against ``Content-Length``, and a
@@ -420,8 +424,11 @@ def http_get(url: str, byte_range: tuple[int, int] | None):
 class DapDataset:
     """DAP 2.0 client over a dataset URL (no trailing ``.dds``/``.dods``).
 
-    ``dims`` / ``read`` / ``read_slice`` mirror :class:`NcFile`, so grid
+    ``read`` / ``read_strided`` / ``var_attrs`` / ``close`` (plus
+    ``dims`` and ``read_slice``) mirror :class:`NcFile`, so grid
     pipelines can swap a ``dap+http://host/path`` URL for a file path.
+    Values come back raw, as from a file; ``netcdf_classic.cf_unpack``
+    decodes them with the attributes of ``var_attrs``.
     """
 
     def __init__(self, url: str):
@@ -503,13 +510,6 @@ class DapDataset:
     def shape(self, var: str) -> tuple[int, ...]:
         return tuple(sz for _, sz in self.vars[var][1])
 
-    def dim_size(self, name: str) -> int:
-        """NcFile surface parity (record dims report their DDS length)."""
-        for dn, sz in self.dims:
-            if dn == name:
-                return sz
-        raise KeyError(f"no DAP dimension {name!r}")
-
     def das(self) -> dict:
         """Fetch + parse the ``.das`` attribute structure ->
         ``{container: {attr: value}}`` — containers are variable names
@@ -549,52 +549,35 @@ class DapDataset:
     def var_attrs(self, var: str) -> dict:
         """Attributes of one variable, from the ``.das`` response
         (fetched once per dataset handle and cached — one extra
-        round-trip total, not one per record). NcFile surface parity:
-        ``nc.vars[v].attrs`` there, ``nc.var_attrs(v)`` here; grid
-        readers use :func:`modeltracking_spark.sources.grid_source._var_cf_attrs`
-        to see both uniformly."""
+        round-trip total, not one per record)."""
         if self._das_cache is None:
             self._das_cache = self.das()
         return self._das_cache.get(var, {})
 
-    def _cf_unpack(self, var: str, a):
-        from modeltracking_spark.sources.netcdf_classic import cf_unpack
-
-        return cf_unpack(a, self.var_attrs(var))
-
-    def read(self, var: str, apply_cf: bool = False):
-        """Whole variable (use for header-adjacent coordinate vectors).
-        ``apply_cf=True`` mask-and-scales per the DAS CF attributes,
-        exactly like ``NcFile.read`` — a packed int16 dataset served
-        over ``dap+http://`` decodes to the same physics values as the
-        same file read by path."""
-        ranges = [(0, sz - 1) for sz in self.shape(var)]
-        if not ranges:  # scalar
-            out = self._fetch_array(var, []).reshape(())
-        else:
-            out = self._fetch_array(var, ranges)
-        return self._cf_unpack(var, out) if apply_cf else out
+    def read(self, var: str):
+        """Whole variable (use for header-adjacent coordinate vectors)."""
+        return self.read_strided(var, [])
 
     def read_strided(self, var: str, ranges: list[tuple]):
         """Arbitrary hyperslab with optional strides — 2-tuples (a, b)
-        inclusive, 3-tuples (a, step, b). The SERVER subsamples; only
+        inclusive, 3-tuples (a, step, b), one per leading dimension;
+        later dimensions are read whole. The SERVER subsamples; only
         the kept cells cross the wire (e.g. every 4th timestep of a
         year-long axis ships n/4 records)."""
-        return self._fetch_array(var, list(ranges))
+        rest = [(0, sz - 1) for sz in self.shape(var)[len(ranges):]]
+        return self._fetch_array(var, [*ranges, *rest])
 
-    def read_slice(self, var: str, i: int, apply_cf: bool = False):
+    def read_slice(self, var: str, i: int):
         """Record ``i`` of ``var`` along its first dimension, without the
-        record axis — NcFile.read_slice semantics (including
-        ``apply_cf``). The server performs the hyperslab cut; only this
-        record crosses the wire."""
+        record axis — NcFile.read_slice semantics. The server performs
+        the hyperslab cut; only this record crosses the wire."""
         shape = self.shape(var)
         if not shape:
             raise ValueError(f"cannot slice scalar DAP variable {var!r}")
         if not 0 <= i < shape[0]:
             raise IndexError(f"{var}[{i}] out of range {shape[0]}")
         ranges = [(i, i)] + [(0, sz - 1) for sz in shape[1:]]
-        out = self._fetch_array(var, ranges)[0]
-        return self._cf_unpack(var, out) if apply_cf else out
+        return self._fetch_array(var, ranges)[0]
 
     def read_sequence(self, name: str) -> dict:
         """Fetch a DAP 2.0 Sequence -> {column: list} (round 13).
@@ -694,12 +677,10 @@ def _var_decl(nc, name: str, ranges=None, indent: str = "    ",
         dim_pairs = list(zip(v.dim_ids, v.shape))
     dims = []
     for di, sz in dim_pairs:
-        dn = nc.dims[di][0]
-        full = nc.numrecs if v.is_record and di == nc.rec_dim_id else sz
         if ranges is not None:
             a, st_, b = ranges[len(dims)]
-            full = len(range(a, b + 1, st_))
-        dims.append(f"[{dn} = {full}]")
+            sz = len(range(a, b + 1, st_))
+        dims.append(f"[{nc.dims[di][0]} = {sz}]")
     return f"{indent}{typ} {decl_name or name}{''.join(dims)};"
 
 
@@ -788,8 +769,9 @@ def _das_text(nc, dataset_name: str) -> str:
 
 
 def parse_constraint(nc, query: str) -> dict:
-    """``var[a:b][c]&...`` -> {var: [(a, b) per dim]} (stride must be 1;
-    full ranges filled in for unconstrained trailing dims)."""
+    """``var[a:b][c]&...`` -> {var: [(a, step, b) per dim]} (full ranges
+    filled in for unconstrained trailing dims; a bare ``var`` is the
+    whole variable)."""
     out: dict[str, list[tuple[int, int]]] = {}
     for proj in filter(None, query.split("&")[0].split(",")):
         m = re.fullmatch(r"(\w+)((?:\[[^\]]*\])*)", proj)
@@ -798,8 +780,6 @@ def parse_constraint(nc, query: str) -> dict:
         var = m.group(1)
         v = nc.vars[var]
         shape = list(v.shape)
-        if v.is_record:
-            shape[0] = nc.numrecs
         if v.nc_type == 2:
             # CHAR serves as String: the strlen axis is the payload,
             # not a constrainable dimension
@@ -910,8 +890,9 @@ def make_dap_handler(root_dir: str, grid_mode: bool = False,
                      sequences: dict | None = None):
     """An http.server request handler serving ``<file>.dds`` and
     ``<file>.dods?constraint`` for classic-netCDF files under
-    ``root_dir`` — record-slice reads only (the server never
-    materializes a record variable it isn't shipping).
+    ``root_dir`` — every projection is one ``NcFile.read_strided``
+    (record-slice reads only: the server never materializes a record
+    variable it isn't shipping).
 
     ``grid_mode`` (round 13) serves coordinate-backed variables as
     DAP Grid constructors — the THREDDS shape — accepting qualified
@@ -923,8 +904,6 @@ def make_dap_handler(root_dir: str, grid_mode: bool = False,
     import http.server
     import os
     import urllib.parse
-
-    import numpy as np
 
     from modeltracking_spark.sources.netcdf_classic import NcFile
 
@@ -977,50 +956,21 @@ def make_dap_handler(root_dir: str, grid_mode: bool = False,
                         return
                     if grid_mode and q:
                         q = _resolve_grid_query(nc, q)
-                    def full_ranges(v):
-                        shape = list(nc.vars[v].shape)
-                        if nc.vars[v].is_record and shape:
-                            shape[0] = nc.numrecs
-                        if nc.vars[v].nc_type == 2:
-                            shape = shape[:-1]  # strlen axis -> String
-                        return [(0, 1, s - 1) for s in shape]
-
-                    only = parse_constraint(nc, q) if q else {
-                        v: full_ranges(v) for v in nc.vars
-                    }
+                    only = parse_constraint(nc, q or ",".join(nc.vars))
                     dds = _dds_text(
                         nc, os.path.basename(fn), only
                     ).encode()
                     chunks = [dds, b"\nData:\n"]
                     for var, ranges in only.items():
-                        v = nc.vars[var]
                         # CHAR: ranges cover the kept dims; the
                         # trailing strlen axis ships whole, joined
                         # into DAP String payloads below
-                        tail = ((slice(None),)
-                                if v.nc_type == 2 else ())
-                        if v.is_record and v.dim_ids:
-                            t0, tstep, t1 = ranges[0]
-                            recs = [
-                                nc.read_slice(var, t)[
-                                    tuple(slice(a, b + 1, st_)
-                                          for a, st_, b in ranges[1:])
-                                    + tail
-                                ]
-                                for t in range(t0, t1 + 1, tstep)
-                            ]
-                            a = np.stack(recs) if recs else np.empty(0)
-                        else:
-                            a = nc.read(var)[
-                                tuple(slice(x, y + 1, st_)
-                                      for x, st_, y in ranges)
-                                + tail
-                            ]
+                        a = nc.read_strided(var, ranges)
                         # a 0-dim projection (scalar variable) ships
                         # the bare value — no (n, n) array header
                         # (DAP 2.0 scalar framing, ADVICE r14)
-                        scalar = not ranges and not v.is_record
-                        if v.nc_type == 2:
+                        scalar = not ranges
+                        if nc.vars[var].nc_type == 2:
                             flat = a.reshape(-1, a.shape[-1])
                             strings = [
                                 row.tobytes().rstrip(b"\x00")

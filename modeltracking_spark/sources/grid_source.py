@@ -9,7 +9,9 @@ into at most as many contiguous partitions as the planning process has
 cores, because a Python task costs far more than the decode of one
 step. Each step is emitted as its own Arrow batch.
 
-Three backends, chosen by the ``path`` option, behind one reader path:
+Three backends, chosen by the ``path`` option, behind one dataset
+contract — ``read(name)``, ``read_strided(var, ranges)``,
+``var_attrs(var)`` and ``close()`` — and one reader path:
 
 - no ``path`` (default): the deterministic formula fixture — the
   correctness tier's in-memory twin of the parquet fixture, read like a
@@ -19,6 +21,8 @@ Three backends, chosen by the ``path`` option, behind one reader path:
   range (``begin + t*recsize``) and reads ONLY that slice — the
   local-file analog of the reference's server-side DAP slicing
   (``trackplot_hycom.py:110`` ships index ranges to the THREDDS server).
+  Tasks reuse the header parsed at ``.load()`` and reopen only the
+  file handle.
 - a ``dap+http://`` path fetches each run of steps in one hyperslab
   request per physics variable.
 
@@ -84,46 +88,24 @@ _AXIS_TOL = 0.01
 _STEP_DIGITS = 10
 
 
-def _var_cf_attrs(nc, var: str) -> dict:
-    """CF attributes of ``var`` from either reader: ``NcFile`` exposes
-    ``nc.vars[v].attrs`` (an object attribute), ``DapDataset.vars[v]``
-    is a (type, dims) tuple so its attrs come from the cached ``.das``
-    fetch via ``var_attrs``. Before r8 the DAP arm was missing: a
-    packed int16 dataset served over ``dap+http://`` silently decoded
-    to raw packed values (ADVICE r7 #2)."""
-    v = getattr(nc, "vars", {}).get(var)
-    attrs = getattr(v, "attrs", None)
-    if attrs is not None:
-        return attrs
-    getter = getattr(nc, "var_attrs", None)
-    return getter(var) if getter is not None else {}
-
-
 def _physics_block(nc, var: str, t0: int, t1: int, box):
     """``var[t0..t1]`` cut to ``box`` (inclusive (lo, hi) index ranges of
-    depth, lat, lon), shape (steps, depth, lat, lon). A DAP dataset ships
-    only the box, in one hyperslab request for the whole run, and the
-    formula grid computes only the box; a file reads each record slice
-    and cuts the box from it. CF-unpacked when
-    the variable is PACKED (int16 + scale/offset/missing attrs — how real
-    HYCOM serves its hypercubes), over BOTH readers; missing values come
-    back as the pipeline's sentinel either way, so downstream code sees
-    one schema regardless of on-disk packing or transport."""
+    depth, lat, lon), shape (steps, depth, lat, lon), in one
+    ``read_strided`` call: a DAP dataset ships only the box in one
+    hyperslab request, a file reads each record slice and cuts the box,
+    the formula grid computes only the box. A PACKED variable (int16 +
+    CF scale/offset/missing attrs — how real HYCOM serves its
+    hypercubes) is CF-unpacked, with missing values mapped to the
+    pipeline's sentinel, so downstream code sees one schema whatever
+    the on-disk packing or transport."""
     import numpy as np
 
     from modeltracking_spark.sources.netcdf_classic import cf_unpack
 
-    if hasattr(nc, "read_strided"):
-        a = nc.read_strided(var, [(t0, t1), *box])
-    else:
-        cut = tuple(slice(lo, hi + 1) for lo, hi in box)
-        a = np.stack([nc.read_slice(var, t)[cut] for t in range(t0, t1 + 1)])
-    attrs = _var_cf_attrs(nc, var)
-    if attrs and ("scale_factor" in attrs or "missing_value" in attrs
-                  or "_FillValue" in attrs):
-        a = cf_unpack(a, attrs)
-        return np.where(np.isnan(a), GRID_SENTINEL, a)
-    return a
+    raw = nc.read_strided(var, [(t0, t1), *box])
+    a = cf_unpack(raw, nc.var_attrs(var))
+    # cf_unpack hands back its input when the variable is not packed
+    return a if a is raw else np.where(np.isnan(a), GRID_SENTINEL, a)
 
 
 def _axis_record(path: str | None, name: str, values) -> tuple:
@@ -158,29 +140,25 @@ def _axis_record(path: str | None, name: str, values) -> tuple:
 def _dataset_constants(path: str | None) -> dict:
     """The per-dataset constants, read once per ``.load()``: the time axis,
     the coordinate vectors, the axis record of ``time_hours``/``lat``/
-    ``lon`` (:func:`_axis_record`), plus the dataset client a task can
-    reuse — the parsed DDS/DAS of a ``dap+http://`` backend, or the
-    formula grid. They ride the pickled reader into every task, so a task
-    makes only the physics requests: with many concurrent tasks against
-    one DAP server, metadata round trips queued on the server were the
-    query's wall clock."""
-    from modeltracking_spark.sources.dap import DapDataset, open_nc_or_dap
+    ``lon`` (:func:`_axis_record`), plus the closed dataset a task
+    reuses — the parsed header of a file, the parsed DDS/DAS of a
+    ``dap+http://`` backend, or the formula grid. They ride the pickled
+    reader into every task, so a task makes only the physics reads: with
+    many concurrent tasks against one DAP server, metadata round trips
+    queued on the server were the query's wall clock."""
+    from modeltracking_spark.sources.dap import open_nc_or_dap
 
     nc = _FormulaGrid() if path is None else open_nc_or_dap(path)
-    shared = {
-        "time": [int(v) for v in nc.read("time")],
-        "depth": nc.read("depth"),
-        "lat": nc.read("lat"),
-        "lon": nc.read("lon"),
-        "ds": nc if isinstance(nc, (DapDataset, _FormulaGrid)) else None,
-    }
-    shared["axes"] = tuple(
-        _axis_record(path, v, shared[v]) for v in _AXIS_VARS
-    )
-    if isinstance(nc, DapDataset):
-        nc.var_attrs("water_temp")  # warm the .das cache
-    elif shared["ds"] is None:
+    try:
+        shared = {v: nc.read(v) for v in ("time", "depth", "lat", "lon")}
+        shared["time"] = [int(v) for v in shared["time"]]
+        shared["axes"] = tuple(
+            _axis_record(path, v, shared[v]) for v in _AXIS_VARS
+        )
+        nc.var_attrs("water_temp")  # a DAP dataset caches its .das here
+    finally:
         nc.close()
+    shared["ds"] = nc
     return shared
 
 
@@ -196,14 +174,12 @@ def _runs(steps):
         yield run
 
 
-def _read_steps(path: str | None, steps, shared: dict, box):
+def _read_steps(steps, shared: dict, box):
     """Long-form numpy columns of each step in ``steps``, cut to ``box``,
-    read from the dataset of ``shared`` (reopened from ``path`` for a
-    file) — slice reads only, never the whole variable. One physics read
-    per variable per run of consecutive steps (see :func:`_physics_block`)."""
-    from modeltracking_spark.sources.dap import open_nc_or_dap
-
-    nc = shared["ds"] if shared["ds"] is not None else open_nc_or_dap(path)
+    read from the dataset of ``shared`` — slice reads only, never the
+    whole variable. One physics read per variable per run of consecutive
+    steps (see :func:`_physics_block`)."""
+    nc = shared["ds"]
     try:
         for run in _runs(steps):
             temp = _physics_block(nc, "water_temp", run[0], run[-1], box)
@@ -213,14 +189,15 @@ def _read_steps(path: str | None, steps, shared: dict, box):
                                  shared["lat"], shared["lon"],
                                  temp[k], sal[k], box)
     finally:
-        if shared["ds"] is None:
-            nc.close()
+        nc.close()
 
 
-def _partition_from_netcdf(path: str, ti: int):
-    """One whole time step as numpy columns."""
+def _step_arrays(path: str | None, ti: int, box=None):
+    """Step ``ti`` of the grid at ``path`` (``None``: the formula
+    fixture), cut to ``box`` (default: the whole grid), as numpy
+    columns."""
     shared = _dataset_constants(path)
-    return next(_read_steps(path, [ti], shared, _full_box(shared)))
+    return next(_read_steps([ti], shared, box or _full_box(shared)))
 
 
 def _full_box(shared: dict):
@@ -348,18 +325,12 @@ def _formula_physics(var: str, ti: int, d, la, lo):
     return v
 
 
-def _partition_arrays(ti: int, box=None):
-    """One formula time step, cut to ``box`` (default: the whole grid),
-    as numpy columns — byte-identical to the Spark/SQL fixture formulas."""
-    shared = _dataset_constants(None)
-    return next(_read_steps(None, [ti], shared, box or _full_box(shared)))
-
-
 class _FormulaGrid:
     """The formula fixture read like a dataset, so the reader has one path
     for every backend: ``read`` gives a coordinate vector and
     ``read_strided`` computes one physics variable over a run of steps
-    and an index box, as a DAP dataset would fetch it."""
+    and an index box, as a DAP dataset would fetch it. Its values are
+    unpacked, so it has no CF attributes, and nothing to close."""
 
     #: (length, origin, step) of each coordinate vector
     AXES = {
@@ -383,6 +354,12 @@ class _FormulaGrid:
         shape = [hi - lo + 1 for lo, hi in box]
         return np.stack([_formula_physics(var, t, *mesh).reshape(shape)
                          for t in range(t0, t1 + 1)])
+
+    def var_attrs(self, var: str) -> dict:
+        return {}
+
+    def close(self) -> None:
+        pass
 
 
 #: comparisons the pushdown reader satisfies exactly on an integer column
@@ -443,8 +420,7 @@ def _pack(steps: list[int], n: int) -> list[list[int]]:
 
 
 class HycomGridReader(DataSourceReader):
-    def __init__(self, options, shared: dict):
-        self.path = options.get("path") or None
+    def __init__(self, shared: dict):
         #: the dataset constants of :func:`_dataset_constants`: pushed
         #: filters prune against the dataset's own time axis
         self._shared = shared
@@ -473,7 +449,7 @@ class HycomGridReader(DataSourceReader):
         if partition is None:
             return
         box = tuple(self._box[c] for c in _BOX_COLS)
-        for cols in _read_steps(self.path, partition.value, self._shared, box):
+        for cols in _read_steps(partition.value, self._shared, box):
             yield pa.RecordBatch.from_pydict(cols)
 
 
@@ -534,5 +510,5 @@ class HycomGridDataSource(DataSource):
         if shared is None:  # no schema(): a user-given schema, or a direct call
             shared = _dataset_constants(self.options.get("path") or None)
         if self.options.get("pushdown", "false").lower() == "true":
-            return HycomGridPushdownReader(self.options, shared)
-        return HycomGridReader(self.options, shared)
+            return HycomGridPushdownReader(shared)
+        return HycomGridReader(shared)

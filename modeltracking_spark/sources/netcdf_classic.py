@@ -15,10 +15,11 @@ of the reference's DAP slicing, and it is what
 option.
 
 Scale posture: the reader holds only (a) the parsed header (KBs) and
-(b) one record slice per call. A 100 TB hypercube read through the grid
-DataSource schedules one task per run of timesteps; each task opens the
-file (or object-store range-GET in a real deployment), reads each
-record's byte range, and emits one Arrow batch per record.
+(b) one record slice per call. The grid DataSource parses the header
+once per ``.load()`` and ships the closed :class:`NcFile` to its tasks;
+each task reopens only the file handle (or object-store range-GETs in a
+real deployment), reads the byte range of each kept record, and emits
+one Arrow batch per record.
 
 Format notes (classic, from the public spec):
 - big-endian throughout; names/attr values/data blocks padded to 4 bytes
@@ -55,23 +56,33 @@ from dataclasses import dataclass, field
 class FileRangeReader:
     """seek+read over ONE persistent handle (re-opening per record was the
     old reader's N+1 quirk — the same anti-pattern the reference has at
-    ``trackplot_hycom.py:144``, re-opening the remote dataset per point)."""
+    ``trackplot_hycom.py:144``, re-opening the remote dataset per point).
+    The handle opens on first use and ``close()`` drops it, so a closed
+    reader pickles and reopens wherever it is next read."""
 
     def __init__(self, path: str):
         self.path = path
-        self._f = open(path, "rb")
+        self._f = None
+
+    def _handle(self):
+        if self._f is None:
+            self._f = open(self.path, "rb")
+        return self._f
 
     def size(self) -> int:
         import os
 
-        return os.fstat(self._f.fileno()).st_size
+        return os.fstat(self._handle().fileno()).st_size
 
     def read_range(self, off: int, nbytes: int) -> bytes:
-        self._f.seek(off)
-        return self._f.read(nbytes)
+        f = self._handle()
+        f.seek(off)
+        return f.read(nbytes)
 
     def close(self) -> None:
-        self._f.close()
+        if self._f is not None:
+            self._f.close()
+            self._f = None
 
 
 class HttpRangeReader:
@@ -165,10 +176,10 @@ def cf_unpack(a, attrs: dict):
     ``missing_value``/``_FillValue`` become NaN, then
     ``packed * scale_factor + add_offset``. Only applied when ``attrs``
     carries any of those; always returns float64 when it does (a
-    masked/scaled int has no exact int representation). Shared by the
-    file reader (:class:`NcFile`) and the DAP client
-    (:class:`modeltracking_spark.sources.dap.DapDataset`) so both wire
-    formats decode packed int16 grids to identical physics values."""
+    masked/scaled int has no exact int representation). The one CF
+    decoder: callers pass the attributes of any dataset's ``var_attrs``,
+    so every backend decodes packed int16 grids to identical physics
+    values."""
     import numpy as np
 
     def one(name):
@@ -207,6 +218,12 @@ class NcVar:
     @property
     def dtype(self) -> str:
         return NC_TYPES[self.nc_type][0]
+
+    @property
+    def native_dtype(self):
+        import numpy as np
+
+        return np.dtype(self.dtype).newbyteorder("=")
 
     @property
     def itemsize(self) -> int:
@@ -272,13 +289,18 @@ class NcFile:
 
     ``read(var)`` loads a whole variable; ``read_slice(var, i)`` reads
     ONLY slice ``i`` along the first dimension (record or fixed) via one
-    contiguous range read — the unit a grid partition fetches.
+    contiguous range read; ``read_strided(var, ranges)`` reads a
+    hyperslab from the kept slices; ``var_attrs(var)`` gives the raw CF
+    attributes — the dataset contract :class:`DapDataset
+    <modeltracking_spark.sources.dap.DapDataset>` shares.
 
     ``path`` may be a local path, ``file://…``, or ``http(s)://…`` — the
     remote form reads via HTTP Range-GETs (:class:`HttpRangeReader`), the
     local-file twin of the reference's OPeNDAP server-side slicing. All
     reads in this object's lifetime share ONE reader (one file handle /
-    one connection pool) — nothing re-opens per record.
+    one connection pool) — nothing re-opens per record. ``close()``
+    drops the handle and keeps the parsed header, so a closed file
+    pickles and reads again without re-parsing.
     """
 
     def __init__(self, path: str):
@@ -363,12 +385,6 @@ class NcFile:
         else:
             self.recsize = sum(_pad4(v.slice_nbytes()) for v in rec_vars)
 
-    def dim_size(self, name: str) -> int:
-        for nm, ln in self.dims:
-            if nm == name:
-                return self.numrecs if ln == 0 else ln
-        raise KeyError(name)
-
     def _read_checked(self, off: int, nbytes: int, what: str) -> bytes:
         """Range read that fails LOUDLY on truncation — without this a
         short read surfaces as an opaque numpy reshape/frombuffer error."""
@@ -380,14 +396,13 @@ class NcFile:
             )
         return raw
 
-    def _cf_unpack(self, var: str, a):
-        return cf_unpack(a, self.vars[var].attrs)
+    def var_attrs(self, var: str) -> dict:
+        return self.vars[var].attrs
 
-    def read_slice(self, var: str, i: int, apply_cf: bool = False):
-        """var[i, ...] as a little-endian numpy array, reading only that
+    def read_slice(self, var: str, i: int):
+        """var[i, ...] as a native-endian numpy array, reading only that
         slice's bytes (record vars: ``begin + i*recsize``; fixed vars:
-        ``begin + i*slice_bytes``). ``apply_cf=True`` additionally
-        mask-and-scales per the variable's CF attributes."""
+        ``begin + i*slice_bytes``)."""
         import numpy as np
 
         v = self.vars[var]
@@ -397,32 +412,44 @@ class NcFile:
         nbytes = v.slice_nbytes()
         off = v.begin + i * (self.recsize if v.is_record else nbytes)
         raw = self._read_checked(off, nbytes, f"{var}[{i}]")
-        arr = np.frombuffer(raw, dtype=v.dtype).astype(
-            np.dtype(v.dtype).newbyteorder("=")
-        )
+        arr = np.frombuffer(raw, dtype=v.dtype).astype(v.native_dtype)
         # scalar-per-slice (1-D record var) -> 0-d so stacked reads give
         # the natural (n,) shape
-        out = arr.reshape(v.shape[1:])
-        return self._cf_unpack(var, out) if apply_cf else out
+        return arr.reshape(v.shape[1:])
 
-    def read(self, var: str, apply_cf: bool = False):
-        """The whole variable (record vars: stacked slice reads through
-        the shared reader — one handle, not one open per record).
-        ``apply_cf=True`` mask-and-scales per the CF attributes."""
+    def read_strided(self, var: str, ranges: list[tuple]):
+        """``var`` cut to ``ranges``: one inclusive ``(a, b)`` or strided
+        ``(a, step, b)`` range per leading dimension, later dimensions
+        read whole. Reads only the kept first-dimension slices
+        (:meth:`read_slice`) and cuts the rest from them; a range that
+        keeps no slice (a zero-record variable) gives an empty array."""
+        import numpy as np
+
+        if not ranges:
+            return self.read(var)
+        (a, step, b), *rest = [
+            (r[0], 1, r[1]) if len(r) == 2 else r for r in ranges
+        ]
+        cut = tuple(slice(x, y + 1, st) for x, st, y in rest)
+        rows = [self.read_slice(var, i)[cut] for i in range(a, b + 1, step)]
+        if rows:
+            return np.stack(rows)
+        v = self.vars[var]
+        return np.empty((0, *v.shape[1:]), v.native_dtype)[(slice(None), *cut)]
+
+    def read(self, var: str):
+        """The whole variable: a record variable through
+        :meth:`read_strided` (one handle, not one open per record), a
+        fixed one in one range read."""
         import numpy as np
 
         v = self.vars[var]
         if v.is_record:
-            out = np.stack(
-                [self.read_slice(var, r) for r in range(v.shape[0])]
-            )
-        else:
-            nbytes = v.slice_nbytes() * (v.shape[0] if v.shape else 1)
-            raw = self._read_checked(v.begin, nbytes, var)
-            arr = np.frombuffer(raw, dtype=v.dtype)
-            out = arr.reshape(v.shape) if v.shape else arr
-            out = out.astype(out.dtype.newbyteorder("="))
-        return self._cf_unpack(var, out) if apply_cf else out
+            return self.read_strided(var, [(0, v.shape[0] - 1)])
+        nbytes = v.slice_nbytes() * (v.shape[0] if v.shape else 1)
+        raw = self._read_checked(v.begin, nbytes, var)
+        arr = np.frombuffer(raw, dtype=v.dtype)
+        return (arr.reshape(v.shape) if v.shape else arr).astype(v.native_dtype)
 
 
 def write_classic(

@@ -27,7 +27,7 @@ from modeltracking_spark.fixtures import (
 from modeltracking_spark.operators.profile import profile_along_track
 from modeltracking_spark.sources.grid_source import (
     HycomGridDataSource,
-    _partition_arrays,
+    _step_arrays,
 )
 from modeltracking_spark.sources.netcdf_classic import write_classic
 from perfbench import reference
@@ -59,7 +59,7 @@ def _write_grid(path, lat=None):
             ("lon", ("lon",),
              GRID_LON0 + LON_OFF + np.arange(GRID_N_LON) * GRID_LON_STEP),
             *((var, ("time", "depth", "lat", "lon"),
-               lambda r, var=var: _partition_arrays(r)[var].reshape(shape))
+               lambda r, var=var: _step_arrays(None, r)[var].reshape(shape))
               for var in ("water_temp", "salinity")),
         ],
         record_dim="time",
@@ -138,6 +138,27 @@ def test_non_uniform_axis_fails_at_load(spark, shifted):
     path = os.path.join(shifted["root"], "bad_lat.nc")
     _write_grid(path, lat=lat)
     with pytest.raises(Exception, match=re.escape(path) + ": axis 'lat'"):
+        spark.read.format("hycom_grid").option("path", path).load()
+
+
+def test_zero_record_grid_fails_at_load(spark, shifted):
+    path = os.path.join(shifted["root"], "no_steps.nc")
+    write_classic(
+        path,
+        dims=[("time", 0), ("depth", GRID_N_DEPTH), ("lat", GRID_N_LAT),
+              ("lon", GRID_N_LON)],
+        variables=[
+            ("time", ("time",), lambda r: np.array(r, dtype=np.int32)),
+            ("depth", ("depth",), np.arange(GRID_N_DEPTH) * GRID_DEPTH_STEP),
+            ("lat", ("lat",), GRID_LAT0 + np.arange(GRID_N_LAT) * GRID_LAT_STEP),
+            ("lon", ("lon",), GRID_LON0 + np.arange(GRID_N_LON) * GRID_LON_STEP),
+            ("water_temp", ("time", "depth", "lat", "lon"),
+             lambda r: np.zeros((GRID_N_DEPTH, GRID_N_LAT, GRID_N_LON))),
+        ],
+        record_dim="time",
+    )
+    with pytest.raises(Exception,
+                       match=re.escape(path) + ": axis 'time' has 0 value"):
         spark.read.format("hycom_grid").option("path", path).load()
 
 

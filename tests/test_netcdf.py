@@ -9,11 +9,14 @@ import pytest
 
 from modeltracking_spark.fixtures import GRID_TIME_STEP
 from modeltracking_spark.sources.grid_source import (
-    _partition_arrays,
-    _partition_from_netcdf,
+    _step_arrays,
     write_grid_netcdf,
 )
-from modeltracking_spark.sources.netcdf_classic import NcFile, write_classic
+from modeltracking_spark.sources.netcdf_classic import (
+    NcFile,
+    cf_unpack,
+    write_classic,
+)
 
 
 @pytest.fixture(scope="module")
@@ -97,11 +100,42 @@ def test_grid_netcdf_matches_formula(tmp_path):
     path = str(tmp_path / "grid.nc")
     write_grid_netcdf(path, n_time=3)
     for ti in (0, 2):
-        a = _partition_arrays(ti)
-        b = _partition_from_netcdf(path, ti)
+        a = _step_arrays(None, ti)
+        b = _step_arrays(path, ti)
         assert set(a) == set(b)
         for k in a:
             assert np.array_equal(a[k], b[k]), (ti, k)
+
+
+def test_file_task_reads_no_header(tmp_path, monkeypatch):
+    """A file-backed task reuses the header parsed at load: the pickled
+    reader's range reads all start at or past the first variable's data,
+    and its columns are the step's."""
+    import pickle
+
+    from modeltracking_spark.sources.grid_source import HycomGridDataSource
+    from modeltracking_spark.sources.netcdf_classic import FileRangeReader
+
+    p = str(tmp_path / "grid.nc")
+    write_grid_netcdf(p, n_time=2)
+    reader = pickle.loads(pickle.dumps(
+        HycomGridDataSource({"path": p}).reader(None)))
+    offsets = []
+    read_range = FileRangeReader.read_range
+
+    def recording(self, off, nbytes):
+        offsets.append(off)
+        return read_range(self, off, nbytes)
+
+    monkeypatch.setattr(FileRangeReader, "read_range", recording)
+    part = reader.partitions()[0]
+    batch = list(reader.read(part))[0]
+    monkeypatch.undo()
+    first_begin = min(v.begin for v in NcFile(p).vars.values())
+    assert offsets and min(offsets) >= first_begin
+    want = _step_arrays(p, part.value[0])
+    for k, col in want.items():
+        assert np.array_equal(batch.column(k).to_numpy(), col), k
 
 
 def test_datasource_netcdf_backend_and_pruning(spark, tmp_path_factory):
@@ -258,7 +292,7 @@ def test_grid_netcdf_scan_http_backend(spark, http_root):
         .select("time_hours", "lon_idx", "water_temp")
         .collect()
     )
-    a = _partition_arrays(1)
+    a = _step_arrays(None, 1)
     want = {
         (GRID_TIME_STEP, int(lon), float(t))
         for lon, t in zip(
@@ -541,10 +575,10 @@ def test_dap_das_attributes_parity(tmp_path, dap_root):
 
 
 def test_cf_mask_and_scale_unpacking(tmp_path):
-    """apply_cf=True reproduces netCDF4's auto mask-and-scale (the
-    behavior the reference's stack applies to HYCOM variables): packed
-    int16 + scale/offset -> float64, missing_value -> NaN; the default
-    read stays raw and exact."""
+    """cf_unpack over the variable's attributes reproduces netCDF4's auto
+    mask-and-scale (the behavior the reference's stack applies to HYCOM
+    variables): packed int16 + scale/offset -> float64, missing_value ->
+    NaN; the read itself stays raw and exact."""
     p = str(tmp_path / "cf.nc")
     write_classic(
         p,
@@ -559,20 +593,22 @@ def test_cf_mask_and_scale_unpacking(tmp_path):
     f = NcFile(p)
     raw = f.read("temp")
     assert raw.dtype == np.int16 and raw.tolist() == [0, 100, -30000, 250]
-    cf = f.read("temp", apply_cf=True)
+    cf = cf_unpack(f.read("temp"), f.var_attrs("temp"))
     assert cf.dtype == np.float64
     assert cf[0] == 20.0 and abs(cf[1] - 20.1) < 1e-12
     assert np.isnan(cf[2]) and abs(cf[3] - 20.25) < 1e-12
-    # attribute-free variable: apply_cf is the identity, dtype intact
-    assert f.read("plain", apply_cf=True).dtype == np.int16
+    # attribute-free variable: cf_unpack is the identity, dtype intact
+    assert cf_unpack(f.read("plain"), f.var_attrs("plain")).dtype == np.int16
     # sliced reads unpack identically
-    assert np.isnan(f.read_slice("temp", 2, apply_cf=True))
+    assert np.isnan(cf_unpack(f.read_slice("temp", 2), f.var_attrs("temp")))
 
 
 def test_dap_strided_hyperslab(tiny_nc, dap_root):
     """var[a:step:b] subsamples SERVER-side: every-other record of the
     5-record grid ships 3 records' bytes and equals the local strided
-    read."""
+    read. ``NcFile.read_strided`` answers the same ranges with the same
+    array: strided, a ranges prefix (trailing dimensions read whole),
+    and a fixed variable."""
     import shutil
 
     from modeltracking_spark.sources.dap import DapDataset
@@ -585,14 +621,53 @@ def test_dap_strided_hyperslab(tiny_nc, dap_root):
     want = local.read("grid")[0:5:2, 0:2, 0:3]
     assert got.shape == (3, 2, 3)
     assert np.array_equal(got, want)
+    assert np.array_equal(
+        local.read_strided("grid", [(0, 2, 4), (0, 1), (0, 2)]), got)
+    # a ranges prefix: the trailing dimensions come whole, over both
+    prefix = [(1, 2, 3), (1, 1)]
+    assert np.array_equal(local.read_strided("grid", prefix),
+                          local.read("grid")[1:4:2, 1:2])
+    assert np.array_equal(local.read_strided("grid", prefix),
+                          d.read_strided("grid", prefix))
     # a strided coordinate read too (non-record var)
     assert np.array_equal(
         d.read_strided("xv", [(0, 2, 2)]), local.read("xv")[0:3:2]
+    )
+    assert np.array_equal(
+        local.read_strided("xv", [(0, 2, 2)]), d.read_strided("xv", [(0, 2, 2)])
     )
     # bytes on the wire ~ kept cells, not the full variable
     before = d.n_bytes
     d.read_strided("grid", [(0, 4, 4), (0, 1), (0, 2)])  # 1 record kept
     assert d.n_bytes - before < 6 * 8 + 400
+
+
+def test_dap_serves_zero_record_variable_as_empty(dap_root):
+    """An unconstrained ``.dods`` of a file with no records ships its
+    record variable as an empty XDR array, declared ``[time = 0]``."""
+    import urllib.request
+
+    from modeltracking_spark.sources.dap import _xdr_decode
+
+    base, root = dap_root
+    write_classic(
+        os.path.join(root, "norecs.nc"),
+        dims=[("time", 0), ("x", 3)],
+        variables=[
+            ("xv", ("x",), np.array([10, 20, 30], dtype=np.int32)),
+            ("t", ("time",), lambda r: np.array(r, dtype=np.int32)),
+        ],
+        record_dim="time",
+        n_records=0,
+    )
+    with urllib.request.urlopen(f"{base}/norecs.nc.dods") as r:
+        body = r.read()
+    dds, _, data = body.partition(b"\nData:\n")
+    assert b"Int32 t[time = 0];" in dds
+    xv, off = _xdr_decode(data, 0, "Int32", 3)
+    t, off = _xdr_decode(data, off, "Int32", 0)
+    assert xv.tolist() == [10, 20, 30]
+    assert t.shape == (0,) and off == len(data)
 
 
 def test_packed_grid_scan_is_bit_exact(tmp_path):
@@ -602,8 +677,7 @@ def test_packed_grid_scan_is_bit_exact(tmp_path):
     are exact multiples of 0.1, p*0.1(+30.0) reproduces the doubles,
     and missing comes back as the pipeline sentinel."""
     from modeltracking_spark.sources.grid_source import (
-        _partition_arrays,
-        _partition_from_netcdf,
+        _step_arrays,
         write_grid_netcdf_packed,
     )
 
@@ -615,8 +689,8 @@ def test_packed_grid_scan_is_bit_exact(tmp_path):
     raw = f.read_slice("water_temp", 1)
     assert raw.dtype == np.int16  # genuinely packed on disk
     for ti in (0, 2):
-        a = _partition_arrays(ti)
-        b = _partition_from_netcdf(p, ti)
+        a = _step_arrays(None, ti)
+        b = _step_arrays(p, ti)
         for k in a:
             assert np.array_equal(a[k], b[k]), (ti, k)
 
@@ -625,14 +699,15 @@ def test_dap_packed_grid_parity_with_file(tmp_path, dap_root):
     """ADVICE r7 #2 regression: a CF-PACKED int16 grid served over
     dap+http:// must decode to the SAME physics values as the same file
     read by path — exactly how real HYCOM THREDDS ships data. Before
-    the fix, DapDataset.vars[v] being a (type, dims) tuple made
-    _physics_slice skip the apply_cf branch silently (raw x10 values,
-    -30000 sentinel passed through)."""
+    the fix, the grid reader looked for CF attributes only where a file
+    keeps them, so a DAP dataset skipped the unpack silently (raw x10
+    values, -30000 sentinel passed through); now every dataset answers
+    ``var_attrs``."""
     import shutil
 
     from modeltracking_spark.sources.dap import DapDataset
     from modeltracking_spark.sources.grid_source import (
-        _partition_from_netcdf,
+        _step_arrays,
         write_grid_netcdf_packed,
     )
 
@@ -641,22 +716,22 @@ def test_dap_packed_grid_parity_with_file(tmp_path, dap_root):
     write_grid_netcdf_packed(p, n_time=3)
     shutil.copy(p, os.path.join(root, "packed_dap.nc"))
 
-    # reader-level parity: read_slice(apply_cf=True) over both transports
+    # reader-level parity: cf_unpack over var_attrs, both transports
     f = NcFile(p)
     d = DapDataset(f"dap+{base}/packed_dap.nc")
     assert d.var_attrs("water_temp")["scale_factor"] == [0.1]
     for var in ("water_temp", "salinity"):
-        a = f.read_slice(var, 1, apply_cf=True)
-        b = d.read_slice(var, 1, apply_cf=True)
+        a = cf_unpack(f.read_slice(var, 1), f.var_attrs(var))
+        b = cf_unpack(d.read_slice(var, 1), d.var_attrs(var))
         assert b.dtype == np.float64
         assert np.array_equal(a, b, equal_nan=True), var
     # raw reads stay raw over DAP too
     assert d.read_slice("water_temp", 0).dtype == np.int16
 
-    # partition-level parity: the grid partition builder resolves CF
-    # attrs through _var_cf_attrs on both reader kinds
-    pa = _partition_from_netcdf(p, 2)
-    pb = _partition_from_netcdf(f"dap+{base}/packed_dap.nc", 2)
+    # partition-level parity: the grid reader resolves CF attrs through
+    # var_attrs on both dataset kinds
+    pa = _step_arrays(p, 2)
+    pb = _step_arrays(f"dap+{base}/packed_dap.nc", 2)
     for k in pa:
         assert np.array_equal(pa[k], pb[k]), k
     # the DAS fetch is cached: attrs for both vars cost one .das trip
