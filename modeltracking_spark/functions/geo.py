@@ -14,6 +14,9 @@ from pyspark.sql.types import DoubleType
 
 EARTH_RADIUS_KM = 6371.0
 
+#: the IDW distance offset: a point on a node gets weight 1e12, not 1/0
+IDW_EPS = 1e-6
+
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
@@ -59,12 +62,13 @@ def haversine_km(lat1, lon1, lat2, lon2) -> Column:
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
 
 
-def inv_square_weight(dist: Column | str, eps: float = 1e-6) -> Column:
+def inv_square_weight(dist: Column | str) -> Column:
     """F8: inverse-square-distance IDW weight with the notebook's epsilon
-    guard: w = 1 / (d + eps)² (TrackPlotter_Hycom.ipynb:41; the script
-    variant trackplot_hycom.py:31 omits eps and can divide by zero).
-    Explicit product instead of pow(x, 2) for cross-engine exactness."""
-    de = _col(dist) + F.lit(eps)
+    guard: w = 1 / (d + IDW_EPS)² (TrackPlotter_Hycom.ipynb:41; the
+    script variant trackplot_hycom.py:31 omits eps and can divide by
+    zero). Explicit product instead of pow(x, 2) for cross-engine
+    exactness."""
+    de = _col(dist) + F.lit(IDW_EPS)
     return F.lit(1.0) / (de * de)
 
 

@@ -33,11 +33,6 @@ def distinct_tokens(text: Column | str) -> Column:
     return F.array_distinct(tokens(text))
 
 
-def token_count(text: Column | str) -> Column:
-    """Number of whitespace tokens."""
-    return F.size(tokens(text))
-
-
 def stopword_ratio(text: Column | str) -> Column:
     """Fraction of tokens that are stopwords — a quality-score feature."""
     toks = tokens(text)

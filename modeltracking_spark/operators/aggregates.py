@@ -24,10 +24,10 @@ from pyspark.sql import functions as F
 SENTINEL_THRESHOLD = -4.0
 
 
-def mask_sentinel(value: Column | str, threshold: float = SENTINEL_THRESHOLD) -> Column:
+def mask_sentinel(value: Column | str) -> Column:
     """P3: sentinel → NULL (``v if v > -4 else NaN`` in the notebook)."""
     c = F.col(value) if isinstance(value, str) else value
-    return F.when(c > threshold, c)
+    return F.when(c > SENTINEL_THRESHOLD, c)
 
 
 def idw_weighted_mean(
@@ -35,9 +35,10 @@ def idw_weighted_mean(
     group_cols: Sequence[str],
     value: Column | str,
     weight: Column | str,
-    out_name: str = "idw_value",
 ) -> DataFrame:
-    """A2: inverse-distance-weighted mean per group.
+    """A2: inverse-distance-weighted mean per group — the profile's
+    reduce. Returns ``group_cols``, ``n_valid`` (the count of non-NULL
+    values) and ``idw_value``, in one aggregate.
 
     **Normalizer decision (SURVEY.md §2.5 A2, frozen here):** the notebook
     semantics are authoritative — sentinel values are masked *first* and
@@ -52,7 +53,8 @@ def idw_weighted_mean(
     w = F.col(weight) if isinstance(weight, str) else weight
     valid_w = F.when(v.isNotNull(), w)
     return df.groupBy(*group_cols).agg(
-        (F.sum(valid_w * v) / F.sum(valid_w)).alias(out_name)
+        F.count(v).alias("n_valid"),
+        (F.sum(valid_w * v) / F.sum(valid_w)).alias("idw_value"),
     )
 
 

@@ -131,21 +131,6 @@ def _canonical_decoder(lengths: list[int]):
     return limit, base, perm, min_len, max_len
 
 
-def _decode_symbol(br: _Bits, table) -> int:
-    limit, base, perm, min_len, max_len = table
-    code = br.read(min_len)
-    ln = min_len
-    while code > limit[ln]:
-        if ln >= max_len:
-            raise ValueError("invalid bzip2 Huffman code")
-        code = (code << 1) | br.read(1)
-        ln += 1
-    idx = code - base[ln]
-    if not 0 <= idx < len(perm):
-        raise ValueError("invalid bzip2 Huffman code")
-    return perm[idx]
-
-
 #: direct-indexed decode width for large blocks: codes of length <= _LUT_L
 #: resolve in one list index; longer codes fall back to the canonical walk
 _LUT_L = 11
@@ -341,9 +326,9 @@ def bz2_decompress(data: bytes) -> bytes:
             if len(selectors) >= 32 else [None] * n_groups
         )
 
-        # Huffman decode + RLE2/MTF undo — inline bit accumulator
-        # (r17, guide §4.2): the former per-symbol _decode_symbol +
-        # per-bit _Bits.read call pair was >50% of decode CPU.  The
+        # Huffman decode + RLE2/MTF undo — inline bit accumulator: a
+        # per-symbol decode call plus a per-bit _Bits.read call was
+        # >50% of decode CPU.  The
         # loop peeks a whole code-width window from a local
         # accumulator; the canonical walk compares the window's
         # top-ln bits against limit[ln] — arithmetic identical to the

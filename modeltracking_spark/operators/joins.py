@@ -14,6 +14,10 @@ is one distributed, Catalyst-planned join:
 - J4 interval-containment routing: broadcast range join
   (``find_hycom_dir``, ``trackplot_hycom.py:173-184``).
 
+J1 and J2 read the node geometry from the grid: :func:`axis_index` is the
+one lat/lon snap, and takes each axis's ``{origin, step}`` from the axis
+record on the grid's ``lat``/``lon`` column (``schemas.axis_metadata``).
+
 Scale notes: the snap join is shuffle-on-key only; the as-of join is one
 shuffle + one window scan per side; neighborhood expansion multiplies rows
 9× *before* the join so AQE can size partitions; broadcast is explicit for
@@ -27,45 +31,40 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from modeltracking_spark.schemas import grid_axis
 
-def grid_snap_join(
-    points: DataFrame,
-    grid: DataFrame,
-    lat0: float,
-    lon0: float,
-    step: float,
-    point_lat: str = "lat",
-    point_lon: str = "lon",
-    grid_lat_idx: str = "lat_idx",
-    grid_lon_idx: str = "lon_idx",
-) -> DataFrame:
-    """J1 (uniform-grid route): snap each point to its nearest grid node by
-    arithmetic, then equi-join — O(n) instead of the reference's
+
+def axis_index(x: Column, grid: DataFrame, col: str) -> Column:
+    """The index of the node of grid axis ``col`` nearest to ``x``:
+    ``round((x - origin) / step)`` with ``(origin, step)`` from the axis
+    record on ``grid``'s column ``col`` (``schemas.grid_axis``) — the
+    reference's ``location_to_index`` (``trackplot_hycom.py:67-86``) on a
+    uniform axis. Reads the schema only, so no Spark job runs; a column
+    without the record raises a ``ValueError`` naming it."""
+    origin, step = grid_axis(grid.schema, col)
+    return F.round((x - F.lit(origin)) / F.lit(step)).cast("int")
+
+
+def grid_snap_join(points: DataFrame, grid: DataFrame) -> DataFrame:
+    """J1 (uniform-grid route): snap each point's ``lat``/``lon`` to its
+    nearest grid node with :func:`axis_index`, then equi-join on
+    ``lat_idx``/``lon_idx`` — O(n) instead of the reference's
     O(n_points × n_lat × n_lon) scan (``location_to_index``,
-    ``trackplot_hycom.py:67-86``).
+    ``trackplot_hycom.py:67-86``). Each axis has its own origin and step.
+    The grid's own ``lat``/``lon`` come back as ``g_lat``/``g_lon``.
 
     At 100 TB the grid side can be bucketed by (lat_idx, lon_idx) so this
     join co-locates without a shuffle of the grid.
     """
-    snapped = points.withColumn(
-        "__lat_idx", F.round((F.col(point_lat) - F.lit(lat0)) / F.lit(step)).cast("int")
-    ).withColumn(
-        "__lon_idx", F.round((F.col(point_lon) - F.lit(lon0)) / F.lit(step)).cast("int")
-    )
-    return snapped.join(
-        grid,
-        (F.col("__lat_idx") == F.col(grid_lat_idx))
-        & (F.col("__lon_idx") == F.col(grid_lon_idx)),
-        "inner",
-    ).drop("__lat_idx", "__lon_idx")
+    snapped = points.withColumns({
+        "lat_idx": axis_index(F.col("lat"), grid, "lat"),
+        "lon_idx": axis_index(F.col("lon"), grid, "lon"),
+    })
+    nodes = grid.withColumnsRenamed({"lat": "g_lat", "lon": "g_lon"})
+    return snapped.join(nodes, ["lat_idx", "lon_idx"], "inner")
 
 
-def neighborhood_expand(
-    df: DataFrame,
-    lat_idx: str = "lat_idx",
-    lon_idx: str = "lon_idx",
-    radius: int = 1,
-) -> DataFrame:
+def neighborhood_expand(df: DataFrame, radius: int = 1) -> DataFrame:
     """J2: expand each (lat_idx, lon_idx) to its (2r+1)² neighborhood via
     explode — the relational form of ``nearest_neighbors``
     (``trackplot_hycom.py:59-65``). Adds ``nb_lat_idx`` / ``nb_lon_idx``.
@@ -79,8 +78,8 @@ def neighborhood_expand(
     )
     return (
         df.withColumn("__off", F.explode(offsets))
-        .withColumn("nb_lat_idx", F.col(lat_idx) + F.col("__off.di"))
-        .withColumn("nb_lon_idx", F.col(lon_idx) + F.col("__off.dj"))
+        .withColumn("nb_lat_idx", F.col("lat_idx") + F.col("__off.di"))
+        .withColumn("nb_lon_idx", F.col("lon_idx") + F.col("__off.dj"))
         .drop("__off")
     )
 

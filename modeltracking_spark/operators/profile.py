@@ -23,7 +23,8 @@ and ``lon`` each carry an axis record, ``{origin, step}``, as column
 metadata (``schemas.axis_metadata``): the ``hycom_grid`` DataSource
 reads it from the dataset's own coordinate arrays, and
 ``hycom_grid_fixture`` from its constants. A track point snaps to lat/lon
-node ``round((x - origin) / step)`` and to time bucket ``origin +
+node ``round((x - origin) / step)`` (``joins.axis_index``, the engine's
+one lat/lon snap) and to time bucket ``origin +
 nearest_time_bucket(t - origin, step)`` — the reference's
 ``location_to_index``/``find_time_index`` (``trackplot_hycom.py:67-86``,
 ``:186-197``) on a uniform axis. Reading the record touches only the
@@ -69,9 +70,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
 from modeltracking_spark.functions.geo import euclid_deg, inv_square_weight
-from modeltracking_spark.operators.aggregates import mask_sentinel
-from modeltracking_spark.operators.joins import neighborhood_expand
-from modeltracking_spark.schemas import GRID_AXIS_COLS, grid_axis
+from modeltracking_spark.operators.aggregates import idw_weighted_mean, mask_sentinel
+from modeltracking_spark.operators.joins import axis_index, neighborhood_expand
+from modeltracking_spark.schemas import grid_axis
 
 
 def nearest_time_bucket(t: F.Column, step: int) -> F.Column:
@@ -83,9 +84,6 @@ def nearest_time_bucket(t: F.Column, step: int) -> F.Column:
         F.floor((2 * t + F.lit(step)) / F.lit(2 * step)).cast("long") * step
     )
 
-
-#: the IDW distance offset: a point on a node gets weight 1e12, not 1/0
-IDW_EPS = 1e-6
 
 #: bits per grid index in the packed node key; time takes the 24 above
 _IDX_BITS = 20
@@ -194,9 +192,9 @@ def profile_neighbors(
     long-form). ``radius`` is the neighbourhood half-width: 1 for the
     3x3 IDW stencil, 0 for the centre node alone.
 
-    ``track_col`` is the FLEET shape (r8, mirroring
-    :func:`resample_track_arclength`'s r7 ``track_col``): the id rides
-    the broadcast side through the expand and join, so N storms profile
+    ``track_col`` is the FLEET shape, as in
+    :func:`resample_track_arclength`: the id rides the broadcast side
+    through the expand and join, so N storms profile
     in the SAME single grid scan + broadcast join — no per-track loop,
     and point_ids only need to be unique within a track.
 
@@ -207,9 +205,7 @@ def profile_neighbors(
     point outside its range matches nothing, a grid row outside it
     raises. The ``track_col`` values ride the broadcast side unchanged.
     """
-    (t0, t_step), (lat0, lat_step), (lon0, lon_step) = (
-        grid_axis(grid.schema, c) for c in GRID_AXIS_COLS
-    )
+    t0, t_step = grid_axis(grid.schema, "time_hours")
     tcols = [track_col] if track_col else []
     snapped = track.select(
         *tcols,
@@ -218,12 +214,8 @@ def profile_neighbors(
         "lon",
         (F.lit(t0) + nearest_time_bucket(F.col("t_hours") - F.lit(t0), t_step))
         .alias("t_sel"),
-        F.round((F.col("lat") - F.lit(lat0)) / F.lit(lat_step))
-        .cast("int")
-        .alias("lat_idx"),
-        F.round((F.col("lon") - F.lit(lon0)) / F.lit(lon_step))
-        .cast("int")
-        .alias("lon_idx"),
+        axis_index(F.col("lat"), grid, "lat").alias("lat_idx"),
+        axis_index(F.col("lon"), grid, "lon").alias("lon_idx"),
     )
     if track_col is None:
         grid = grid.where(_footprint(snapped, radius))
@@ -256,7 +248,7 @@ def profile_neighbors(
         "depth_idx",
         "depth_m",
         d.alias("dist"),
-        inv_square_weight(d, eps=IDW_EPS).alias("w"),
+        inv_square_weight(d).alias("w"),
         mask_sentinel("__var").alias("v"),
         *carry_cols,
     )
@@ -281,7 +273,7 @@ def profile_along_track(
 
     ``track_col=None`` is the single-track contract (one advisory
     track, the reference's shape). ``track_col="..."`` is the FLEET
-    shape (VERDICT r7 item 8): the id rides the broadcast side and
+    shape: the id rides the broadcast side and
     becomes a group-by column, so a whole storm season profiles in ONE
     grid scan + broadcast join + hash aggregate — no window, no
     per-track loop, one shuffle over the join output (plan-asserted in
@@ -313,18 +305,9 @@ def profile_along_track(
     footprint, not the grid. Profiling further tracks with the same
     DataFrame is exact; use a fresh ``.load()`` for any other query.
     """
-    if interp == "nearest":
-        radius = 0
-        aggs = (F.count("v").alias("n_valid"), F.first("v").alias("idw_value"))
-    elif interp == "idw":
-        radius = 1
-        valid_w = F.when(F.col("v").isNotNull(), F.col("w"))
-        aggs = (
-            F.count("v").alias("n_valid"),
-            (F.sum(valid_w * F.col("v")) / F.sum(valid_w)).alias("idw_value"),
-        )
-    else:
+    if interp not in ("idw", "nearest"):
         raise ValueError(f"unknown interp {interp!r}")
+    radius = 1 if interp == "idw" else 0
     names = None
     group_col = track_col
     if track_col is not None and not isinstance(
@@ -339,7 +322,12 @@ def profile_along_track(
     keys = ([group_col] if group_col else []) + [
         "point_id", "depth_idx", "depth_m"
     ]
-    prof = rows.groupBy(*keys).agg(*aggs)
+    if interp == "idw":
+        prof = idw_weighted_mean(rows, keys, "v", "w")
+    else:
+        prof = rows.groupBy(*keys).agg(
+            F.count("v").alias("n_valid"), F.first("v").alias("idw_value")
+        )
     if names is None:
         return prof
     return prof.join(F.broadcast(names), _TRACK_KEY).select(
@@ -372,7 +360,7 @@ def resample_track_arclength(
     ``track_col="..."`` is the FLEET shape: every window and the
     per-track total partition on the track id, so a million tracks
     resample as a million independent hash-partitioned groups — no
-    single-task global window anywhere in the plan (VERDICT r6 item 3).
+    single-task global window anywhere in the plan.
 
     Output: ([track_col,] k, s_deg_e6, lat_e6, lon_e6).
     """

@@ -93,41 +93,6 @@ def _plane_signs(table: int, plane: int, dim: int) -> list[int]:
 SIG_SCALE = 10**6
 
 
-def hyperplane_signature(
-    vec_col: str, n_planes: int = 8, dim: int = 64, table: int = 0
-) -> F.Column:
-    """b-bit sign signature under deterministic pseudo-random hyperplanes.
-
-    plane_p[d] = ±1 from md5(table:plane:d) parity, embedded as LITERAL
-    arrays (plan-time constants): signature bit p is the sign of the
-    e6 fixed-point projection Σ_d plane_p[d]·round(vec[d]·1e6) — one
-    zip_with integer fold per plane, fully codegen'd, reproducible
-    without a seed file AND bit-identical in any engine that sums
-    integers (the DuckDB oracle recomputes it). ``table`` selects an
-    independent hyperplane family per LSH table.
-    """
-    bits = []
-    for p in range(n_planes):
-        signs = F.lit(_plane_signs(table, p, dim))
-        proj = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                signs,
-                lambda x, s: F.round(x.cast("double") * F.lit(SIG_SCALE)).cast(
-                    "long"
-                )
-                * s.cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**p))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig
-
-
 def hyperplane_signatures_all(
     vec_col: str, n_planes: int, dim: int, n_tables: int
 ) -> F.Column:
@@ -135,8 +100,8 @@ def hyperplane_signatures_all(
     computed by a single int64 matrix multiply in an Arrow kernel
     (r16, guide §4.2).
 
-    The per-table Catalyst formulation (:func:`hyperplane_signature`)
-    folds ``n_tables × n_planes`` zip_with/aggregate lambdas per row —
+    A per-table Catalyst formulation (one zip_with/aggregate integer
+    fold per plane) folds ``n_tables × n_planes`` lambdas per row —
     higher-order functions run INTERPRETED, outside whole-stage codegen,
     which measured ~1 ms/row at 8×4×64 (the dominant cost of every
     hyperplane-LSH query).  This kernel replays the IDENTICAL integer
@@ -144,8 +109,7 @@ def hyperplane_signatures_all(
     :func:`_round_away` rounding, ≡ Spark ``F.round`` HALF_UP and DuckDB
     ``round``) as int64, multiplied by the same md5-parity ±1 planes and
     summed exactly (|terms| ≤ 64·2e6 ≪ 2^63) — so signatures are
-    bit-identical to the expression path (asserted in
-    tests/test_similarity.py) and the DuckDB oracles are unchanged.
+    bit-identical to that fold, which the DuckDB oracles recompute.
     One numpy ``R @ S`` per batch replaces ~2048 interpreted lambda
     evaluations per row.
     """

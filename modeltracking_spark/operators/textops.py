@@ -1,8 +1,8 @@
 """Text analysis operators (extension surface; SURVEY.md §2.12).
 
-Language ID (n-gram/stopword heuristic), quality scoring, token counting,
-fingerprinting — all as JVM column expressions over the ``documents``
-table shape (doc_id, text, lang, source, n_chars).
+Language ID (n-gram/stopword heuristic), quality rules, fingerprinting
+— all as JVM column expressions over the ``documents`` table shape
+(doc_id, text, lang, source, n_chars).
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from modeltracking_spark.functions.text import (
     _let,
     doc_fingerprint,
     stopword_ratio,
-    token_count,
     tokens,
 )
 
@@ -93,21 +92,6 @@ def text_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("stop_ratio", stopword_ratio(text_col))
         .withColumn("fingerprint", doc_fingerprint(text_col))
     )
-
-
-def quality_score(text_col: str = "text") -> Column:
-    """Composite quality heuristic in [0,1]: rewards mid-length docs,
-    lexical diversity, and a sane stopword ratio. A batch stand-in for the
-    model-based scorers used in LLM data pipelines."""
-    toks = tokens(text_col)
-    n = F.size(toks).cast("double")
-    diversity = F.when(
-        n > 0, F.size(F.array_distinct(toks)).cast("double") / n
-    ).otherwise(F.lit(0.0))
-    length_score = F.least(n / F.lit(64.0), F.lit(1.0))
-    stop = stopword_ratio(text_col)
-    stop_score = F.lit(1.0) - F.abs(stop - F.lit(0.2))
-    return F.round((diversity + length_score + stop_score) / F.lit(3.0), 6)
 
 
 def lang_id_heuristic(text_col: str = "text") -> Column:
@@ -312,9 +296,8 @@ def token_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
 def gopher_rules(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text") -> DataFrame:
     """Gopher-style document quality RULE filter (Rae et al. 2021,
-    appendix A1.1, thresholds adapted to this corpus): unlike
-    :func:`quality_score` (a scalar heuristic), this emits an explicit
-    keep/drop verdict plus a bitmask of the failed rules — the
+    appendix A1.1, thresholds adapted to this corpus): it emits an
+    explicit keep/drop verdict plus a bitmask of the failed rules — the
     actionable form curation pipelines log and audit. Rules:
 
       bit 0  word count in [30, 100000]

@@ -11,12 +11,14 @@ from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from modeltracking_spark.operators.joins import (
     asof_join,
+    axis_index,
     grid_snap_join,
     interval_join,
     neighborhood_expand,
     salted_join,
 )
 from modeltracking_spark.queries.common import T, cents, query
+from modeltracking_spark.schemas import axis_metadata
 
 # ---------------------------------------------------------------------------
 # J1 / J2: synthetic 21x21 uniform grid (GLBu0.08-style), formula-generated
@@ -43,13 +45,18 @@ POINTS_SQL = """
 def synthetic_grid(spark: SparkSession) -> DataFrame:
     """21x21 uniform grid at (20.0, 300.0) step 0.08 with a deterministic
     integer-derived temp field — the HYCOM GLBu0.08 stand-in
-    (``trackplot_hycom.py:176``)."""
+    (``trackplot_hycom.py:176``). ``lat``/``lon`` carry their axis
+    records."""
     i = F.col("id")
     return spark.range(441).select(
         (i / 21).cast("int").alias("lat_idx"),
         (i % 21).cast("int").alias("lon_idx"),
-        (F.lit(20.0) + (i / 21).cast("int") * 0.08).alias("g_lat"),
-        (F.lit(300.0) + (i % 21) * 0.08).alias("g_lon"),
+        (F.lit(20.0) + (i / 21).cast("int") * 0.08).alias(
+            "lat", metadata=axis_metadata(20.0, 0.08)
+        ),
+        (F.lit(300.0) + (i % 21) * 0.08).alias(
+            "lon", metadata=axis_metadata(300.0, 0.08)
+        ),
         (((i / 21).cast("int") * 31 + (i % 21) * 17) % 97 * 0.1).alias("temp"),
     )
 
@@ -78,15 +85,10 @@ def grid_snap_nearest_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 (scale route): arithmetic snap to the nearest uniform-grid node +
     equi-join — O(n) replacement for the reference's O(n_lat x n_lon) scan
     per point (``location_to_index``, ``trackplot_hycom.py:67-86``)."""
-    out = grid_snap_join(
-        _points(spark, sf_dir),
-        synthetic_grid(spark),
-        lat0=20.0,
-        lon0=300.0,
-        step=0.08,
-        point_lat="p_lat",
-        point_lon="p_lon",
+    pts = _points(spark, sf_dir).withColumnsRenamed(
+        {"p_lat": "lat", "p_lon": "lon"}
     )
+    out = grid_snap_join(pts, synthetic_grid(spark))
     return out.select(
         "c_custkey",
         "lat_idx",
@@ -121,12 +123,13 @@ def neighborhood_3x3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``trackplot_hycom.py:59-65``) via explode + equi-join; edge nodes
     yield < 9 neighbors, proving the join doesn't invent rows."""
     pts = _points(spark, sf_dir)
+    grid = synthetic_grid(spark)
     snapped = pts.select(
         "c_custkey",
-        F.round((F.col("p_lat") - 20.0) / 0.08).cast("int").alias("lat_idx"),
-        F.round((F.col("p_lon") - 300.0) / 0.08).cast("int").alias("lon_idx"),
+        axis_index(F.col("p_lat"), grid, "lat").alias("lat_idx"),
+        axis_index(F.col("p_lon"), grid, "lon").alias("lon_idx"),
     )
-    grid = synthetic_grid(spark).withColumnsRenamed(
+    grid = grid.withColumnsRenamed(
         {"lat_idx": "g_lat_idx", "lon_idx": "g_lon_idx"}
     )
     nb = neighborhood_expand(snapped, radius=1)

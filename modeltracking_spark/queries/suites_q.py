@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from modeltracking_spark.functions.geo import normalize_lon_0_360
+from modeltracking_spark.functions.geo import inv_square_weight, normalize_lon_0_360
 from modeltracking_spark.functions.timefn import (
     format_ymdh,
     hours_since_2000,
@@ -84,7 +84,7 @@ def scalar_geo_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lon_raw = (F.col("o_orderkey") % 3600) / 10.0 - 180.0
     depth = (F.col("o_orderkey") % 50).cast("double")
-    w = F.lit(1.0) / ((depth + F.lit(1e-6)) * (depth + F.lit(1e-6)))
+    w = inv_square_weight(depth)
     h = hours_since_2000("o_orderdate")
     return o.select(
         "o_orderkey",

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from modeltracking_spark.functions.geo import (
     euclid_deg,
     haversine_km,
+    inv_square_weight,
     normalize_lon_0_360,
     vincenty_km_udf,
 )
@@ -205,7 +206,7 @@ def inv_square_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``TrackPlotter_Hycom.ipynb:41``) over the distinct quantity values."""
     li = T(spark, sf_dir, "lineitem")
     d = F.col("l_quantity")
-    w = F.lit(1.0) / ((d + F.lit(1e-6)) * (d + F.lit(1e-6)))
+    w = inv_square_weight(d)
     return li.select(d.alias("d"), fxp(w, 1e12).alias("weight_e12")).distinct()
 
 

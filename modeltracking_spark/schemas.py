@@ -236,9 +236,6 @@ IBTRACS_16_SCHEMA = StructType(
     ]
 )
 
-#: the grid columns that carry an axis record, in (time, lat, lon) order
-GRID_AXIS_COLS = ("time_hours", "lat", "lon")
-
 
 def axis_metadata(origin, step) -> dict:
     """The column metadata of a uniform grid axis: node ``i`` sits at

@@ -38,8 +38,9 @@ def test_idw_normalizer_skips_masked(spark):
     df = spark.createDataFrame(
         [(1, 1.0, 10.0), (1, 1.0, -30000.0)], "g int, d double, v double"
     ).withColumn("w", 1.0 / ((F.col("d") + 1e-6) * (F.col("d") + 1e-6)))
-    out = idw_weighted_mean(df, ["g"], mask_sentinel("v"), "w")
-    assert abs(out.first()["idw_value"] - 10.0) < 1e-9
+    out = idw_weighted_mean(df, ["g"], mask_sentinel("v"), "w").first()
+    assert abs(out["idw_value"] - 10.0) < 1e-9
+    assert out["n_valid"] == 1
 
 
 def test_sentinel_threshold(spark):

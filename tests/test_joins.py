@@ -2,14 +2,28 @@
 duplicate left rows), strict interval bounds, snap and neighborhood
 geometry (SURVEY.md §5.3)."""
 
-import pyspark.sql.functions as F
+import math
+import random
 
+import pyspark.sql.functions as F
+import pytest
+
+from modeltracking_spark.fixtures import (
+    GRID_LAT0,
+    GRID_LAT_STEP,
+    GRID_LON0,
+    GRID_LON_STEP,
+    GRID_N_LAT,
+    GRID_N_LON,
+    hycom_grid_fixture,
+)
 from modeltracking_spark.operators.joins import (
     asof_join,
     grid_snap_join,
     interval_join,
     neighborhood_expand,
 )
+from modeltracking_spark.schemas import axis_metadata
 
 
 def _mk_right(spark):
@@ -75,11 +89,17 @@ def test_grid_snap_and_neighborhood(spark):
         [(i, j, float(10 * i + j)) for i in range(5) for j in range(5)],
         "lat_idx int, lon_idx int, val double",
     )
+    grid = grid.select(
+        "*",
+        (20.0 + F.col("lat_idx") * 0.25).alias(
+            "lat", metadata=axis_metadata(20.0, 0.25)),
+        (30.0 + F.col("lon_idx") * 0.25).alias(
+            "lon", metadata=axis_metadata(30.0, 0.25)),
+    )
     pts = spark.createDataFrame(
         [(1, 20.26, 30.49), (2, 20.99, 30.0)], "pid int, lat double, lon double"
     )
-    out = grid_snap_join(pts, grid, lat0=20.0, lon0=30.0, step=0.25,
-                         point_lat="lat", point_lon="lon")
+    out = grid_snap_join(pts, grid)
     got = {r["pid"]: (r["lat_idx"], r["lon_idx"]) for r in out.collect()}
     assert got == {1: (1, 2), 2: (4, 0)}
 
@@ -88,6 +108,47 @@ def test_grid_snap_and_neighborhood(spark):
     )
     cells = {(r["nb_lat_idx"], r["nb_lon_idx"]) for r in nb.collect()}
     assert cells == {(i, j) for i in (1, 2, 3) for j in (1, 2, 3)}
+
+
+def test_grid_snap_uses_each_axis_record(spark):
+    """The fixture's lat and lon axes have different steps (0.25 and
+    0.6); every point snaps per axis to floor((x - origin) / step + 0.5)
+    and joins exactly its node."""
+    grid = hycom_grid_fixture(spark).where(
+        (F.col("time_hours") == 0) & (F.col("depth_idx") == 0))
+    rng = random.Random(10)
+    lat_hi = GRID_LAT0 + (GRID_N_LAT - 1) * GRID_LAT_STEP
+    lon_hi = GRID_LON0 + (GRID_N_LON - 1) * GRID_LON_STEP
+    points = [
+        (pid, rng.uniform(GRID_LAT0, lat_hi), rng.uniform(GRID_LON0, lon_hi))
+        for pid in range(50)
+    ]
+    pts = spark.createDataFrame(points, "pid int, lat double, lon double")
+    rows = grid_snap_join(pts, grid).collect()
+    snap = lambda x, origin, step: math.floor((x - origin) / step + 0.5)
+    assert {r["pid"]: (r["lat_idx"], r["lon_idx"]) for r in rows} == {
+        pid: (snap(lat, GRID_LAT0, GRID_LAT_STEP),
+              snap(lon, GRID_LON0, GRID_LON_STEP))
+        for pid, lat, lon in points
+    }
+    assert len(rows) == len(points)
+    for r in rows:
+        assert r["g_lat"] == pytest.approx(GRID_LAT0 + r["lat_idx"] * GRID_LAT_STEP)
+        assert r["g_lon"] == pytest.approx(GRID_LON0 + r["lon_idx"] * GRID_LON_STEP)
+
+
+def test_grid_snap_without_axis_record_raises_before_any_job(spark):
+    grid = hycom_grid_fixture(spark).withColumn("lat", F.col("lat") + 0)
+    pts = spark.createDataFrame(
+        [(1, 20.0, 300.0)], "pid int, lat double, lon double")
+    sc = spark.sparkContext
+    sc.setJobGroup("snap-no-axis-record", "snap-no-axis-record")
+    try:
+        with pytest.raises(ValueError, match="grid column 'lat'"):
+            grid_snap_join(pts, grid)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("snap-no-axis-record") == []
 
 
 def test_point_in_polygon_golden_and_edge_behavior(spark):
