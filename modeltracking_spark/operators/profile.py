@@ -36,14 +36,18 @@ grid row, so they yield no profile rows.
 
 A single track (``track_col=None``) also states its footprint as plain
 filters on the grid: ``time_hours IN`` its time buckets and a
-``lat_idx``/``lon_idx`` box grown by the neighbourhood radius. The
-footprint comes from the tiny track side, so building a single-track
-plan runs one small Spark job. Any grid that takes filters prunes with
-it: the in-engine fixture's ranges, parquet, and the ``hycom_grid``
-DataSource with ``pushdown=true``, which then reads only that window (a
-few hundred KB over DAP instead of the whole grid). The fleet shape
-keeps the plain plan: a season's footprint covers nearly the whole grid,
-so the extra job would cost more than it prunes.
+``lat_idx``/``lon_idx`` box grown by the neighbourhood radius. Building
+a single-track plan reads the snapped track once, onto the driver (one
+small Spark job): the footprint comes from those rows, and the
+broadcast side is a local relation over them, which the plan then reads
+with no job of its own. A track built from a Python list would
+otherwise be read again, in Python tasks, by every job over it. Any
+grid that takes filters prunes with the footprint: the in-engine
+fixture's ranges, parquet, and the ``hycom_grid`` DataSource with
+``pushdown=true``, which then reads only that window (a few hundred KB
+over DAP instead of the whole grid). The fleet shape keeps the plain
+plan: a season's footprint covers nearly the whole grid, so the extra
+job would cost more than it prunes.
 
 Every per-row key is fixed-width:
 
@@ -152,24 +156,38 @@ def _track_dictionary(track: DataFrame, track_col: str) -> DataFrame:
     )
 
 
-def _footprint(snapped: DataFrame, radius: int) -> F.Column:
+def _footprint(rows, radius: int) -> F.Column:
     """The grid rows one snapped track can join, as a filter: its set of
     time buckets and its ``lat_idx``/``lon_idx`` box grown by
-    ``radius``. Computed with one small aggregate over the track."""
-    steps, la0, la1, lo0, lo1 = snapped.agg(
-        F.collect_set("t_sel"),
-        F.min("lat_idx"),
-        F.max("lat_idx"),
-        F.min("lon_idx"),
-        F.max("lon_idx"),
-    ).first()
-    if not steps or la0 is None or lo0 is None:
+    ``radius``. ``rows`` are the track's collected snapped rows; each
+    column's NULLs are skipped, as ``collect_set``/``min``/``max`` skip
+    them."""
+    def present(col):
+        return [r[col] for r in rows if r[col] is not None]
+
+    steps, lat_idx, lon_idx = map(present, ("t_sel", "lat_idx", "lon_idx"))
+    if not steps or not lat_idx or not lon_idx:
         return F.lit(False)
     return (
-        F.col("time_hours").isin(sorted(steps))
-        & F.col("lat_idx").between(la0 - radius, la1 + radius)
-        & F.col("lon_idx").between(lo0 - radius, lo1 + radius)
+        F.col("time_hours").isin(sorted(set(steps)))
+        & F.col("lat_idx").between(min(lat_idx) - radius, max(lat_idx) + radius)
+        & F.col("lon_idx").between(min(lon_idx) - radius, max(lon_idx) + radius)
     )
+
+
+def _local_copy(df: DataFrame) -> tuple[list, DataFrame]:
+    """``df``'s rows, read once, and a DataFrame over that local copy.
+    An Arrow table becomes a ``LocalRelation``, which later plans read
+    without a Spark job; a ``createDataFrame(list)`` track is a Python RDD
+    that every job over it would read again in Python tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = df.collect()
+    table = pa.Table.from_pylist(
+        [r.asDict() for r in rows], schema=to_arrow_schema(df.schema)
+    )
+    return rows, df.sparkSession.createDataFrame(table)
 
 
 def profile_neighbors(
@@ -198,8 +216,9 @@ def profile_neighbors(
     in the SAME single grid scan + broadcast join — no per-track loop,
     and point_ids only need to be unique within a track.
 
-    ``track_col=None`` filters ``grid`` to the track's footprint (see
-    :func:`_footprint`), which runs one small job over ``track`` now.
+    ``track_col=None`` reads the snapped ``track`` once, now (one small
+    job), filters ``grid`` to its footprint (see :func:`_footprint`) and
+    broadcasts that local copy (:func:`_local_copy`).
 
     The join key is the packed node key of :func:`_node_key`; a track
     point outside its range matches nothing, a grid row outside it
@@ -218,7 +237,8 @@ def profile_neighbors(
         axis_index(F.col("lon"), grid, "lon").alias("lon_idx"),
     )
     if track_col is None:
-        grid = grid.where(_footprint(snapped, radius))
+        rows, snapped = _local_copy(snapped)
+        grid = grid.where(_footprint(rows, radius))
     nb = neighborhood_expand(snapped, radius=radius).select(
         *tcols,
         "point_id",
@@ -298,10 +318,13 @@ def profile_along_track(
     (``queries/track_q.py``) lifts the same rows to fixed point first.
 
     A single track reads only its footprint of ``grid`` (module
-    docstring). With a ``hycom_grid`` DataFrame loaded with
-    ``pushdown=true`` that footprint is planned into the scan, and
-    pyspark reuses the last planned scan for a later filterless query on
-    the same DataFrame: ``grid.count()`` after this call counts the
+    docstring). The result holds the track's snapped rows as a local
+    snapshot taken at call time, so a later change to ``track``'s source
+    does not reach it, and a single track must be track-sized: profile
+    many tracks with ``track_col``. With a ``hycom_grid`` DataFrame
+    loaded with ``pushdown=true`` the footprint is planned into the scan,
+    and pyspark reuses the last planned scan for a later filterless query
+    on the same DataFrame: ``grid.count()`` after this call counts the
     footprint, not the grid. Profiling further tracks with the same
     DataFrame is exact; use a fresh ``.load()`` for any other query.
     """

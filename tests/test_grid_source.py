@@ -1,8 +1,10 @@
 """S6: the custom Python DataSource must be byte-identical to the formula
-fixture, pack the kept time steps into at most one partition per core,
-and, with pushdown, read only the pushed time steps and index box."""
+fixture, pack the kept time steps into at most one partition per core
+and per ``_CELLS_PER_TASK`` cells, and, with pushdown, read only the
+pushed time steps and index box."""
 
 import http.server
+import math
 import os
 import threading
 
@@ -14,6 +16,7 @@ from modeltracking_spark.fixtures import (
     GRID_LAT_STEP,
     GRID_LON0,
     GRID_LON_STEP,
+    GRID_N_DEPTH,
     GRID_N_LAT,
     GRID_N_LON,
     GRID_N_TIME,
@@ -21,10 +24,15 @@ from modeltracking_spark.fixtures import (
     hycom_grid_fixture,
 )
 from modeltracking_spark.operators.profile import profile_along_track
-from modeltracking_spark.sources.grid_source import HycomGridDataSource
+from modeltracking_spark.sources.grid_source import (
+    _CELLS_PER_TASK,
+    HycomGridDataSource,
+)
 from perfbench import reference
 
 CORES = len(os.sched_getaffinity(0))
+#: cells of one whole-grid time step
+STEP_CELLS = GRID_N_DEPTH * GRID_N_LAT * GRID_N_LON
 TRACK_DDL = "point_id long, lat double, lon double, t_hours long"
 #: grids written to netCDF for the backend tests keep this many steps
 N_FILE_STEPS = 10
@@ -48,12 +56,21 @@ def _steps_read(df):
     return sorted(r[0] for r in df.select("time_hours").distinct().collect())
 
 
+def _n_partitions(steps: int, step_cells: int = STEP_CELLS) -> int:
+    """The reader's partition count for ``steps`` kept steps of
+    ``step_cells`` cells each: one per core and per ``_CELLS_PER_TASK``
+    cells, at most."""
+    return min(steps, CORES, math.ceil(steps * step_cells / _CELLS_PER_TASK))
+
+
 def test_partitions_pack_steps_into_cores(spark, grid_ds):
-    # every step is read, in min(steps, cores) partitions
+    # every step is read; the whole grid, 28 x 196,830 cells, is large
+    # enough to spread over min(steps, cores) partitions up to 6 cores
     assert _steps_read(grid_ds) == [
         t * GRID_TIME_STEP for t in range(GRID_N_TIME)
     ]
-    assert grid_ds.rdd.getNumPartitions() == min(GRID_N_TIME, CORES)
+    assert grid_ds.rdd.getNumPartitions() == _n_partitions(GRID_N_TIME)
+    assert _n_partitions(GRID_N_TIME) == min(GRID_N_TIME, CORES, 6)
 
 
 def test_matches_fixture_slice(spark, grid_ds):
@@ -72,14 +89,14 @@ def test_total_count_and_sentinels(spark, grid_ds):
 
 def test_time_filter_prunes_partitions(spark, grid_ds):
     # pushFilters absorbs time_hours comparisons -> only the matching
-    # time steps are read, packed into min(kept, cores) partitions
+    # time steps are read, packed by the partition rule
     one = _pushdown(spark).filter("time_hours = 6")
     assert _steps_read(one) == [6]
     assert one.rdd.getNumPartitions() == 1
 
     rng = _pushdown(spark).filter("time_hours >= 6 AND time_hours < 18")
     assert _steps_read(rng) == [6, 9, 12, 15]
-    assert rng.rdd.getNumPartitions() == min(4, CORES)
+    assert rng.rdd.getNumPartitions() == _n_partitions(4)
     assert rng.count() == 4 * one.count()
 
 
@@ -89,13 +106,37 @@ def test_time_in_list_prunes_to_those_steps(spark, grid_ds):
     hours = [3, 12, 15, 30, 999]  # 999 is past the axis
     df = _pushdown(spark).where(F.col("time_hours").isin(hours))
     assert _steps_read(df) == [3, 12, 15, 30]
-    assert df.rdd.getNumPartitions() == min(4, CORES)
+    assert df.rdd.getNumPartitions() == _n_partitions(4)
     # the planned partitions hold exactly the kept steps, in order
     reader = HycomGridDataSource({"pushdown": "true"}).reader(None)
     assert list(reader.pushFilters([In(("time_hours",), tuple(hours))])) == []
     planned = [list(p.value) for p in reader.partitions()]
     assert sum(planned, []) == [1, 4, 5, 10]
-    assert len(planned) == min(4, CORES)
+    assert len(planned) == _n_partitions(4)
+
+
+def test_small_pushed_box_is_one_partition():
+    """A storm-sized window (many steps, a small index box) is read by
+    one task: a Python task's fixed latency outweighs the read."""
+    from pyspark.sql.datasource import (
+        GreaterThanOrEqual,
+        In,
+        LessThan,
+        LessThanOrEqual,
+    )
+
+    reader = HycomGridDataSource({"pushdown": "true"}).reader(None)
+    hours = (0, 3, 6, 15, 18, 21, 36, 39)
+    assert list(reader.pushFilters([
+        In(("time_hours",), hours),
+        LessThan(("depth_idx",), 25),
+        GreaterThanOrEqual(("lat_idx",), 29),
+        LessThanOrEqual(("lat_idx",), 37),
+        GreaterThanOrEqual(("lon_idx",), 39),
+        LessThanOrEqual(("lon_idx",), 46),
+    ])) == []
+    planned = [list(p.value) for p in reader.partitions()]
+    assert planned == [[0, 1, 2, 5, 6, 7, 12, 13]]
 
 
 def test_unsupported_filters_still_applied(spark, grid_ds):
@@ -238,6 +279,49 @@ def test_footprint_reads_only_the_window(spark, grid_backends):
     # metadata; the whole grid is 10 x 30 x 81 x 81 x 2 x 8 B = 31 MB
     window = 5 * 25 * 9 * 8 * 2 * 8
     assert window < sum(sent) < window + 64 * 1024
+    # the load's 6 metadata requests (.dds, .das, time, depth, lat, lon),
+    # then one task reads both variables per run of steps: 0-1, 3, 6-7
+    assert len(sent) == 6 + 2 * 3
+
+
+def test_single_track_jobs(spark, grid_ds):
+    """A single-track profile reads its track once, on the driver, while
+    the plan is built (1 job); collecting it runs 3 more."""
+    sc = spark.sparkContext
+    rows = TRACKS["interior"]
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            return run(), len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    prof, built = jobs("single-track-build", lambda: profile_along_track(
+        spark.createDataFrame(rows, TRACK_DDL), _pushdown(spark)))
+    got, ran = jobs("single-track-collect", prof.collect)
+    assert reference.profile_mismatches(
+        got, reference.expected_profile(rows, GRID_N_TIME)) == []
+    assert (built, built + ran) == (1, 4)
+
+
+def test_empty_single_track(spark, grid_ds):
+    track = spark.createDataFrame([], TRACK_DDL)
+    assert profile_along_track(track, _pushdown(spark)).collect() == []
+
+
+def test_null_coordinates_in_single_track(spark, grid_ds):
+    """Points with a NULL lat, lon or t_hours give no rows; the others
+    profile exactly. The footprint skips NULLs per column, so each NULL
+    point's other coordinates still widen it, which changes no row."""
+    rows = TRACKS["interior"]
+    lat, lon = _node(60, 70)
+    nulls = [(100, None, lon, 60), (101, lat, None, 60), (102, lat, lon, None)]
+    track = spark.createDataFrame(rows + nulls, TRACK_DDL)
+    got = profile_along_track(track, _pushdown(spark)).collect()
+    want = reference.expected_profile(rows, GRID_N_TIME)
+    assert reference.profile_mismatches(got, want) == []
+    assert len(got) == len(want)
 
 
 def test_one_pushdown_grid_serves_two_storms(spark, grid_backends):

@@ -2,6 +2,7 @@
 netCDF backend (the executable twin of the reference's OPeNDAP read,
 ``trackplot_hycom.py:144``)."""
 
+import math
 import struct
 
 import numpy as np
@@ -9,6 +10,7 @@ import pytest
 
 from modeltracking_spark.fixtures import GRID_TIME_STEP
 from modeltracking_spark.sources.grid_source import (
+    _CELLS_PER_TASK,
     _step_arrays,
     write_grid_netcdf,
 )
@@ -173,8 +175,11 @@ def test_datasource_netcdf_backend_and_pruning(spark, tmp_path_factory):
     assert [r[0] for r in one.select("time_hours").distinct().collect()] \
         == [GRID_TIME_STEP * 2]
     assert one.rdd.getNumPartitions() == 1
-    # the unfiltered file scan packs its 4 steps into min(4, cores)
-    assert g.rdd.getNumPartitions() == min(4, len(os.sched_getaffinity(0)))
+    # the unfiltered file scan packs its 4 steps into one partition per
+    # core and per _CELLS_PER_TASK cells, at most
+    cells = 4 * 30 * 81 * 81
+    assert g.rdd.getNumPartitions() == min(
+        4, len(os.sched_getaffinity(0)), math.ceil(cells / _CELLS_PER_TASK))
 
 
 # ---------------------------------------------------------------------------

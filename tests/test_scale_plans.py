@@ -593,6 +593,9 @@ def test_no_unbounded_driver_collect_sites():
         "operators/dicttrain.py": "top-`candidates` segment rows (bounded)",
         "queries/extras_q.py":
             "arrowfile fixture shard receipts (n_files rows)",
+        "operators/profile.py":
+            "one single track's snapped points (track-sized; a fleet "
+            "profiles with track_col and collects nothing)",
     }
     offenders = []
     for path in sorted(pkg.rglob("*.py")):
