@@ -199,7 +199,7 @@ def render_profile_panel(
     cell_w: int = 6,
     margin: int = 10,
 ) -> np.ndarray:
-    """(k_depths, n_points) value matrix (row 0 = surface, NaN = no
+    """(n_depths, n_points) value matrix (row 0 = surface, NaN = no
     data) -> RGB canvas: colormapped cells in an axes box plus a
     labelled colorbar — the reference's scatter panel
     (``trackplot_hycom.py:266-279``) with its regular (time, depth)
@@ -274,7 +274,7 @@ def render_track_map_panel(
 
 def profile_matrix(profile_pdf) -> np.ndarray:
     """Long (point_id, depth_idx/plot_depth, value) pandas frame ->
-    dense (k_depths, n_points) matrix, surface row first, NaN where the
+    dense (n_depths, n_points) matrix, surface row first, NaN where the
     profile had no valid neighbors."""
     import pandas as pd  # noqa: F401  (driver-side only)
 

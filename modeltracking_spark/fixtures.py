@@ -1,19 +1,20 @@
 """Deterministic in-engine fixtures for the track x grid pipeline.
 
-The HYCOM grid stand-in is formula-generated from integer indices so the
-exact same table can be built in Spark (``range`` cross joins) and in a
-DuckDB oracle (``range`` cross joins in SQL) — no parquet round trip, no
-nondeterminism. Matches ``schemas.hycom_grid_schema`` and the
-reference's 4-D ``var[time, depth, lat, lon]`` model
-(``trackplot_hycom.py:110``), axis records included.
+The HYCOM grid stand-in is formula-generated from integer indices by one
+SQL text, :data:`HYCOM_GRID_SQL` (``range`` cross joins), which Spark
+runs as the fixture and DuckDB runs as the oracle — no parquet round
+trip, no nondeterminism. Edit it only in syntax both engines accept
+(DuckDB's ``//`` is not Spark SQL). Matches
+``schemas.hycom_grid_schema`` and the reference's 4-D ``var[time,
+depth, lat, lon]`` model (``trackplot_hycom.py:110``), axis records
+included.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from modeltracking_spark.schemas import axis_metadata
+from modeltracking_spark.schemas import hycom_grid_schema
 
 # Grid geometry: 3-hourly time axis, 5 m depth steps, uniform lat/lon mesh
 # offset from the synthetic track so no point sits exactly on a node
@@ -67,50 +68,17 @@ def grid_fixture_fingerprint() -> str:
 
 
 def hycom_grid_fixture(spark: SparkSession) -> DataFrame:
-    """Long-form HYCOM grid (~5.5M rows), byte-identical to
-    :data:`HYCOM_GRID_SQL` run in DuckDB. Built lazily from four ``range``
-    scans — at 100 TB this table would be a parquet store partitioned by
-    ``time_hours`` with (lat_idx, lon_idx) bucketing; all downstream
-    operators only assume the long schema and its axis records."""
-    t = spark.range(GRID_N_TIME).select(F.col("id").alias("ti"))
-    d = spark.range(GRID_N_DEPTH).select(F.col("id").alias("di"))
-    la = spark.range(GRID_N_LAT).select(F.col("id").alias("lai"))
-    lo = spark.range(GRID_N_LON).select(F.col("id").alias("loi"))
-    g = t.crossJoin(d).crossJoin(la).crossJoin(lo)
-    temp = F.when(
-        (F.col("lai") * 13 + F.col("loi") * 7 + F.col("di") * 3 + F.col("ti")) % 37
-        == 0,
-        F.lit(GRID_SENTINEL),
-    ).otherwise(
-        (
-            (F.col("lai") * 7 + F.col("loi") * 11 + F.col("di") * 5 + F.col("ti") * 3)
-            % 200
+    """Long-form HYCOM grid (~5.5M rows): :data:`HYCOM_GRID_SQL` run by
+    Spark, so the engine and the DuckDB oracle read one text. ``.to``
+    gives it :func:`schemas.hycom_grid_schema` and with it the axis
+    records of ``time_hours``/``lat``/``lon``. At 100 TB this table would
+    be a parquet store partitioned by ``time_hours`` with (lat_idx,
+    lon_idx) bucketing; all downstream operators only assume the long
+    schema and its axis records."""
+    return spark.sql(HYCOM_GRID_SQL).to(
+        hycom_grid_schema(
+            (0, GRID_TIME_STEP),
+            (GRID_LAT0, GRID_LAT_STEP),
+            (GRID_LON0, GRID_LON_STEP),
         )
-        * F.lit(0.1)
-    )
-    sal = F.when(
-        (F.col("lai") * 11 + F.col("loi") * 3 + F.col("di") * 5 + F.col("ti")) % 41
-        == 0,
-        F.lit(GRID_SENTINEL),
-    ).otherwise(
-        F.lit(30.0)
-        + (
-            (F.col("lai") * 3 + F.col("loi") * 5 + F.col("di") * 7 + F.col("ti") * 11)
-            % 80
-        )
-        * F.lit(0.1)
-    )
-    return g.select(
-        (F.col("ti") * GRID_TIME_STEP).cast("long")
-        .alias("time_hours", metadata=axis_metadata(0, GRID_TIME_STEP)),
-        F.col("di").cast("int").alias("depth_idx"),
-        (F.col("di") * F.lit(GRID_DEPTH_STEP)).alias("depth_m"),
-        F.col("lai").cast("int").alias("lat_idx"),
-        F.col("loi").cast("int").alias("lon_idx"),
-        (F.lit(GRID_LAT0) + F.col("lai") * F.lit(GRID_LAT_STEP))
-        .alias("lat", metadata=axis_metadata(GRID_LAT0, GRID_LAT_STEP)),
-        (F.lit(GRID_LON0) + F.col("loi") * F.lit(GRID_LON_STEP))
-        .alias("lon", metadata=axis_metadata(GRID_LON0, GRID_LON_STEP)),
-        temp.alias("water_temp"),
-        sal.alias("salinity"),
     )

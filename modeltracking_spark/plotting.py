@@ -25,8 +25,8 @@ def profile_plot_frame(profile: DataFrame, track: DataFrame):
     display (F5) and the hour offset rendered as a timestamp (F9).
 
     Joins the per-point profile back to the track for the time axis and
-    collects to pandas — profiles are n_points x k_depths rows (2000
-    here), strictly driver-sized.
+    collects to pandas — profiles are n_points x ``profile.K_DEPTHS``
+    rows (2000 here), strictly driver-sized.
     """
     t = track.select("point_id", "t_hours")
     j = profile.join(F.broadcast(t), "point_id").select(

@@ -93,14 +93,10 @@ TRACK_SQL = """
 
 def synthetic_track(spark: SparkSession) -> DataFrame:
     """80-point deterministic track: lat ramps 15..34.75, lon -80..-32.6
-    (normalized to [0,360)), one point per hour."""
-    i = F.col("id")
-    return spark.range(80).select(
-        i.alias("point_id"),
-        (F.lit(15.0) + i * 0.25).alias("lat"),
-        normalize_lon_0_360(F.lit(-80.0) + i * 0.6).alias("lon"),
-        (i * 1).cast("long").alias("t_hours"),
-    )
+    (normalized to [0,360)), one point per hour. :data:`TRACK_SQL` run by
+    Spark: the oracles run the same text in DuckDB, so edit it only in
+    syntax both engines accept."""
+    return spark.sql(TRACK_SQL)
 
 
 @query(

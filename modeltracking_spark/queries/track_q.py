@@ -74,7 +74,7 @@ def profile_along_track_temp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``trackplot_hycom.py:144``). IDW sums are lifted to e9 fixed point so
     the aggregate is order-independent and engine-exact."""
     rows = profile_neighbors(
-        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp", 25
+        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp"
     )
     w_e9 = F.when(
         F.col("v").isNotNull(), F.round(F.col("w") * 1e9).cast("long")
@@ -139,7 +139,7 @@ def profile_multivariable_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "raw",
     )
     nbrows = profile_neighbors(
-        track, long_grid, "raw", 25, carry_cols=["variable"]
+        track, long_grid, "raw", carry_cols=["variable"]
     )
     w, v = F.col("w"), F.col("v")
     rows = nbrows.select(
@@ -252,6 +252,6 @@ def profile_nearest_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     from modeltracking_spark.operators.profile import profile_along_track
 
     return profile_along_track(
-        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp", 25,
+        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp",
         interp="nearest",
     )

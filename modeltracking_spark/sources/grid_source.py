@@ -484,7 +484,18 @@ class HycomGridPushdownReader(HycomGridReader):
     ``tests/test_grid_source.py``): after a storm profile, ``count()``
     counts the storm's footprint. Further profiles on the same DataFrame
     push their own footprints and stay exact; use a fresh ``.load()``
-    for anything else."""
+    for anything else.
+
+    Where the stale scan lives (``javap -c`` on Spark 4.1.2's
+    ``spark-sql_2.13`` jar): ``PythonScanBuilder.pushFilters`` stores the
+    pruned partitions and the pickled reader with
+    ``PythonDataSourceV2.setReadInfo``, and ``PythonBatch`` takes
+    ``getOrCreateReadInfo``, which returns that field whenever it is set.
+    So each loaded relation holds one read-info field and every pushdown
+    overwrites it. A filterless plan pushes no filter, so Spark calls no
+    Python for it (neither ``pushFilters`` nor ``partitions()``), and this
+    reader can neither make its state per plan nor fail loudly on the
+    reuse."""
 
     def pushFilters(self, filters):
         """Comparisons on ``time_hours`` (and ``IN`` lists) prune time

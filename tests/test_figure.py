@@ -24,7 +24,7 @@ from modeltracking_spark.queries.timegeo import synthetic_track
 @pytest.fixture(scope="module")
 def profile(spark):
     return profile_along_track(
-        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp", 25
+        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp"
     )
 
 
@@ -68,7 +68,7 @@ def test_draw_line_endpoints_and_clip():
 def test_profile_matrix_layout(spark, profile):
     pdf = profile_plot_frame(profile, synthetic_track(spark))
     mat = figure.profile_matrix(pdf)
-    assert mat.shape == (25, 80)  # k_depths x n_points
+    assert mat.shape == (25, 80)  # K_DEPTHS x n_points
     # surface row first: plot_depth is negated, surface = max plot_depth
     surf = pdf[pdf["plot_depth"] == pdf["plot_depth"].max()]
     t0 = surf[surf["plot_time"] == surf["plot_time"].min()].iloc[0]

@@ -343,7 +343,13 @@ def test_pushdown_grid_reuse_keeps_last_footprint(spark, grid_ds):
     on the same pushdown DataFrame reuses the scan planned with the
     storm's footprint (as tests/test_parquet_native.py pins for the
     parquet source). If a Spark upgrade fixes the reuse, this test fails
-    and the fresh-load advice can be retired."""
+    and the fresh-load advice can be retired.
+
+    The reuse is Spark's: ``PythonScanBuilder.pushFilters`` overwrites the
+    relation's one read-info field (``PythonDataSourceV2.setReadInfo``),
+    and ``PythonBatch`` takes that field through ``getOrCreateReadInfo``
+    whenever it is set. A filterless plan calls no Python, so the reader
+    cannot see it (``HycomGridPushdownReader``)."""
     g = _pushdown(spark)
     rows = _track([(30, 40, 1), (31, 41, 4)])  # steps 0 and 1
     profile_along_track(spark.createDataFrame(rows, TRACK_DDL), g).collect()

@@ -61,7 +61,7 @@ def test_nearest_time_bucket(spark):
 def test_profile_golden_shape(spark):
     # SURVEY §5.4: 80 points x 25 depth levels = 2000 rows
     prof = profile_along_track(
-        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp", 25
+        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp"
     )
     rows = prof.collect()
     assert len(rows) == 2000
@@ -162,7 +162,7 @@ def test_profile_multi_track_fleet_matches_single(spark):
     )
     grid = hycom_grid_fixture(spark)
     both = profile_along_track(
-        fleet, grid, "water_temp", 25, track_col="storm_id"
+        fleet, grid, "water_temp", track_col="storm_id"
     )
     got = {}
     for r in both.collect():
@@ -171,7 +171,7 @@ def test_profile_multi_track_fleet_matches_single(spark):
         )
     n_solo = 0
     for sid, t in ((9, t1), (16, t2)):
-        solo = profile_along_track(t, grid, "water_temp", 25)
+        solo = profile_along_track(t, grid, "water_temp")
         want = {
             (sid, r["point_id"], r["depth_idx"]): (
                 r["depth_m"], r["n_valid"], r["idw_value"]

@@ -17,7 +17,7 @@ from modeltracking_spark.queries.timegeo import synthetic_track
 @pytest.fixture(scope="module")
 def profile(spark):
     return profile_along_track(
-        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp", 25
+        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp"
     )
 
 

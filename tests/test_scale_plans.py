@@ -33,7 +33,7 @@ def test_filter_and_projection_pushdown(spark):
 
 def test_profile_plan_broadcasts_track_no_cartesian(spark):
     prof = profile_along_track(
-        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp", 25
+        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp"
     )
     assert has_broadcast_join(prof)             # tiny track side broadcast
     assert_no_cartesian(prof)                   # never a cross product
