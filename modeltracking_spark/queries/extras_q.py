@@ -6397,8 +6397,8 @@ def dap_scalar_summary_scan(spark: SparkSession,
     scalar title, Int32/Float64 scalars) are served by the in-process
     DAP server and each Spark partition drives the LIVE protocol for
     its shard: DDS parse -> scalar .dods fetches -> bare-XDR decode
-    (sources/dap.py ``_fetch_array`` 0-dim branch / server
-    ``_xdr_encode_scalar*``).  Outputs re-derive from the decoded
+    (sources/dap.py ``_xdr_decode(..., None)`` in ``_fetch_array`` /
+    server ``_xdr_encode(..., scalar=True)``).  Outputs re-derive from the decoded
     protocol values; the wire framing itself is byte-asserted in
     tests/test_netcdf.py::test_dap_scalar_framing."""
     fixture_dir = dapscalar_fixture_dir(spark, sf_dir)

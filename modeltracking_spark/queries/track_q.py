@@ -14,10 +14,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modeltracking_spark.fixtures import HYCOM_GRID_SQL, hycom_grid_fixture
+from modeltracking_spark.fixtures import (
+    GRID_LAT0,
+    GRID_LAT_STEP,
+    GRID_LON0,
+    GRID_LON_STEP,
+    GRID_TIME_STEP,
+    HYCOM_GRID_SQL,
+    hycom_grid_fixture,
+)
 from modeltracking_spark.operators.profile import profile_neighbors
 from modeltracking_spark.queries.common import query
 from modeltracking_spark.queries.timegeo import TRACK_SQL, synthetic_track
+
+# the grid time step nearest t_hours, halves rounded up, in integers
+_T_SEL = (f"((2 * t_hours + {GRID_TIME_STEP}) // {2 * GRID_TIME_STEP})"
+          f" * {GRID_TIME_STEP}")
 
 # shared oracle CTE prefix: track + grid + snap + 3x3 neighbor rows
 _NEIGHBOR_SQL = f"""
@@ -25,9 +37,9 @@ _NEIGHBOR_SQL = f"""
     grid AS ({HYCOM_GRID_SQL}),
     snapped AS (
       SELECT point_id, lat AS p_lat, lon AS p_lon,
-             ((2 * t_hours + 3) // 6) * 3 AS t_sel,
-             round((lat - 14.95::DOUBLE) / 0.25::DOUBLE)::INTEGER AS lat_idx,
-             round((lon - 279.85::DOUBLE) / 0.6::DOUBLE)::INTEGER AS lon_idx
+             {_T_SEL} AS t_sel,
+             round((lat - {GRID_LAT0}::DOUBLE) / {GRID_LAT_STEP}::DOUBLE)::INTEGER AS lat_idx,
+             round((lon - {GRID_LON0}::DOUBLE) / {GRID_LON_STEP}::DOUBLE)::INTEGER AS lon_idx
       FROM track
     ),
     offs AS (SELECT a.di::INTEGER AS di, b.dj::INTEGER AS dj
@@ -231,9 +243,9 @@ def profile_flatten_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid AS ({HYCOM_GRID_SQL}),
     snapped AS (
       SELECT point_id,
-             ((2 * t_hours + 3) // 6) * 3 AS t_sel,
-             round((lat - 14.95::DOUBLE) / 0.25::DOUBLE)::INTEGER AS lat_idx,
-             round((lon - 279.85::DOUBLE) / 0.6::DOUBLE)::INTEGER AS lon_idx
+             {_T_SEL} AS t_sel,
+             round((lat - {GRID_LAT0}::DOUBLE) / {GRID_LAT_STEP}::DOUBLE)::INTEGER AS lat_idx,
+             round((lon - {GRID_LON0}::DOUBLE) / {GRID_LON_STEP}::DOUBLE)::INTEGER AS lon_idx
       FROM track
     )
     SELECT s.point_id, g.depth_idx, g.depth_m,

@@ -21,12 +21,11 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "modeltracking-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession with the engine's standard posture."""
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = str(shuffle_partitions or max(2 * int(cpus), 8))
+    shuffle = str(max(2 * int(cpus), 8))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

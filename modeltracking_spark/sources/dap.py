@@ -24,29 +24,27 @@ protocol itself (VERDICT r6 item 7):
 
 Wire format implemented from the spec: DDS text grammar (``Dataset {
 Float64 var[dim = n]...; } name;``), and the ``.dods`` response = the
-constrained DDS, the literal ``Data:`` separator line, then one XDR
-array per projected variable — two big-endian u32 element counts
-followed by the values, with Int16 widened to 4 bytes (XDR's smallest
-integer) and Byte arrays zero-padded to a 4-byte boundary. Hyperslab
-STRIDES are supported end to end (``var[a:step:b]`` — the server
-subsamples, so an every-Nth-step scan ships 1/N of the data).
-Round 13 closes the former pydap plug-in point: the DAP 2.0
-CONSTRUCTOR types decode too — Grid (array + coordinate maps, the
-THREDDS shape the reference's HYCOM URL actually serves; the array
-reads transparently under the grid's name, maps as ``g.map``),
+constrained DDS, the literal ``Data:`` separator line, then the XDR of
+each projected variable. One codec writes and reads that XDR, the
+client and the server alike: :data:`_DAP_TYPES` is the one type table
+(wire dtype, read dtype), :func:`_xdr_encode` the one encoder and
+:func:`_xdr_decode` the one decoder. An array is its element count
+twice, then its elements; a scalar (a 0-dim variable, a Sequence
+column value) is the bare element. A String (and its alias Url) is a
+counted byte string; a number is a big-endian word, 16-bit integers
+widened to 4 bytes, and only the elements of a Byte array pack one byte
+each. Every string and every array body is zero-padded to 4 bytes.
+Hyperslab STRIDES are supported end to end (``var[a:step:b]`` — the
+server subsamples, so an every-Nth-step scan ships 1/N of the data).
+The DAP 2.0 CONSTRUCTOR types decode too — Grid (array + coordinate
+maps, the THREDDS shape the reference's HYCOM URL actually serves; the
+array reads transparently under the grid's name, maps as ``g.map``),
 Structure (members as ``s.member``), and Sequence (tabular; §7.2.3
-0x5A/0xA5 instance markers via :meth:`DapDataset.read_sequence`).
-Round 14 closes the atomic surface COMPLETELY: STRING — XDR counted
-byte strings (u32 length + bytes + pad4) decode in arrays (the (n, n)
-array header followed by per-element counted strings) and in
-Sequence columns, and the server side surfaces classic-netCDF CHAR
-variables the THREDDS way (the trailing string-length axis elides
-into a DAP String); Url (the spec's string alias) rides the same
-paths; UInt16/UInt32 decode everywhere the signed types do (XDR
-widens UInt16 to 4 bytes exactly like Int16). Constraints are
-URL-percent-encoded on the wire and unquoted by the server — the
-full round-trip is exercised live. Unknown declarations (DAP 2.0
-has no Int64) stay typed rejects.
+0x5A/0xA5 instance markers via :meth:`DapDataset.read_sequence`). The
+server serves classic-netCDF CHAR variables the THREDDS way (the
+trailing string-length axis elides into a DAP String). Constraints are
+URL-percent-encoded on the wire and unquoted by the server. Unknown
+declarations (DAP 2.0 has no Int64) stay typed rejects.
 
 Scale posture: the grid reader asks for one ``.dods`` hyperslab per
 physics variable per run of consecutive steps — the server does the
@@ -63,29 +61,25 @@ from __future__ import annotations
 import re
 import struct
 
-#: nc_type -> (DAP 2.0 type name, XDR wire itemsize, numpy wire dtype)
-_NC_TO_DAP = {
-    1: ("Byte", 1, ">i1"),
-    3: ("Int16", 4, ">i4"),   # XDR widens 16-bit ints to 4 bytes
-    4: ("Int32", 4, ">i4"),
-    5: ("Float32", 4, ">f4"),
-    6: ("Float64", 8, ">f8"),
-}
-#: DAP type name -> (XDR itemsize, wire dtype, final numpy dtype)
-#: (round 14 closes the unsigned pair: XDR widens UInt16 to 4 bytes
-#: exactly like Int16)
+#: DAP 2.0 atomic type -> (XDR wire dtype, dtype a read returns). XDR
+#: widens 16-bit integers to a 4-byte word; String and its alias Url are
+#: counted byte strings and have no wire dtype.
 _DAP_TYPES = {
-    "Byte": (1, ">i1", "i1"),
-    "Int16": (4, ">i4", "i2"),
-    "UInt16": (4, ">u4", "u2"),
-    "Int32": (4, ">i4", "i4"),
-    "UInt32": (4, ">u4", "u4"),
-    "Float32": (4, ">f4", "f4"),
-    "Float64": (8, ">f8", "f8"),
+    "Byte": (">i1", "i1"),
+    "Int16": (">i4", "i2"),
+    "UInt16": (">u4", "u2"),
+    "Int32": (">i4", "i4"),
+    "UInt32": (">u4", "u4"),
+    "Float32": (">f4", "f4"),
+    "Float64": (">f8", "f8"),
+    "String": (None, object),
+    "Url": (None, object),
 }
-
-#: String-shaped atomics (Url is DAP 2.0's string alias)
-_DAP_STRINGS = ("String", "Url")
+#: classic-netCDF nc_type -> the DAP type it is served as; a CHAR array
+#: serves as String, its trailing string-length axis elided (the THREDDS
+#: shape)
+_NC_DAP = {1: "Byte", 2: "String", 3: "Int16", 4: "Int32", 5: "Float32",
+           6: "Float64"}
 
 
 def encode_constraint(var: str, ranges: list[tuple]) -> str:
@@ -179,7 +173,7 @@ def _parse_dds(text: str):
             raise NotImplementedError(
                 f"DAP declaration {decl.strip()[:60]!r} not implemented")
         typ, var, dims = p
-        if typ not in _DAP_TYPES and typ not in _DAP_STRINGS:
+        if typ not in _DAP_TYPES:
             raise NotImplementedError(
                 f"DAP type {typ!r} not implemented")
         out[prefix + var] = (typ, dims)
@@ -201,7 +195,7 @@ def _parse_dds(text: str):
                     f"DAP Grid {cname!r} without Array:/Maps: parts")
             (arr_decl,) = _split_decls(gm.group(1))
             p = _parse_atomic_decl(arr_decl)
-            if p is None or p[0] not in _DAP_TYPES:
+            if p is None or _DAP_TYPES.get(p[0], (None,))[0] is None:
                 # a String-typed Grid array has no THREDDS analog
                 raise NotImplementedError(
                     f"DAP Grid {cname!r} array type not implemented")
@@ -219,8 +213,7 @@ def _parse_dds(text: str):
             cols = []
             for mdecl in _split_decls(cbody):
                 p = _parse_atomic_decl(mdecl)
-                if p is None or (p[0] not in _DAP_TYPES
-                                 and p[0] not in _DAP_STRINGS):
+                if p is None or p[0] not in _DAP_TYPES:
                     raise NotImplementedError(
                         f"DAP Sequence {cname!r} column not "
                         "implemented (atomic scalar columns are)")
@@ -236,127 +229,85 @@ def _parse_dds(text: str):
     return name, out, grids, sequences
 
 
-def _xdr_encode(a) -> bytes:
-    """numpy array -> XDR counted array (two u32 counts + padded data)."""
+def _xdr_encode(typ: str, values, scalar: bool = False) -> bytes:
+    """DAP ``typ`` values -> XDR, the one encoder of the wire format.
+
+    An array is its element count twice, then its elements; a scalar (a
+    0-dim variable, a Sequence column value) is the bare element. A
+    String is a counted byte string (u32 length, then the bytes); a
+    number is a big-endian word, and only the elements of a Byte array
+    pack one byte each. Every string and every array body is zero-padded
+    to 4 bytes."""
     import numpy as np
 
     from modeltracking_spark.sources.netcdf_classic import _pad4
 
-    nc_type = {
-        ("i", 1): 1, ("i", 2): 3, ("i", 4): 4, ("f", 4): 5, ("f", 8): 6,
-    }.get((a.dtype.kind, a.dtype.itemsize))
-    if nc_type is None:
-        raise NotImplementedError(f"XDR encoding for dtype {a.dtype} not implemented")
-    _, wire_size, wire_dtype = _NC_TO_DAP[nc_type]
-    n = int(a.size)
-    raw = np.ascontiguousarray(a, dtype=wire_dtype).tobytes()
-    raw += b"\x00" * (_pad4(len(raw)) - len(raw))
-    return struct.pack(">II", n, n) + raw
-
-
-def _xdr_encode_strings(strings) -> bytes:
-    """list of str/bytes -> XDR counted-string array: the (n, n)
-    array header, then each element as a counted byte string (u32
-    length + bytes, zero-padded to 4) — DAP 2.0 String on the wire."""
-    from modeltracking_spark.sources.netcdf_classic import _pad4
-
-    out = bytearray(struct.pack(">II", len(strings), len(strings)))
-    for v in strings:
-        raw = v.encode("utf-8") if isinstance(v, str) else bytes(v)
-        out += struct.pack(">I", len(raw)) + raw
-        out += b"\x00" * (_pad4(len(raw)) - len(raw))
-    return bytes(out)
-
-
-def _xdr_encode_scalar(a) -> bytes:
-    """0-dim numpy value -> bare XDR value (no array count header):
-    DAP 2.0 transmits SCALAR variables as the value alone, 4-padded —
-    only arrays carry the doubled count (ADVICE r14)."""
-    import numpy as np
-
-    from modeltracking_spark.sources.netcdf_classic import _pad4
-
-    nc_type = {
-        ("i", 1): 1, ("i", 2): 3, ("i", 4): 4, ("f", 4): 5, ("f", 8): 6,
-    }.get((a.dtype.kind, a.dtype.itemsize))
-    if nc_type is None:
+    if typ not in _DAP_TYPES:
         raise NotImplementedError(
-            f"XDR encoding for dtype {a.dtype} not implemented")
-    _, _, wire_dtype = _NC_TO_DAP[nc_type]
-    raw = np.ascontiguousarray(a, dtype=wire_dtype).tobytes()
-    return raw + b"\x00" * (_pad4(len(raw)) - len(raw))
+            f"XDR encoding for DAP type {typ!r} not implemented")
+    wire = _DAP_TYPES[typ][0]
+    if wire is None:
+        items = [values] if scalar else list(values)
+        body = bytearray()
+        for v in items:
+            raw = v.encode("utf-8") if isinstance(v, str) else bytes(v)
+            body += struct.pack(">I", len(raw)) + raw
+            body += b"\x00" * (_pad4(len(raw)) - len(raw))
+        n = len(items)
+    else:
+        if scalar and np.dtype(wire).itemsize < 4:
+            wire = ">i4"  # a scalar Byte is a whole XDR word
+        a = np.ascontiguousarray(values, dtype=wire)
+        body, n = a.tobytes(), a.size
+        body += b"\x00" * (_pad4(len(body)) - len(body))
+    return bytes(body) if scalar else struct.pack(">II", n, n) + body
 
 
-def _xdr_encode_scalar_string(v) -> bytes:
-    """str -> bare XDR counted string (length + 4-padded bytes, NO
-    (n, n) array header) — the DAP 2.0 scalar String framing."""
-    from modeltracking_spark.sources.netcdf_classic import _pad4
+def _xdr_decode(buf: bytes, off: int, typ: str, n_expect: int | None):
+    """XDR of DAP ``typ`` at ``buf[off:]`` -> (values, next offset), the
+    inverse of :func:`_xdr_encode`.
 
-    raw = v.encode("utf-8") if isinstance(v, str) else bytes(v)
-    return (struct.pack(">I", len(raw)) + raw
-            + b"\x00" * (_pad4(len(raw)) - len(raw)))
-
-
-def _xdr_decode_scalar_string(buf: bytes, off: int):
-    """Bare XDR counted string at ``buf[off:]`` -> (str, next offset);
-    scalar Strings ship WITHOUT the (n, n) array header (real DAP 2.0
-    servers — THREDDS/Hyrax — frame 0-dim Strings this way; ADVICE
-    r14)."""
-    from modeltracking_spark.sources.netcdf_classic import _pad4
-
-    if off + 4 > len(buf):
-        raise ValueError("truncated XDR scalar string length")
-    (ln,) = struct.unpack_from(">I", buf, off)
-    off += 4
-    if ln > len(buf) - off:
-        raise ValueError("truncated XDR scalar string payload")
-    return buf[off:off + ln].decode("utf-8"), off + _pad4(ln)
-
-
-def _xdr_decode_strings(buf: bytes, off: int, n_expect: int):
-    """XDR counted-string array at ``buf[off:]`` -> (list[str], next
-    offset); every length is bounds-checked before the slice."""
-    from modeltracking_spark.sources.netcdf_classic import _pad4
-
-    if off + 8 > len(buf):
-        raise ValueError("truncated XDR string array header")
-    n1, n2 = struct.unpack_from(">II", buf, off)
-    if n1 != n2 or n1 != n_expect:
-        raise ValueError(
-            f"XDR count mismatch: header ({n1}, {n2}), DDS says "
-            f"{n_expect}")
-    off += 8
-    out = []
-    for _ in range(n1):
-        if off + 4 > len(buf):
-            raise ValueError("truncated XDR string length")
-        (ln,) = struct.unpack_from(">I", buf, off)
-        off += 4
-        if ln > len(buf) - off:
-            raise ValueError("truncated XDR string payload")
-        out.append(buf[off:off + ln].decode("utf-8"))
-        off += _pad4(ln)
-    return out, off
-
-
-def _xdr_decode(buf: bytes, off: int, typ: str, n_expect: int):
-    """XDR counted array at ``buf[off:]`` -> (numpy array, next offset)."""
+    ``n_expect`` elements come back as a numpy array (a list of str for
+    String and Url), and the array's count header must say ``n_expect``
+    twice; ``n_expect=None`` reads one bare scalar as a Python value.
+    Every length is bounds-checked before the slice."""
     import numpy as np
 
     from modeltracking_spark.sources.netcdf_classic import _pad4
 
-    wire_size, wire_dtype, final_dtype = _DAP_TYPES[typ]
-    n1, n2 = struct.unpack_from(">II", buf, off)
-    if n1 != n2 or n1 != n_expect:
-        raise ValueError(
-            f"XDR count mismatch: header ({n1}, {n2}), DDS says {n_expect}"
-        )
-    off += 8
-    nbytes = _pad4(n1 * wire_size)
-    if off + nbytes > len(buf):
-        raise ValueError("truncated XDR array in .dods response")
-    a = np.frombuffer(buf, dtype=wire_dtype, count=n1, offset=off)
-    return a.astype(final_dtype), off + nbytes
+    wire, final = _DAP_TYPES[typ]
+    n = 1
+    if n_expect is not None:
+        if off + 8 > len(buf):
+            raise ValueError("truncated XDR array header")
+        n1, n2 = struct.unpack_from(">II", buf, off)
+        if n1 != n2 or n1 != n_expect:
+            raise ValueError(
+                f"XDR count mismatch: header ({n1}, {n2}), DDS says "
+                f"{n_expect}")
+        off += 8
+        n = n1
+    if wire is None:
+        vals = []
+        for _ in range(n):
+            if off + 4 > len(buf):
+                raise ValueError("truncated XDR string length")
+            (ln,) = struct.unpack_from(">I", buf, off)
+            off += 4
+            if ln > len(buf) - off:
+                raise ValueError("truncated XDR string payload")
+            vals.append(buf[off:off + ln].decode("utf-8"))
+            off += _pad4(ln)
+    else:
+        if n_expect is None and np.dtype(wire).itemsize < 4:
+            wire = ">i4"  # a scalar Byte is a whole XDR word
+        nbytes = _pad4(n * np.dtype(wire).itemsize)
+        if off + nbytes > len(buf):
+            raise ValueError("truncated XDR value")
+        a = np.frombuffer(buf, dtype=wire, count=n, offset=off).astype(final)
+        vals = a if n_expect is not None else a.tolist()
+        off += nbytes
+    return (vals if n_expect is not None else vals[0]), off
 
 
 #: seconds a remote read (a DAP request or an HTTP range read) may wait
@@ -462,6 +413,8 @@ class DapDataset:
     def _fetch_array(self, var: str, ranges: list[tuple]):
         import urllib.parse
 
+        import numpy as np
+
         typ, dims = self.vars[var]
         # a Grid's array projects fully qualified (``g.g[...]``) so
         # the server ships the bare array, not the Grid constructor
@@ -484,28 +437,8 @@ class DapDataset:
             shape.append(d)
             n *= d
         off = sep + len(b"\nData:\n")
-        import numpy as np
-
-        if not dims:
-            # 0-dim variable: DAP 2.0 ships a SCALAR as the bare value
-            # (bare counted string / bare 4-padded value), never the
-            # (n, n) array header — match real servers (ADVICE r14)
-            if typ in _DAP_STRINGS:
-                s, _ = _xdr_decode_scalar_string(body, off)
-                return np.array(s, dtype=object)
-            from modeltracking_spark.sources.netcdf_classic import _pad4
-
-            wire_size, wire_dtype, final_dtype = _DAP_TYPES[typ]
-            if off + _pad4(wire_size) > len(body):
-                raise ValueError("truncated XDR scalar value")
-            return np.frombuffer(
-                body, dtype=wire_dtype, count=1, offset=off
-            ).astype(final_dtype).reshape(())
-        if typ in _DAP_STRINGS:
-            vals, _ = _xdr_decode_strings(body, off, n)
-            return np.array(vals, dtype=object).reshape(shape)
-        a, _ = _xdr_decode(body, off, typ, n)
-        return a.reshape(shape)
+        vals, _ = _xdr_decode(body, off, typ, n if dims else None)
+        return np.asarray(vals, dtype=_DAP_TYPES[typ][1]).reshape(shape)
 
     def shape(self, var: str) -> tuple[int, ...]:
         return tuple(sz for _, sz in self.vars[var][1])
@@ -535,10 +468,9 @@ class DapDataset:
                     attrs[name] = (
                         raw[1:-1].replace('\\"', '"').replace("\\\\", "\\")
                     )
-                elif typ in ("Byte", "Int16", "Int32", "UInt16", "UInt32"):
-                    attrs[name] = [int(x) for x in raw.split(",")]
-                elif typ in ("Float32", "Float64"):
-                    attrs[name] = [float(x) for x in raw.split(",")]
+                elif _DAP_TYPES.get(typ, (None,))[0] is not None:
+                    num = float if typ.startswith("Float") else int
+                    attrs[name] = [num(x) for x in raw.split(",")]
                 else:
                     raise NotImplementedError(
                         f"DAS attribute type {typ!r} not implemented"
@@ -580,13 +512,11 @@ class DapDataset:
         return self._fetch_array(var, ranges)[0]
 
     def read_sequence(self, name: str) -> dict:
-        """Fetch a DAP 2.0 Sequence -> {column: list} (round 13).
-        Wire format per spec §7.2.3: each instance prefixed by the
-        START_OF_INSTANCE marker 0x5A000000, the stream closed by
-        END_OF_SEQUENCE 0xA5000000; within an instance each column
-        value is XDR-encoded at its wire width (Int16/Int32 -> 4
-        bytes big-endian, Float32 -> 4, Float64 -> 8, Byte -> 4 per
-        XDR scalar padding)."""
+        """Fetch a DAP 2.0 Sequence -> {column: list}. Wire format per
+        spec §7.2.3: each instance is prefixed by the START_OF_INSTANCE
+        marker 0x5A000000 and the stream is closed by END_OF_SEQUENCE
+        0xA5000000; within an instance each column value is one XDR
+        scalar, read by :func:`_xdr_decode`."""
         cols = self.sequences.get(name)
         if cols is None:
             raise KeyError(f"no DAP sequence {name!r}")
@@ -607,39 +537,8 @@ class DapDataset:
                 raise ValueError(
                     f"bad DAP sequence marker 0x{marker:08x}")
             for col, typ in cols:
-                if typ in _DAP_STRINGS:
-                    # XDR counted byte string, zero-padded to 4
-                    from modeltracking_spark.sources.netcdf_classic \
-                        import _pad4
-
-                    if off + 4 > len(body):
-                        raise ValueError("truncated DAP sequence row")
-                    (ln,) = struct.unpack_from(">I", body, off)
-                    off += 4
-                    if ln > len(body) - off:
-                        raise ValueError(
-                            "truncated DAP sequence string")
-                    out[col].append(body[off:off + ln].decode("utf-8"))
-                    off += _pad4(ln)
-                    continue
-                wire_size, wire_dtype, final = _DAP_TYPES[typ]
-                # XDR scalars occupy at least 4 bytes
-                size = max(4, wire_size)
-                if off + size > len(body):
-                    raise ValueError("truncated DAP sequence row")
-                if typ in ("Byte", "Int16", "Int32"):
-                    (v,) = struct.unpack_from(">i", body, off)
-                    out[col].append(int(v))
-                elif typ in ("UInt16", "UInt32"):
-                    (v,) = struct.unpack_from(">I", body, off)
-                    out[col].append(int(v))
-                elif typ == "Float32":
-                    (v,) = struct.unpack_from(">f", body, off)
-                    out[col].append(float(v))
-                else:  # Float64
-                    (v,) = struct.unpack_from(">d", body, off)
-                    out[col].append(float(v))
-                off += size
+                v, off = _xdr_decode(body, off, typ, None)
+                out[col].append(v)
         return out
 
     def close(self) -> None:
@@ -653,28 +552,21 @@ class DapDataset:
 _SLAB = re.compile(r"\[(\d+)(?::(\d+))?(?::(\d+))?\]")
 
 
-_NCT_DAP = {1: "Byte", 3: "Int16", 4: "Int32", 5: "Float32",
-            6: "Float64"}
-
-
 def _var_decl(nc, name: str, ranges=None, indent: str = "    ",
               decl_name: str | None = None) -> str:
     v = nc.vars[name]
-    if v.nc_type == 2:
-        # classic-netCDF CHAR arrays serve as DAP String with the
-        # trailing string-length axis elided — the THREDDS shape
+    typ = _NC_DAP.get(v.nc_type)
+    if typ is None:
+        raise NotImplementedError(
+            f"DAP serving for nc_type {v.nc_type} not implemented"
+        )
+    dim_pairs = list(zip(v.dim_ids, v.shape))
+    if typ == "String":
+        # CHAR: the trailing string-length axis is the payload
         if not v.dim_ids:
             raise NotImplementedError(
                 "DAP serving for scalar CHAR not implemented")
-        typ = "String"
-        dim_pairs = list(zip(v.dim_ids, v.shape))[:-1]
-    else:
-        typ = _NCT_DAP.get(v.nc_type)
-        if typ is None:
-            raise NotImplementedError(
-                f"DAP serving for nc_type {v.nc_type} not implemented"
-            )
-        dim_pairs = list(zip(v.dim_ids, v.shape))
+        dim_pairs = dim_pairs[:-1]
     dims = []
     for di, sz in dim_pairs:
         if ranges is not None:
@@ -692,7 +584,8 @@ def _grid_vars(nc) -> dict:
               if len(v.dim_ids) == 1 and nc.dims[v.dim_ids[0]][0] == n}
     out = {}
     for name, v in nc.vars.items():
-        if name in coords or len(v.dim_ids) < 2 or v.nc_type == 2:
+        if (name in coords or len(v.dim_ids) < 2
+                or _NC_DAP.get(v.nc_type) == "String"):
             continue
         dims = [nc.dims[di][0] for di in v.dim_ids]
         if all(d in coords for d in dims):
@@ -780,7 +673,7 @@ def parse_constraint(nc, query: str) -> dict:
         var = m.group(1)
         v = nc.vars[var]
         shape = list(v.shape)
-        if v.nc_type == 2:
+        if _NC_DAP.get(v.nc_type) == "String":
             # CHAR serves as String: the strlen axis is the payload,
             # not a constrainable dimension
             if not shape:
@@ -844,28 +737,11 @@ def _xdr_sequence(seq: dict) -> bytes:
     """Sequence rows -> the spec's §7.2.3 stream: 0x5A000000 before
     every instance, columns XDR-encoded at scalar width, 0xA5000000
     after the last."""
-    from modeltracking_spark.sources.netcdf_classic import _pad4
-
     out = bytearray()
     for row in seq["rows"]:
         out += struct.pack(">I", 0x5A000000)
-        for (col, typ), val in zip(seq["cols"], row):
-            if typ in ("Byte", "Int16", "Int32"):
-                out += struct.pack(">i", int(val))
-            elif typ in ("UInt16", "UInt32"):
-                out += struct.pack(">I", int(val))
-            elif typ == "Float32":
-                out += struct.pack(">f", float(val))
-            elif typ == "Float64":
-                out += struct.pack(">d", float(val))
-            elif typ in ("String", "Url"):
-                raw = (val.encode("utf-8") if isinstance(val, str)
-                       else bytes(val))
-                out += struct.pack(">I", len(raw)) + raw
-                out += b"\x00" * (_pad4(len(raw)) - len(raw))
-            else:
-                raise NotImplementedError(
-                    f"DAP sequence column type {typ!r} not implemented")
+        for (_col, typ), val in zip(seq["cols"], row):
+            out += _xdr_encode(typ, val, scalar=True)
     out += struct.pack(">I", 0xA5000000)
     return bytes(out)
 
@@ -962,31 +838,15 @@ def make_dap_handler(root_dir: str, grid_mode: bool = False,
                     ).encode()
                     chunks = [dds, b"\nData:\n"]
                     for var, ranges in only.items():
-                        # CHAR: ranges cover the kept dims; the
-                        # trailing strlen axis ships whole, joined
-                        # into DAP String payloads below
+                        typ = _NC_DAP[nc.vars[var].nc_type]
                         a = nc.read_strided(var, ranges)
-                        # a 0-dim projection (scalar variable) ships
-                        # the bare value — no (n, n) array header
-                        # (DAP 2.0 scalar framing, ADVICE r14)
-                        scalar = not ranges
-                        if nc.vars[var].nc_type == 2:
-                            flat = a.reshape(-1, a.shape[-1])
-                            strings = [
-                                row.tobytes().rstrip(b"\x00")
-                                .decode("utf-8") for row in flat
-                            ]
-                            if scalar:
-                                chunks.append(
-                                    _xdr_encode_scalar_string(
-                                        strings[0]))
-                            else:
-                                chunks.append(
-                                    _xdr_encode_strings(strings))
-                        elif scalar:
-                            chunks.append(_xdr_encode_scalar(a))
-                        else:
-                            chunks.append(_xdr_encode(a))
+                        if typ == "String":
+                            # CHAR rows, NUL-padded to the strlen axis
+                            a = [row.tobytes().rstrip(b"\x00")
+                                 for row in a.reshape(-1, a.shape[-1])]
+                            a = a if ranges else a[0]
+                        # a 0-dim projection ships the bare value
+                        chunks.append(_xdr_encode(typ, a, scalar=not ranges))
                     nc.close()
                     self._reply(200, b"".join(chunks), "application/octet-stream")
                 else:

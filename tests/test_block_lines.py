@@ -369,10 +369,11 @@ def test_twins_resist_decoy_fixture_dirs(spark):
     correct engine answer to FAIL."""
     import shutil
     import sys
+    from pathlib import Path
 
     import lzma
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import tools.oracle_twins as tw
     from modeltracking_spark.operators.zstd_seekable import (
         zstd_seekable_write,

@@ -4,8 +4,9 @@ DuckDB; every oracle key has a query and PRIORITY leads the registry;
 linear_fit operator agrees with the integer-exact formula."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod
 import duckdb

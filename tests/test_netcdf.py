@@ -1078,21 +1078,19 @@ def test_dap_string_truncation_rejects():
     internal slice error."""
     import struct as _s
 
-    from modeltracking_spark.sources.dap import (
-        _xdr_decode_strings,
-    )
+    from modeltracking_spark.sources.dap import _xdr_decode
 
     ok = _s.pack(">II", 2, 2) + _s.pack(">I", 3) + b"abc\x00" \
         + _s.pack(">I", 0)
-    vals, off = _xdr_decode_strings(ok, 0, 2)
+    vals, off = _xdr_decode(ok, 0, "String", 2)
     assert vals == ["abc", ""] and off == len(ok)
     with pytest.raises(ValueError, match="count mismatch"):
-        _xdr_decode_strings(ok, 0, 3)
+        _xdr_decode(ok, 0, "String", 3)
     with pytest.raises(ValueError, match="truncated"):
-        _xdr_decode_strings(ok[:10], 0, 2)
+        _xdr_decode(ok[:10], 0, "String", 2)
     bad = _s.pack(">II", 1, 1) + _s.pack(">I", 99) + b"ab"
     with pytest.raises(ValueError, match="truncated"):
-        _xdr_decode_strings(bad, 0, 1)
+        _xdr_decode(bad, 0, "String", 1)
 
 
 def test_dap_unsigned_and_url_sequence_roundtrip(string_dap_root):
@@ -1158,24 +1156,32 @@ def test_dap_scalar_framing(dap_root, tmp_path):
     value for numerics — never the (n, n) array header only arrays
     carry.  The in-repo server emits the spec framing and the client
     decodes it; the raw .dods bytes are asserted header-free so both
-    sides cannot drift together."""
+    sides cannot drift together.  A scalar Byte is a whole big-endian
+    XDR word, as in a Sequence column; only a Byte ARRAY packs its
+    elements one byte each."""
     import shutil
     import struct as _s
     import urllib.request
 
-    from modeltracking_spark.sources.dap import DapDataset
+    from modeltracking_spark.sources.dap import (
+        DapDataset,
+        _xdr_encode,
+        _xdr_sequence,
+    )
     from modeltracking_spark.sources.netcdf_classic import write_classic
 
     base, root = dap_root
     path = os.path.join(str(tmp_path), "scalars.nc")
     write_classic(
         path,
-        dims=[("strlen", 8), ("x", 3)],
+        dims=[("strlen", 8), ("x", 3), ("y", 5)],
         variables=[
             ("title", ["strlen"],
              np.frombuffer(b"hello\x00\x00\x00", dtype="S1")),
             ("pi", [], np.array(3.25, dtype=">f8")),
             ("xs", ["x"], np.array([1, 2, 3], dtype=">i4")),
+            ("b", [], np.array(5, dtype="i1")),
+            ("bs", ["y"], np.array([1, -2, 3, 4, 127], dtype="i1")),
         ],
         record_dim=None, n_records=0, global_attrs={},
     )
@@ -1197,3 +1203,18 @@ def test_dap_scalar_framing(dap_root, tmp_path):
     body = urllib.request.urlopen(f"{base}/scalars.nc.dods?xs").read()
     xdr = body.split(b"\nData:\n", 1)[1]
     assert _s.unpack_from(">II", xdr, 0) == (3, 3)
+    # a scalar Byte is one 4-byte big-endian word
+    body = urllib.request.urlopen(f"{base}/scalars.nc.dods?b").read()
+    xdr = body.split(b"\nData:\n", 1)[1]
+    assert xdr == b"\x00\x00\x00\x05"
+    assert remote.read("b").reshape(()) == 5
+    # a Byte array: (n, n), the packed bytes, zero padding to 4
+    body = urllib.request.urlopen(f"{base}/scalars.nc.dods?bs").read()
+    xdr = body.split(b"\nData:\n", 1)[1]
+    assert xdr == (_s.pack(">II", 5, 5) + bytes([1, 0xFE, 3, 4, 0x7F])
+                   + b"\x00" * 3)
+    assert remote.read("bs").tolist() == [1, -2, 3, 4, 127]
+    # the same word a Sequence Byte column carries
+    seq = _xdr_sequence({"cols": [("b", "Byte")], "rows": [(5,)]})
+    assert _xdr_encode("Byte", 5, scalar=True) == seq[4:-4] \
+        == b"\x00\x00\x00\x05"

@@ -14,6 +14,7 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
@@ -59,7 +60,7 @@ def compare(spark_rows, duck_rows, cols):
 def main(filters: list[str]) -> int:
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
 
     spark = (
