@@ -3,10 +3,8 @@ public spec — the live-protocol twin of the reference's THREDDS reads.
 
 The reference opens ``http://tds.hycom.org/thredds/dodsC/GLBu0.08/...``
 through pydap/netCDF4 and ships per-point index slices to the server
-(``trackplot_hycom.py:110,176``). Rounds 5-6 built the byte-grain
-stand-in (classic-netCDF over HTTP Range,
-``sources/netcdf_classic.py``); this module adds the VARIABLE-grain
-protocol itself (VERDICT r6 item 7):
+(``trackplot_hycom.py:110,176``). This module is the engine's one
+remote grid transport:
 
 - ``encode_constraint`` — index slices -> the DAP hyperslab projection
   ``?var[t0:t1][y0:y1][x0:x1]`` (DAP 2.0 §5.3 constraint expressions);
@@ -50,10 +48,10 @@ Scale posture: the grid reader asks for one ``.dods`` hyperslab per
 physics variable per run of consecutive steps — the server does the
 cut, the client never downloads the hypercube; ``n_fetches``/``n_bytes``
 counters let tests assert it.
-Every request goes through :func:`http_get`, which the classic-netCDF
-HTTP range reader shares: a timeout and one retry (all of them are
-idempotent GETs), a body check against ``Content-Length``, and a
-:class:`DapRequestError` that names the URL and the constraint.
+Every request goes through :meth:`DapDataset._get`: a timeout and one
+retry (all of them are idempotent GETs), a body check against
+``Content-Length``, and a :class:`DapRequestError` that names the URL
+and the constraint.
 """
 
 from __future__ import annotations
@@ -310,66 +308,16 @@ def _xdr_decode(buf: bytes, off: int, typ: str, n_expect: int | None):
     return (vals if n_expect is not None else vals[0]), off
 
 
-#: seconds a remote read (a DAP request or an HTTP range read) may wait
-#: on the server (to connect, or between bytes of the reply) before the
-#: attempt is abandoned
+#: seconds a DAP request may wait on the server (to connect, or between
+#: bytes of the reply) before the attempt is abandoned
 DAP_TIMEOUT_S = 60.0
-#: attempts per remote read: one retry, since every request is a GET
+#: attempts per DAP request: one retry, since every request is a GET
 DAP_ATTEMPTS = 2
 
 
 class DapRequestError(OSError):
-    """A remote read that failed on every attempt; the message names the
-    URL and the DAP constraint or the byte range."""
-
-
-def http_get(url: str, byte_range: tuple[int, int] | None):
-    """GET ``url`` -> ``(status, headers, body)``; a ``byte_range``
-    (inclusive ``(first, last)``) is sent as a ``Range`` header.
-
-    The one HTTP path of the remote readers: :meth:`DapDataset._get` and
-    :class:`~modeltracking_spark.sources.netcdf_classic.HttpRangeReader`.
-    Each attempt times out after :data:`DAP_TIMEOUT_S`; a request is
-    tried :data:`DAP_ATTEMPTS` times (every read is idempotent). A 4xx
-    reply is not retried. A body shorter or longer than its
-    ``Content-Length`` counts as a failure. The final failure is a
-    :class:`DapRequestError` naming the URL and the constraint or range.
-    """
-    import http.client
-    import urllib.error
-    import urllib.parse
-    import urllib.request
-
-    headers = {}
-    if byte_range is not None:
-        headers["Range"] = f"bytes={byte_range[0]}-{byte_range[1]}"
-    for attempt in range(1, DAP_ATTEMPTS + 1):
-        try:
-            req = urllib.request.Request(url, headers=headers)
-            with urllib.request.urlopen(req, timeout=DAP_TIMEOUT_S) as r:
-                body = r.read()
-                status, reply = r.status, r.headers
-            length = reply.get("Content-Length")
-            if length is not None and len(body) != int(length):
-                raise ValueError(
-                    f"body is {len(body)} bytes, Content-Length "
-                    f"says {length}"
-                )
-            return status, reply, body
-        except (OSError, http.client.HTTPException, ValueError) as exc:
-            client_error = (
-                isinstance(exc, urllib.error.HTTPError) and exc.code < 500
-            )
-            if client_error or attempt == DAP_ATTEMPTS:
-                base, _, query = url.partition("?")
-                what = (
-                    f"range {headers['Range']}" if headers else
-                    f"constraint {urllib.parse.unquote(query) or '(none)'!r}"
-                )
-                raise DapRequestError(
-                    f"request failed after {attempt} attempt(s): "
-                    f"{base} {what}: {exc!r}"
-                ) from exc
+    """A DAP request that failed on every attempt; the message names the
+    URL and the DAP constraint."""
 
 
 class DapDataset:
@@ -403,12 +351,46 @@ class DapDataset:
         self.dims = list(seen.items())
 
     def _get(self, full_url: str) -> bytes:
-        """GET ``full_url`` through :func:`http_get`, counting the
-        successful requests and their bytes."""
-        _, _, body = http_get(full_url, None)
-        self.n_fetches += 1
-        self.n_bytes += len(body)
-        return body
+        """GET ``full_url`` -> the reply body, counting the successful
+        requests and their bytes.
+
+        Each attempt times out after :data:`DAP_TIMEOUT_S`; a request is
+        tried :data:`DAP_ATTEMPTS` times (every read is idempotent). A
+        4xx reply is not retried. A body shorter or longer than its
+        ``Content-Length`` counts as a failure. The final failure is a
+        :class:`DapRequestError` naming the URL and the constraint.
+        """
+        import http.client
+        import urllib.error
+        import urllib.parse
+        import urllib.request
+
+        for attempt in range(1, DAP_ATTEMPTS + 1):
+            try:
+                with urllib.request.urlopen(
+                    full_url, timeout=DAP_TIMEOUT_S
+                ) as r:
+                    body = r.read()
+                    length = r.headers.get("Content-Length")
+                if length is not None and len(body) != int(length):
+                    raise ValueError(
+                        f"body is {len(body)} bytes, Content-Length "
+                        f"says {length}"
+                    )
+                self.n_fetches += 1
+                self.n_bytes += len(body)
+                return body
+            except (OSError, http.client.HTTPException, ValueError) as exc:
+                client_error = (
+                    isinstance(exc, urllib.error.HTTPError) and exc.code < 500
+                )
+                if client_error or attempt == DAP_ATTEMPTS:
+                    base, _, query = full_url.partition("?")
+                    constraint = urllib.parse.unquote(query) or "(none)"
+                    raise DapRequestError(
+                        f"request failed after {attempt} attempt(s): "
+                        f"{base} constraint {constraint!r}: {exc!r}"
+                    ) from exc
 
     def _fetch_array(self, var: str, ranges: list[tuple]):
         import urllib.parse
@@ -860,11 +842,17 @@ def make_dap_handler(root_dir: str, grid_mode: bool = False,
 
 
 def open_nc_or_dap(path_or_url: str):
-    """``dap+http(s)://`` URLs -> :class:`DapDataset`; everything else ->
-    :class:`NcFile` (which itself routes http(s) through byte-range
-    reads). The seam grid pipelines call instead of NcFile directly."""
+    """``dap+http(s)://`` URLs -> :class:`DapDataset`; a local path or
+    ``file://`` -> :class:`NcFile`. A bare ``http(s)://`` path is a
+    ``ValueError`` naming the ``dap+`` form: DAP is the one remote
+    transport. The seam grid pipelines call instead of NcFile directly."""
     if path_or_url.startswith(("dap+http://", "dap+https://")):
         return DapDataset(path_or_url)
+    if path_or_url.startswith(("http://", "https://")):
+        raise ValueError(
+            f"{path_or_url}: a remote grid is read over DAP; "
+            f"use dap+{path_or_url}"
+        )
     from modeltracking_spark.sources.netcdf_classic import NcFile
 
     return NcFile(path_or_url)

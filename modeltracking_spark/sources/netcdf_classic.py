@@ -17,9 +17,9 @@ option.
 Scale posture: the reader holds only (a) the parsed header (KBs) and
 (b) one record slice per call. The grid DataSource parses the header
 once per ``.load()`` and ships the closed :class:`NcFile` to its tasks;
-each task reopens only the file handle (or object-store range-GETs in a
-real deployment), reads the byte range of each kept record, and emits
-one Arrow batch per record.
+each task reopens only the file handle, reads the byte range of each
+kept record, and emits one Arrow batch per record. A remote grid is
+read over DAP (``sources/dap.py``), which serves these files.
 
 Format notes (classic, from the public spec):
 - big-endian throughout; names/attr values/data blocks padded to 4 bytes
@@ -38,19 +38,6 @@ from __future__ import annotations
 
 import struct
 from dataclasses import dataclass, field
-
-# ---------------------------------------------------------------------------
-# range readers — the local/remote seam
-#
-# The reference reads its grid REMOTELY (http://tds.hycom.org, DAP
-# constraint URLs ship the slice to the server). The honest local twin of
-# that protocol half is a byte-range interface: everything NcFile needs is
-# "give me nbytes at offset", which a local file serves via seek+read and
-# an HTTP server serves via a Range-GET (the object-store access path a
-# real deployment would use). NcFile accepts a plain path, file://, or
-# http(s):// and picks the backend; tests exercise the HTTP backend
-# against an in-process stdlib server with no external network.
-# ---------------------------------------------------------------------------
 
 
 class FileRangeReader:
@@ -83,68 +70,6 @@ class FileRangeReader:
         if self._f is not None:
             self._f.close()
             self._f = None
-
-
-class HttpRangeReader:
-    """Range-GET reader: ``read_range`` sends ``Range: bytes=a-b`` and a
-    compliant server (206) returns exactly the slice — the classic-format
-    analog of the reference's DAP constraint URLs. A server that ignores
-    Range (plain 200) still yields correct results via local slicing, but
-    that downloads the whole file per call — fine for a header probe,
-    wrong at scale — so it is accepted but counted (``n_full_downloads``)
-    for tests to assert against. Every request goes through
-    :func:`modeltracking_spark.sources.dap.http_get` (timeout, one retry,
-    ``Content-Length`` check, an error naming the URL and the range)."""
-
-    def __init__(self, url: str):
-        self.url = url
-        self._size: int | None = None
-        self.n_full_downloads = 0
-
-    def size(self) -> int:
-        """Total bytes, from the ``Content-Range`` of a 1-byte Range GET
-        (``bytes 0-0/TOTAL``), or the body itself if the server ignored
-        the Range."""
-        from modeltracking_spark.sources.dap import http_get
-
-        if self._size is not None:
-            return self._size
-        status, headers, body = http_get(self.url, (0, 0))
-        cr = headers.get("Content-Range", "")
-        if "/" in cr and cr.rsplit("/", 1)[1].isdigit():
-            self._size = int(cr.rsplit("/", 1)[1])
-        elif status == 200:  # server ignored Range: body IS the file
-            self._size = len(body)
-        else:
-            raise ValueError(
-                f"{self.url}: cannot determine size — no usable "
-                "Content-Range in the server's reply to a Range GET"
-            )
-        return self._size
-
-    def read_range(self, off: int, nbytes: int) -> bytes:
-        from modeltracking_spark.sources.dap import http_get
-
-        if nbytes <= 0:
-            return b""
-        status, _, body = http_get(self.url, (off, off + nbytes - 1))
-        if status == 206:
-            return body
-        self.n_full_downloads += 1
-        return body[off : off + nbytes]
-
-    def close(self) -> None:
-        pass
-
-
-def open_range_reader(path_or_url: str):
-    """file:// and bare paths -> :class:`FileRangeReader`; http(s):// ->
-    :class:`HttpRangeReader`."""
-    if path_or_url.startswith(("http://", "https://")):
-        return HttpRangeReader(path_or_url)
-    if path_or_url.startswith("file://"):
-        return FileRangeReader(path_or_url[len("file://") :])
-    return FileRangeReader(path_or_url)
 
 
 NC_DIMENSION = 0x0A
@@ -294,18 +219,17 @@ class NcFile:
     attributes — the dataset contract :class:`DapDataset
     <modeltracking_spark.sources.dap.DapDataset>` shares.
 
-    ``path`` may be a local path, ``file://…``, or ``http(s)://…`` — the
-    remote form reads via HTTP Range-GETs (:class:`HttpRangeReader`), the
-    local-file twin of the reference's OPeNDAP server-side slicing. All
-    reads in this object's lifetime share ONE reader (one file handle /
-    one connection pool) — nothing re-opens per record. ``close()``
-    drops the handle and keeps the parsed header, so a closed file
-    pickles and reads again without re-parsing.
+    ``path`` is a local path or ``file://…``; a remote grid is a
+    :class:`DapDataset <modeltracking_spark.sources.dap.DapDataset>`.
+    All reads in this object's lifetime share ONE
+    :class:`FileRangeReader` (one file handle) — nothing re-opens per
+    record. ``close()`` drops the handle and keeps the parsed header, so
+    a closed file pickles and reads again without re-parsing.
     """
 
     def __init__(self, path: str):
         self.path = path
-        self.reader = open_range_reader(path)
+        self.reader = FileRangeReader(path.removeprefix("file://"))
         size = self.reader.size()
         # headers are small; 64 KiB covers dims+attrs+vars for any sane
         # grid file, and we re-parse from the full file if the header

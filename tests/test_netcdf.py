@@ -2,8 +2,12 @@
 netCDF backend (the executable twin of the reference's OPeNDAP read,
 ``trackplot_hycom.py:144``)."""
 
+import http.server
 import math
+import os
+import re
 import struct
+import threading
 
 import numpy as np
 import pytest
@@ -182,137 +186,6 @@ def test_datasource_netcdf_backend_and_pruning(spark, tmp_path_factory):
         4, len(os.sched_getaffinity(0)), math.ceil(cells / _CELLS_PER_TASK))
 
 
-# ---------------------------------------------------------------------------
-# HTTP Range-GET backend — the remote seam (the executable twin of the
-# reference's DAP slicing, with no external network: an in-process stdlib
-# server serves the same bytes a THREDDS/object store would)
-# ---------------------------------------------------------------------------
-import http.server
-import os
-import threading
-
-
-class _RangeHandler(http.server.SimpleHTTPRequestHandler):
-    """SimpleHTTPRequestHandler ignores Range; this implements the
-    single-range form (bytes=a-b) so the reader's 206 path is exercised."""
-
-    def log_message(self, *a):  # quiet
-        pass
-
-    def do_HEAD(self):
-        path = self.translate_path(self.path)
-        if not os.path.isfile(path):
-            self.send_error(404)
-            return
-        self.send_response(200)
-        self.send_header("Content-Length", str(os.path.getsize(path)))
-        self.send_header("Accept-Ranges", "bytes")
-        self.end_headers()
-
-    def do_GET(self):
-        path = self.translate_path(self.path)
-        if not os.path.isfile(path):
-            self.send_error(404)
-            return
-        size = os.path.getsize(path)
-        rng = self.headers.get("Range")
-        with open(path, "rb") as f:
-            if rng and rng.startswith("bytes="):
-                a, _, b = rng[len("bytes="):].partition("-")
-                start = int(a)
-                end = min(int(b) if b else size - 1, size - 1)
-                f.seek(start)
-                body = f.read(end - start + 1)
-                self.send_response(206)
-                self.send_header("Content-Range", f"bytes {start}-{end}/{size}")
-            else:
-                body = f.read()
-                self.send_response(200)
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-
-@pytest.fixture(scope="module")
-def http_root(tmp_path_factory):
-    """(base_url, root_dir) of a Range-capable server on a loopback port."""
-    root = tmp_path_factory.mktemp("httpnc")
-    handler = lambda *a, **kw: _RangeHandler(*a, directory=str(root), **kw)
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}", str(root)
-    srv.shutdown()
-
-
-def test_http_backend_matches_file(tiny_nc, http_root):
-    import shutil
-
-    base, root = http_root
-    shutil.copy(tiny_nc, os.path.join(root, "tiny.nc"))
-    local = NcFile(tiny_nc)
-    remote = NcFile(f"{base}/tiny.nc")
-    assert remote.dims == local.dims and remote.numrecs == local.numrecs
-    for var in ("t", "yv", "xv", "grid"):
-        assert np.array_equal(remote.read(var), local.read(var))
-    for r in range(5):
-        assert np.array_equal(
-            remote.read_slice("grid", r), local.read_slice("grid", r)
-        )
-    # every read went through the 206 partial path — the server never had
-    # to ship the whole file (the scale property of the seam)
-    assert remote.reader.n_full_downloads == 0
-
-
-def test_grid_netcdf_scan_http_backend(spark, http_root):
-    """grid_netcdf_scan's pipeline over the HTTP backend: the DataSource
-    partitions pass the http:// URL through to NcFile, so every Spark
-    task range-reads its own timestep record from the server."""
-    from pyspark.errors import PySparkException
-
-    import pyspark.sql.functions as F
-    from modeltracking_spark.queries.common import ensure_pkg_on_workers
-    from modeltracking_spark.sources.grid_source import HycomGridDataSource
-
-    base, root = http_root
-    write_grid_netcdf(os.path.join(root, "grid_http.nc"), n_time=3)
-    ensure_pkg_on_workers(spark)
-    try:
-        spark.dataSource.register(HycomGridDataSource)
-    except PySparkException:
-        pass
-    g = (
-        spark.read.format("hycom_grid")
-        .option("path", f"{base}/grid_http.nc")
-        .load()
-    )
-    rows = g.groupBy("time_hours").count().orderBy("time_hours").collect()
-    assert [r["time_hours"] for r in rows] == [
-        t * GRID_TIME_STEP for t in range(3)
-    ]
-    assert all(r["count"] == 30 * 81 * 81 for r in rows)
-    # parity with the formula fixture on a sampled cell set
-    got = (
-        g.where((F.col("depth_idx") == 0) & (F.col("lat_idx") == 1))
-        .select("time_hours", "lon_idx", "water_temp")
-        .collect()
-    )
-    a = _step_arrays(None, 1)
-    want = {
-        (GRID_TIME_STEP, int(lon), float(t))
-        for lon, t in zip(
-            a["lon_idx"][(a["depth_idx"] == 0) & (a["lat_idx"] == 1)],
-            a["water_temp"][(a["depth_idx"] == 0) & (a["lat_idx"] == 1)],
-        )
-    }
-    got_t1 = {
-        (r["time_hours"], r["lon_idx"], r["water_temp"])
-        for r in got
-        if r["time_hours"] == GRID_TIME_STEP
-    }
-    assert got_t1 == want
-
-
 def test_truncated_data_section_is_loud(tmp_path, tiny_nc):
     """A cut data section must raise the descriptive truncation error,
     not an opaque numpy reshape failure (ADVICE r5)."""
@@ -476,7 +349,9 @@ def test_dap_rejects_are_loud(tiny_nc, dap_root):
 
 def test_open_nc_or_dap_routes(tiny_nc, dap_root):
     """The grid seam: dap+http:// -> DapDataset, paths -> NcFile, and a
-    grid partition built through either backend is identical."""
+    grid partition built through either backend is identical. A bare
+    http:// path is refused with the dap+ form to use: DAP is the one
+    remote transport."""
     import shutil
 
     from modeltracking_spark.sources.dap import DapDataset, open_nc_or_dap
@@ -487,6 +362,8 @@ def test_open_nc_or_dap_routes(tiny_nc, dap_root):
     b = open_nc_or_dap(f"dap+{base}/s.nc")
     assert isinstance(a, NcFile) and isinstance(b, DapDataset)
     assert np.array_equal(a.read_slice("grid", 1), b.read_slice("grid", 1))
+    with pytest.raises(ValueError, match=re.escape(f"use dap+{base}/s.nc")):
+        open_nc_or_dap(f"{base}/s.nc")
 
 
 def test_grid_scan_dap_backend_matches_file(spark, dap_root):
@@ -1098,9 +975,6 @@ def test_dap_unsigned_and_url_sequence_roundtrip(string_dap_root):
     Int16) and Url (the String alias) decode in Sequence columns over
     the live protocol; large UInt32 values exercise the unsigned
     unpack."""
-    import http.server
-    import threading
-
     from modeltracking_spark.sources.dap import (
         DapDataset,
         make_dap_handler,
