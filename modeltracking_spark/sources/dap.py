@@ -31,7 +31,8 @@ twice, then its elements; a scalar (a 0-dim variable, a Sequence
 column value) is the bare element. A String (and its alias Url) is a
 counted byte string; a number is a big-endian word, 16-bit integers
 widened to 4 bytes, and only the elements of a Byte array pack one byte
-each. Every string and every array body is zero-padded to 4 bytes.
+each; a Byte is unsigned. Every string and every array body is
+zero-padded to 4 bytes.
 Hyperslab STRIDES are supported end to end (``var[a:step:b]`` — the
 server subsamples, so an every-Nth-step scan ships 1/N of the data).
 The DAP 2.0 CONSTRUCTOR types decode too — Grid (array + coordinate
@@ -40,7 +41,9 @@ array reads transparently under the grid's name, maps as ``g.map``),
 Structure (members as ``s.member``), and Sequence (tabular; §7.2.3
 0x5A/0xA5 instance markers via :meth:`DapDataset.read_sequence`). The
 server serves classic-netCDF CHAR variables the THREDDS way (the
-trailing string-length axis elides into a DAP String). Constraints are
+trailing string-length axis elides into a DAP String) and signed BYTE
+variables the netCDF-Java way (a Byte whose DAS carries ``_Unsigned
+"false"``, which the client reads back as int8). Constraints are
 URL-percent-encoded on the wire and unquoted by the server. Unknown
 declarations (DAP 2.0 has no Int64) stay typed rejects.
 
@@ -61,9 +64,9 @@ import struct
 
 #: DAP 2.0 atomic type -> (XDR wire dtype, dtype a read returns). XDR
 #: widens 16-bit integers to a 4-byte word; String and its alias Url are
-#: counted byte strings and have no wire dtype.
+#: counted byte strings and have no wire dtype. A Byte is unsigned.
 _DAP_TYPES = {
-    "Byte": (">i1", "i1"),
+    "Byte": (">u1", "u1"),
     "Int16": (">i4", "i2"),
     "UInt16": (">u4", "u2"),
     "Int32": (">i4", "i4"),
@@ -75,7 +78,9 @@ _DAP_TYPES = {
 }
 #: classic-netCDF nc_type -> the DAP type it is served as; a CHAR array
 #: serves as String, its trailing string-length axis elided (the THREDDS
-#: shape)
+#: shape), and the signed BYTE as Byte with the DAS attribute
+#: ``_Unsigned "false"`` (the netCDF-Java way), which the client reads
+#: back as int8
 _NC_DAP = {1: "Byte", 2: "String", 3: "Int16", 4: "Int32", 5: "Float32",
            6: "Float64"}
 
@@ -253,8 +258,11 @@ def _xdr_encode(typ: str, values, scalar: bool = False) -> bytes:
             body += b"\x00" * (_pad4(len(raw)) - len(raw))
         n = len(items)
     else:
-        if scalar and np.dtype(wire).itemsize < 4:
-            wire = ">i4"  # a scalar Byte is a whole XDR word
+        if typ == "Byte":
+            # a signed BYTE goes out as its two's-complement bits
+            values = np.asarray(values).astype("u1")
+            if scalar:
+                wire = ">u4"  # a scalar Byte is a whole XDR word
         a = np.ascontiguousarray(values, dtype=wire)
         body, n = a.tobytes(), a.size
         body += b"\x00" * (_pad4(len(body)) - len(body))
@@ -297,8 +305,8 @@ def _xdr_decode(buf: bytes, off: int, typ: str, n_expect: int | None):
             vals.append(buf[off:off + ln].decode("utf-8"))
             off += _pad4(ln)
     else:
-        if n_expect is None and np.dtype(wire).itemsize < 4:
-            wire = ">i4"  # a scalar Byte is a whole XDR word
+        if n_expect is None and typ == "Byte":
+            wire = ">u4"  # a scalar Byte is a whole XDR word
         nbytes = _pad4(n * np.dtype(wire).itemsize)
         if off + nbytes > len(buf):
             raise ValueError("truncated XDR value")
@@ -420,7 +428,10 @@ class DapDataset:
             n *= d
         off = sep + len(b"\nData:\n")
         vals, _ = _xdr_decode(body, off, typ, n if dims else None)
-        return np.asarray(vals, dtype=_DAP_TYPES[typ][1]).reshape(shape)
+        a = np.asarray(vals, dtype=_DAP_TYPES[typ][1]).reshape(shape)
+        if typ == "Byte" and self.var_attrs(var).get("_Unsigned") == "false":
+            a = a.view("i1")  # a netCDF BYTE, served signed
+        return a
 
     def shape(self, var: str) -> tuple[int, ...]:
         return tuple(sz for _, sz in self.vars[var][1])
@@ -634,7 +645,10 @@ def _das_text(nc, dataset_name: str) -> str:
     out = ["Attributes {"]
     for name, v in nc.vars.items():
         out.append(f"    {name} {{")
-        out += render(v.attrs)
+        if _NC_DAP.get(v.nc_type) == "Byte":
+            out += render({"_Unsigned": "false", **v.attrs})
+        else:
+            out += render(v.attrs)
         out.append("    }")
     out.append("    NC_GLOBAL {")
     out += render(nc.attrs)

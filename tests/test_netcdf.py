@@ -1092,3 +1092,48 @@ def test_dap_scalar_framing(dap_root, tmp_path):
     seq = _xdr_sequence({"cols": [("b", "Byte")], "rows": [(5,)]})
     assert _xdr_encode("Byte", 5, scalar=True) == seq[4:-4] \
         == b"\x00\x00\x00\x05"
+
+
+def test_dap_byte_is_unsigned(dap_root, tmp_path):
+    """A DAP 2.0 Byte is unsigned: 200 reads 200, as a scalar word and
+    as a packed array element. netCDF's BYTE is signed, so the server
+    serves it as Byte with ``_Unsigned "false"`` in the DAS (the
+    netCDF-Java convention) and the client reads it back as int8; a
+    BYTE the file itself marks ``_Unsigned "true"`` reads unsigned."""
+    import shutil
+
+    from modeltracking_spark.sources.dap import (
+        DapDataset,
+        _xdr_decode,
+        _xdr_encode,
+    )
+    from modeltracking_spark.sources.netcdf_classic import write_classic
+
+    assert _xdr_decode(_xdr_encode("Byte", 200, scalar=True), 0,
+                       "Byte", None) == (200, 4)
+    vals, off = _xdr_decode(_xdr_encode("Byte", [200, 7, 255]), 0, "Byte", 3)
+    assert vals.tolist() == [200, 7, 255] and off == 12
+
+    base, root = dap_root
+    path = os.path.join(str(tmp_path), "bytes.nc")
+    raw = np.array([-56, 7, -1], dtype="i1")  # 0xC8, 0x07, 0xFF
+    unsigned = {"_Unsigned": "true"}
+    write_classic(
+        path,
+        dims=[("x", 3)],
+        variables=[
+            ("s", [], np.array(-56, dtype="i1")),
+            ("a", ["x"], raw),
+            ("us", [], np.array(-56, dtype="i1"), unsigned),
+            ("ua", ["x"], raw, unsigned),
+        ],
+        record_dim=None, n_records=0, global_attrs={},
+    )
+    shutil.copy(path, os.path.join(root, "bytes.nc"))
+    remote = DapDataset(f"dap+{base}/bytes.nc")
+    assert remote.var_attrs("s")["_Unsigned"] == "false"
+    assert remote.var_attrs("us")["_Unsigned"] == "true"
+    assert remote.read("s").reshape(()) == -56
+    assert remote.read("a").tolist() == [-56, 7, -1]
+    assert remote.read("us").reshape(()) == 200
+    assert remote.read("ua").tolist() == [200, 7, 255]
