@@ -10,16 +10,25 @@ Scale posture:
 - Broadcast threshold raised to 64 MB: a join's small side is
   broadcast, not shuffled.
 - Arrow on: any residual pandas interchange is columnar.
-- Python workers fork from :mod:`modeltracking_spark.worker_daemon`
-  (``spark.python.daemon.module``), which imports pyspark from the
+- Every Python worker starts with the hook in
+  :mod:`modeltracking_spark.worker_site`, which imports pyspark from the
   installed package directory instead of Spark's ``pyspark.zip``. On
   CPython 3.11 each task's ``importlib.invalidate_caches()`` re-reads
-  every cached zip's central directory: 0.13-0.35 s per scan or RDD task
-  with the zip, about 1 ms without (4 vCPUs). The daemon is found
-  through ``spark.executorEnv.PYTHONPATH``, the directory holding this
-  package, so it starts from a driver cwd outside the repo too. The
-  DataSource planner's round trips (``.load()``'s ``schema()`` and the
-  pushdown) fork from Spark's fixed ``pyspark.daemon`` and keep the cost.
+  every cached zip's central directory: 0.13-0.35 s per task with the
+  zip, well under 1 ms without (4 vCPUs). The hook is a
+  ``sitecustomize.py`` whose directory is first on
+  ``spark.executorEnv.PYTHONPATH``, ahead of the directory holding this
+  package, so it reaches workers from a driver cwd outside the repo too.
+  That setting reaches every Python worker: the scan and RDD tasks' daemons
+  and the DataSource planner's (``.load()``'s ``schema()`` and the
+  pushdown). Spark 4.1's ``PythonPlannerRunner`` builds its worker's
+  environment from ``PythonFunction.envVars``, which pyspark fills from the
+  ``spark.executorEnv.*`` settings, and starts it through the 4-argument
+  ``SparkEnv.createPythonWorker``, always from ``pyspark.daemon``, so
+  ``spark.python.daemon.module`` never reaches it. It releases the worker
+  after use, so planner workers are reused. ``PythonWorkerFactory`` puts
+  Spark's archives ahead of ``PYTHONPATH``, so only code run at
+  interpreter start can take them off the path.
 """
 
 from __future__ import annotations
@@ -28,7 +37,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+from modeltracking_spark.worker_site import SITE_DIR
+
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the workers' start-up hook, then this package (module docstring)
+WORKER_PYTHONPATH = os.pathsep.join((SITE_DIR, _PACKAGE_PARENT))
 
 
 def get_spark(
@@ -72,8 +85,7 @@ def get_spark(
         # that session's setting.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # workers import pyspark from a directory (module docstring)
-        .config("spark.python.daemon.module", "modeltracking_spark.worker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.executorEnv.PYTHONPATH", WORKER_PYTHONPATH)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

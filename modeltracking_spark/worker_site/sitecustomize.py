@@ -1,19 +1,22 @@
-"""Spark's Python worker daemon, importing pyspark from a directory.
+"""Start-up hook of every Python worker of a ``get_spark`` session.
 
 Spark puts its own archives (``pyspark.zip``, ``py4j-*-src.zip``, the
 ``spark-core_*.jar``) first on every Python worker's ``sys.path``, and each
 task starts with ``importlib.invalidate_caches()``
 (``pyspark/worker_util.py``). On CPython 3.11 that re-reads the central
 directory of every cached zipimporter, one per imported sub-package of
-pyspark.zip: 0.13-0.35 s per task. ``session.get_spark`` starts this
-module as ``spark.python.daemon.module``; when the installed pyspark is the
-zipped one's version it drops the archives, so the forked workers import
-pyspark from the package directory, and then runs pyspark's daemon.
+pyspark.zip: 0.13-0.35 s per task. This directory is first on the workers'
+``PYTHONPATH``, so :mod:`site` imports this module as each worker
+interpreter starts, before ``-m pyspark.daemon`` is resolved. When the
+installed pyspark is the zipped one's version it drops the archives, and
+the worker imports pyspark from the package directory. Then it runs the
+``sitecustomize`` this module shadows, if the path holds one.
 """
 
 from __future__ import annotations
 
 import importlib.machinery
+import importlib.util
 import os
 import re
 import sys
@@ -44,15 +47,21 @@ def without_spark_archives(path: list[str]) -> list[str]:
     return rest if want and have and want[1] == have[1] else path
 
 
-if __name__ == "__main__":
+def _start() -> None:
     kept = without_spark_archives(sys.path)
     for p in set(sys.path) - set(kept):
-        # the -m lookup of this module already opened them; left cached,
-        # every per-task invalidation would still re-read them
+        # the interpreter's start-up imports already opened them; left
+        # cached, every per-task invalidation would still re-read them
         for key in [k for k in sys.path_importer_cache if k.startswith(p)]:
             del sys.path_importer_cache[key]
     sys.path[:] = kept
 
-    from pyspark import daemon
+    here = os.path.dirname(os.path.realpath(__file__))
+    rest = [p for p in sys.path if os.path.realpath(p or os.curdir) != here]
+    spec = importlib.machinery.PathFinder.find_spec("sitecustomize", rest)
+    if spec is not None and spec.loader is not None:
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
 
-    daemon.manager()
+
+if __name__ == "sitecustomize":
+    _start()

@@ -1,7 +1,8 @@
-"""The engine's Python worker daemon: it drops Spark's archives from the
+"""The Python workers' start-up hook: it drops Spark's archives from the
 workers' ``sys.path`` only when the same pyspark is installed elsewhere
-on it, and a ``get_spark`` session's tasks then import pyspark from a
-directory and still return their exact rows."""
+on it, and runs the ``sitecustomize`` it shadows. A ``get_spark``
+session's tasks and DataSource planner calls then import pyspark from a
+directory, and the tasks still return their exact rows."""
 
 import json
 import os
@@ -10,7 +11,11 @@ import sys
 import zipfile
 from pathlib import Path
 
-from modeltracking_spark.worker_daemon import without_spark_archives
+import setuptools
+
+from modeltracking_spark.session import WORKER_PYTHONPATH
+from modeltracking_spark.worker_site import SITE_DIR
+from modeltracking_spark.worker_site.sitecustomize import without_spark_archives
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -67,16 +72,50 @@ from modeltracking_spark.fixtures import hycom_grid_fixture
 from modeltracking_spark.queries.common import ensure_pkg_on_workers
 from modeltracking_spark.session import get_spark
 from modeltracking_spark.sources.grid_source import HycomGridDataSource
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+def imported():
+    import sys, zipimport, pyspark
+    return [pyspark.__file__, sorted(
+        f.archive for f in sys.path_importer_cache.values()
+        if isinstance(f, zipimport.zipimporter))]
 
 def imports(_):
-    import sys, zipimport, pyspark
-    yield pyspark.__file__, sorted(
-        f.archive for f in sys.path_importer_cache.values()
-        if isinstance(f, zipimport.zipimporter))
+    yield imported()
+
+# each planner call records what its worker imported; read() returns them
+class ProbeReader(DataSourceReader):
+    def __init__(self, seen):
+        self.seen = seen
+
+    def pushFilters(self, filters):
+        self.seen["pushFilters"] = imported()
+        yield from filters
+
+    def partitions(self):
+        return [InputPartition(imported())]
+
+    def read(self, partition):
+        for step, record in [*self.seen.items(), ("partitions", partition.value)]:
+            yield (step, *record)
+
+class Probe(DataSource):
+    @classmethod
+    def name(cls):
+        return "worker_probe"
+
+    def schema(self):
+        self.seen = {"schema": imported()}
+        return "step string, pyspark string, archives array<string>"
+
+    def reader(self, schema):
+        return ProbeReader(dict(self.seen))
 
 spark = get_spark("worker-daemon", cpus=2)
 ensure_pkg_on_workers(spark)
 spark.dataSource.register(HycomGridDataSource)
+spark.dataSource.register(Probe)
+probe = spark.read.format("worker_probe").load().where("step IS NOT NULL")
 rows = [(i, 10.0 + i, -60.0 - i, 3 * i) for i in range(5)]
 track = spark.createDataFrame(
     rows, "point_id long, lat double, lon double, t_hours long")
@@ -85,6 +124,8 @@ scan = spark.read.format("hycom_grid").option("pushdown", "true").load()
 scan_rows = sorted(map(tuple, scan.where(pred).collect()))
 fixture_rows = sorted(map(tuple, hycom_grid_fixture(spark).where(pred).collect()))
 print(json.dumps({
+    "pythonpath": spark.conf.get("spark.executorEnv.PYTHONPATH"),
+    "planner": [list(r) for r in probe.collect()],
     "worker": spark.sparkContext.parallelize([0], 1).mapPartitions(imports).collect()[0],
     "track": [tuple(r) for r in track.collect()] == rows,
     "scan": scan_rows == fixture_rows,
@@ -104,9 +145,50 @@ def test_get_spark_workers_import_pyspark_from_a_directory(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     res = json.loads(out.stdout.strip().splitlines()[-1])
-    pyspark_file, zip_archives = res["worker"]
-    assert os.path.isfile(pyspark_file), pyspark_file
-    spark_archives = [a for a in zip_archives if os.path.basename(a).startswith(
-        ("pyspark.zip", "py4j-", "spark-core_"))]
-    assert spark_archives == []
+    assert res["pythonpath"] == WORKER_PYTHONPATH
+    records = {"task": res["worker"]}
+    records.update((step, [f, a]) for step, f, a in res["planner"])
+    assert sorted(records) == ["partitions", "pushFilters", "schema", "task"]
+    for step, (pyspark_file, zip_archives) in records.items():
+        assert os.path.isfile(pyspark_file), (step, pyspark_file)
+        spark_archives = [a for a in zip_archives if os.path.basename(a).startswith(
+            ("pyspark.zip", "py4j-", "spark-core_"))]
+        assert spark_archives == [], step
     assert res["track"] and res["scan"] and res["n_scan"] > 0
+
+
+_PATH = "import json, sys; print(json.dumps(sys.path))"
+
+
+def test_hook_runs_the_sitecustomize_it_shadows(tmp_path):
+    # a site's own sitecustomize later on the path still runs, and a path
+    # without Spark's archives comes out as it went in
+    marker, blank = tmp_path / "marker", tmp_path / "blank"
+    marker.mkdir()
+    blank.mkdir()
+    ran = tmp_path / "ran"
+    (marker / "sitecustomize.py").write_text(
+        f"open({str(ran)!r}, 'a').write('ran\\n')\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+
+    def path_with(first: str) -> list[str]:
+        out = subprocess.run(
+            [sys.executable, "-c", _PATH], cwd=tmp_path, capture_output=True,
+            text=True, timeout=60,
+            env={**env, "PYTHONPATH": os.pathsep.join((first, str(marker)))},
+        )
+        assert out.returncode == 0, out.stderr
+        return json.loads(out.stdout)
+
+    hooked = path_with(SITE_DIR)
+    assert ran.read_text() == "ran\n"
+    plain = path_with(str(blank))
+    assert hooked == [SITE_DIR if p == str(blank) else p for p in plain]
+
+
+def test_hook_ships_with_the_package():
+    packages = setuptools.find_packages(str(REPO), include=["modeltracking_spark*"])
+    assert "modeltracking_spark.worker_site" in packages
+    first = WORKER_PYTHONPATH.split(os.pathsep)[0]
+    assert first == SITE_DIR
+    assert os.path.isfile(os.path.join(first, "sitecustomize.py"))
