@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modeltracking_spark.schemas import load_table
+# the query modules and perfbench import it from here
+from modeltracking_spark.session import ensure_pkg_on_workers
 
 # registries filled by the @query decorator across the queries modules
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -44,41 +46,6 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-_SHIPPED_CONTEXTS: set[str] = set()
-
-
-def ensure_pkg_on_workers(spark: SparkSession) -> None:
-    """Ship modeltracking_spark to executor Python workers via addPyFile.
-
-    Queries that run Python on executors (the custom DataSource,
-    mapInPandas decode, pandas UDFs) cloudpickle functions BY REFERENCE
-    to this package — workers must be able to import it. When the
-    harness runs with a cwd outside the repo and no PYTHONPATH, they
-    can't; a one-time zip of the package's ``.py`` files per
-    SparkContext (stored uncompressed, about 2.2 MB) closes that hole."""
-    try:
-        sc = spark.sparkContext
-    except Exception:
-        # Spark Connect session: no SparkContext handle; Connect ships
-        # artifacts differently and classic local mode (the harness
-        # environment) never hits this branch.
-        return
-    app_id = sc.applicationId  # stable per context; id(sc) could be reused
-    if app_id in _SHIPPED_CONTEXTS:
-        return
-    import pathlib
-    import tempfile
-    import zipfile
-
-    root = pathlib.Path(__file__).resolve().parents[1].parent
-    zpath = pathlib.Path(tempfile.mkdtemp(prefix="mtspark-")) / "modeltracking_spark.zip"
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for p in sorted((root / "modeltracking_spark").rglob("*.py")):
-            zf.write(p, p.relative_to(root))
-    sc.addPyFile(str(zpath))
-    _SHIPPED_CONTEXTS.add(app_id)
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,34 +1,34 @@
 """SparkSession factory tuned for this engine.
 
 Used by ``perfbench/`` (the tests' ``conftest.py`` builds its own
-session). A caller of ``queries()`` may pass its own session into the
-callables, so nothing in the query layer may *depend* on these configs —
-they are performance posture only.
+session and calls :func:`ensure_pkg_on_workers` on it). A caller of
+``queries()`` may pass its own session into the callables, so nothing in
+the query layer may *depend* on these configs — they are performance
+posture only.
 
 Scale posture:
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting.
 - Broadcast threshold raised to 64 MB: a join's small side is
   broadcast, not shuffled.
 - Arrow on: any residual pandas interchange is columnar.
-- Every Python worker starts with the hook in
-  :mod:`modeltracking_spark.worker_site`, which imports pyspark from the
-  installed package directory instead of Spark's ``pyspark.zip``. On
-  CPython 3.11 each task's ``importlib.invalidate_caches()`` re-reads
-  every cached zip's central directory: 0.13-0.35 s per task with the
-  zip, well under 1 ms without (4 vCPUs). The hook is a
-  ``sitecustomize.py`` whose directory is first on
-  ``spark.executorEnv.PYTHONPATH``, ahead of the directory holding this
-  package, so it reaches workers from a driver cwd outside the repo too.
-  That setting reaches every Python worker: the scan and RDD tasks' daemons
-  and the DataSource planner's (``.load()``'s ``schema()`` and the
-  pushdown). Spark 4.1's ``PythonPlannerRunner`` builds its worker's
-  environment from ``PythonFunction.envVars``, which pyspark fills from the
-  ``spark.executorEnv.*`` settings, and starts it through the 4-argument
-  ``SparkEnv.createPythonWorker``, always from ``pyspark.daemon``, so
-  ``spark.python.daemon.module`` never reaches it. It releases the worker
-  after use, so planner workers are reused. ``PythonWorkerFactory`` puts
-  Spark's archives ahead of ``PYTHONPATH``, so only code run at
-  interpreter start can take them off the path.
+
+The Python workers' path is set in one place, :func:`ensure_pkg_on_workers`.
+Its first entry is the start-up hook in
+:mod:`modeltracking_spark.worker_site`, which imports pyspark from the
+installed package directory instead of Spark's ``pyspark.zip``: on
+CPython 3.11 each task's ``importlib.invalidate_caches()`` re-reads
+every cached zip's central directory, 0.13-0.35 s per task with the zip
+and well under 1 ms without (4 vCPUs). The second is the directory holding this package. pyspark
+copies the SparkContext's ``environment`` into ``PythonFunction.envVars``
+when it wraps a function, and every Python worker gets those: the scan and
+RDD tasks' daemons and the DataSource planner's (``.load()``'s
+``schema()`` and the pushdown). Spark 4.1's ``PythonPlannerRunner``
+starts the planner's worker through the 4-argument
+``SparkEnv.createPythonWorker``, always from ``pyspark.daemon``, so
+``spark.python.daemon.module`` never reaches it; it releases the worker
+after use, so planner workers are reused. ``PythonWorkerFactory`` puts
+Spark's archives ahead of ``PYTHONPATH``, so only code run at interpreter
+start can take them off the path.
 """
 
 from __future__ import annotations
@@ -42,6 +42,31 @@ from modeltracking_spark.worker_site import SITE_DIR
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # the workers' start-up hook, then this package (module docstring)
 WORKER_PYTHONPATH = os.pathsep.join((SITE_DIR, _PACKAGE_PARENT))
+
+
+def ensure_pkg_on_workers(spark: SparkSession) -> None:
+    """Put :data:`WORKER_PYTHONPATH` ahead of the session's own workers'
+    ``PYTHONPATH``.
+
+    Queries that run Python on executors cloudpickle functions BY
+    REFERENCE to this package, so workers must import it, also from a
+    driver cwd outside the repo. Idempotent, with the same string every
+    call: Spark keys its worker daemons by this environment, and a new
+    string starts a cold one. A DataSource registered or a UDF built
+    before the call keeps its old copy. The entries are the driver host's
+    directories: fine in local mode, the engine's supported posture; on
+    a multi-host cluster the executors need the package installed."""
+    try:
+        env = spark.sparkContext.environment
+    except Exception:
+        # Spark Connect session: no SparkContext handle; Connect ships
+        # artifacts differently and classic local mode (the harness
+        # environment) never hits this branch.
+        return
+    ours = WORKER_PYTHONPATH.split(os.pathsep)
+    rest = [p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+            if p and p not in ours]
+    env["PYTHONPATH"] = os.pathsep.join(ours + rest)
 
 
 def get_spark(
@@ -84,9 +109,10 @@ def get_spark(
         # a process whose first Column call ran under another session keeps
         # that session's setting.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # workers import pyspark from a directory (module docstring)
-        .config("spark.executorEnv.PYTHONPATH", WORKER_PYTHONPATH)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # also on a running context, whose executorEnv settings are fixed
+    ensure_pkg_on_workers(spark)
+    return spark

@@ -1,7 +1,7 @@
 """The directory of the Python workers' start-up hook.
 
-``session.get_spark`` puts :data:`SITE_DIR` first on
-``spark.executorEnv.PYTHONPATH``; :mod:`site` then imports its
+``session.ensure_pkg_on_workers`` puts :data:`SITE_DIR` first on the
+workers' ``PYTHONPATH``; :mod:`site` then imports its
 ``sitecustomize.py`` as every worker interpreter starts.
 """
 

@@ -1,4 +1,4 @@
-"""Start-up hook of every Python worker of a ``get_spark`` session.
+"""Start-up hook of every Python worker of any session the package is put on.
 
 Spark puts its own archives (``pyspark.zip``, ``py4j-*-src.zip``, the
 ``spark-core_*.jar``) first on every Python worker's ``sys.path``, and each

@@ -3,6 +3,8 @@ import tempfile
 import pytest
 from pyspark.sql import SparkSession
 
+from modeltracking_spark.session import ensure_pkg_on_workers
+
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 REF_DIR = "/root/reference"
@@ -22,6 +24,9 @@ def spark():
         .appName("modeltracking-tests")
         .getOrCreate()
     )
+    # the workers' path of every driver query that loads a table (T());
+    # tests/test_worker_daemon.py checks sessions that start without it
+    ensure_pkg_on_workers(s)
     yield s
     s.stop()
 

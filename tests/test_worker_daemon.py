@@ -1,8 +1,9 @@
 """The Python workers' start-up hook: it drops Spark's archives from the
 workers' ``sys.path`` only when the same pyspark is installed elsewhere
-on it, and runs the ``sitecustomize`` it shadows. A ``get_spark``
-session's tasks and DataSource planner calls then import pyspark from a
-directory, and the tasks still return their exact rows."""
+on it, and runs the ``sitecustomize`` it shadows. Once
+``ensure_pkg_on_workers`` has run on a session (``get_spark`` calls it),
+its tasks and DataSource planner calls import pyspark and this package
+from directories, and the tasks still return their exact rows."""
 
 import json
 import os
@@ -10,9 +11,11 @@ import subprocess
 import sys
 import zipfile
 from pathlib import Path
+from types import SimpleNamespace
 
 import setuptools
 
+from modeltracking_spark.queries.common import ensure_pkg_on_workers
 from modeltracking_spark.session import WORKER_PYTHONPATH
 from modeltracking_spark.worker_site import SITE_DIR
 from modeltracking_spark.worker_site.sitecustomize import without_spark_archives
@@ -65,6 +68,10 @@ def test_archives_dropped_only_for_the_same_pyspark(tmp_path):
     assert without_spark_archives([cwd, same]) == [cwd, same]
 
 
+# argv: the repo, then how the session is built:
+#   get_spark  get_spark, then ensure_pkg_on_workers again (idempotent)
+#   plain      a plain SparkSession.builder session, then ensure_pkg_on_workers
+#   late       a plain session already running, then get_spark
 _SESSION = r"""
 import json, sys
 sys.path.insert(0, sys.argv[1])
@@ -72,11 +79,12 @@ from modeltracking_spark.fixtures import hycom_grid_fixture
 from modeltracking_spark.queries.common import ensure_pkg_on_workers
 from modeltracking_spark.session import get_spark
 from modeltracking_spark.sources.grid_source import HycomGridDataSource
+from pyspark.sql import SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 def imported():
-    import sys, zipimport, pyspark
-    return [pyspark.__file__, sorted(
+    import sys, zipimport, pyspark, modeltracking_spark
+    return [pyspark.__file__, modeltracking_spark.__file__, sorted(
         f.archive for f in sys.path_importer_cache.values()
         if isinstance(f, zipimport.zipimporter))]
 
@@ -106,13 +114,23 @@ class Probe(DataSource):
 
     def schema(self):
         self.seen = {"schema": imported()}
-        return "step string, pyspark string, archives array<string>"
+        return "step string, pyspark string, package string, archives array<string>"
 
     def reader(self, schema):
         return ProbeReader(dict(self.seen))
 
-spark = get_spark("worker-daemon", cpus=2)
-ensure_pkg_on_workers(spark)
+mode = sys.argv[2]
+if mode == "get_spark":
+    spark = get_spark("worker-daemon", cpus=2)
+    ensure_pkg_on_workers(spark)
+else:
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.sql.python.filterPushdown.enabled", "true")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    if mode == "plain":
+        ensure_pkg_on_workers(spark)
+    else:
+        spark = get_spark("worker-daemon", cpus=2)
 spark.dataSource.register(HycomGridDataSource)
 spark.dataSource.register(Probe)
 probe = spark.read.format("worker_probe").load().where("step IS NOT NULL")
@@ -124,7 +142,7 @@ scan = spark.read.format("hycom_grid").option("pushdown", "true").load()
 scan_rows = sorted(map(tuple, scan.where(pred).collect()))
 fixture_rows = sorted(map(tuple, hycom_grid_fixture(spark).where(pred).collect()))
 print(json.dumps({
-    "pythonpath": spark.conf.get("spark.executorEnv.PYTHONPATH"),
+    "pythonpath": spark.sparkContext.environment.get("PYTHONPATH"),
     "planner": [list(r) for r in probe.collect()],
     "worker": spark.sparkContext.parallelize([0], 1).mapPartitions(imports).collect()[0],
     "track": [tuple(r) for r in track.collect()] == rows,
@@ -134,27 +152,59 @@ print(json.dumps({
 spark.stop()
 """
 
+# the fixture's nodes at time_hours = 9, depth_idx < 2 and lat_idx < 5
+_N_SCAN = 810
 
-def test_get_spark_workers_import_pyspark_from_a_directory(tmp_path):
-    # a fresh JVM (the tests' own session does not come from get_spark),
-    # from a cwd outside the repo and with no PYTHONPATH of the caller's
+
+def _workers_import_from_directories(tmp_path, mode: str) -> None:
+    """Run ``_SESSION`` in ``mode`` in a fresh JVM (the tests' own session
+    is built elsewhere), from a cwd outside the repo and with no
+    ``PYTHONPATH`` of the caller's. Every planner call and the task import
+    pyspark and this package from directories, and the rows are exact."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
-        [sys.executable, "-c", _SESSION, str(REPO)], cwd=tmp_path, env=env,
-        capture_output=True, text=True, timeout=300,
+        [sys.executable, "-c", _SESSION, str(REPO), mode], cwd=tmp_path,
+        env=env, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     res = json.loads(out.stdout.strip().splitlines()[-1])
+    # what the workers get, not a conf that may never reach them
     assert res["pythonpath"] == WORKER_PYTHONPATH
     records = {"task": res["worker"]}
-    records.update((step, [f, a]) for step, f, a in res["planner"])
+    records.update((step, rest) for step, *rest in res["planner"])
     assert sorted(records) == ["partitions", "pushFilters", "schema", "task"]
-    for step, (pyspark_file, zip_archives) in records.items():
+    for step, (pyspark_file, package_file, zip_archives) in records.items():
         assert os.path.isfile(pyspark_file), (step, pyspark_file)
-        spark_archives = [a for a in zip_archives if os.path.basename(a).startswith(
-            ("pyspark.zip", "py4j-", "spark-core_"))]
-        assert spark_archives == [], step
-    assert res["track"] and res["scan"] and res["n_scan"] > 0
+        assert os.path.isfile(package_file), (step, package_file)
+        assert Path(package_file).is_relative_to(REPO / "modeltracking_spark"), step
+        archives = [a for a in zip_archives if os.path.basename(a).startswith(
+            ("pyspark.zip", "py4j-", "spark-core_", "modeltracking_spark.zip"))]
+        assert archives == [], step
+    assert res["track"] and res["scan"] and res["n_scan"] == _N_SCAN
+
+
+def test_get_spark_workers_import_pyspark_from_a_directory(tmp_path):
+    _workers_import_from_directories(tmp_path, "get_spark")
+
+
+def test_plain_session_after_ensure_pkg_on_workers(tmp_path):
+    # the driver contract's path: the caller builds the session
+    _workers_import_from_directories(tmp_path, "plain")
+
+
+def test_get_spark_on_a_running_context(tmp_path):
+    # executorEnv settings are fixed once the context runs
+    _workers_import_from_directories(tmp_path, "late")
+
+
+def test_ensure_pkg_on_workers_is_idempotent():
+    env = {"PYTHONPATH": os.pathsep.join(("/srv/site", SITE_DIR))}
+    session = SimpleNamespace(sparkContext=SimpleNamespace(environment=env))
+    ensure_pkg_on_workers(session)
+    first = env["PYTHONPATH"]
+    assert first == os.pathsep.join((WORKER_PYTHONPATH, "/srv/site"))
+    ensure_pkg_on_workers(session)
+    assert env["PYTHONPATH"] == first
 
 
 _PATH = "import json, sys; print(json.dumps(sys.path))"
