@@ -410,13 +410,7 @@ def resample_track_arclength(
         track.select(tcol, "point_id", "lat", "lon")
         .withColumn("lat0", F.lag("lat").over(w))
         .withColumn("lon0", F.lag("lon").over(w))
-        .withColumn(
-            "seg_len",
-            F.sqrt(
-                (F.col("lat") - F.col("lat0")) * (F.col("lat") - F.col("lat0"))
-                + (F.col("lon") - F.col("lon0")) * (F.col("lon") - F.col("lon0"))
-            ),
-        )
+        .withColumn("seg_len", euclid_deg("lat", "lon", "lat0", "lon0"))
         .withColumn(
             "cum1", F.sum("seg_len").over(w.rowsBetween(Window.unboundedPreceding, 0))
         )

@@ -7,7 +7,8 @@ the query layer may *depend* on these configs — they are performance
 posture only.
 
 Scale posture:
-- AQE on: runtime coalescing of shuffle partitions, skew-join splitting.
+- AQE as Spark's default has it (on, with shuffle-partition coalescing
+  and skew-join splitting), and allowed to re-partition cached plans.
 - Broadcast threshold raised to 64 MB: a join's small side is
   broadcast, not shuffled.
 - Arrow on: any residual pandas interchange is columnar.
@@ -80,9 +81,6 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE right-size the output partitioning of cached plans
         # (off by default): a cached intermediate keeps shuffle.partitions
         # micro-partitions otherwise, and every downstream consumer job

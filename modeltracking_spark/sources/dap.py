@@ -18,28 +18,26 @@ remote grid transport:
 - ``make_dap_handler`` — an http.server handler that serves ``.dds`` /
   ``.das`` / ``.dods`` for classic-netCDF files through the same
   contract (``NcFile.read_strided``: slice reads only), the loopback
-  test-server pattern of tests/test_netcdf.py.
+  server of the tests and perfbench. It describes a file once, in the
+  model the client's ``_parse_dds`` builds from a DDS (``_served``):
+  ``_dds`` is the one DDS writer and ``parse_constraint`` resolves
+  every projection in that table, so a ``.dods`` header lists exactly
+  the variables whose XDR follows, in that order.
 
 Wire format implemented from the spec: DDS text grammar (``Dataset {
 Float64 var[dim = n]...; } name;``), and the ``.dods`` response = the
 constrained DDS, the literal ``Data:`` separator line, then the XDR of
 each projected variable. One codec writes and reads that XDR, the
 client and the server alike: :data:`_DAP_TYPES` is the one type table
-(wire dtype, read dtype), :func:`_xdr_encode` the one encoder and
-:func:`_xdr_decode` the one decoder. An array is its element count
-twice, then its elements; a scalar (a 0-dim variable, a Sequence
-column value) is the bare element. A String (and its alias Url) is a
-counted byte string; a number is a big-endian word, 16-bit integers
-widened to 4 bytes, and only the elements of a Byte array pack one byte
-each; a Byte is unsigned. Every string and every array body is
-zero-padded to 4 bytes.
+(wire dtype, read dtype), :func:`_xdr_encode` the one encoder (its
+docstring gives the framing) and :func:`_xdr_decode` the one decoder.
 Hyperslab STRIDES are supported end to end (``var[a:step:b]`` — the
 server subsamples, so an every-Nth-step scan ships 1/N of the data).
 The DAP 2.0 CONSTRUCTOR types decode too — Grid (array + coordinate
 maps, the THREDDS shape the reference's HYCOM URL actually serves; the
 array reads transparently under the grid's name, maps as ``g.map``),
-Structure (members as ``s.member``), and Sequence (tabular; §7.2.3
-0x5A/0xA5 instance markers via :meth:`DapDataset.read_sequence`). The
+Structure (members as ``s.member``), and Sequence (tabular; the
+§7.2.3 instance markers via :meth:`DapDataset.read_sequence`). The
 server serves classic-netCDF CHAR variables the THREDDS way (the
 trailing string-length axis elides into a DAP String) and signed BYTE
 variables the netCDF-Java way (a Byte whose DAS carries ``_Unsigned
@@ -62,6 +60,8 @@ from __future__ import annotations
 import re
 import struct
 
+from modeltracking_spark.sources.netcdf_classic import strided
+
 #: DAP 2.0 atomic type -> (XDR wire dtype, dtype a read returns). XDR
 #: widens 16-bit integers to a 4-byte word; String and its alias Url are
 #: counted byte strings and have no wire dtype. A Byte is unsigned.
@@ -83,6 +83,9 @@ _DAP_TYPES = {
 #: back as int8
 _NC_DAP = {1: "Byte", 2: "String", 3: "Int16", 4: "Int32", 5: "Float32",
            6: "Float64"}
+#: DAP 2.0 §7.2.3 Sequence markers: START_OF_INSTANCE before every
+#: instance, END_OF_SEQUENCE after the last
+_SEQ_INSTANCE, _SEQ_END = 0x5A000000, 0xA5000000
 
 
 def encode_constraint(var: str, ranges: list[tuple]) -> str:
@@ -93,8 +96,7 @@ def encode_constraint(var: str, ranges: list[tuple]) -> str:
                         r"(?:\.[A-Za-z_][A-Za-z0-9_]*)*", var):
         raise ValueError(f"bad DAP variable name {var!r}")
     parts = []
-    for r in ranges:
-        a, step, b = (r[0], 1, r[1]) if len(r) == 2 else r
+    for a, step, b in strided(ranges):
         if a < 0 or b < a or step < 1:
             raise ValueError(f"bad DAP index range [{a}:{step}:{b}]")
         parts.append(f"[{a}:{b}]" if step == 1 else f"[{a}:{step}:{b}]")
@@ -401,6 +403,7 @@ class DapDataset:
                     ) from exc
 
     def _fetch_array(self, var: str, ranges: list[tuple]):
+        import math
         import urllib.parse
 
         import numpy as np
@@ -419,15 +422,10 @@ class DapDataset:
         sep = body.find(b"\nData:\n")
         if sep < 0:
             raise ValueError("missing Data: separator in .dods response")
-        n = 1
-        shape = []
-        for r in ranges:
-            a, step, b = (r[0], 1, r[1]) if len(r) == 2 else r
-            d = len(range(a, b + 1, step))
-            shape.append(d)
-            n *= d
+        shape = [len(range(a, b + 1, s)) for a, s, b in strided(ranges)]
         off = sep + len(b"\nData:\n")
-        vals, _ = _xdr_decode(body, off, typ, n if dims else None)
+        vals, _ = _xdr_decode(body, off, typ,
+                              math.prod(shape) if dims else None)
         a = np.asarray(vals, dtype=_DAP_TYPES[typ][1]).reshape(shape)
         if typ == "Byte" and self.var_attrs(var).get("_Unsigned") == "false":
             a = a.view("i1")  # a netCDF BYTE, served signed
@@ -501,15 +499,14 @@ class DapDataset:
             raise ValueError(f"cannot slice scalar DAP variable {var!r}")
         if not 0 <= i < shape[0]:
             raise IndexError(f"{var}[{i}] out of range {shape[0]}")
-        ranges = [(i, i)] + [(0, sz - 1) for sz in shape[1:]]
-        return self._fetch_array(var, ranges)[0]
+        return self.read_strided(var, [(i, i)])[0]
 
     def read_sequence(self, name: str) -> dict:
         """Fetch a DAP 2.0 Sequence -> {column: list}. Wire format per
         spec §7.2.3: each instance is prefixed by the START_OF_INSTANCE
-        marker 0x5A000000 and the stream is closed by END_OF_SEQUENCE
-        0xA5000000; within an instance each column value is one XDR
-        scalar, read by :func:`_xdr_decode`."""
+        marker :data:`_SEQ_INSTANCE` and the stream is closed by
+        END_OF_SEQUENCE :data:`_SEQ_END`; within an instance each column
+        value is one XDR scalar, read by :func:`_xdr_decode`."""
         cols = self.sequences.get(name)
         if cols is None:
             raise KeyError(f"no DAP sequence {name!r}")
@@ -524,9 +521,9 @@ class DapDataset:
                 raise ValueError("truncated DAP sequence stream")
             (marker,) = struct.unpack_from(">I", body, off)
             off += 4
-            if marker == 0xA5000000:  # END_OF_SEQUENCE
+            if marker == _SEQ_END:
                 break
-            if marker != 0x5A000000:  # START_OF_INSTANCE
+            if marker != _SEQ_INSTANCE:
                 raise ValueError(
                     f"bad DAP sequence marker 0x{marker:08x}")
             for col, typ in cols:
@@ -539,84 +536,87 @@ class DapDataset:
 
 
 # ---------------------------------------------------------------------------
-# in-process DAP server over classic netCDF files (tests only)
+# in-process DAP server over classic netCDF files (tests and perfbench)
 # ---------------------------------------------------------------------------
 
 _SLAB = re.compile(r"\[(\d+)(?::(\d+))?(?::(\d+))?\]")
 
 
-def _var_decl(nc, name: str, ranges=None, indent: str = "    ",
-              decl_name: str | None = None) -> str:
-    v = nc.vars[name]
-    typ = _NC_DAP.get(v.nc_type)
-    if typ is None:
-        raise NotImplementedError(
-            f"DAP serving for nc_type {v.nc_type} not implemented"
-        )
-    dim_pairs = list(zip(v.dim_ids, v.shape))
-    if typ == "String":
-        # CHAR: the trailing string-length axis is the payload
-        if not v.dim_ids:
-            raise NotImplementedError(
-                "DAP serving for scalar CHAR not implemented")
-        dim_pairs = dim_pairs[:-1]
-    dims = []
-    for di, sz in dim_pairs:
-        if ranges is not None:
-            a, st_, b = ranges[len(dims)]
-            sz = len(range(a, b + 1, st_))
-        dims.append(f"[{nc.dims[di][0]} = {sz}]")
-    return f"{indent}{typ} {decl_name or name}{''.join(dims)};"
+def _served(nc, grid_mode: bool = False, sequences: dict | None = None):
+    """An NcFile as the server describes it, in the model
+    :func:`_parse_dds` builds from a DDS: (vars, grids, sequences).
 
+    ``vars`` is {name: (dap_type, [(dim_name, size), ...])} in file
+    order. A CHAR variable is a String without its trailing
+    string-length axis (the THREDDS shape). With ``grid_mode`` a
+    variable of two or more dims, each backed by a same-named 1-D
+    coordinate variable, is a Grid ``g``: ``grids[g]`` lists its maps
+    and ``vars`` holds each map as ``g.<dim>``; the coordinate
+    variables stay served on their own too. ``sequences`` ({name:
+    {"cols": [(col, typ)...], "rows": [...]}}) gives {name: cols}.
 
-def _grid_vars(nc) -> dict:
-    """Variables that qualify as DAP Grids: >= 2 dims, every dim
-    backed by a same-named 1-D coordinate variable (the THREDDS
-    shape the reference's HYCOM reads see)."""
+    A variable the server cannot serve (a 0-dim CHAR, an nc_type with no
+    DAP type) holds the :class:`NotImplementedError` in its type slot:
+    only a request that renders or projects it fails."""
+    def entry(v):
+        typ = _NC_DAP.get(v.nc_type)
+        dims = [(nc.dims[d][0], sz) for d, sz in zip(v.dim_ids, v.shape)]
+        if typ is None:
+            return NotImplementedError(
+                f"DAP serving for nc_type {v.nc_type} not implemented"), dims
+        if typ == "String":
+            if not dims:
+                return NotImplementedError(
+                    "DAP serving for scalar CHAR not implemented"), dims
+            return typ, dims[:-1]
+        return typ, dims
+
     coords = {n for n, v in nc.vars.items()
               if len(v.dim_ids) == 1 and nc.dims[v.dim_ids[0]][0] == n}
-    out = {}
+    out: dict = {}
+    grids: dict = {}
     for name, v in nc.vars.items():
-        if (name in coords or len(v.dim_ids) < 2
-                or _NC_DAP.get(v.nc_type) == "String"):
-            continue
-        dims = [nc.dims[di][0] for di in v.dim_ids]
-        if all(d in coords for d in dims):
-            out[name] = dims
-    return out
+        out[name] = entry(v)
+        axes = [nc.dims[d][0] for d in v.dim_ids]
+        if (grid_mode and name not in coords and len(axes) >= 2
+                and out[name][0] != "String" and coords.issuperset(axes)):
+            grids[name] = {"array": name,
+                           "maps": [f"{name}.{d}" for d in axes]}
+            for d in axes:
+                out[f"{name}.{d}"] = entry(nc.vars[d])
+    seqs = {s: [tuple(c) for c in spec["cols"]]
+            for s, spec in (sequences or {}).items()}
+    return out, grids, seqs
 
 
-def _dds_text(nc, dataset_name: str, only: dict | None = None,
-              grid_mode: bool = False,
-              sequences: dict | None = None) -> str:
-    """DDS for an NcFile — optionally constrained to ``only``
-    ({var: [(a, b), ...]}).  With ``grid_mode`` (round 13),
-    coordinate-backed record variables render as DAP Grid
-    constructors (array + maps); ``sequences`` render as Sequence
-    blocks."""
+def _dds(dataset_name: str, variables: dict, grids: dict,
+         sequences: dict) -> str:
+    """The DDS text of a table in :func:`_parse_dds`'s model, its one
+    writer: each variable in order, a Grid as its ``Grid`` block (the
+    array, then its maps, each declared under its own name), then each
+    Sequence. A ``.dds`` reply renders the whole :func:`_served` table,
+    a ``.dods`` reply the projected one."""
+    def decl(key, indent):
+        typ, dims = variables[key]
+        if isinstance(typ, Exception):
+            raise typ
+        shape = "".join(f"[{d} = {n}]" for d, n in dims)
+        return f"{indent}{typ} {key.rpartition('.')[2]}{shape};"
+
+    maps = {m for g in grids.values() for m in g["maps"]}
     lines = ["Dataset {"]
-    grids = _grid_vars(nc) if grid_mode and only is None else {}
-    for name, v in nc.vars.items():
-        if only is not None and name not in only:
-            continue
-        if name in grids:
-            lines.append("    Grid {")
-            lines.append("     Array:")
-            lines.append(_var_decl(nc, name, None, "        "))
-            lines.append("     Maps:")
-            for d in grids[name]:
-                lines.append(_var_decl(nc, d, None, "        "))
-            lines.append(f"    }} {name};")
-            continue
-        lines.append(_var_decl(nc, name, only.get(name)
-                               if only is not None else None))
-    for sname, seq in (sequences or {}).items():
-        if only is not None and sname not in only:
-            continue
+    for key in variables:
+        if key in grids:
+            lines += ["    Grid {", "     Array:", decl(key, " " * 8),
+                      "     Maps:"]
+            lines += [decl(m, " " * 8) for m in grids[key]["maps"]]
+            lines.append(f"    }} {key};")
+        elif key not in maps:
+            lines.append(decl(key, "    "))
+    for name, cols in sequences.items():
         lines.append("    Sequence {")
-        for col, typ in seq["cols"]:
-            lines.append(f"        {typ} {col};")
-        lines.append(f"    }} {sname};")
+        lines += [f"        {typ} {col};" for col, typ in cols]
+        lines.append(f"    }} {name};")
     lines.append(f"}} {dataset_name};")
     return "\n".join(lines) + "\n"
 
@@ -657,88 +657,74 @@ def _das_text(nc, dataset_name: str) -> str:
     return "\n".join(out) + "\n"
 
 
-def parse_constraint(nc, query: str) -> dict:
-    """``var[a:b][c]&...`` -> {var: [(a, step, b) per dim]} (full ranges
-    filled in for unconstrained trailing dims; a bare ``var`` is the
-    whole variable)."""
-    out: dict[str, list[tuple[int, int]]] = {}
+def parse_constraint(served: tuple, query: str) -> tuple[dict, dict, dict]:
+    """The projections of ``query`` (``var[a:b][c],...``; a selection
+    after ``&`` is ignored), each looked up in a :func:`_served` table
+    -> (slabs, grids, sequences), the projected parts of that table:
+
+    - ``slabs`` {name: [(a, step, b) per dim]} in the order the reply
+      ships them; unconstrained trailing dims are whole, and so is a
+      bare ``var``;
+    - ``g.g[...]`` projects the array of Grid ``g`` (under ``g``) and
+      ``g.m[...]`` its map ``m``; a bare ``g[...]`` with a hyperslab is
+      the Grid instance: ``grids`` gains ``g``, and its maps follow the
+      array in ``slabs``, each cut as the array's axis;
+    - ``sequences`` {name: cols}: each projected Sequence, shipped whole
+      after the arrays."""
+    variables, grids, seqs = served
+    slabs: dict = {}
+    pgrids: dict = {}
+    pseqs: dict = {}
     for proj in filter(None, query.split("&")[0].split(",")):
-        m = re.fullmatch(r"(\w+)((?:\[[^\]]*\])*)", proj)
-        if not m or m.group(1) not in nc.vars:
-            raise ValueError(f"bad DAP projection {proj!r}")
-        var = m.group(1)
-        v = nc.vars[var]
-        shape = list(v.shape)
-        if _NC_DAP.get(v.nc_type) == "String":
-            # CHAR serves as String: the strlen axis is the payload,
-            # not a constrainable dimension
-            if not shape:
-                raise NotImplementedError(
-                    "DAP serving for scalar CHAR not implemented")
-            shape = shape[:-1]
-        ranges = []
-        for sm in _SLAB.finditer(m.group(2)):
-            a, mid, last = sm.groups()
-            if last is not None:  # var[a:stride:b]
-                a, step, b = int(a), int(mid), int(last)
-            elif mid is not None:
-                a, step, b = int(a), 1, int(mid)
-            else:
-                a, step, b = int(a), 1, int(a)
-            if step < 1 or not (0 <= a <= b < shape[len(ranges)]):
-                raise ValueError(
-                    f"constraint [{a}:{step}:{b}] out of bounds"
-                )
-            ranges.append((a, step, b))
-        ranges += [(0, 1, sz - 1) for sz in shape[len(ranges):]]
-        out[var] = ranges
-    return out
-
-
-def _resolve_grid_query(nc, q: str) -> str:
-    """Rewrite grid-mode projections to the underlying variables:
-    ``g.g[...]`` -> the array, ``g.map[...]`` -> that coordinate,
-    bare ``g[...]`` -> the array plus its maps sliced by the
-    corresponding axes (the Grid instance shape)."""
-    grids = _grid_vars(nc)
-    parts = []
-    for proj in filter(None, q.split("&")[0].split(",")):
         m = re.fullmatch(r"([\w.]+)((?:\[[^\]]*\])*)", proj)
         if not m:
             raise ValueError(f"bad DAP projection {proj!r}")
-        name, slabs = m.groups()
-        if "." in name:
-            parent, _, member = name.partition(".")
-            if parent not in grids:
-                raise ValueError(f"no DAP grid {parent!r}")
-            if member == parent:
-                parts.append(parent + slabs)
-            elif member in grids[parent]:
-                parts.append(member + slabs)
-            else:
+        name, text = m.groups()
+        if name in seqs:
+            pseqs[name] = seqs[name]
+            continue
+        head, dot, member = name.partition(".")
+        if dot and grids:
+            if head not in grids:
+                raise ValueError(f"no DAP grid {head!r}")
+            if member != head and name not in grids[head]["maps"]:
+                raise ValueError(f"no map {member!r} in grid {head!r}")
+        elif dot or name not in variables:
+            raise ValueError(f"bad DAP projection {proj!r}")
+        key = head if member == head else name
+        typ, dims = variables[key]
+        if isinstance(typ, Exception):
+            raise typ
+        ranges = strided(
+            tuple(int(x) for x in sm.groups() if x is not None)
+            for sm in _SLAB.finditer(text))
+        for i, (a, step, b) in enumerate(ranges):
+            if step < 1 or i >= len(dims) or not 0 <= a <= b < dims[i][1]:
                 raise ValueError(
-                    f"no map {member!r} in grid {parent!r}")
-        elif name in grids and slabs:
-            slab_list = re.findall(r"\[[^\]]*\]", slabs)
-            parts.append(name + slabs)
-            for d, sl in zip(grids[name], slab_list):
-                parts.append(d + sl)
-            parts.extend(grids[name][len(slab_list):])
+                    f"constraint [{a}:{step}:{b}] out of bounds")
+        ranges += [(0, 1, n - 1) for _, n in dims[len(ranges):]]
+        if key in grids and not dot and text:
+            # the Grid instance: its array and maps ship together
+            pgrids[key] = grids[key]
+            for k in (key, *grids[key]["maps"]):
+                slabs.pop(k, None)
+            slabs[key] = ranges
+            slabs.update(zip(grids[key]["maps"], ([r] for r in ranges)))
         else:
-            parts.append(proj)
-    return ",".join(parts)
+            slabs[key] = ranges
+    return slabs, pgrids, pseqs
 
 
 def _xdr_sequence(seq: dict) -> bytes:
-    """Sequence rows -> the spec's §7.2.3 stream: 0x5A000000 before
-    every instance, columns XDR-encoded at scalar width, 0xA5000000
-    after the last."""
+    """Sequence rows -> the spec's §7.2.3 stream: :data:`_SEQ_INSTANCE`
+    before every instance, columns XDR-encoded at scalar width,
+    :data:`_SEQ_END` after the last."""
     out = bytearray()
     for row in seq["rows"]:
-        out += struct.pack(">I", 0x5A000000)
+        out += struct.pack(">I", _SEQ_INSTANCE)
         for (_col, typ), val in zip(seq["cols"], row):
             out += _xdr_encode(typ, val, scalar=True)
-    out += struct.pack(">I", 0xA5000000)
+    out += struct.pack(">I", _SEQ_END)
     return bytes(out)
 
 
@@ -760,24 +746,53 @@ def _file_sequences(sequences: dict | None, fname: str) -> dict:
 
 def make_dap_handler(root_dir: str, grid_mode: bool = False,
                      sequences: dict | None = None):
-    """An http.server request handler serving ``<file>.dds`` and
-    ``<file>.dods?constraint`` for classic-netCDF files under
-    ``root_dir`` — every projection is one ``NcFile.read_strided``
-    (record-slice reads only: the server never materializes a record
-    variable it isn't shipping).
+    """An http.server request handler serving ``<file>.dds``,
+    ``<file>.das`` and ``<file>.dods?constraint`` for classic-netCDF
+    files under ``root_dir``.
 
-    ``grid_mode`` (round 13) serves coordinate-backed variables as
-    DAP Grid constructors — the THREDDS shape — accepting qualified
-    projections (``g.g[...]``, ``g.map[...]``) and bare-grid
-    projections (array followed by the sliced maps, per spec).
-    ``sequences`` ({name: {"cols": [(col, typ)...], "rows": [...]}}),
-    keyed per served filename under ``<fname>!<seq>`` or globally
-    under the sequence name, adds Sequence blocks."""
+    A request describes its file once, as the :func:`_served` table.
+    The ``.dds`` reply renders that table (:func:`_dds`);
+    :func:`parse_constraint` resolves a ``.dods`` projection in it, and
+    the reply is the projected table's DDS, then the XDR of exactly
+    those variables in that order. Every projected array is one
+    ``NcFile.read_strided`` (record-slice reads only: the server never
+    materializes a record variable it isn't shipping). A request with
+    no constraint ships every variable whole.
+
+    ``grid_mode`` serves coordinate-backed variables as DAP Grid
+    constructors, the THREDDS shape: the table gains the Grids and
+    their ``g.map`` entries. ``sequences`` ({name: {"cols": [(col,
+    typ)...], "rows": [...]}}), keyed per served filename under
+    ``<fname>!<seq>`` or globally under the sequence name, adds
+    Sequence blocks."""
     import http.server
     import os
     import urllib.parse
 
     from modeltracking_spark.sources.netcdf_classic import NcFile
+
+    def dods(nc, fname: str, seqs: dict, query: str) -> bytes:
+        served = _served(nc, grid_mode, seqs)
+        slabs, pgrids, pseqs = parse_constraint(
+            served, query or ",".join(nc.vars))
+        pvars = {}
+        for key, ranges in slabs.items():
+            typ, dims = served[0][key]
+            pvars[key] = (typ, [(d, len(range(a, b + 1, step)))
+                                for (d, _), (a, step, b) in zip(dims, ranges)])
+        chunks = [_dds(fname, pvars, pgrids, pseqs).encode(), b"\nData:\n"]
+        for key, ranges in slabs.items():
+            typ = pvars[key][0]
+            a = nc.read_strided(key.rpartition(".")[2], ranges)
+            if typ == "String":
+                # CHAR rows, NUL-padded to the strlen axis
+                a = [row.tobytes().rstrip(b"\x00")
+                     for row in a.reshape(-1, a.shape[-1])]
+                a = a if ranges else a[0]
+            # a 0-dim projection ships the bare value
+            chunks.append(_xdr_encode(typ, a, scalar=not ranges))
+        chunks += [_xdr_sequence(seqs[s]) for s in pseqs]
+        return b"".join(chunks)
 
     class DapHandler(http.server.BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
@@ -792,65 +807,33 @@ def make_dap_handler(root_dir: str, grid_mode: bool = False,
 
         def do_GET(self):
             parsed = urllib.parse.urlparse(self.path)
-            path = parsed.path
+            stem, dot, ext = parsed.path[1:].rpartition(".")
+            if not dot or ext not in ("dds", "das", "dods"):
+                self._reply(404, b"not found", "text/plain")
+                return
+            fn = os.path.join(root_dir, stem)
+            fname = os.path.basename(fn)
             try:
-                if path.endswith(".dds"):
-                    fn = os.path.join(root_dir, path[1:-len(".dds")])
-                    nc = NcFile(fn)
-                    body = _dds_text(
-                        nc, os.path.basename(fn), grid_mode=grid_mode,
-                        sequences=_file_sequences(
-                            sequences, os.path.basename(fn))).encode()
+                nc = NcFile(fn)
+                try:
+                    seqs = _file_sequences(sequences, fname)
+                    if ext == "dds":
+                        body = _dds(fname, *_served(nc, grid_mode, seqs)
+                                    ).encode()
+                    elif ext == "das":
+                        body = _das_text(nc, fname).encode()
+                    else:
+                        body = dods(nc, fname, seqs,
+                                    urllib.parse.unquote(parsed.query))
+                finally:
                     nc.close()
-                    self._reply(200, body, "text/plain")
-                elif path.endswith(".das"):
-                    fn = os.path.join(root_dir, path[1:-len(".das")])
-                    nc = NcFile(fn)
-                    body = _das_text(nc, os.path.basename(fn)).encode()
-                    nc.close()
-                    self._reply(200, body, "text/plain")
-                elif path.endswith(".dods"):
-                    fn = os.path.join(root_dir, path[1:-len(".dods")])
-                    nc = NcFile(fn)
-                    q = urllib.parse.unquote(parsed.query)
-                    base = q.split("[")[0]
-                    seq = _file_sequences(
-                        sequences, os.path.basename(fn)).get(base)
-                    if seq is not None:
-                        dds = _dds_text(
-                            nc, os.path.basename(fn),
-                            sequences={base: seq}, only={base: None},
-                        ).encode()
-                        nc.close()
-                        self._reply(
-                            200, dds + b"\nData:\n" + _xdr_sequence(seq),
-                            "application/octet-stream")
-                        return
-                    if grid_mode and q:
-                        q = _resolve_grid_query(nc, q)
-                    only = parse_constraint(nc, q or ",".join(nc.vars))
-                    dds = _dds_text(
-                        nc, os.path.basename(fn), only
-                    ).encode()
-                    chunks = [dds, b"\nData:\n"]
-                    for var, ranges in only.items():
-                        typ = _NC_DAP[nc.vars[var].nc_type]
-                        a = nc.read_strided(var, ranges)
-                        if typ == "String":
-                            # CHAR rows, NUL-padded to the strlen axis
-                            a = [row.tobytes().rstrip(b"\x00")
-                                 for row in a.reshape(-1, a.shape[-1])]
-                            a = a if ranges else a[0]
-                        # a 0-dim projection ships the bare value
-                        chunks.append(_xdr_encode(typ, a, scalar=not ranges))
-                    nc.close()
-                    self._reply(200, b"".join(chunks), "application/octet-stream")
-                else:
-                    self._reply(404, b"not found", "text/plain")
             except FileNotFoundError:
                 self._reply(404, b"no such dataset", "text/plain")
             except (ValueError, NotImplementedError) as exc:
                 self._reply(400, str(exc).encode(), "text/plain")
+            else:
+                self._reply(200, body, "application/octet-stream"
+                            if ext == "dods" else "text/plain")
 
     return DapHandler
 

@@ -95,6 +95,14 @@ def _pad4(n: int) -> int:
     return (n + 3) & ~3
 
 
+def strided(ranges) -> list[tuple[int, int, int]]:
+    """Index ranges as ``(a, step, b)`` triples, ``b`` inclusive: an
+    inclusive ``(a, b)`` is ``(a, 1, b)``, a bare ``(a,)`` is ``(a, 1,
+    a)``, and a strided ``(a, step, b)`` stays. The one reading of the
+    range forms that ``read_strided`` and the DAP constraint take."""
+    return [tuple(r) if len(r) == 3 else (r[0], 1, r[-1]) for r in ranges]
+
+
 def cf_unpack(a, attrs: dict):
     """CF-convention mask-and-scale (what the reference's netCDF4 stack
     does automatically under ``set_auto_maskandscale``): values equal to
@@ -351,9 +359,7 @@ class NcFile:
 
         if not ranges:
             return self.read(var)
-        (a, step, b), *rest = [
-            (r[0], 1, r[1]) if len(r) == 2 else r for r in ranges
-        ]
+        (a, step, b), *rest = strided(ranges)
         cut = tuple(slice(x, y + 1, st) for x, st, y in rest)
         rows = [self.read_slice(var, i)[cut] for i in range(a, b + 1, step)]
         if rows:

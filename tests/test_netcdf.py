@@ -326,13 +326,21 @@ def test_dap_rejects_are_loud(tiny_nc, dap_root):
     import urllib.error
     import urllib.request
 
-    from modeltracking_spark.sources.dap import DapDataset, parse_constraint
+    from modeltracking_spark.sources.dap import (
+        DapDataset,
+        _served,
+        parse_constraint,
+    )
 
     base, root = dap_root
     shutil.copy(tiny_nc, os.path.join(root, "r.nc"))
     # out-of-bounds constraint -> 400
     with pytest.raises(urllib.error.HTTPError) as ei:
         urllib.request.urlopen(f"{base}/r.nc.dods?grid[9:9]")
+    assert ei.value.code == 400
+    # a hyperslab past the variable's last dimension -> 400
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        urllib.request.urlopen(f"{base}/r.nc.dods?grid[0][0][0][0]")
     assert ei.value.code == 400
     # missing dataset -> 404
     with pytest.raises(urllib.error.HTTPError) as ei:
@@ -344,7 +352,7 @@ def test_dap_rejects_are_loud(tiny_nc, dap_root):
         d.read("no_such_var")
     nc = NcFile(tiny_nc)
     with pytest.raises(ValueError, match="out of bounds"):
-        parse_constraint(nc, "grid[0:0:4]")  # stride 0 is malformed
+        parse_constraint(_served(nc), "grid[0:0:4]")  # stride 0 is malformed
 
 
 def test_open_nc_or_dap_routes(tiny_nc, dap_root):
@@ -1137,3 +1145,181 @@ def test_dap_byte_is_unsigned(dap_root, tmp_path):
     assert remote.read("a").tolist() == [-56, 7, -1]
     assert remote.read("us").reshape(()) == 200
     assert remote.read("ua").tolist() == [200, 7, 255]
+
+
+# ---------------------------------------------------------------------------
+# One DAP model for client and server: the server describes a file as the
+# table _parse_dds builds, renders its DDS from it and resolves each
+# projection in it.
+# ---------------------------------------------------------------------------
+
+
+def _decode_by_dds(body: bytes):
+    """A ``.dods`` reply decoded the way a DDS-driven client reads it:
+    ``_parse_dds`` of the header, then each variable's XDR in that
+    order -> ({name: array}, grids)."""
+    from modeltracking_spark.sources.dap import _parse_dds, _xdr_decode
+
+    dds, sep, _ = body.partition(b"\nData:\n")
+    assert sep
+    _name, variables, grids, _seqs = _parse_dds(dds.decode())
+    off = len(dds) + len(sep)
+    out = {}
+    for name, (typ, dims) in variables.items():
+        shape = [sz for _, sz in dims]
+        vals, off = _xdr_decode(body, off, typ,
+                                math.prod(shape) if dims else None)
+        out[name] = np.asarray(vals).reshape(shape)
+    assert off == len(body)
+    return out, grids
+
+
+def test_dap_dods_header_lists_the_shipped_variables(coord_nc,
+                                                     grid_dap_root):
+    """The DDS of a ``.dods`` reply declares exactly the variables whose
+    XDR follows, in that order: a multi-variable projection in
+    projection order, and a bare-grid projection as its Grid block
+    (the array, then its maps cut by the array's axes)."""
+    import urllib.request
+
+    base, _root = grid_dap_root
+    local = NcFile(coord_nc)
+
+    def fetch(query):
+        with urllib.request.urlopen(f"{base}/coord.nc.dods?{query}") as r:
+            return _decode_by_dds(r.read())
+
+    got, grids = fetch("x,y")
+    assert list(got) == ["x", "y"] and grids == {}
+    assert np.array_equal(got["x"], local.read("x"))
+    assert np.array_equal(got["y"], local.read("y"))
+
+    got, grids = fetch("sst[1:2][0:1][1:3]")
+    assert list(got) == ["sst", "sst.time", "sst.y", "sst.x"]
+    assert grids == {"sst": {"array": "sst",
+                             "maps": ["sst.time", "sst.y", "sst.x"]}}
+    assert np.array_equal(got["sst"], local.read("sst")[1:3, 0:2, 1:4])
+    assert np.array_equal(got["sst.time"], local.read("time")[1:3])
+    assert np.array_equal(got["sst.y"], local.read("y")[0:2])
+    assert np.array_equal(got["sst.x"], local.read("x")[1:4])
+
+
+@pytest.mark.parametrize("grid_mode", [False, True])
+def test_dap_served_dds_parses_to_the_served_table(coord_nc, tiny_nc,
+                                                   tmp_path, grid_mode):
+    """``_parse_dds`` of every served ``.dds`` is the server's own
+    table, ``_served``: plain and Grid files, a CHAR variable served as
+    String, and a file with per-file and shared Sequences."""
+    import shutil
+    import urllib.request
+
+    from modeltracking_spark.sources.dap import (
+        _file_sequences,
+        _parse_dds,
+        _served,
+        make_dap_handler,
+    )
+
+    shutil.copy(coord_nc, tmp_path / "coord.nc")
+    shutil.copy(tiny_nc, tmp_path / "tiny.nc")
+    write_classic(
+        str(tmp_path / "obs.nc"), dims=[("station", 2), ("strlen", 4)],
+        variables=[("code", ["station", "strlen"],
+                    np.stack([_srow("ab", 4), _srow("cdef", 4)])),
+                   ("val", ["station"], np.array([1.5, -2.0]))],
+        record_dim=None, n_records=0, global_attrs={})
+    seqs = {"obs.nc!readings": {"cols": [("sid", "Int32"),
+                                         ("tag", "String")],
+                                "rows": [(0, "a")]},
+            "shared": {"cols": [("g", "UInt16")], "rows": [(7,)]}}
+    srv = http.server.ThreadingHTTPServer(
+        ("127.0.0.1", 0),
+        make_dap_handler(str(tmp_path), grid_mode=grid_mode,
+                         sequences=seqs))
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        for fname in ("coord.nc", "tiny.nc", "obs.nc"):
+            with urllib.request.urlopen(f"{base}/{fname}.dds") as r:
+                name, *parsed = _parse_dds(r.read().decode())
+            served = _served(NcFile(str(tmp_path / fname)), grid_mode,
+                             _file_sequences(seqs, fname))
+            assert name == fname
+            assert tuple(parsed) == served, fname
+            assert bool(served[1]) == (grid_mode and fname == "coord.nc")
+            assert ("readings" in served[2]) == (fname == "obs.nc")
+    finally:
+        srv.shutdown()
+
+
+def test_dap_unservable_variable_fails_only_its_requests(dap_root,
+                                                         tmp_path):
+    """A variable the server cannot serve (here a 0-dim CHAR) fails the
+    requests that render or project it, with its reason, and only
+    those: the file's other variables still read."""
+    import shutil
+    import urllib.error
+    import urllib.request
+
+    base, root = dap_root
+    write_classic(
+        str(tmp_path / "unserved.nc"), dims=[("x", 2)],
+        variables=[("c", [], np.array(b"a", dtype="S1")),
+                   ("ok", ["x"], np.array([1.0, 2.0]))],
+        record_dim=None, n_records=0, global_attrs={})
+    shutil.copy(tmp_path / "unserved.nc", os.path.join(root, "unserved.nc"))
+    for req in ("unserved.nc.dds", "unserved.nc.dods",
+                "unserved.nc.dods?c", "unserved.nc.dods?ok,c"):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(f"{base}/{req}")
+        assert ei.value.code == 400
+        assert ei.value.read() == \
+            b"DAP serving for scalar CHAR not implemented"
+    with urllib.request.urlopen(f"{base}/unserved.nc.dods?ok[1]") as r:
+        got, _grids = _decode_by_dds(r.read())
+    assert got["ok"].tolist() == [2.0]
+
+
+def test_parse_constraint_inverts_encode_constraint():
+    """``parse_constraint`` of ``encode_constraint(var, ranges)`` gives
+    back the ranges as ``(a, step, b)`` triples, the unconstrained
+    trailing dims whole, for random shapes, starts and strides; a Grid's
+    array projected as ``g.g`` resolves to ``g``."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from modeltracking_spark.sources.dap import (
+        encode_constraint,
+        parse_constraint,
+    )
+    from modeltracking_spark.sources.netcdf_classic import strided
+
+    @st.composite
+    def shaped_ranges(draw):
+        shape = draw(st.lists(st.integers(1, 9), max_size=4))
+        ranges = []
+        for n in shape[:draw(st.integers(0, len(shape)))]:
+            a = draw(st.integers(0, n - 1))
+            b = draw(st.integers(a, n - 1))
+            step = draw(st.integers(1, 4))
+            ranges.append((a, b) if draw(st.booleans()) else (a, step, b))
+        return shape, ranges
+
+    @settings(max_examples=200, deadline=None)
+    @given(shaped_ranges(), st.booleans())
+    def check(case, as_grid):
+        shape, ranges = case
+        dims = [(f"d{i}", n) for i, n in enumerate(shape)]
+        table = {"v": ("Float64", dims)}
+        grids = {}
+        if as_grid:
+            grids["v"] = {"array": "v", "maps": [f"v.{d}" for d, _ in dims]}
+            table.update({f"v.{d}": ("Float64", [(d, n)]) for d, n in dims})
+        slabs, pgrids, pseqs = parse_constraint(
+            (table, grids, {}),
+            encode_constraint("v.v" if as_grid else "v", ranges))
+        whole = [(0, 1, n - 1) for n in shape[len(ranges):]]
+        assert slabs == {"v": strided(ranges) + whole}
+        assert pgrids == {} and pseqs == {}
+
+    check()
