@@ -42,8 +42,9 @@ server serves classic-netCDF CHAR variables the THREDDS way (the
 trailing string-length axis elides into a DAP String) and signed BYTE
 variables the netCDF-Java way (a Byte whose DAS carries ``_Unsigned
 "false"``, which the client reads back as int8). Constraints are
-URL-percent-encoded on the wire and unquoted by the server. Unknown
-declarations (DAP 2.0 has no Int64) stay typed rejects.
+URL-percent-encoded on the wire and unquoted by the server, which
+evaluates projections only: a selection (``&...``) is a 400 naming
+it. Unknown declarations (DAP 2.0 has no Int64) stay typed rejects.
 
 Scale posture: the grid reader asks for one ``.dods`` hyperslab per
 physics variable per run of consecutive steps — the server does the
@@ -658,24 +659,32 @@ def _das_text(nc, dataset_name: str) -> str:
 
 
 def parse_constraint(served: tuple, query: str) -> tuple[dict, dict, dict]:
-    """The projections of ``query`` (``var[a:b][c],...``; a selection
-    after ``&`` is ignored), each looked up in a :func:`_served` table
-    -> (slabs, grids, sequences), the projected parts of that table:
+    """The projections of ``query`` (``var[a:b][c],...``), each looked
+    up in a :func:`_served` table -> (slabs, grids, sequences), the
+    projected parts of that table:
 
     - ``slabs`` {name: [(a, step, b) per dim]} in the order the reply
       ships them; unconstrained trailing dims are whole, and so is a
       bare ``var``;
     - ``g.g[...]`` projects the array of Grid ``g`` (under ``g``) and
-      ``g.m[...]`` its map ``m``; a bare ``g[...]`` with a hyperslab is
-      the Grid instance: ``grids`` gains ``g``, and its maps follow the
-      array in ``slabs``, each cut as the array's axis;
+      ``g.m[...]`` its map ``m``; a bare ``g``, with or without a
+      hyperslab, is the Grid instance: ``grids`` gains ``g``, and its
+      maps follow the array in ``slabs``, each cut as the array's axis;
     - ``sequences`` {name: cols}: each projected Sequence, shipped whole
-      after the arrays."""
+      after the arrays.
+
+    The server evaluates no selection: a clause after ``&`` raises
+    ``ValueError`` naming it, rather than answering unfiltered."""
     variables, grids, seqs = served
+    projections, *selections = query.split("&")
+    if any(selections):
+        raise ValueError(
+            f"DAP selection {'&'.join(filter(None, selections))!r} not "
+            f"supported: this server evaluates projections only")
     slabs: dict = {}
     pgrids: dict = {}
     pseqs: dict = {}
-    for proj in filter(None, query.split("&")[0].split(",")):
+    for proj in filter(None, projections.split(",")):
         m = re.fullmatch(r"([\w.]+)((?:\[[^\]]*\])*)", proj)
         if not m:
             raise ValueError(f"bad DAP projection {proj!r}")
@@ -703,7 +712,7 @@ def parse_constraint(served: tuple, query: str) -> tuple[dict, dict, dict]:
                 raise ValueError(
                     f"constraint [{a}:{step}:{b}] out of bounds")
         ranges += [(0, 1, n - 1) for _, n in dims[len(ranges):]]
-        if key in grids and not dot and text:
+        if key in grids and not dot:
             # the Grid instance: its array and maps ship together
             pgrids[key] = grids[key]
             for k in (key, *grids[key]["maps"]):

@@ -32,6 +32,18 @@ Format notes (classic, from the public spec):
   var ``v`` lives at ``v.begin + r * recsize`` where ``recsize`` is the
   sum of all record vars' padded per-record sizes (padding is waived
   when there is exactly one record variable)
+
+The reader and :func:`write_classic` share each rule: one type table
+(:data:`NC_TYPES`), one record-stride rule (:func:`_record_strides`)
+and one encoding of a name or attribute value (:func:`_counted`).
+
+The header is read in one pass: the first read is 64 KiB, and the parse
+reads more, from the end of what it holds, only when it runs past it.
+A bad header raises ``ValueError`` naming the path, with no read past
+what the parse reached: a magic that is not ``CDF\\x01``/``CDF\\x02``,
+a bad list tag, a name, attribute or list whose length runs past the
+end of the file, an attribute nc_type outside 1-6, a dimension id the
+file does not declare, or a variable ``begin`` outside the file.
 """
 
 from __future__ import annotations
@@ -76,7 +88,8 @@ NC_DIMENSION = 0x0A
 NC_VARIABLE = 0x0B
 NC_ATTRIBUTE = 0x0C
 
-#: nc_type -> (big-endian numpy dtype, size in bytes)
+#: nc_type -> (big-endian numpy dtype, size in bytes); S1 = CHAR, the
+#: classic format's string carrier (fixed-width char arrays)
 NC_TYPES = {
     1: (">i1", 1),
     2: ("S1", 1),
@@ -85,14 +98,31 @@ NC_TYPES = {
     5: (">f4", 4),
     6: (">f8", 8),
 }
-#: numpy kind+itemsize -> nc_type (for the writer); S1 = CHAR, the
-#: classic format's string carrier (fixed-width char arrays)
-_NP_TO_NC = {("i", 1): 1, ("S", 1): 2, ("i", 2): 3, ("i", 4): 4,
-             ("f", 4): 5, ("f", 8): 6}
+#: numpy (kind, itemsize) -> nc_type, the writer's inverse of NC_TYPES
+_NP_TO_NC = {(dt.lstrip(">")[0], size): t
+             for t, (dt, size) in NC_TYPES.items()}
+#: the first header read; the parse reads on only if the header is longer
+_HEAD_BYTES = 64 * 1024
 
 
 def _pad4(n: int) -> int:
     return (n + 3) & ~3
+
+
+def _record_strides(nbytes: list[int]) -> list[int]:
+    """Each record variable's stride within a record, from its unpadded
+    per-record byte sizes in file order: padded to 4 bytes, except that
+    a lone record variable is not padded (the spec's waiver). Their sum
+    is ``recsize``; a stride past its size is zero padding."""
+    return nbytes if len(nbytes) == 1 else [_pad4(n) for n in nbytes]
+
+
+def _counted(raw: bytes, n: int | None = None) -> bytes:
+    """``n`` (by default ``len(raw)``) as a u32, then ``raw`` NUL-padded
+    to 4 bytes: a name (its byte length, then its UTF-8) and an
+    attribute's values (their element count, then their bytes)."""
+    n = len(raw) if n is None else n
+    return struct.pack(">I", n) + raw + b"\x00" * (_pad4(len(raw)) - len(raw))
 
 
 def strided(ranges) -> list[tuple[int, int, int]]:
@@ -170,50 +200,80 @@ class NcVar:
         return inner * self.itemsize
 
 
-class _Cursor:
-    def __init__(self, buf: bytes):
-        self.buf = buf
+class _Header:
+    """A forward cursor over a file's header that reads only as far as
+    the parse goes: it starts with the first :data:`_HEAD_BYTES` and,
+    when a field runs past what it holds, reads on from there (at least
+    doubling what it holds, so a long header costs a few reads). A
+    field that would run past the end of the file raises ``ValueError``
+    naming the path, before anything past it is read."""
+
+    def __init__(self, reader: FileRangeReader, path: str):
+        self.reader, self.path = reader, path
+        self.size = reader.size()
+        self.buf = reader.read_range(0, min(_HEAD_BYTES, self.size))
         self.off = 0
 
+    def take(self, n: int) -> bytes:
+        end = self.off + n
+        if end > len(self.buf) and end <= self.size:
+            want = min(max(end, 2 * len(self.buf)), self.size)
+            self.buf += self.reader.read_range(len(self.buf),
+                                               want - len(self.buf))
+        if end > len(self.buf):
+            raise ValueError(
+                f"{self.path}: header field at offset {self.off} runs "
+                f"past the end of the {self.size}-byte file")
+        self.off = end
+        return self.buf[end - n:end]
+
     def u32(self) -> int:
-        (v,) = struct.unpack_from(">I", self.buf, self.off)
-        self.off += 4
-        return v
+        return struct.unpack(">I", self.take(4))[0]
 
     def i64(self) -> int:
-        (v,) = struct.unpack_from(">q", self.buf, self.off)
-        self.off += 8
-        return v
+        return struct.unpack(">q", self.take(8))[0]
+
+    def counted(self, itemsize: int = 1) -> tuple[int, bytes]:
+        """The inverse of :func:`_counted`: (n, the n items' bytes)."""
+        n = self.u32()
+        return n, self.take(_pad4(n * itemsize))[:n * itemsize]
 
     def name(self) -> str:
-        n = self.u32()
-        s = self.buf[self.off : self.off + n].decode("utf-8")
-        self.off += _pad4(n)
-        return s
+        return self.counted()[1].decode("utf-8")
 
-    def attr_values(self, nc_type: int, nelems: int):
-        dt, size = NC_TYPES[nc_type]
-        nbytes = nelems * size
-        raw = self.buf[self.off : self.off + nbytes]
-        self.off += _pad4(nbytes)
-        if nc_type == 2:
-            return raw.decode("utf-8", errors="replace")
-        import numpy as np
+    def list_len(self, tag: int, what: str, min_item: int) -> int:
+        """A list's tag and length; an absent list is two zeros. A list
+        whose items (``min_item`` bytes each at least) cannot fit in the
+        rest of the file raises before any of them is read."""
+        got, n = self.u32(), self.u32()
+        if got == 0 and n == 0:
+            return 0
+        if got != tag:
+            raise ValueError(f"{self.path}: bad {what} list tag {got:#x}")
+        if self.off + n * min_item > self.size:
+            raise ValueError(
+                f"{self.path}: {n} {what}s cannot fit in the "
+                f"{self.size}-byte file")
+        return n
 
-        return np.frombuffer(raw, dtype=dt, count=nelems).tolist()
+    def nc_type(self, what: str) -> int:
+        t = self.u32()
+        if t not in NC_TYPES:
+            raise ValueError(f"{self.path}: {what} has nc_type {t}, "
+                             f"not a classic type (1-6)")
+        return t
 
     def attr_list(self) -> dict:
-        tag, nelems = self.u32(), self.u32()
+        import numpy as np
+
         out = {}
-        if tag == 0 and nelems == 0:
-            return out
-        if tag != NC_ATTRIBUTE:
-            raise ValueError(f"bad attribute list tag {tag:#x}")
-        for _ in range(nelems):
+        for _ in range(self.list_len(NC_ATTRIBUTE, "attribute", 12)):
             nm = self.name()
-            t = self.u32()
-            n = self.u32()
-            out[nm] = self.attr_values(t, n)
+            t = self.nc_type(f"attribute {nm!r}")
+            dt, size = NC_TYPES[t]
+            n, raw = self.counted(size)
+            out[nm] = (raw.decode("utf-8", errors="replace") if t == 2
+                       else np.frombuffer(raw, dtype=dt, count=n).tolist())
         return out
 
 
@@ -238,70 +298,46 @@ class NcFile:
     def __init__(self, path: str):
         self.path = path
         self.reader = FileRangeReader(path.removeprefix("file://"))
-        size = self.reader.size()
-        # headers are small; 64 KiB covers dims+attrs+vars for any sane
-        # grid file, and we re-parse from the full file if the header
-        # overflows it. The retry triggers on ANY parse failure (a cut
-        # inside an attribute value raises ValueError from np.frombuffer,
-        # a cut inside a name raises UnicodeDecodeError — not just the
-        # struct/Index errors of a cut between fields) AND on a parse
-        # that "succeeds" over truncated garbage but yields offsets
-        # outside the file.
-        head = self.reader.read_range(0, min(64 * 1024, size))
-        if head[:3] != b"CDF" or head[3] not in (1, 2):
+        c = _Header(self.reader, path)
+        magic = c.take(4)
+        if magic[:3] != b"CDF" or magic[3] not in (1, 2):
             raise ValueError(f"{path}: not a classic netCDF file")
-        self.version = head[3]
-        try:
-            self._parse(head)
-            if len(head) == 64 * 1024 and not self._plausible(size):
-                raise ValueError("implausible truncated-header parse")
-        except Exception:
-            if size <= len(head):
-                raise
-            self._parse(self.reader.read_range(0, size))
-            if not self._plausible(size):
-                raise ValueError(f"{path}: variable offsets outside the file")
-
-    def close(self) -> None:
-        self.reader.close()
-
-    def _plausible(self, file_size: int) -> bool:
-        """Every variable's begin offset must land inside the file —
-        catches a truncated-header parse that happened to not raise."""
-        return all(0 < v.begin <= file_size for v in self.vars.values())
-
-    def _parse(self, buf: bytes) -> None:
-        c = _Cursor(buf)
-        c.off = 4
+        self.version = magic[3]
         self.numrecs = c.u32()
-        # dim list
-        tag, ndims = c.u32(), c.u32()
-        if not (tag == NC_DIMENSION or (tag == 0 and ndims == 0)):
-            raise ValueError(f"bad dim list tag {tag:#x}")
         self.dims: list[tuple[str, int]] = []
         self.rec_dim_id: int | None = None
-        for i in range(ndims):
+        for i in range(c.list_len(NC_DIMENSION, "dim", 8)):
             nm = c.name()
             ln = c.u32()
             if ln == 0:
                 self.rec_dim_id = i
             self.dims.append((nm, ln))
         self.attrs = c.attr_list()
-        # var list
-        tag, nvars = c.u32(), c.u32()
-        if not (tag == NC_VARIABLE or (tag == 0 and nvars == 0)):
-            raise ValueError(f"bad var list tag {tag:#x}")
         self.vars: dict[str, NcVar] = {}
         rec_vars: list[NcVar] = []
-        for _ in range(nvars):
+        # a variable is at least 28 bytes (32 with CDF-2's 64-bit begin)
+        var_min = 28 if self.version == 1 else 32
+        for _ in range(c.list_len(NC_VARIABLE, "var", var_min)):
             nm = c.name()
             nd = c.u32()
-            dim_ids = [c.u32() for _ in range(nd)]
+            dim_ids = list(struct.unpack(f">{nd}I", c.take(4 * nd)))
+            if any(d >= len(self.dims) for d in dim_ids):
+                raise ValueError(
+                    f"{path}: variable {nm!r} has dimension ids {dim_ids}, "
+                    f"the file declares {len(self.dims)}")
+            is_rec = bool(dim_ids) and dim_ids[0] == self.rec_dim_id
             vattrs = c.attr_list()
-            nc_type = c.u32()
+            # a record variable's size sets every record's layout; a
+            # fixed one of another type parses, and fails when read
+            nc_type = (c.nc_type(f"record variable {nm!r}") if is_rec
+                       else c.u32())
             vsize = c.u32()
             begin = c.i64() if self.version == 2 else c.u32()
-            is_rec = bool(dim_ids) and dim_ids[0] == self.rec_dim_id
+            # only a record variable with no records may begin past the end
+            if begin <= 0 or (begin > c.size and (self.numrecs or not is_rec)):
+                raise ValueError(
+                    f"{path}: variable {nm!r} begins at {begin}, outside "
+                    f"the {c.size}-byte file")
             shape = tuple(
                 self.numrecs if (j == 0 and is_rec) else self.dims[d][1]
                 for j, d in enumerate(dim_ids)
@@ -310,12 +346,10 @@ class NcFile:
             self.vars[nm] = v
             if is_rec:
                 rec_vars.append(v)
-        # recsize: padded per-record sizes, padding waived for a single
-        # record variable (spec quirk)
-        if len(rec_vars) == 1:
-            self.recsize = rec_vars[0].slice_nbytes()
-        else:
-            self.recsize = sum(_pad4(v.slice_nbytes()) for v in rec_vars)
+        self.recsize = sum(_record_strides([v.slice_nbytes() for v in rec_vars]))
+
+    def close(self) -> None:
+        self.reader.close()
 
     def _read_checked(self, off: int, nbytes: int, what: str) -> bytes:
         """Range read that fails LOUDLY on truncation — without this a
@@ -402,6 +436,8 @@ def write_classic(
     by record, mirroring how the reader slices). ``global_attrs`` is
     the NC_GLOBAL attribute dict.
     """
+    import math
+
     import numpy as np
 
     dim_ix = {nm: i for i, (nm, _) in enumerate(dims)}
@@ -413,20 +449,13 @@ def write_classic(
             raise ValueError(f"unsupported dtype {a.dtype}")
         return _NP_TO_NC[k]
 
-    def name_bytes(nm: str) -> bytes:
-        b = nm.encode()
-        return struct.pack(">I", len(b)) + b + b"\x00" * (_pad4(len(b)) - len(b))
-
     def attr_bytes(attrs: dict | None) -> bytes:
         if not attrs:
             return struct.pack(">II", 0, 0)
         out = bytearray(struct.pack(">II", NC_ATTRIBUTE, len(attrs)))
         for nm, val in attrs.items():
-            out += name_bytes(nm)
             if isinstance(val, str):
-                raw = val.encode()
-                out += struct.pack(">II", 2, len(raw)) + raw
-                out += b"\x00" * (_pad4(len(raw)) - len(raw))
+                t, raw = 2, val.encode()
             else:
                 a = np.asarray(val)
                 if a.dtype.kind == "i" and a.dtype.itemsize == 8:
@@ -435,106 +464,75 @@ def write_classic(
                 raw = np.ascontiguousarray(
                     a.reshape(-1), dtype=NC_TYPES[t][0]
                 ).tobytes()
-                out += struct.pack(">II", t, a.size) + raw
-                out += b"\x00" * (_pad4(len(raw)) - len(raw))
+            out += _counted(nm.encode()) + struct.pack(">I", t)
+            out += _counted(raw, len(raw) // NC_TYPES[t][1])
         return bytes(out)
 
-    # resolve per-var metadata
+    # per variable: its nc_type, ``nbytes`` (one record's bytes for a
+    # record variable, the whole variable's otherwise) and ``vsize``,
+    # the bytes it takes in the file (in each record, for a record one)
     metas = []
-    for spec in variables:
-        name, vdims, value = spec[0], spec[1], spec[2]
-        var_attrs = spec[3] if len(spec) > 3 else None
-        is_rec = record_dim is not None and vdims and vdims[0] == record_dim
-        inner_shape = tuple(
-            dim_len[d] for d in (vdims[1:] if is_rec else vdims)
-        )
+    for name, vdims, value, *var_attrs in variables:
+        is_rec = bool(record_dim is not None and vdims
+                      and vdims[0] == record_dim)
         probe = np.asarray(value(0) if callable(value) else value)
         if is_rec and not callable(value):
             probe = probe[0]
         t = nc_type_of(probe)
-        inner = 1
-        for s in inner_shape:
-            inner *= s
-        nbytes = inner * NC_TYPES[t][1]
-        metas.append(
-            dict(
-                name=name, vdims=vdims, value=value, is_rec=is_rec,
-                inner_shape=inner_shape, nc_type=t, nbytes=nbytes,
-                attrs=var_attrs,
-            )
-        )
+        inner = vdims[1:] if is_rec else vdims
+        nbytes = math.prod(dim_len[d] for d in inner) * NC_TYPES[t][1]
+        metas.append(dict(
+            name=name, vdims=vdims, value=value, is_rec=is_rec, nc_type=t,
+            nbytes=nbytes, vsize=_pad4(nbytes),
+            attrs=var_attrs[0] if var_attrs else None,
+        ))
+    rec_metas = [m for m in metas if m["is_rec"]]
+    for m, stride in zip(rec_metas,
+                         _record_strides([m["nbytes"] for m in rec_metas])):
+        m["vsize"] = stride
+    recsize = sum(m["vsize"] for m in rec_metas)
 
-    n_rec_vars = sum(1 for m in metas if m["is_rec"])
-
-    def header_bytes(assign_begin: bool, begins: dict[str, int]) -> bytes:
-        out = bytearray()
-        out += b"CDF\x01"
-        out += struct.pack(">I", n_records)
-        out += struct.pack(">II", NC_DIMENSION, len(dims))
+    def header_bytes(begins: dict[str, int]) -> bytes:
+        out = bytearray(b"CDF\x01")
+        out += struct.pack(">III", n_records, NC_DIMENSION, len(dims))
         for nm, ln in dims:
-            b = nm.encode()
-            out += struct.pack(">I", len(b)) + b + b"\x00" * (_pad4(len(b)) - len(b))
+            out += _counted(nm.encode())
             out += struct.pack(">I", 0 if nm == record_dim else ln)
         out += attr_bytes(global_attrs)
         out += struct.pack(">II", NC_VARIABLE, len(metas))
         for m in metas:
-            b = m["name"].encode()
-            out += struct.pack(">I", len(b)) + b + b"\x00" * (_pad4(len(b)) - len(b))
-            out += struct.pack(">I", len(m["vdims"]))
-            for d in m["vdims"]:
-                out += struct.pack(">I", dim_ix[d])
+            out += _counted(m["name"].encode())
+            out += struct.pack(f">{1 + len(m['vdims'])}I", len(m["vdims"]),
+                               *(dim_ix[d] for d in m["vdims"]))
             out += attr_bytes(m["attrs"])
-            out += struct.pack(">I", m["nc_type"])
-            # vsize: padded (waived for a lone record var, per spec)
-            pad = (
-                m["nbytes"]
-                if (m["is_rec"] and n_rec_vars == 1)
-                else _pad4(m["nbytes"])
-            )
-            out += struct.pack(">I", min(pad, 2**32 - 4))
-            out += struct.pack(">I", begins.get(m["name"], 0) if assign_begin else 0)
+            out += struct.pack(">III", m["nc_type"],
+                               min(m["vsize"], 2**32 - 4),
+                               begins.get(m["name"], 0))
         return bytes(out)
 
-    hdr_len = len(header_bytes(False, {}))
+    # every header field is 4-byte aligned, so data starts right after
+    # it: fixed variables first, then one record's worth of record
+    # variables, each group in declaration order
     begins: dict[str, int] = {}
-    off = _pad4(hdr_len)
-    for m in metas:  # fixed vars first, in declaration order
-        if not m["is_rec"]:
-            begins[m["name"]] = off
-            off += _pad4(m["nbytes"])
-    rec_start = off
-    for m in metas:
-        if m["is_rec"]:
-            begins[m["name"]] = off
-            step = m["nbytes"] if n_rec_vars == 1 else _pad4(m["nbytes"])
-            off += step
-    recsize = off - rec_start
-
-    def be(a):
-        return np.ascontiguousarray(a).astype(a.dtype.newbyteorder(">"))
+    off = len(header_bytes(begins))
+    for m in sorted(metas, key=lambda m: m["is_rec"]):
+        begins[m["name"]] = off
+        off += m["vsize"]
 
     with open(path, "wb") as f:
-        hdr = header_bytes(True, begins)
-        f.write(hdr)
-        f.write(b"\x00" * (_pad4(hdr_len) - hdr_len))
-        for m in metas:
-            if m["is_rec"]:
-                continue
-            f.seek(begins[m["name"]])
-            a = be(np.asarray(m["value"]))
+
+        def put(m, off: int, a) -> None:
+            f.seek(off)
+            a = np.ascontiguousarray(a).astype(a.dtype.newbyteorder(">"))
             f.write(a.tobytes())
-            f.write(b"\x00" * (_pad4(m["nbytes"]) - m["nbytes"]))
+            f.write(b"\x00" * (m["vsize"] - m["nbytes"]))
+
+        f.write(header_bytes(begins))
+        for m in metas:
+            if not m["is_rec"]:
+                put(m, begins[m["name"]], np.asarray(m["value"]))
         for r in range(n_records):
-            for m in metas:
-                if not m["is_rec"]:
-                    continue
-                f.seek(begins[m["name"]] + r * recsize)
+            for m in rec_metas:
                 v = m["value"]
-                a = np.asarray(v(r) if callable(v) else v[r])
-                f.write(be(a).tobytes())
-                pad = (
-                    0
-                    if n_rec_vars == 1
-                    else _pad4(m["nbytes"]) - m["nbytes"]
-                )
-                f.write(b"\x00" * pad)
+                put(m, begins[m["name"]] + r * recsize,
+                    np.asarray(v(r) if callable(v) else v[r]))

@@ -197,6 +197,184 @@ def test_truncated_data_section_is_loud(tmp_path, tiny_nc):
         f.read_slice("grid", 4)
 
 
+# ---------------------------------------------------------------------------
+# The header is read in one pass, only as far as the parse goes
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture
+def header_reads(monkeypatch):
+    """The byte counts of every ``FileRangeReader.read_range`` call."""
+    from modeltracking_spark.sources.netcdf_classic import FileRangeReader
+
+    counts = []
+    read_range = FileRangeReader.read_range
+
+    def recording(self, off, nbytes):
+        raw = read_range(self, off, nbytes)
+        counts.append(len(raw))
+        return raw
+
+    monkeypatch.setattr(FileRangeReader, "read_range", recording)
+    return counts
+
+
+def test_corrupt_header_is_reported_without_reading_the_file(tmp_path,
+                                                             header_reads):
+    """A bad dim-list tag in an 8 MB file raises a ``ValueError`` naming
+    the path after reading the first 64 KiB, not the whole file."""
+    path = str(tmp_path / "big.nc")
+    write_classic(path, dims=[("x", 1 << 20)],
+                  variables=[("v", ("x",), np.zeros(1 << 20))])
+    raw = bytearray(open(path, "rb").read())
+    assert len(raw) > 8 << 20
+    raw[8:12] = struct.pack(">I", 0x0D)  # the dim list's tag
+    open(path, "wb").write(raw)
+    with pytest.raises(ValueError, match=re.escape(path) + ".*dim list tag"):
+        NcFile(path)
+    assert 0 < sum(header_reads) < 1 << 20
+
+
+def test_long_header_reads_on_only_as_far_as_it_goes(tmp_path,
+                                                     header_reads):
+    """A 100 KB global attribute runs the header past the first read:
+    the parse reads on from there and stops at the header's end, short
+    of the file's size, and the header and data read back whole."""
+    path = str(tmp_path / "long.nc")
+    history = "made by a long pipeline; " * 4000
+    write_classic(path, dims=[("time", 0), ("k", 50_000)],
+                  variables=[("kv", ("k",), np.arange(50_000.0)),
+                             ("r", ("time", "k"),
+                              lambda r: np.arange(50_000.0) + r)],
+                  record_dim="time", n_records=3,
+                  global_attrs={"history": history, "n": 7})
+    f = NcFile(path)
+    assert sum(header_reads) < os.path.getsize(path)
+    assert f.attrs == {"history": history, "n": [7]}
+    assert f.dims == [("time", 0), ("k", 50_000)]
+    assert f.numrecs == 3 and f.recsize == 400_000
+    assert f.vars["kv"].begin > 100_000
+    assert f.read_slice("r", 2)[-1] == 50_001.0
+
+
+@pytest.mark.parametrize("field", ["begin", "name length", "dim count",
+                                   "dim id"])
+def test_bad_header_field_is_a_value_error_naming_the_path(tmp_path, field):
+    """A variable's ``begin``, a name's length or a list's length past
+    the end of the file, or a dimension id the file does not declare,
+    is a ``ValueError`` naming the path."""
+    path = str(tmp_path / "f.nc")
+    write_classic(path, dims=[("x", 2)],
+                  variables=[("v", ("x",), np.array([1.0, 2.0]))])
+    begin = NcFile(path).vars["v"].begin
+    raw = bytearray(open(path, "rb").read())
+    if field == "begin":  # the header's last field
+        raw[begin - 4:begin] = struct.pack(">I", len(raw) + 4)
+    elif field == "name length":  # the first dimension's name
+        raw[16:20] = struct.pack(">I", 1 << 30)
+    elif field == "dim count":
+        raw[12:16] = struct.pack(">I", 1 << 28)
+    else:  # v's one dimension id
+        v_dims = b"\x00\x00\x00\x01v\x00\x00\x00" + struct.pack(">II", 1, 0)
+        assert raw.count(v_dims) == 1
+        raw = raw.replace(v_dims, v_dims[:-4] + struct.pack(">I", 3))
+    open(path, "wb").write(raw)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        NcFile(path)
+
+
+@pytest.mark.parametrize("where", ["attribute", "record variable"])
+def test_unknown_nc_type_is_a_value_error_and_a_dap_400(tmp_path, dap_root,
+                                                        where):
+    """An attribute or a record variable whose nc_type is not 1-6 is a
+    ``ValueError`` naming the type and the path, which the DAP server
+    answers with 400."""
+    import shutil
+    import urllib.error
+    import urllib.request
+
+    path = str(tmp_path / "t7.nc")
+    write_classic(path, dims=[("time", 0), ("x", 2)],
+                  variables=[("v", ("time", "x"),
+                              lambda r: np.array([1, r], np.int32))],
+                  record_dim="time", n_records=2, global_attrs={"flag": 3})
+    raw = open(path, "rb").read()
+    if where == "attribute":
+        typed = b"\x00\x00\x00\x04flag" + struct.pack(">I", 4)
+    else:  # v's type follows its name, dims and empty attribute list
+        typed = (b"\x00\x00\x00\x01v\x00\x00\x00"
+                 + struct.pack(">IIIIII", 2, 0, 1, 0, 0, 4))
+    assert raw.count(typed) == 1
+    open(path, "wb").write(
+        raw.replace(typed, typed[:-4] + struct.pack(">I", 7)))
+    with pytest.raises(ValueError, match=re.escape(path) + ".*nc_type 7"):
+        NcFile(path)
+    base, root = dap_root
+    shutil.copy(path, os.path.join(root, "t7.nc"))
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        urllib.request.urlopen(f"{base}/t7.nc.dds")
+    assert ei.value.code == 400
+    assert b"nc_type 7" in ei.value.read()
+
+
+# ---------------------------------------------------------------------------
+# The writer's bytes, pinned: a layout change fails here even when the
+# reader follows it
+# ---------------------------------------------------------------------------
+
+_GOLDEN_SPECS = {
+    "odd_record_vars": dict(
+        dims=[("time", 0), ("k", 3), ("m", 5)],
+        variables=[("fx", ("k",), np.array([1, -2, 3], np.int16)),
+                   ("a", ("time", "k"),
+                    lambda r: np.array([r, -r, 7], np.int16)),
+                   ("b", ("time", "m"),
+                    lambda r: np.arange(5, dtype=np.int8) - r)],
+        record_dim="time", n_records=3),
+    "lone_odd_record_var": dict(
+        dims=[("time", 0), ("k", 3)],
+        variables=[("fx", ("k",), np.array([4, 5, 6], np.int8)),
+                   ("a", ("time", "k"),
+                    lambda r: np.array([r, r + 1, -r], np.int16))],
+        record_dim="time", n_records=3),
+    "zero_records": dict(
+        dims=[("time", 0), ("k", 2)],
+        variables=[("kv", ("k",), np.array([1.0, 2.0])),
+                   ("r", ("time", "k"),
+                    lambda r: np.array([r, r], np.float32))],
+        record_dim="time", n_records=0),
+    "attributes": dict(
+        dims=[("k", 2)],
+        variables=[("kv", ("k",), np.array([1.0, 2.0]),
+                    {"units": "degC", "scale_factor": 0.5,
+                     "ids": [1, 2, 3]})],
+        global_attrs={"title": "odd title", "n": 7, "x": 2.5,
+                      "l": [1.5, 2.5], "li": [1, 2]}),
+}
+_GOLDEN_MD5 = {
+    "tiny_nc": "9065feafac0d611f7203fc1716ec5c0d",
+    "odd_record_vars": "4116fbcc2d203ae2e438bd78085b8d7c",
+    "lone_odd_record_var": "e5f4e40fe8b8e7a4638d6683a6ba95ff",
+    "zero_records": "7c060ced5476bd1d449b75558c85f34e",
+    "attributes": "ddb109ef7e3837a9ce0c5340c2bedd26",
+}
+
+
+@pytest.mark.parametrize("name", list(_GOLDEN_MD5))
+def test_write_classic_bytes_are_pinned(name, tiny_nc, tmp_path):
+    """``write_classic``'s output, byte for byte: two record variables,
+    two padded odd-sized ones, a lone odd-sized one (padding waived), a
+    zero-record file and attributes of every Python type it takes."""
+    import hashlib
+
+    path = tiny_nc
+    if name != "tiny_nc":
+        path = str(tmp_path / f"{name}.nc")
+        write_classic(path, **_GOLDEN_SPECS[name])
+    assert hashlib.md5(open(path, "rb").read()).hexdigest() == \
+        _GOLDEN_MD5[name]
+
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -1323,3 +1501,56 @@ def test_parse_constraint_inverts_encode_constraint():
         assert pgrids == {} and pseqs == {}
 
     check()
+
+
+def test_dap_selection_is_a_400_naming_it(tiny_nc, dap_root):
+    """The server evaluates projections only: a constraint with a
+    selection answers 400 naming it, not the unfiltered variable."""
+    import shutil
+    import urllib.error
+    import urllib.parse
+    import urllib.request
+
+    base, root = dap_root
+    shutil.copy(tiny_nc, os.path.join(root, "sel.nc"))
+    query = urllib.parse.quote("grid&grid>3")
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        urllib.request.urlopen(f"{base}/sel.nc.dods?{query}")
+    assert ei.value.code == 400
+    assert b"grid>3" in ei.value.read()
+
+
+def test_dap_bare_grid_name_ships_the_grid(coord_nc, grid_dap_root):
+    """A bare Grid name projects the Grid instance with its maps, as
+    ``sst[...]`` does, and the unconstrained ``.dods`` ships every
+    variable the way the ``.dds`` declares it."""
+    import urllib.request
+
+    from modeltracking_spark.sources.dap import _parse_dds
+
+    base, _root = grid_dap_root
+    local = NcFile(coord_nc)
+
+    def fetch(suffix):
+        with urllib.request.urlopen(f"{base}/coord.nc.{suffix}") as r:
+            return r.read()
+
+    got, grids = _decode_by_dds(fetch("dods?sst"))
+    assert list(got) == ["sst", "sst.time", "sst.y", "sst.x"]
+    assert grids == {"sst": {"array": "sst",
+                             "maps": ["sst.time", "sst.y", "sst.x"]}}
+    assert np.array_equal(got["sst"], local.read("sst"))
+    for dim in ("time", "y", "x"):
+        assert np.array_equal(got[f"sst.{dim}"], local.read(dim))
+
+    body = fetch("dods")
+    got, grids = _decode_by_dds(body)
+    _name, *declared, _seqs = _parse_dds(fetch("dds").decode())
+    _name, *shipped, _seqs = _parse_dds(
+        body.partition(b"\nData:\n")[0].decode())
+    assert shipped == declared  # the variables and the Grids
+    assert list(got) == ["time", "y", "x", "sst", "sst.time", "sst.y",
+                         "sst.x"]
+    assert "sst" in grids
+    for name, a in got.items():
+        assert np.array_equal(a, local.read(name.rpartition(".")[2])), name
