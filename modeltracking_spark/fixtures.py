@@ -8,6 +8,12 @@ trip, no nondeterminism. Edit it only in syntax both engines accept
 ``schemas.hycom_grid_schema`` and the reference's 4-D ``var[time,
 depth, lat, lon]`` model (``trackplot_hycom.py:110``), axis records
 included.
+
+The grid's geometry is stated once, as the coordinate vectors of
+:func:`grid_coords`, computed from the ``GRID_*`` constants. The
+fixture's axis records are derived from them
+(``schemas.axis_record``), and the ``hycom_grid`` DataSource's formula
+backend serves them as its ``time``/``depth``/``lat``/``lon`` arrays.
 """
 
 from __future__ import annotations
@@ -57,6 +63,21 @@ HYCOM_GRID_SQL = f"""
 """
 
 
+def grid_coords() -> dict:
+    """The fixture grid's coordinate vectors, ``{"time", "depth", "lat",
+    "lon"}`` as numpy arrays: node ``i`` of each axis is the value
+    :data:`HYCOM_GRID_SQL` gives index ``i`` (integer hours for
+    ``time``)."""
+    import numpy as np
+
+    return {
+        "time": np.arange(GRID_N_TIME) * GRID_TIME_STEP,
+        "depth": np.arange(GRID_N_DEPTH) * GRID_DEPTH_STEP,
+        "lat": GRID_LAT0 + np.arange(GRID_N_LAT) * GRID_LAT_STEP,
+        "lon": GRID_LON0 + np.arange(GRID_N_LON) * GRID_LON_STEP,
+    }
+
+
 def grid_fixture_fingerprint() -> str:
     """Short stable hash of the grid formula text (constants included) —
     materialized-fixture cache keys (the netCDF file in extras_q) embed it
@@ -70,15 +91,11 @@ def grid_fixture_fingerprint() -> str:
 def hycom_grid_fixture(spark: SparkSession) -> DataFrame:
     """Long-form HYCOM grid (~5.5M rows): :data:`HYCOM_GRID_SQL` run by
     Spark, so the engine and the DuckDB oracle read one text. ``.to``
-    gives it :func:`schemas.hycom_grid_schema` and with it the axis
-    records of ``time_hours``/``lat``/``lon``. At 100 TB this table would
-    be a parquet store partitioned by ``time_hours`` with (lat_idx,
-    lon_idx) bucketing; all downstream operators only assume the long
-    schema and its axis records."""
-    return spark.sql(HYCOM_GRID_SQL).to(
-        hycom_grid_schema(
-            (0, GRID_TIME_STEP),
-            (GRID_LAT0, GRID_LAT_STEP),
-            (GRID_LON0, GRID_LON_STEP),
-        )
-    )
+    gives it :func:`schemas.hycom_grid_schema` of :func:`grid_coords`,
+    and with it the axis records of ``time_hours``/``lat``/``lon``. At
+    100 TB this table would be a parquet store partitioned by
+    ``time_hours`` with (lat_idx, lon_idx) bucketing; all downstream
+    operators only assume the long schema and its axis records."""
+    coords = grid_coords()
+    return spark.sql(HYCOM_GRID_SQL).to(hycom_grid_schema(
+        None, coords["time"], coords["lat"], coords["lon"]))

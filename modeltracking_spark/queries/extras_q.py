@@ -61,8 +61,8 @@ def _grid_fixture_file(writer, prefix: str = "") -> str:
     """The formula grid written once by ``writer`` (a ``grid_source``
     netCDF writer) to a version-keyed path under /tmp. The key hashes the
     oracle formula TEXT plus the SOURCE of the Python generator/encoder
-    chain that actually produces the bytes (``_formula_physics`` ->
-    ``writer`` -> ``write_classic``), so a change to ANY of them gets a
+    chain that actually produces the bytes (``grid_coords`` and
+    ``_formula_physics`` -> ``writer`` -> ``write_classic``), so a change to ANY of them gets a
     fresh file instead of silently reusing a stale fixture; a pid-unique
     temp name + atomic rename makes concurrent writers (parallel test
     sessions, bench) race-safe — losers just re-publish identical bytes.
@@ -77,13 +77,14 @@ def _grid_fixture_file(writer, prefix: str = "") -> str:
         GRID_N_LAT,
         GRID_N_LON,
         GRID_N_TIME,
+        grid_coords,
         grid_fixture_fingerprint,
     )
     from modeltracking_spark.sources import grid_source as _gs
     from modeltracking_spark.sources import netcdf_classic as _nc
 
     gen_src = "".join(inspect.getsource(f) for f in (
-        _gs._formula_physics, _gs._FormulaGrid, _gs._box_mesh,
+        grid_coords, _gs._formula_physics, _gs._FormulaGrid, _gs._box_mesh,
         _gs._write_formula_grid, writer, _nc.write_classic,
     ))
     key = (

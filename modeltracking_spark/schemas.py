@@ -243,6 +243,47 @@ def axis_metadata(origin, step) -> dict:
     return {"axis": {"origin": origin, "step": step}}
 
 
+#: a lat/lon axis is uniform when every value lies within this fraction
+#: of a step of ``origin + i * step`` (float32-stored coordinates stay
+#: well inside it); a time axis must be exact
+_AXIS_TOL = 0.01
+#: significant digits kept of a lat/lon step: drops the rounding that
+#: ``(last - first) / (n - 1)`` adds to a decimal step such as 0.25
+_STEP_DIGITS = 10
+
+
+def axis_record(path: str | None, name: str, values) -> tuple:
+    """``(origin, step)`` of the coordinate vector ``values`` of axis
+    ``name`` of the grid at ``path`` (``None``: the formula fixture):
+    node ``i`` at ``origin + i * step``. A ``time`` axis is integer
+    hours and must be exact. An axis that is not uniform, or has fewer
+    than two values, raises a ``ValueError`` naming ``path`` and
+    ``name``."""
+    import numpy as np
+
+    a = np.asarray(values)
+    where = f"grid {path or '(formula fixture)'}: axis {name!r}"
+    if a.size < 2:
+        raise ValueError(f"{where} has {a.size} value(s); a uniform axis "
+                         "needs two to define its step")
+    if name == "time":
+        origin, step = int(a[0]), int(a[1] - a[0])
+        tol = 0
+    else:
+        origin = float(a[0])
+        step = float(f"{(a[-1] - a[0]) / (a.size - 1):.{_STEP_DIGITS}g}")
+        tol = _AXIS_TOL * abs(step)
+    off = np.abs(a - (origin + step * np.arange(a.size)))
+    if step == 0 or not off.max() <= tol:
+        i = int(np.argmax(off)) if step else 1
+        raise ValueError(
+            f"{where} is not uniform: value {a[i]!r} at index {i} is off "
+            f"origin + i * step = {origin!r} + {i} * {step!r}; the profile "
+            "operator snaps to uniform axes only"
+        )
+    return origin, step
+
+
 def grid_axis(schema: StructType, col: str) -> tuple:
     """``(origin, step)`` of the axis record on grid column ``col``, read
     from the schema alone (no Spark job). A column without the record
@@ -257,22 +298,27 @@ def grid_axis(schema: StructType, col: str) -> tuple:
     return axis["origin"], axis["step"]
 
 
-def hycom_grid_schema(time_axis, lat_axis, lon_axis) -> StructType:
+def hycom_grid_schema(path: str | None, time, lat, lon) -> StructType:
     """Long/tall relational encoding of the HYCOM 4-D grid
     var[time,depth,lat,lon] (trackplot_hycom.py:110; coord axes :98-100)
-    — FIXTURES.md table 5. Each ``*_axis`` is an ``(origin, step)`` pair,
-    attached to ``time_hours``/``lat``/``lon`` by :func:`axis_metadata`."""
+    — FIXTURES.md table 5. ``time``, ``lat`` and ``lon`` are the grid's
+    coordinate vectors; each one's :func:`axis_record` is attached to
+    ``time_hours``/``lat``/``lon`` by :func:`axis_metadata`."""
+    t_axis, lat_axis, lon_axis = (
+        axis_metadata(*axis_record(path, name, values))
+        for name, values in (("time", time), ("lat", lat), ("lon", lon))
+    )
     return StructType(
         [
             # hours since 2000-01-01 UTC
-            StructField("time_hours", LongType(), metadata=axis_metadata(*time_axis)),
+            StructField("time_hours", LongType(), metadata=t_axis),
             StructField("depth_idx", IntegerType()),
             StructField("depth_m", DoubleType()),
             StructField("lat_idx", IntegerType()),
             StructField("lon_idx", IntegerType()),
-            StructField("lat", DoubleType(), metadata=axis_metadata(*lat_axis)),
+            StructField("lat", DoubleType(), metadata=lat_axis),
             # [0, 360)
-            StructField("lon", DoubleType(), metadata=axis_metadata(*lon_axis)),
+            StructField("lon", DoubleType(), metadata=lon_axis),
             StructField("water_temp", DoubleType()),  # nullable; sentinel ≤ -4
             StructField("salinity", DoubleType()),
         ]

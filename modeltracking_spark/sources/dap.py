@@ -766,7 +766,8 @@ def make_dap_handler(root_dir: str, grid_mode: bool = False,
     those variables in that order. Every projected array is one
     ``NcFile.read_strided`` (record-slice reads only: the server never
     materializes a record variable it isn't shipping). A request with
-    no constraint ships every variable whole.
+    no constraint ships the whole dataset as the ``.dds`` declares it:
+    every variable whole, each Grid as its Grid, then every Sequence.
 
     ``grid_mode`` serves coordinate-backed variables as DAP Grid
     constructors, the THREDDS shape: the table gains the Grids and
@@ -782,8 +783,9 @@ def make_dap_handler(root_dir: str, grid_mode: bool = False,
 
     def dods(nc, fname: str, seqs: dict, query: str) -> bytes:
         served = _served(nc, grid_mode, seqs)
+        # no constraint: the whole dataset, every variable and Sequence
         slabs, pgrids, pseqs = parse_constraint(
-            served, query or ",".join(nc.vars))
+            served, query or ",".join([*nc.vars, *served[2]]))
         pvars = {}
         for key, ranges in slabs.items():
             typ, dims = served[0][key]

@@ -29,29 +29,37 @@ contract — ``read(name)``, ``read_strided(var, ranges)``,
 - a ``dap+http://`` path fetches each run of steps in one hyperslab
   request per physics variable.
 
-The grid geometry comes from the dataset. ``schema()`` reads the
-``time``, ``depth``, ``lat`` and ``lon`` coordinate vectors once per
-``.load()`` and attaches each of the ``time``/``lat``/``lon`` axes to
-its column as an axis record, ``{origin, step}``
-(``schemas.hycom_grid_schema``); the profile operator snaps track points
-with it. A non-uniform axis (or one with fewer than two values) raises
-a ``ValueError`` at load, naming the path and the axis. The vectors stay
-on the DataSource instance, which pyspark pickles to the planner, so
-``reader()`` reuses them and a DAP dataset's metadata requests are made
-once per load, not again per plan. A reader built without ``schema()``
-(a user-given schema, or a direct ``reader()`` call) reads them itself.
+The grid geometry comes from the dataset, whatever the backend: the
+formula backend's coordinate vectors are ``fixtures.grid_coords``, the
+ones ``hycom_grid_fixture`` derives its schema from. ``schema()`` reads
+the ``time``, ``depth``, ``lat`` and ``lon`` vectors once per
+``.load()`` and hands ``time``/``lat``/``lon`` to
+``schemas.hycom_grid_schema``, which derives each axis record,
+``{origin, step}`` (``schemas.axis_record``), and attaches it to its
+column; the profile operator snaps track points with it. A non-uniform
+axis (or one with fewer than two values) raises a ``ValueError`` at
+load, naming the path and the axis. The vectors stay on the DataSource
+instance, which pyspark pickles to the planner, so ``reader()`` reuses
+them and a DAP dataset's metadata requests are made once per load, not
+again per plan. A reader built without ``schema()`` (a user-given
+schema, or a direct ``reader()`` call) reads them itself.
 
-With ``pushdown=true``, comparisons on ``time_hours`` prune steps before
-any task launches, and comparisons on ``depth_idx``/``lat_idx``/
-``lon_idx`` narrow every step to an index box: the DAP backend asks the
-server for the box only, the file backend cuts it from the record it
-reads, the formula backend computes only the box. Emitted ``*_idx``
-columns keep full-grid numbering.
+With ``pushdown=true``, ``pushFilters`` narrows one window per axis:
+the kept time steps, and one contiguous index range for each of
+``depth_idx``/``lat_idx``/``lon_idx``. Each pushed comparison is one
+test on the axis's values (the dataset's hours for ``time_hours``, the
+index itself for an index column) and keeps the window's indices whose
+value passes it. ``partitions()`` plans only the kept steps, before any
+task launches, and every step is cut to the index box: the DAP backend
+asks the server for the box only, the file backend cuts it from the
+record it reads, the formula backend computes only the box. Emitted
+``*_idx`` columns keep full-grid numbering.
 """
 
 from __future__ import annotations
 
 import math
+import operator
 import os
 
 from pyspark.sql.datasource import (
@@ -67,29 +75,11 @@ from pyspark.sql.datasource import (
 )
 
 from modeltracking_spark.fixtures import (
-    GRID_DEPTH_STEP,
-    GRID_LAT0,
-    GRID_LAT_STEP,
-    GRID_LON0,
-    GRID_LON_STEP,
-    GRID_N_DEPTH,
-    GRID_N_LAT,
-    GRID_N_LON,
     GRID_N_TIME,
     GRID_SENTINEL,
-    GRID_TIME_STEP,
+    grid_coords,
 )
 from modeltracking_spark.schemas import hycom_grid_schema
-
-#: the coordinate vector behind each axis record, in schema order
-_AXIS_VARS = ("time", "lat", "lon")
-#: a lat/lon axis is uniform when every value lies within this fraction
-#: of a step of ``origin + i * step`` (float32-stored coordinates stay
-#: well inside it); a time axis must be exact
-_AXIS_TOL = 0.01
-#: significant digits kept of a lat/lon step: drops the rounding that
-#: ``(last - first) / (n - 1)`` adds to a decimal step such as 0.25
-_STEP_DIGITS = 10
 
 
 def _physics_block(nc, var: str, t0: int, t1: int, box):
@@ -112,53 +102,20 @@ def _physics_block(nc, var: str, t0: int, t1: int, box):
     return a if a is raw else np.where(np.isnan(a), GRID_SENTINEL, a)
 
 
-def _axis_record(path: str | None, name: str, values) -> tuple:
-    """``(origin, step)`` of the coordinate vector ``values``: node ``i``
-    at ``origin + i * step``. An axis that is not uniform, or has fewer
-    than two values, raises a ``ValueError`` naming ``path`` and ``name``."""
-    import numpy as np
-
-    a = np.asarray(values)
-    where = f"grid {path or '(formula fixture)'}: axis {name!r}"
-    if a.size < 2:
-        raise ValueError(f"{where} has {a.size} value(s); a uniform axis "
-                         "needs two to define its step")
-    if name == "time":
-        origin, step = int(a[0]), int(a[1] - a[0])
-        tol = 0
-    else:
-        origin = float(a[0])
-        step = float(f"{(a[-1] - a[0]) / (a.size - 1):.{_STEP_DIGITS}g}")
-        tol = _AXIS_TOL * abs(step)
-    off = np.abs(a - (origin + step * np.arange(a.size)))
-    if step == 0 or not off.max() <= tol:
-        i = int(np.argmax(off)) if step else 1
-        raise ValueError(
-            f"{where} is not uniform: value {a[i]!r} at index {i} is off "
-            f"origin + i * step = {origin!r} + {i} * {step!r}; the profile "
-            "operator snaps to uniform axes only"
-        )
-    return origin, step
-
-
 def _dataset_constants(path: str | None) -> dict:
-    """The per-dataset constants, read once per ``.load()``: the time axis,
-    the coordinate vectors, the axis record of ``time_hours``/``lat``/
-    ``lon`` (:func:`_axis_record`), plus the closed dataset a task
-    reuses — the parsed header of a file, the parsed DDS/DAS of a
-    ``dap+http://`` backend, or the formula grid. They ride the pickled
-    reader into every task, so a task makes only the physics reads: with
-    many concurrent tasks against one DAP server, metadata round trips
-    queued on the server were the query's wall clock."""
+    """The per-dataset constants, read once per ``.load()``: the
+    coordinate vectors (``time`` as integer hours), plus the closed
+    dataset a task reuses — the parsed header of a file, the parsed
+    DDS/DAS of a ``dap+http://`` backend, or the formula grid. They ride
+    the pickled reader into every task, so a task makes only the physics
+    reads: with many concurrent tasks against one DAP server, metadata
+    round trips queued on the server were the query's wall clock."""
     from modeltracking_spark.sources.dap import open_nc_or_dap
 
     nc = _FormulaGrid() if path is None else open_nc_or_dap(path)
     try:
         shared = {v: nc.read(v) for v in ("time", "depth", "lat", "lon")}
         shared["time"] = [int(v) for v in shared["time"]]
-        shared["axes"] = tuple(
-            _axis_record(path, v, shared[v]) for v in _AXIS_VARS
-        )
         nc.var_attrs("water_temp")  # a DAP dataset caches its .das here
     finally:
         nc.close()
@@ -194,18 +151,6 @@ def _read_steps(steps, shared: dict, box):
                                  temp[k], sal[k], box)
     finally:
         nc.close()
-
-
-def _step_arrays(path: str | None, ti: int, box=None):
-    """Step ``ti`` of the grid at ``path`` (``None``: the formula
-    fixture), cut to ``box`` (default: the whole grid), as numpy
-    columns."""
-    shared = _dataset_constants(path)
-    return next(_read_steps([ti], shared, box or _full_box(shared)))
-
-
-def _full_box(shared: dict):
-    return tuple((0, len(shared[k]) - 1) for k in ("depth", "lat", "lon"))
 
 
 def _box_mesh(box):
@@ -248,14 +193,19 @@ def _write_formula_grid(path: str, n_time: int, physics) -> None:
     so the full hypercube never exists in memory): the four coordinate
     variables, then one record variable per ``(name, encode, attrs)`` of
     ``physics``, where ``encode`` maps the float64 (depth, lat, lon) step
-    to the stored array."""
+    to the stored array. Each record's time is the time vector's; an
+    ``n_time`` past its end raises a ``ValueError``."""
     import numpy as np
 
     from modeltracking_spark.sources.netcdf_classic import write_classic
 
     grid = _FormulaGrid()
+    time = grid.read("time")
+    if n_time > len(time):
+        raise ValueError(f"the formula grid has {len(time)} time steps; "
+                         f"n_time={n_time} is past its end")
     coords = {v: grid.read(v) for v in ("depth", "lat", "lon")}
-    full = _full_box(coords)
+    full = [(0, len(a) - 1) for a in coords.values()]
 
     def record(var, encode):
         return lambda r: encode(grid.read_strided(var, [(r, r), *full])[0])
@@ -264,8 +214,7 @@ def _write_formula_grid(path: str, n_time: int, physics) -> None:
         path,
         dims=[("time", 0), *((v, len(a)) for v, a in coords.items())],
         variables=[
-            ("time", ("time",),
-             lambda r: np.array(r * GRID_TIME_STEP, dtype=np.int32)),
+            ("time", ("time",), lambda r: np.array(time[r], dtype=np.int32)),
             *((v, (v,), a) for v, a in coords.items()),
             *((var, ("time", *coords), record(var, encode), attrs)
               for var, encode, attrs in physics),
@@ -331,24 +280,14 @@ def _formula_physics(var: str, ti: int, d, la, lo):
 
 class _FormulaGrid:
     """The formula fixture read like a dataset, so the reader has one path
-    for every backend: ``read`` gives a coordinate vector and
-    ``read_strided`` computes one physics variable over a run of steps
-    and an index box, as a DAP dataset would fetch it. Its values are
-    unpacked, so it has no CF attributes, and nothing to close."""
-
-    #: (length, origin, step) of each coordinate vector
-    AXES = {
-        "time": (GRID_N_TIME, 0, GRID_TIME_STEP),
-        "depth": (GRID_N_DEPTH, 0.0, GRID_DEPTH_STEP),
-        "lat": (GRID_N_LAT, GRID_LAT0, GRID_LAT_STEP),
-        "lon": (GRID_N_LON, GRID_LON0, GRID_LON_STEP),
-    }
+    for every backend: ``read`` gives a coordinate vector of
+    :func:`fixtures.grid_coords` and ``read_strided`` computes one
+    physics variable over a run of steps and an index box, as a DAP
+    dataset would fetch it. Its values are unpacked, so it has no CF
+    attributes, and nothing to close."""
 
     def read(self, name: str):
-        import numpy as np
-
-        n, origin, step = self.AXES[name]
-        return origin + np.arange(n) * step
+        return grid_coords()[name]
 
     def read_strided(self, var: str, ranges):
         import numpy as np
@@ -366,45 +305,33 @@ class _FormulaGrid:
         pass
 
 
-#: comparisons the pushdown reader satisfies exactly on an integer column
-_COMPARISONS = (
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    LessThan,
-    LessThanOrEqual,
-)
-#: filters the reader can satisfy by time-step pruning
-_TIME_FILTERS = _COMPARISONS + (In,)
+#: the comparisons ``pushFilters`` takes, each as the test it puts on
+#: one axis value
+_TESTS = {
+    EqualTo: operator.eq,
+    GreaterThan: operator.gt,
+    GreaterThanOrEqual: operator.ge,
+    LessThan: operator.lt,
+    LessThanOrEqual: operator.le,
+    In: lambda value, values: value in values,
+}
 #: index columns whose comparisons narrow every step to a (depth, lat,
 #: lon) box, in box order
 _BOX_COLS = ("depth_idx", "lat_idx", "lon_idx")
 
 
-def _time_filter_match(f, th: int) -> bool:
-    if isinstance(f, EqualTo):
-        return th == f.value
-    if isinstance(f, In):
-        return th in f.value
-    if isinstance(f, GreaterThan):
-        return th > f.value
-    if isinstance(f, GreaterThanOrEqual):
-        return th >= f.value
-    if isinstance(f, LessThan):
-        return th < f.value
-    return th <= f.value  # LessThanOrEqual
-
-
-def _narrow(bounds: tuple[int, int], f) -> tuple[int, int]:
-    """Intersect the inclusive index range ``bounds`` with comparison
-    ``f``; an empty result has lo > hi."""
-    lo, hi = bounds
-    v = f.value
-    if isinstance(f, (EqualTo, GreaterThan, GreaterThanOrEqual)):
-        lo = max(lo, v + 1 if isinstance(f, GreaterThan) else v)
-    if isinstance(f, (EqualTo, LessThan, LessThanOrEqual)):
-        hi = min(hi, v - 1 if isinstance(f, LessThan) else v)
-    return lo, hi
+def _axis_of(f) -> str | None:
+    """The column whose axis window filter ``f`` narrows: ``time_hours``
+    for any comparison or ``IN`` on it, an index column for an integer
+    comparison on it. ``None``: Spark evaluates ``f``."""
+    col = getattr(f, "attribute", ())
+    if type(f) not in _TESTS or len(col) != 1:
+        return None
+    if col[0] == "time_hours":
+        return col[0]
+    if col[0] in _BOX_COLS and type(f) is not In and type(f.value) is int:
+        return col[0]
+    return None
 
 
 #: grid cells one read partition should carry before the next one pays.
@@ -435,30 +362,26 @@ def _pack(steps: list[int], n: int) -> list[list[int]]:
 
 class HycomGridReader(DataSourceReader):
     def __init__(self, shared: dict):
-        #: the dataset constants of :func:`_dataset_constants`: pushed
-        #: filters prune against the dataset's own time axis
+        #: the dataset constants of :func:`_dataset_constants`
         self._shared = shared
-        self._time_filters: list = []
-        #: inclusive index range per _BOX_COLS column; narrowed by pushdown
-        self._box = dict(zip(_BOX_COLS, _full_box(shared)))
+        #: the value of each index of each axis: the dataset's hours for
+        #: time_hours, the index itself for an index column
+        self._values = {"time_hours": shared["time"], **{
+            c: range(len(shared[c.removesuffix("_idx")])) for c in _BOX_COLS}}
+        #: the kept indices of each axis, narrowed by pushdown: time steps,
+        #: and a contiguous range of each index column
+        self._keep = {c: range(len(v)) for c, v in self._values.items()}
 
     def partitions(self):
-        # pushed time filters prune steps before any task launches; the
-        # kept steps are packed into at most one partition per planning
-        # core and per _CELLS_PER_TASK cells of the pushed box, so a
-        # storm's window is one task and a whole-grid scan spreads over
-        # the cores
-        keep = [
-            t
-            for t, hours in enumerate(self._shared["time"])
-            if all(_time_filter_match(f, hours) for f in self._time_filters)
-        ]
-        if any(lo > hi for lo, hi in self._box.values()):
-            keep = []
-        box_cells = math.prod(hi - lo + 1 for lo, hi in self._box.values())
-        n = min(len(keep), _planning_cores(),
-                math.ceil(len(keep) * box_cells / _CELLS_PER_TASK))
-        return [InputPartition(tuple(c)) for c in _pack(keep, n)]
+        # the kept steps are packed into at most one partition per
+        # planning core and per _CELLS_PER_TASK cells of the index box,
+        # so a storm's window is one task and a whole-grid scan spreads
+        # over the cores; an empty window plans none
+        steps = list(self._keep["time_hours"])
+        cells = len(steps) * math.prod(len(self._keep[c]) for c in _BOX_COLS)
+        n = min(len(steps), _planning_cores(),
+                math.ceil(cells / _CELLS_PER_TASK))
+        return [InputPartition(tuple(c)) for c in _pack(steps, n)]
 
     def read(self, partition):
         import pyarrow as pa
@@ -466,7 +389,7 @@ class HycomGridReader(DataSourceReader):
         # pyspark hands read(None) to a reader whose partitions() is empty
         if partition is None:
             return
-        box = tuple(self._box[c] for c in _BOX_COLS)
+        box = tuple((self._keep[c][0], self._keep[c][-1]) for c in _BOX_COLS)
         for cols in _read_steps(partition.value, self._shared, box):
             yield pa.RecordBatch.from_pydict(cols)
 
@@ -498,25 +421,25 @@ class HycomGridPushdownReader(HycomGridReader):
     reuse."""
 
     def pushFilters(self, filters):
-        """Comparisons on ``time_hours`` (and ``IN`` lists) prune time
-        steps: every row of a step shares one time, so pruning the step
-        list satisfies them exactly. Integer comparisons on
-        ``depth_idx``/``lat_idx``/``lon_idx`` narrow the inclusive index
-        box every step is cut to, which satisfies them exactly too.
-        Everything else is handed back for Spark to evaluate. This is the
+        """Comparisons on ``time_hours`` (and ``IN`` lists) keep the time
+        steps whose hours pass them: every row of a step shares one
+        time, so they hold exactly. Integer comparisons on
+        ``depth_idx``/``lat_idx``/``lon_idx`` keep the indices that pass
+        them, a contiguous range every step is cut to, which satisfies
+        them exactly too. Everything else (an ``IN`` on an index column
+        among it) is handed back for Spark to evaluate. This is the
         Python-DataSource analog of the reference's server-side DAP
         slicing (``trackplot_hycom.py:110`` ships index ranges to the
         THREDDS server).
         """
         for f in filters:
-            col = getattr(f, "attribute", ())
-            if isinstance(f, _TIME_FILTERS) and col == ("time_hours",):
-                self._time_filters.append(f)
-            elif (isinstance(f, _COMPARISONS) and len(col) == 1
-                  and col[0] in self._box and type(f.value) is int):
-                self._box[col[0]] = _narrow(self._box[col[0]], f)
-            else:
+            col = _axis_of(f)
+            if col is None:
                 yield f
+                continue
+            test, values = _TESTS[type(f)], self._values[col]
+            self._keep[col] = [
+                i for i in self._keep[col] if test(values[i], f.value)]
 
 
 class HycomGridDataSource(DataSource):
@@ -531,8 +454,10 @@ class HycomGridDataSource(DataSource):
         # the coordinate vectors are read here, once per .load(); the
         # instance is pickled to the planner with them, so reader()
         # reuses them instead of asking the dataset again
-        self._shared = _dataset_constants(self.options.get("path") or None)
-        return hycom_grid_schema(*self._shared["axes"])
+        path = self.options.get("path") or None
+        self._shared = _dataset_constants(path)
+        return hycom_grid_schema(path, *(self._shared[v]
+                                         for v in ("time", "lat", "lon")))
 
     def reader(self, schema):
         shared = getattr(self, "_shared", None)

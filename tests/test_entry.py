@@ -21,11 +21,12 @@ from modeltracking_spark.fixtures import (
     GRID_N_TIME,
     GRID_TIME_STEP,
     HYCOM_GRID_SQL,
+    grid_coords,
     hycom_grid_fixture,
 )
 from modeltracking_spark.operators.aggregates import linear_fit
 from modeltracking_spark.queries.timegeo import TRACK_SQL, synthetic_track
-from modeltracking_spark.schemas import hycom_grid_schema
+from modeltracking_spark.schemas import axis_metadata, hycom_grid_schema
 from perfbench import reference
 
 
@@ -74,11 +75,15 @@ def test_fixtures_are_their_oracle_sql(spark):
         ).fetch_arrow_table()
         duck_track = con.execute(TRACK_SQL).fetch_arrow_table()
     grid = hycom_grid_fixture(spark)
-    schema = hycom_grid_schema(
-        (0, GRID_TIME_STEP),
-        (GRID_LAT0, GRID_LAT_STEP),
-        (GRID_LON0, GRID_LON_STEP),
-    )
+    coords = grid_coords()
+    schema = hycom_grid_schema(None, coords["time"], coords["lat"],
+                               coords["lon"])
+    # the records derived from the fixture's vectors are its constants
+    assert [schema[c].metadata for c in ("time_hours", "lat", "lon")] == [
+        axis_metadata(0, GRID_TIME_STEP),
+        axis_metadata(GRID_LAT0, GRID_LAT_STEP),
+        axis_metadata(GRID_LON0, GRID_LON_STEP),
+    ]
     # names, types and axis records as declared; ``.to`` keeps a column
     # the SQL never makes NULL as NOT NULL, which the schema allows
     assert [(f.name, f.dataType, f.metadata) for f in grid.schema] == [

@@ -27,7 +27,8 @@ from modeltracking_spark.fixtures import (
 from modeltracking_spark.operators.profile import profile_along_track
 from modeltracking_spark.sources.grid_source import (
     HycomGridDataSource,
-    _step_arrays,
+    _FormulaGrid,
+    write_grid_netcdf,
 )
 from modeltracking_spark.sources.netcdf_classic import write_classic
 from perfbench import reference
@@ -44,7 +45,7 @@ T_OFF, LAT_OFF, LON_OFF = 8761, 7.5, -33.0
 def _write_grid(path, lat=None):
     """The fixture physics on axes translated by the offsets above; ``lat``
     replaces the latitude vector."""
-    shape = (GRID_N_DEPTH, GRID_N_LAT, GRID_N_LON)
+    box = [(0, n - 1) for n in (GRID_N_DEPTH, GRID_N_LAT, GRID_N_LON)]
     if lat is None:
         lat = GRID_LAT0 + LAT_OFF + np.arange(GRID_N_LAT) * GRID_LAT_STEP
     write_classic(
@@ -59,7 +60,8 @@ def _write_grid(path, lat=None):
             ("lon", ("lon",),
              GRID_LON0 + LON_OFF + np.arange(GRID_N_LON) * GRID_LON_STEP),
             *((var, ("time", "depth", "lat", "lon"),
-               lambda r, var=var: _step_arrays(None, r)[var].reshape(shape))
+               lambda r, var=var: _FormulaGrid().read_strided(
+                   var, [(r, r), *box])[0])
               for var in ("water_temp", "salinity")),
         ],
         record_dim="time",
@@ -163,10 +165,30 @@ def test_zero_record_grid_fails_at_load(spark, shifted):
 
 
 def test_formula_backend_carries_the_fixture_axes(spark, shifted):
-    ds, fixture = _grid(spark), hycom_grid_fixture(spark)
+    """The fixture's schema is the ``hycom_grid`` DataSource's, axis
+    records included, whether the DataSource computes the grid, reads it
+    from a ``write_grid_netcdf`` file or fetches that file over DAP: all
+    derive the records from one set of coordinate vectors."""
+    fixture = hycom_grid_fixture(spark)
+    write_grid_netcdf(os.path.join(shifted["root"], "fixture.nc"), n_time=2)
+    backends = {
+        "formula": {},
+        "file": {"path": os.path.join(shifted["root"], "fixture.nc")},
+        "dap": {"path": shifted["dap"]["path"].replace("shifted.nc",
+                                                       "fixture.nc")},
+    }
     for col in ("time_hours", "lat", "lon"):
-        assert ds.schema[col].metadata == fixture.schema[col].metadata
-        assert ds.schema[col].metadata["axis"]
+        assert fixture.schema[col].metadata["axis"]
+    for backend, options in backends.items():
+        ds = _grid(spark, **options)
+        for col in ("time_hours", "lat", "lon"):
+            assert ds.schema[col].metadata == fixture.schema[col].metadata
+            assert ds.schema[col].metadata["axis"]
+        # the whole schema: names, types and metadata; ``.to`` keeps a
+        # column the SQL never makes NULL as NOT NULL, which it allows
+        assert [(f.name, f.dataType, f.metadata) for f in ds.schema] == [
+            (f.name, f.dataType, f.metadata) for f in fixture.schema
+        ], backend
 
 
 def test_grid_without_axis_record_raises_before_any_job(spark):

@@ -169,8 +169,15 @@ def test_index_box_pushdown_is_exact(spark, grid_ds):
         LessThan(("lon_idx",), 2.5),
     ]))
     assert left == [LessThan(("lon_idx",), 2.5)]
-    assert reader._box == {"depth_idx": (3, 3), "lat_idx": (77, 80),
-                           "lon_idx": (0, 1)}
+    # every step is kept, cut to the box: one small task reads them all
+    planned = reader.partitions()
+    assert [list(p.value) for p in planned] == [list(range(GRID_N_TIME))]
+    batches = [b for p in planned for b in reader.read(p)]
+    assert len(batches) == GRID_N_TIME
+    for col, want in (("depth_idx", [3]), ("lat_idx", [77, 78, 79, 80]),
+                      ("lon_idx", [0, 1])):
+        assert sorted({v for b in batches
+                       for v in b.column(col).to_pylist()}) == want, col
     pred = ("time_hours IN (0, 81) AND depth_idx = 3 AND lat_idx > 76 "
             "AND lon_idx < 2")
     got = sorted(map(tuple, _pushdown(spark).where(pred).collect()))
@@ -178,6 +185,62 @@ def test_index_box_pushdown_is_exact(spark, grid_ds):
     assert got == want and len(got) == 2 * 4 * 2
     # an empty box plans no partitions and reads nothing
     assert _pushdown(spark).where("lat_idx > 80").count() == 0
+
+
+def _same_rows_as_fixture(spark, pred):
+    """The pushdown reader's rows for ``pred``, checked against the
+    fixture's."""
+    got = sorted(map(tuple, _pushdown(spark).where(pred).collect()))
+    want = sorted(map(tuple, hycom_grid_fixture(spark).where(pred).collect()))
+    assert got == want, pred
+    return got
+
+
+def test_index_in_list_is_handed_back(spark, grid_ds):
+    """A non-contiguous ``IN`` on an index column is no index range: it
+    goes back to Spark, the box stays whole, and the rows are exact."""
+    from pyspark.sql.datasource import EqualTo, In
+
+    reader = HycomGridDataSource({"pushdown": "true"}).reader(None)
+    lat_in = In(("lat_idx",), (3, 7))
+    assert list(reader.pushFilters([lat_in, EqualTo(("time_hours",), 9)])) \
+        == [lat_in]
+    (part,) = reader.partitions()
+    (batch,) = reader.read(part)
+    assert batch.num_rows == STEP_CELLS
+    got = _same_rows_as_fixture(
+        spark, "time_hours = 9 AND depth_idx = 0 AND lat_idx IN (3, 7)")
+    assert len(got) == 2 * GRID_N_LON
+
+
+def test_contradictory_time_bounds_plan_nothing(spark, grid_ds):
+    from pyspark.sql.datasource import GreaterThan, LessThan
+
+    reader = HycomGridDataSource({"pushdown": "true"}).reader(None)
+    assert list(reader.pushFilters([GreaterThan(("time_hours",), 60),
+                                    LessThan(("time_hours",), 30)])) == []
+    assert reader.partitions() == []
+    df = _pushdown(spark).where("time_hours > 60 AND time_hours < 30")
+    assert df.count() == 0
+    assert _same_rows_as_fixture(
+        spark, "time_hours > 60 AND time_hours < 30") == []
+
+
+def test_time_in_list_and_range_keep_their_intersection(spark, grid_ds):
+    from pyspark.sql.datasource import GreaterThanOrEqual, In, LessThan
+
+    reader = HycomGridDataSource({"pushdown": "true"}).reader(None)
+    assert list(reader.pushFilters([
+        In(("time_hours",), (3, 12, 15, 30)),
+        GreaterThanOrEqual(("time_hours",), 12),
+        LessThan(("time_hours",), 30),
+    ])) == []
+    assert [list(p.value) for p in reader.partitions()] == [[4, 5]]
+    pred = ("time_hours IN (3, 12, 15, 30) AND time_hours >= 12 "
+            "AND time_hours < 30 AND lat_idx < 2 AND lon_idx < 2")
+    assert _steps_read(_pushdown(spark).where(pred)) == [12, 15]
+    got = _same_rows_as_fixture(spark, pred)
+    assert len(got) == 2 * GRID_N_DEPTH * 2 * 2
 
 
 # ---------------------------------------------------------------------------

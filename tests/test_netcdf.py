@@ -12,10 +12,10 @@ import threading
 import numpy as np
 import pytest
 
-from modeltracking_spark.fixtures import GRID_TIME_STEP
+from modeltracking_spark.fixtures import GRID_N_TIME, GRID_TIME_STEP
 from modeltracking_spark.sources.grid_source import (
     _CELLS_PER_TASK,
-    _step_arrays,
+    HycomGridDataSource,
     write_grid_netcdf,
 )
 from modeltracking_spark.sources.netcdf_classic import (
@@ -23,6 +23,16 @@ from modeltracking_spark.sources.netcdf_classic import (
     cf_unpack,
     write_classic,
 )
+
+
+def _step_cols(path, ti):
+    """Step ``ti`` of the grid at ``path`` (``None``: the formula
+    fixture), as the ``hycom_grid`` reader emits it: numpy columns."""
+    from pyspark.sql.datasource import InputPartition
+
+    reader = HycomGridDataSource({"path": path or ""}).reader(None)
+    (batch,) = reader.read(InputPartition((ti,)))
+    return {k: batch.column(k).to_numpy() for k in batch.schema.names}
 
 
 @pytest.fixture(scope="module")
@@ -106,11 +116,20 @@ def test_grid_netcdf_matches_formula(tmp_path):
     path = str(tmp_path / "grid.nc")
     write_grid_netcdf(path, n_time=3)
     for ti in (0, 2):
-        a = _step_arrays(None, ti)
-        b = _step_arrays(path, ti)
+        a = _step_cols(None, ti)
+        b = _step_cols(path, ti)
         assert set(a) == set(b)
         for k in a:
             assert np.array_equal(a[k], b[k]), (ti, k)
+
+
+def test_grid_netcdf_stops_at_the_time_axis(tmp_path):
+    """The writer takes each record's time from the formula grid's time
+    vector, so it cannot write past its end: it says where that is."""
+    path = tmp_path / "long.nc"
+    with pytest.raises(ValueError, match=f"has {GRID_N_TIME} time steps"):
+        write_grid_netcdf(str(path), n_time=GRID_N_TIME + 1)
+    assert not path.exists()
 
 
 def test_file_task_reads_no_header(tmp_path, monkeypatch):
@@ -139,7 +158,7 @@ def test_file_task_reads_no_header(tmp_path, monkeypatch):
     monkeypatch.undo()
     first_begin = min(v.begin for v in NcFile(p).vars.values())
     assert offsets and min(offsets) >= first_begin
-    want = _step_arrays(p, part.value[0])
+    want = _step_cols(p, part.value[0])
     for k, col in want.items():
         assert np.array_equal(batch.column(k).to_numpy(), col), k
 
@@ -745,7 +764,6 @@ def test_packed_grid_scan_is_bit_exact(tmp_path):
     are exact multiples of 0.1, p*0.1(+30.0) reproduces the doubles,
     and missing comes back as the pipeline sentinel."""
     from modeltracking_spark.sources.grid_source import (
-        _step_arrays,
         write_grid_netcdf_packed,
     )
 
@@ -757,8 +775,8 @@ def test_packed_grid_scan_is_bit_exact(tmp_path):
     raw = f.read_slice("water_temp", 1)
     assert raw.dtype == np.int16  # genuinely packed on disk
     for ti in (0, 2):
-        a = _step_arrays(None, ti)
-        b = _step_arrays(p, ti)
+        a = _step_cols(None, ti)
+        b = _step_cols(p, ti)
         for k in a:
             assert np.array_equal(a[k], b[k]), (ti, k)
 
@@ -775,7 +793,6 @@ def test_dap_packed_grid_parity_with_file(tmp_path, dap_root):
 
     from modeltracking_spark.sources.dap import DapDataset
     from modeltracking_spark.sources.grid_source import (
-        _step_arrays,
         write_grid_netcdf_packed,
     )
 
@@ -798,8 +815,8 @@ def test_dap_packed_grid_parity_with_file(tmp_path, dap_root):
 
     # partition-level parity: the grid reader resolves CF attrs through
     # var_attrs on both dataset kinds
-    pa = _step_arrays(p, 2)
-    pb = _step_arrays(f"dap+{base}/packed_dap.nc", 2)
+    pa = _step_cols(p, 2)
+    pb = _step_cols(f"dap+{base}/packed_dap.nc", 2)
     for k in pa:
         assert np.array_equal(pa[k], pb[k]), k
     # the DAS fetch is cached: attrs for both vars cost one .das trip
@@ -1335,12 +1352,15 @@ def test_dap_byte_is_unsigned(dap_root, tmp_path):
 def _decode_by_dds(body: bytes):
     """A ``.dods`` reply decoded the way a DDS-driven client reads it:
     ``_parse_dds`` of the header, then each variable's XDR in that
-    order -> ({name: array}, grids)."""
+    order, then each Sequence's stream (DAP 2.0 §7.2.3: a 0x5A000000
+    marker before every instance, its columns as XDR scalars, 0xA5000000
+    after the last) -> ({name: array, or {col: [values]} for a
+    Sequence}, grids)."""
     from modeltracking_spark.sources.dap import _parse_dds, _xdr_decode
 
     dds, sep, _ = body.partition(b"\nData:\n")
     assert sep
-    _name, variables, grids, _seqs = _parse_dds(dds.decode())
+    _name, variables, grids, seqs = _parse_dds(dds.decode())
     off = len(dds) + len(sep)
     out = {}
     for name, (typ, dims) in variables.items():
@@ -1348,6 +1368,17 @@ def _decode_by_dds(body: bytes):
         vals, off = _xdr_decode(body, off, typ,
                                 math.prod(shape) if dims else None)
         out[name] = np.asarray(vals).reshape(shape)
+    for name, cols in seqs.items():
+        out[name] = {col: [] for col, _ in cols}
+        while True:
+            (marker,) = struct.unpack_from(">I", body, off)
+            off += 4
+            if marker == 0xA5000000:
+                break
+            assert marker == 0x5A000000, hex(marker)
+            for col, typ in cols:
+                val, off = _xdr_decode(body, off, typ, None)
+                out[name][col].append(val)
     assert off == len(body)
     return out, grids
 
@@ -1522,8 +1553,9 @@ def test_dap_selection_is_a_400_naming_it(tiny_nc, dap_root):
 
 def test_dap_bare_grid_name_ships_the_grid(coord_nc, grid_dap_root):
     """A bare Grid name projects the Grid instance with its maps, as
-    ``sst[...]`` does, and the unconstrained ``.dods`` ships every
-    variable the way the ``.dds`` declares it."""
+    ``sst[...]`` does, and the unconstrained ``.dods`` ships the whole
+    dataset the way the ``.dds`` declares it: every variable, each Grid
+    as its Grid, then every Sequence."""
     import urllib.request
 
     from modeltracking_spark.sources.dap import _parse_dds
@@ -1545,12 +1577,15 @@ def test_dap_bare_grid_name_ships_the_grid(coord_nc, grid_dap_root):
 
     body = fetch("dods")
     got, grids = _decode_by_dds(body)
-    _name, *declared, _seqs = _parse_dds(fetch("dds").decode())
-    _name, *shipped, _seqs = _parse_dds(
-        body.partition(b"\nData:\n")[0].decode())
-    assert shipped == declared  # the variables and the Grids
+    _name, *declared = _parse_dds(fetch("dds").decode())
+    _name, *shipped = _parse_dds(body.partition(b"\nData:\n")[0].decode())
+    assert shipped == declared  # the variables, the Grids, the Sequences
     assert list(got) == ["time", "y", "x", "sst", "sst.time", "sst.y",
-                         "sst.x"]
+                         "sst.x", "obs"]
     assert "sst" in grids
+    # the Sequence ships whole, after the arrays
+    assert got.pop("obs") == {"id": list(range(40)),
+                              "val": [i * 0.5 for i in range(40)],
+                              "flag": [float(i % 3) for i in range(40)]}
     for name, a in got.items():
         assert np.array_equal(a, local.read(name.rpartition(".")[2])), name
