@@ -40,9 +40,20 @@ def axis_index(x: Column, grid: DataFrame, col: str) -> Column:
     record on ``grid``'s column ``col`` (``schemas.grid_axis``) — the
     reference's ``location_to_index`` (``trackplot_hycom.py:67-86``) on a
     uniform axis. Reads the schema only, so no Spark job runs; a column
-    without the record raises a ``ValueError`` naming it."""
+    without the record raises a ``ValueError`` naming it.
+
+    A NaN or infinite ``x`` fails the query with an error naming the axis
+    and the value; a finite ``x`` whose index is past the int range snaps
+    to NULL, which joins nothing; a NULL ``x`` stays NULL."""
     origin, step = grid_axis(grid.schema, col)
-    return F.round((x - F.lit(origin)) / F.lit(step)).cast("int")
+    idx = F.round((x - F.lit(origin)) / F.lit(step))
+    return F.when(
+        F.isnan(x) | (F.abs(x) == F.lit(float("inf"))),
+        F.raise_error(F.format_string(
+            f"grid axis {col}: track value %s cannot be snapped to a node",
+            x.cast("string"),
+        )),
+    ).when(idx.between(-(1 << 31), (1 << 31) - 1), idx.cast("int"))
 
 
 def grid_snap_join(points: DataFrame, grid: DataFrame) -> DataFrame:

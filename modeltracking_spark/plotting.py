@@ -81,7 +81,7 @@ def _track_map_panel(track: DataFrame, grid: DataFrame, variable: str):
     import numpy as np
 
     from modeltracking_spark import figure
-    from modeltracking_spark.fixtures import GRID_SENTINEL
+    from modeltracking_spark.operators.aggregates import SENTINEL_THRESHOLD
     from modeltracking_spark.schemas import grid_axis
 
     (lat0, lat_step), (lon0, lon_step) = (
@@ -97,7 +97,7 @@ def _track_map_panel(track: DataFrame, grid: DataFrame, variable: str):
     lo = surface["lon_idx"].to_numpy()
     field = np.full((la.max() + 1, lo.max() + 1), np.nan)
     vals = surface[variable].to_numpy(dtype=float)
-    vals[vals <= GRID_SENTINEL + 1.0] = np.nan
+    vals[vals <= SENTINEL_THRESHOLD] = np.nan
     field[la, lo] = vals
 
     pdf, _bbox = track_map_frame(track)

@@ -703,69 +703,59 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 + S1 + P2 + F4 across a REAL file boundary: the synthetic
-    track is written as an NHC-style CSV (header row, yyyyMMddHH
+    track is written as an NHC best-track CSV (header row, yyyyMMddHH
     timestamp strings, WEST-NEGATIVE longitudes — the reference's
-    on-disk convention, ``Hurricanefiles/al092016_track.csv``), then
-    read back with an explicit schema + header skip, the timestamp
-    parsed (F1) and the longitude re-normalized to [0,360) (F4,
-    −19.4 → 340.6 semantics). The oracle computes the track from the
-    formula WITHOUT touching the file, so the CSV sink → scan loop —
-    including double → shortest-decimal → double round-tripping — is
-    attested end to end. The fixture dir is keyed by a hash of the
-    track formula AND this function's own source, so editing either
-    invalidates the cache instead of presenting as a stale-file reader
-    bug (same race-safe pattern as the netCDF fixture)."""
-    import hashlib
-    import inspect
-    import os
-    import shutil
+    on-disk convention, ``Hurricanefiles/al092016_track.csv``) and read
+    back with ``read_nhc_best_track``, which parses the timestamp (F1)
+    and re-normalizes the longitude to [0,360) (F4, −19.4 → 340.6).
+    The synthetic track's ``point_id`` is its ``t_hours``. The oracle
+    computes the track from the formula WITHOUT touching the file, so
+    the CSV sink → scan loop — including double → shortest-decimal →
+    double round-tripping — is attested end to end."""
+    from modeltracking_spark.sources.tracks import read_nhc_best_track
 
-    from modeltracking_spark.functions.geo import normalize_lon_0_360
-    from modeltracking_spark.functions.timefn import (
-        format_ymdh,
-        hours_since_2000 as _h2000,
-        parse_ymdh,
-        ts_from_hours_since_2000,
+    return read_nhc_best_track(spark, _synthetic_track_csv(spark)).select(
+        F.col("t_hours").alias("point_id"), "t_hours", "lat", "lon"
     )
-    from modeltracking_spark.queries.timegeo import TRACK_SQL, synthetic_track
-    from modeltracking_spark.sources.tracks import write_track_csv
 
-    fp = hashlib.md5(
-        (
-            TRACK_SQL
-            + inspect.getsource(synthetic_track)
-            + inspect.getsource(csv_roundtrip_scan)
-        ).encode()
-    ).hexdigest()[:10]
-    out_dir = f"/tmp/modeltracking_track_csv_{fp}"
-    if not os.path.isdir(out_dir):
+
+_TRACK_CSV: list[str] = []
+
+
+def _synthetic_track_csv(spark: SparkSession) -> str:
+    """The synthetic track as an NHC best-track CSV directory, written
+    once per process under a temporary directory removed at exit."""
+    if not _TRACK_CSV:
+        import atexit
+        import shutil
+        import tempfile
+
+        from modeltracking_spark.functions.timefn import (
+            format_ymdh,
+            ts_from_hours_since_2000,
+        )
+        from modeltracking_spark.queries.timegeo import synthetic_track
+        from modeltracking_spark.schemas import NHC_BEST_TRACK_SCHEMA
+        from modeltracking_spark.sources.tracks import write_track_csv
+
         t = synthetic_track(spark)
-        west = F.when(F.col("lon") > 180, F.col("lon") - 360).otherwise(
-            F.col("lon")
+        fields = {
+            "atcfdtg": format_ymdh(ts_from_hours_since_2000("t_hours")),
+            "lat": F.col("lat"),
+            "lon": F.when(F.col("lon") > 180, F.col("lon") - 360)
+            .otherwise(F.col("lon")),
+        }
+        tmp = tempfile.mkdtemp(prefix="modeltracking_track_csv_")
+        atexit.register(shutil.rmtree, tmp, True)
+        write_track_csv(
+            t.select(*[
+                fields.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+                for f in NHC_BEST_TRACK_SCHEMA
+            ]),
+            f"{tmp}/track",
         )
-        as_file = t.select(
-            F.col("point_id"),
-            format_ymdh(ts_from_hours_since_2000("t_hours")).alias("atcfdtg"),
-            F.col("lat"),
-            west.alias("lon"),
-        )
-        tmp = f"{out_dir}.{os.getpid()}.tmp"
-        write_track_csv(as_file, tmp)
-        try:
-            os.rename(tmp, out_dir)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # racer won; theirs is identical
-    raw = spark.read.csv(
-        out_dir,
-        header=True,
-        schema="point_id long, atcfdtg string, lat double, lon double",
-    )
-    return raw.select(
-        "point_id",
-        _h2000(parse_ymdh("atcfdtg")).alias("t_hours"),
-        "lat",
-        normalize_lon_0_360("lon").alias("lon"),
-    )
+        _TRACK_CSV.append(f"{tmp}/track")
+    return _TRACK_CSV[0]
 
 
 @query(
@@ -1062,7 +1052,7 @@ def partition_prune_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the same aggregate from the unpartitioned
     parquet, attesting the repartitioned copy is lossless. Fixture dir
     keyed by sf dir + this function's source, race-safe rename like the
-    csv/jsonl/orc fixtures."""
+    jsonl/orc fixtures."""
     import hashlib
     import inspect
     import os
@@ -2263,8 +2253,7 @@ def orc_partitioned_orders_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching the ORC files, attesting the whole sink -> scan loop
     (timestamps, doubles, partition-column reconstruction from
     directory names). Fixture dir keyed by sf_dir + row count + this
-    function's source (the csv_roundtrip race-safe tmp-rename
-    pattern)."""
+    function's source (a race-safe tmp-rename)."""
     import hashlib
     import inspect
     import os

@@ -205,9 +205,9 @@ NHC_BEST_TRACK_SCHEMA = StructType(
     ]
 )
 
-# Headerless 10-column IBTrACS layout (Hurricanefiles/Hermine_track.csv) —
-# positionally incompatible with the reference's reader (SURVEY.md §1.3);
-# this engine reads it with its own explicit schema.
+# Headerless IBTrACS layout (Hurricanefiles/Hermine_track.csv) —
+# positionally incompatible with the reference's reader (SURVEY.md §1.3).
+# The 16-column layout (Sandy_track.csv) starts with these 10 fields.
 IBTRACS_10_SCHEMA = StructType(
     [
         StructField("serial", StringType()),
@@ -219,20 +219,7 @@ IBTRACS_10_SCHEMA = StructType(
         StructField("iso_time", StringType()),  # M/d/yy H:mm
         StructField("nature", StringType()),
         StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),  # already east-positive [0,360)
-    ]
-)
-
-# Headerless 16-column IBTrACS layout (Hurricanefiles/Sandy_track.csv).
-IBTRACS_16_SCHEMA = StructType(
-    IBTRACS_10_SCHEMA.fields
-    + [
-        StructField("wind_kt", IntegerType()),
-        StructField("pres_mb", IntegerType()),
-        StructField("center", StringType()),
-        StructField("wind_pctl", DoubleType()),
-        StructField("pres_pctl", DoubleType()),
-        StructField("track_type", StringType()),
+        StructField("lon", DoubleType()),  # east-positive or signed
     ]
 )
 

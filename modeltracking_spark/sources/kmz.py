@@ -1,4 +1,4 @@
-"""KMZ -> KML -> rows ingest (SURVEY.md §2.1 S2-S4).
+"""KMZ -> KML -> track ingest (SURVEY.md §2.1 S2-S4).
 
 The reference shells out to unzip + BeautifulSoup row loops
 (``kmz2csv.py:14-35``); here the zip open is a tiny driver-side step
@@ -6,6 +6,9 @@ The reference shells out to unzip + BeautifulSoup row loops
 parse is Spark ``xpath`` over an XML column — so a directory of
 thousands of KMZ files parallelizes by making each file one row of a
 binaryFile scan and running the same xpath expressions per row.
+A placemark is an ``NHC_BEST_TRACK_SCHEMA`` record; this module states
+only its KML tag spellings, and :func:`kmz_to_track` returns what
+``read_nhc_best_track`` returns for the same record in CSV.
 """
 
 from __future__ import annotations
@@ -15,21 +18,19 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: output column -> KML child tag of <Placemark> (kmz2csv.py:20-21; tags
-#: are case-sensitive in XML, unlike the reference's lowercasing soup)
-PLACEMARK_FIELDS: dict[str, str] = {
-    "atcfdtg": "atcfdtg",
+from modeltracking_spark.schemas import NHC_BEST_TRACK_SCHEMA
+from modeltracking_spark.sources.tracks import _nhc_track
+
+#: KML child tag of <Placemark> for each NHC field whose tag is not the
+#: field's name (kmz2csv.py:20-21; tags are case-sensitive in XML,
+#: unlike the reference's lowercasing soup)
+_KML_TAGS: dict[str, str] = {
     "stormnum": "stormNum",
     "stormname": "stormName",
-    "basin": "basin",
     "stormtype": "stormType",
-    "intensity": "intensity",
     "intensitymph": "intensityMPH",
     "intensitykph": "intensityKPH",
-    "lat": "lat",
-    "lon": "lon",
     "minsealevelpres": "minSeaLevelPres",
-    "dtg": "dtg",
 }
 
 
@@ -43,7 +44,8 @@ def extract_kml_text(kmz_path: str) -> str:
 
 
 def placemarks_to_rows(spark: SparkSession, kml_text: str) -> DataFrame:
-    """S3/S4: one row per ``<Placemark>`` with the 12 reference fields.
+    """S3/S4: one row per ``<Placemark>``, one string column per field
+    of ``NHC_BEST_TRACK_SCHEMA``, as the placemark spells it.
 
     The document is first split into one fragment PER placemark (regex
     explode), then each field is xpath'd out of its own fragment — so a
@@ -66,21 +68,30 @@ def placemarks_to_rows(spark: SparkSession, kml_text: str) -> DataFrame:
             F.nullif(
                 F.trim(
                     F.xpath_string(
-                        "pm", F.lit(f"//*[local-name()='{tag}']")
+                        "pm",
+                        F.lit(f"//*[local-name()='{_KML_TAGS.get(col, col)}']"),
                     )
                 ),
                 F.lit(""),
             ).alias(col)
-            for col, tag in PLACEMARK_FIELDS.items()
+            for col in NHC_BEST_TRACK_SCHEMA.names
         ]
     )
 
 
 def kmz_to_track(spark: SparkSession, kmz_path: str) -> DataFrame:
-    """Full S2->S4 path: KMZ -> placemark rows with typed lat/lon
-    (the reference's ``kmz2csv.py`` end-to-end, minus the CSV sink —
-    compose with ``sources.tracks.write_track_csv`` for S5)."""
+    """Full S2->S4 path: KMZ -> the normalized track frame of
+    ``read_nhc_best_track`` (t_hours, lon in [0, 360), ...), ready to
+    profile. The placemark rows are cast to ``NHC_BEST_TRACK_SCHEMA``'s
+    types and normalized by the CSV reader's own code; the raw strings
+    stay available from :func:`placemarks_to_rows`. Compose with
+    ``sources.tracks.write_track_csv`` for S5."""
     rows = placemarks_to_rows(spark, extract_kml_text(kmz_path))
-    return rows.withColumn("lat", F.col("lat").cast("double")).withColumn(
-        "lon", F.col("lon").cast("double")
+    return _nhc_track(
+        rows.select(
+            *[
+                F.col(f.name).cast(f.dataType).alias(f.name)
+                for f in NHC_BEST_TRACK_SCHEMA
+            ]
+        )
     )

@@ -1,10 +1,13 @@
-"""Track CSV readers (S1/P1/P2 + F1/F4 composition).
+"""Track readers (S1/P1/P2 + F1/F4 composition).
 
-The reference reads tracks positionally with a manual header skip
-(``hurricane_track``, ``trackplot_hycom.py:158-171``) and cannot load
-the two IBTrACS layouts at all (different column order — SURVEY §1.3).
-Here every layout is an explicit ``StructType`` so scans prune columns
-and casts are analyzable.
+An NHC best-track record is the 12 fields of ``NHC_BEST_TRACK_SCHEMA``,
+in the reference's CSV (``trackplot_hycom.py:158-171``) and its KMZ
+(``kmz2csv.py``) alike. :func:`_nhc_track` normalizes it once, for
+:func:`read_nhc_best_track` and ``sources.kmz.kmz_to_track``, so every
+track source emits lon in [0, 360). The reference cannot load the
+IBTrACS layouts (SURVEY §1.3); the 16-column one extends the 10-column
+one, and ``IBTRACS_10_SCHEMA`` reads both (Spark's CSV reader drops a
+row's extra tokens).
 """
 
 from __future__ import annotations
@@ -14,25 +17,14 @@ from pyspark.sql import functions as F
 
 from modeltracking_spark.functions.geo import normalize_lon_0_360
 from modeltracking_spark.functions.timefn import hours_since_2000, parse_ymdh
-from modeltracking_spark.schemas import (
-    IBTRACS_10_SCHEMA,
-    IBTRACS_16_SCHEMA,
-    NHC_BEST_TRACK_SCHEMA,
-)
+from modeltracking_spark.schemas import IBTRACS_10_SCHEMA, NHC_BEST_TRACK_SCHEMA
 
 
-def read_nhc_best_track(spark: SparkSession, path: str) -> DataFrame:
-    """S1: NHC best-track CSV -> normalized track frame
-    (atcfdtg, ts, t_hours, lat, lon[0,360), stormname, intensity_kt).
-
-    There is no ``point_id`` column; the caller derives one (for example
-    ``F.col("t_hours").alias("point_id")``) before profiling.
-
-    header=True replaces the reference's ``if i > 0`` row skip (P2); the
-    yyyyMMddHH parse is F1; the lon fix is F4 (-19.4 -> 340.6,
-    ``trackplot_hycom.py:166-170``).
-    """
-    raw = spark.read.csv(path, header=True, schema=NHC_BEST_TRACK_SCHEMA)
+def _nhc_track(raw: DataFrame) -> DataFrame:
+    """Columns typed by ``NHC_BEST_TRACK_SCHEMA`` -> the normalized track
+    frame (atcfdtg, ts, t_hours, lat, lon[0,360), stormname,
+    intensity_kt). The yyyyMMddHH parse is F1; the lon fix is F4
+    (-19.4 -> 340.6, ``trackplot_hycom.py:166-170``)."""
     ts = parse_ymdh("atcfdtg")
     return raw.select(
         F.col("atcfdtg"),
@@ -45,12 +37,25 @@ def read_nhc_best_track(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_ibtracs_track(spark: SparkSession, path: str, wide: bool = False) -> DataFrame:
+def read_nhc_best_track(spark: SparkSession, path: str) -> DataFrame:
+    """S1: NHC best-track CSV -> the frame of :func:`_nhc_track`.
+
+    There is no ``point_id`` column; the caller derives one (for example
+    ``F.col("t_hours").alias("point_id")``) before profiling.
+
+    header=True replaces the reference's ``if i > 0`` row skip (P2).
+    """
+    return _nhc_track(
+        spark.read.csv(path, header=True, schema=NHC_BEST_TRACK_SCHEMA)
+    )
+
+
+def read_ibtracs_track(spark: SparkSession, path: str) -> DataFrame:
     """S1 (alternate layouts): headerless IBTrACS CSV, 10- or 16-column
     (``Hurricanefiles/Hermine_track.csv`` / ``Sandy_track.csv``). Lon is
-    already east-positive; time is ``M/d/yy H:mm``."""
-    schema = IBTRACS_16_SCHEMA if wide else IBTRACS_10_SCHEMA
-    raw = spark.read.csv(path, header=False, schema=schema)
+    east-positive in one and signed in the other, and comes out in
+    [0, 360); time is ``M/d/yy H:mm``."""
+    raw = spark.read.csv(path, header=False, schema=IBTRACS_10_SCHEMA)
     ts = F.to_timestamp("iso_time", "M/d/yy H:mm")
     return raw.select(
         ts.alias("ts"),

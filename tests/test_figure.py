@@ -6,10 +6,16 @@ independently; determinism is pinned by double-render equality."""
 import hashlib
 
 import numpy as np
+import pyspark.sql.functions as F
 import pytest
 
 from modeltracking_spark import figure
-from modeltracking_spark.fixtures import hycom_grid_fixture
+from modeltracking_spark.fixtures import (
+    GRID_LAT0,
+    GRID_LAT_STEP,
+    GRID_LON0,
+    hycom_grid_fixture,
+)
 from modeltracking_spark.operators.png import decode_png
 from modeltracking_spark.operators.profile import profile_along_track
 from modeltracking_spark.plotting import (
@@ -110,6 +116,29 @@ def test_render_track_map_png_track_and_field(spark, tmp_path):
     assert (flat == figure.BACKGROUND).all(axis=1).any()
     # colormapped field pixels: at least 100 distinct colors on canvas
     assert len(np.unique(flat, axis=0)) > 100
+
+
+def test_track_map_masks_the_engine_sentinel_rule(spark, tmp_path):
+    """A surface cell at -10 is missing by the engine's rule (<= -4,
+    ``aggregates.mask_sentinel``): the map paints it MISSING, not as
+    data."""
+    grid = hycom_grid_fixture(spark).where(
+        (F.col("time_hours") == 0) & (F.col("lat_idx") < 4)
+        & (F.col("lon_idx") < 4)
+    )
+    grid = grid.withColumn("water_temp", F.when(
+        (F.col("lat_idx") == 1) & (F.col("lon_idx") == 2), -10.0
+    ).otherwise(F.col("water_temp")))
+    track = spark.createDataFrame(  # at node (3, 0), clear of the cell
+        [(0, GRID_LAT0 + 3 * GRID_LAT_STEP, GRID_LON0)],
+        "point_id long, lat double, lon double",
+    )
+    img = decode_png(open(render_track_map_png(
+        track, grid, str(tmp_path / "m.png")), "rb").read())
+    cell, margin, n_lat = 4, 10, 4  # render_track_map_panel's layout
+    row = margin + 1 + (n_lat - 1 - 1) * cell + cell // 2  # north-up
+    col = margin + 1 + 2 * cell + cell // 2
+    assert tuple(img[row, col]) == tuple(figure.MISSING)
 
 
 def test_render_figure_png_stacks_both_panels(spark, profile, tmp_path):

@@ -16,7 +16,7 @@ SANDY = f"{REF_DIR}/Hurricanefiles/Sandy_track.csv"
 @pytest.mark.skipif(not os.path.exists(SANDY), reason="reference fixtures absent")
 def test_ibtracs_16_column_layout(spark):
     # the wide IBTrACS layout the reference could never load (SURVEY §1.3)
-    df = read_ibtracs_track(spark, SANDY, wide=True)
+    df = read_ibtracs_track(spark, SANDY)
     rows = df.collect()
     assert len(rows) > 0
     assert all(r["t_hours"] is not None for r in rows)

@@ -109,14 +109,15 @@ def test_grid_index_outside_packed_range_raises(spark, column, bad):
 def test_far_off_grid_point_matches_nothing(spark, track_col):
     """A point snapped to (la - 1, lo + 2^20) would, if the key wrapped
     lon_idx into lat_idx, alias node (la, lo) and its neighbours exactly.
-    It must join nothing and leave the other point as it was."""
+    It must join nothing and leave the other point as it was. So must a
+    point whose node index is past the int range (lon 1e12, lat -1e12)."""
     la, lo, t = 40, 30, 12
-    far = (
-        999,
-        GRID_LAT0 + (la - 1) * GRID_LAT_STEP,
-        GRID_LON0 + (lo + (1 << 20)) * GRID_LON_STEP,
-        t,
-    )
+    fars = [
+        (999, GRID_LAT0 + (la - 1) * GRID_LAT_STEP,
+         GRID_LON0 + (lo + (1 << 20)) * GRID_LON_STEP, t),
+        (999, GRID_LAT0 + la * GRID_LAT_STEP, 1e12, t),
+        (999, -1e12, GRID_LON0 + lo * GRID_LON_STEP, t),
+    ]
     near = [(1, GRID_LAT0 + la * GRID_LAT_STEP + 0.05,
              GRID_LON0 + lo * GRID_LON_STEP - 0.1, t)]
     grid = hycom_grid_fixture(spark)
@@ -128,10 +129,35 @@ def test_far_off_grid_point_matches_nothing(spark, track_col):
         return profile_along_track(track, grid, track_col=track_col)
 
     alone = run(near)
-    assert _rows(run(near + [far]), track_col) == _rows(alone, track_col)
+    for far in fars:
+        assert _rows(run(near + [far]), track_col) == _rows(alone, track_col)
     assert reference.profile_mismatches(
         alone.collect(), reference.expected_profile(near, GRID_N_TIME)
     ) == []
+
+
+@pytest.mark.parametrize("track_col", [None, "stormname"])
+@pytest.mark.parametrize("axis, value, shown", [
+    ("lat", float("nan"), "NaN"),
+    ("lon", float("inf"), "Infinity"),
+    ("lat", float("-inf"), "-Infinity"),
+])
+def test_unsnappable_coordinate_names_the_axis(spark, track_col, axis,
+                                               value, shown):
+    """A NaN or infinite coordinate has no node: the profile fails with an
+    error naming the grid axis and the value, not a cast overflow or a
+    snap to node 0."""
+    point = {"lat": GRID_LAT0 + 3 * GRID_LAT_STEP,
+             "lon": GRID_LON0 + 3 * GRID_LON_STEP, axis: value}
+    track = spark.createDataFrame([(1, point["lat"], point["lon"], 12)],
+                                  TRACK_DDL)
+    if track_col:
+        track = track.withColumn(track_col, F.lit("IAN"))
+    with pytest.raises(Exception, match=f"grid axis {axis}: track value "
+                                        f"{shown} cannot be snapped"):
+        profile_along_track(
+            track, hycom_grid_fixture(spark), track_col=track_col
+        ).collect()
 
 
 def test_null_track_id_keeps_its_group(spark):
