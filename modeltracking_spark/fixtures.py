@@ -78,16 +78,6 @@ def grid_coords() -> dict:
     }
 
 
-def grid_fixture_fingerprint() -> str:
-    """Short stable hash of the grid formula text (constants included) —
-    materialized-fixture cache keys (the netCDF file in extras_q) embed it
-    so a formula edit invalidates the cache instead of presenting as a
-    confusing stale-file reader bug."""
-    import hashlib
-
-    return hashlib.md5(HYCOM_GRID_SQL.encode()).hexdigest()[:10]
-
-
 def hycom_grid_fixture(spark: SparkSession) -> DataFrame:
     """Long-form HYCOM grid (~5.5M rows): :data:`HYCOM_GRID_SQL` run by
     Spark, so the engine and the DuckDB oracle read one text. ``.to``

@@ -6,28 +6,3 @@ geodesic (``geo.vincenty_km_udf``), which is a vectorized pandas UDF
 because no builtin exists (reference pulls the ``vincenty`` pip package,
 ``rucool.yml:213``).
 """
-
-from modeltracking_spark.functions.geo import (  # noqa: F401
-    euclid_deg,
-    haversine_km,
-    inv_square_weight,
-    normalize_lon_0_360,
-    vincenty_km_udf,
-)
-from modeltracking_spark.functions.timefn import (  # noqa: F401
-    format_ymdh,
-    hours_since_2000,
-    parse_ymdh,
-    ts_from_hours_since_2000,
-)
-from modeltracking_spark.functions.text import (  # noqa: F401
-    char_shingles,
-    doc_fingerprint,
-    stopword_ratio,
-    tokens,
-)
-from modeltracking_spark.functions.vector import (  # noqa: F401
-    cosine_similarity,
-    dot_product,
-    l2_norm,
-)

@@ -15,8 +15,9 @@ is one distributed, Catalyst-planned join:
   (``find_hycom_dir``, ``trackplot_hycom.py:173-184``).
 
 J1 and J2 read the node geometry from the grid: :func:`axis_index` is the
-one lat/lon snap, and takes each axis's ``{origin, step}`` from the axis
-record on the grid's ``lat``/``lon`` column (``schemas.axis_metadata``).
+one snap, for ``time_hours``, ``lat`` and ``lon`` alike, and takes each
+axis's ``{origin, step}`` from the axis record on the grid's column
+(``schemas.axis_metadata``).
 
 Scale notes: the snap join is shuffle-on-key only; the as-of join is one
 shuffle + one window scan per side; neighborhood expansion multiplies rows
@@ -44,7 +45,8 @@ def axis_index(x: Column, grid: DataFrame, col: str) -> Column:
 
     A NaN or infinite ``x`` fails the query with an error naming the axis
     and the value; a finite ``x`` whose index is past the int range snaps
-    to NULL, which joins nothing; a NULL ``x`` stays NULL."""
+    to NULL, which joins nothing; a NULL ``x`` stays NULL. Exact
+    half-step ties round away from the origin, at both ends of the axis."""
     origin, step = grid_axis(grid.schema, col)
     idx = F.round((x - F.lit(origin)) / F.lit(step))
     return F.when(
@@ -54,6 +56,15 @@ def axis_index(x: Column, grid: DataFrame, col: str) -> Column:
             x.cast("string"),
         )),
     ).when(idx.between(-(1 << 31), (1 << 31) - 1), idx.cast("int"))
+
+
+def _time_bucket(t: Column, grid: DataFrame) -> Column:
+    """The ``time_hours`` of the grid step :func:`axis_index` snaps ``t``
+    to, ``origin + idx * step``, as a ``long`` — the reference's
+    ``find_time_index`` (``trackplot_hycom.py:186-197``) on a uniform
+    axis. It may lie outside the grid's steps; it then joins nothing."""
+    origin, step = grid_axis(grid.schema, "time_hours")
+    return axis_index(t, grid, "time_hours").cast("long") * step + origin
 
 
 def grid_snap_join(points: DataFrame, grid: DataFrame) -> DataFrame:
@@ -75,16 +86,16 @@ def grid_snap_join(points: DataFrame, grid: DataFrame) -> DataFrame:
     return snapped.join(nodes, ["lat_idx", "lon_idx"], "inner")
 
 
-def neighborhood_expand(df: DataFrame, radius: int = 1) -> DataFrame:
-    """J2: expand each (lat_idx, lon_idx) to its (2r+1)² neighborhood via
+def neighborhood_expand(df: DataFrame) -> DataFrame:
+    """J2: expand each (lat_idx, lon_idx) to its 3×3 neighborhood via
     explode — the relational form of ``nearest_neighbors``
     (``trackplot_hycom.py:59-65``). Adds ``nb_lat_idx`` / ``nb_lon_idx``.
     """
     offsets = F.array(
         *[
             F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-            for di in range(-radius, radius + 1)
-            for dj in range(-radius, radius + 1)
+            for di in (-1, 0, 1)
+            for dj in (-1, 0, 1)
         ]
     )
     return (

@@ -1,17 +1,14 @@
 """The track x grid depth-profile pipeline — the reference's raison
 d'etre (SURVEY.md §7.6), composed from the join/aggregate layers:
 
-snap (J1) -> 3x3 expand (J2) -> nearest-time bucket (J3 regular-axis
-route) -> sentinel mask (P3) -> IDW weights (F8) -> weighted mean (A2)
--> depth truncation (P5).
+snap (J1) -> 3x3 expand (J2) -> sentinel mask (P3) -> IDW weights (F8)
+-> weighted mean (A2) -> depth truncation (P5).
 
 Reference: ``zip_variable3D`` + ``hycomScrubber`` + ``IDW_Slice_nc4``
 (``trackplot_hycom.py:199-223``, ``:135-148``, ``:88-115``). The
 reference re-opens the remote dataset and scans all grid nodes per track
 point (N+1 loops); here the whole track resolves in ONE broadcast join
-against the grid table and ONE hash aggregate (a fleet keyed by a
-non-integral id adds a small dictionary join after the aggregate, see
-below):
+against the grid table and ONE hash aggregate:
 
 - the track side (n_points x 9 neighbor keys) is tiny -> broadcast;
 - the grid scan streams once, behind depth truncation as a filter on
@@ -22,32 +19,42 @@ The grid geometry comes from the grid itself. ``time_hours``, ``lat``
 and ``lon`` each carry an axis record, ``{origin, step}``, as column
 metadata (``schemas.axis_metadata``): the ``hycom_grid`` DataSource
 reads it from the dataset's own coordinate arrays, and
-``hycom_grid_fixture`` from its constants. A track point snaps to lat/lon
-node ``round((x - origin) / step)`` (``joins.axis_index``, the engine's
-one lat/lon snap) and to time bucket ``origin +
-nearest_time_bucket(t - origin, step)`` — the reference's
+``hycom_grid_fixture`` from its constants. A track point's ``t_hours``,
+``lat`` and ``lon`` each snap to their nearest node with the one rule
+``joins.axis_index``, ``round((x - origin) / step)`` — the reference's
 ``location_to_index``/``find_time_index`` (``trackplot_hycom.py:67-86``,
-``:186-197``) on a uniform axis. Reading the record touches only the
-schema, so no Spark job runs for it, and a grid without it (a column
-rebuilt by an expression loses its metadata) raises a ``ValueError``
-naming the column instead of profiling against guessed axes. Points
-whose snapped node or time bucket lies outside the grid's axes join no
-grid row, so they yield no profile rows.
+``:186-197``) on a uniform axis; the time node is then named by its
+``time_hours``. Reading the record touches only the schema, so no Spark
+job runs for it, and a grid without it (a column rebuilt by an
+expression loses its metadata) raises a ``ValueError`` naming the column
+instead of profiling against guessed axes. Points whose snapped node or
+time step lies outside the grid's axes join no grid row, so they yield
+no profile rows.
 
 A single track (``track_col=None``) also states its footprint as plain
-filters on the grid: ``time_hours IN`` its time buckets and a
-``lat_idx``/``lon_idx`` box grown by the neighbourhood radius. Building
-a single-track plan reads the snapped track once, onto the driver (one
-small Spark job): the footprint comes from those rows, and the
-broadcast side is a local relation over them, which the plan then reads
-with no job of its own. A track built from a Python list would
-otherwise be read again, in Python tasks, by every job over it. Any
-grid that takes filters prunes with the footprint: the in-engine
-fixture's ranges, parquet, and the ``hycom_grid`` DataSource with
-``pushdown=true``, which then reads only that window (a few hundred KB
-over DAP instead of the whole grid). The fleet shape keeps the plain
-plan: a season's footprint covers nearly the whole grid, so the extra
-job would cost more than it prunes.
+filters on the grid: ``time_hours IN`` its time steps and a
+``lat_idx``/``lon_idx`` box grown by one node. Building a single-track
+plan reads the snapped track once, onto the driver (one small Spark
+job): the footprint comes from those rows, and the broadcast side is a
+local relation over them, which the plan then reads with no job of its
+own. A track built from a Python list would otherwise be read again, in
+Python tasks, by every job over it. What that one read costs depends on
+how ``track`` was built: a ``createDataFrame(list)`` track runs
+``local[n]`` Python tasks (a 0.27 s median for a 24-row storm on 4
+vCPUs), a ``createDataFrame(pyarrow.Table)`` track is a local relation,
+read with no job (27 ms). The plan holds the track's snapped rows as a
+local snapshot taken at call time, so a later change to ``track``'s
+source does not reach it, and a single track must be track-sized:
+profile many tracks with ``track_col``. Any grid that takes filters
+prunes with the footprint: the in-engine fixture's ranges, parquet, and
+the ``hycom_grid`` DataSource with ``pushdown=true``, which then reads
+only that window (a few hundred KB over DAP instead of the whole grid).
+pyspark reuses the last planned scan of such a DataFrame for a later
+filterless query on it: ``grid.count()`` after a profile counts the
+footprint, not the grid. Profiling further tracks with the same
+DataFrame is exact; use a fresh ``.load()`` for any other query. The
+fleet shape keeps the plain plan: a season's footprint covers nearly
+the whole grid, so the extra job would cost more than it prunes.
 
 Every per-row key is fixed-width:
 
@@ -61,13 +68,13 @@ Every per-row key is fixed-width:
   other id type (a storm name) is replaced by a 64-bit surrogate
   (:func:`_track_surrogate`), and the ids come back through a small
   broadcast dictionary built from the track side
-  (:func:`_track_dictionary`), which raises an error naming the column if
-  two ids share a surrogate. Only that shape adds the dictionary's jobs.
+  (:func:`_track_dictionary`): ``track`` is read once more for it (two
+  more Spark jobs), and two ids sharing a surrogate raise an error
+  naming the column. NULL ids form one group with a NULL id, as they do
+  when grouped directly.
 """
 
 from __future__ import annotations
-
-from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,18 +82,11 @@ from pyspark.sql.types import IntegralType
 
 from modeltracking_spark.functions.geo import euclid_deg, inv_square_weight
 from modeltracking_spark.operators.aggregates import idw_weighted_mean, mask_sentinel
-from modeltracking_spark.operators.joins import axis_index, neighborhood_expand
-from modeltracking_spark.schemas import grid_axis
-
-
-def nearest_time_bucket(t: F.Column, step: int) -> F.Column:
-    """J3 (regular-axis route): nearest multiple of ``step`` via integer
-    arithmetic — ``find_time_index`` (``trackplot_hycom.py:186-197``) for
-    the 3-hourly HYCOM axis, no join needed. Exact half-step ties round
-    forward (impossible for odd steps on integer inputs)."""
-    return (
-        F.floor((2 * t + F.lit(step)) / F.lit(2 * step)).cast("long") * step
-    )
+from modeltracking_spark.operators.joins import (
+    _time_bucket,
+    axis_index,
+    neighborhood_expand,
+)
 
 
 #: depth levels profiled, surface first: the reference keeps
@@ -160,12 +160,12 @@ def _track_dictionary(track: DataFrame, track_col: str) -> DataFrame:
     )
 
 
-def _footprint(rows, radius: int) -> F.Column:
+def _footprint(rows) -> F.Column:
     """The grid rows one snapped track can join, as a filter: its set of
-    time buckets and its ``lat_idx``/``lon_idx`` box grown by
-    ``radius``. ``rows`` are the track's collected snapped rows; each
-    column's NULLs are skipped, as ``collect_set``/``min``/``max`` skip
-    them."""
+    time steps and its ``lat_idx``/``lon_idx`` box grown by one node, the
+    3x3 stencil's reach. ``rows`` are the track's collected snapped rows;
+    each column's NULLs are skipped, as ``collect_set``/``min``/``max``
+    skip them."""
     def present(col):
         return [r[col] for r in rows if r[col] is not None]
 
@@ -174,8 +174,8 @@ def _footprint(rows, radius: int) -> F.Column:
         return F.lit(False)
     return (
         F.col("time_hours").isin(sorted(set(steps)))
-        & F.col("lat_idx").between(min(lat_idx) - radius, max(lat_idx) + radius)
-        & F.col("lon_idx").between(min(lon_idx) - radius, max(lon_idx) + radius)
+        & F.col("lat_idx").between(min(lat_idx) - 1, max(lat_idx) + 1)
+        & F.col("lon_idx").between(min(lon_idx) - 1, max(lon_idx) + 1)
     )
 
 
@@ -198,52 +198,36 @@ def profile_neighbors(
     track: DataFrame,
     grid: DataFrame,
     variable: str = "water_temp",
-    radius: int = 1,
-    carry_cols: Sequence[str] = (),
     track_col: str | None = None,
 ) -> DataFrame:
     """Per-neighbor rows for the IDW reduce: one row per (track point,
-    depth level, 3x3 neighbor) with the masked value and IDW weight, over
-    the first :data:`K_DEPTHS` depth levels.
+    depth level, 3x3 neighbor) over the first :data:`K_DEPTHS` depth
+    levels. Returns ([track_col,] point_id, depth_idx, depth_m, w, v):
+    the IDW weight and the ``variable`` value, NULL if a sentinel.
 
     ``track``: (point_id, lat, lon, t_hours); ``grid``: HYCOM long form
     whose ``time_hours``/``lat``/``lon`` carry their axis records (module
-    docstring). Returns point_id, depth_idx, depth_m, dist,
-    w, v (NULL if sentinel), plus any ``carry_cols`` passed through from
-    the grid (e.g. a ``variable`` label when the grid is unpivoted
-    long-form). ``radius`` is the neighbourhood half-width: 1 for the
-    3x3 IDW stencil, 0 for the centre node alone.
-
-    ``track_col`` is the FLEET shape, as in
-    :func:`resample_track_arclength`: the id rides the broadcast side
-    through the expand and join, so N storms profile
-    in the SAME single grid scan + broadcast join — no per-track loop,
-    and point_ids only need to be unique within a track.
-
-    ``track_col=None`` reads the snapped ``track`` once, now (one small
-    job), filters ``grid`` to its footprint (see :func:`_footprint`) and
-    broadcasts that local copy (:func:`_local_copy`).
-
-    The join key is the packed node key of :func:`_node_key`; a track
-    point outside its range matches nothing, a grid row outside it
-    raises. The ``track_col`` values ride the broadcast side unchanged.
+    docstring). ``track_col`` is the fleet shape of
+    :func:`profile_along_track`: the id rides the broadcast side
+    unchanged, and point_ids only need to be unique within a track.
+    ``track_col=None`` reads the snapped ``track`` once, now, filters
+    ``grid`` to its footprint (:func:`_footprint`) and broadcasts that
+    local copy (:func:`_local_copy`).
     """
-    t0, t_step = grid_axis(grid.schema, "time_hours")
     tcols = [track_col] if track_col else []
     snapped = track.select(
         *tcols,
         "point_id",
         "lat",
         "lon",
-        (F.lit(t0) + nearest_time_bucket(F.col("t_hours") - F.lit(t0), t_step))
-        .alias("t_sel"),
+        _time_bucket(F.col("t_hours"), grid).alias("t_sel"),
         axis_index(F.col("lat"), grid, "lat").alias("lat_idx"),
         axis_index(F.col("lon"), grid, "lon").alias("lon_idx"),
     )
     if track_col is None:
         rows, snapped = _local_copy(snapped)
-        grid = grid.where(_footprint(rows, radius))
-    nb = neighborhood_expand(snapped, radius=radius).select(
+        grid = grid.where(_footprint(rows))
+    nb = neighborhood_expand(snapped).select(
         *tcols,
         "point_id",
         F.col("lat").alias("p_lat"),
@@ -262,19 +246,16 @@ def profile_neighbors(
         F.col("lat").alias("g_lat"),
         F.col("lon").alias("g_lon"),
         F.col(variable).alias("__var"),
-        *carry_cols,
     )
     j = g.join(F.broadcast(nb), "__node")
-    d = euclid_deg("p_lat", "p_lon", "g_lat", "g_lon")
     return j.select(
         *tcols,
         "point_id",
         "depth_idx",
         "depth_m",
-        d.alias("dist"),
-        inv_square_weight(d).alias("w"),
+        inv_square_weight(euclid_deg("p_lat", "p_lon", "g_lat", "g_lon"))
+        .alias("w"),
         mask_sentinel("__var").alias("v"),
-        *carry_cols,
     )
 
 
@@ -282,64 +263,27 @@ def profile_along_track(
     track: DataFrame,
     grid: DataFrame,
     variable: str = "water_temp",
-    interp: str = "idw",
     track_col: str | None = None,
 ) -> DataFrame:
-    """Full pipeline -> long profile (point_id, depth_idx, depth_m,
-    n_valid, idw_value): the engine twin of the reference's
-    ``(time, depth, value)`` triples (``trackplot_hycom.py:217-223``),
-    :data:`K_DEPTHS` depth levels per point.
-
-    ``interp='idw'`` (default): 3x3 IDW — the reference's production
-    path. ``interp='nearest'``: center-node value only, the cheap mode
-    of the superseded ``tempcolumn_nc4`` (``trackplot_hycom.py:117-133``,
-    SURVEY §2.10) — 1/9th the join fanout, n_valid ∈ {0, 1}.
+    """Full pipeline -> long profile ([track_col,] point_id, depth_idx,
+    depth_m, n_valid, idw_value): the 3x3 IDW mean of ``variable``, the
+    engine twin of the reference's ``(time, depth, value)`` triples
+    (``trackplot_hycom.py:217-223``), :data:`K_DEPTHS` depth levels per
+    point.
 
     ``track_col=None`` is the single-track contract (one advisory
     track, the reference's shape). ``track_col="..."`` is the FLEET
-    shape: the id rides the broadcast side and
-    becomes a group-by column, so a whole storm season profiles in ONE
-    grid scan + broadcast join + hash aggregate — no window, no
-    per-track loop, one shuffle over the join output (plan-asserted in
-    tests/test_idw_profile.py and tests/test_profile_keys.py). A
-    non-integral id adds only the small dictionary below, joined to the
-    aggregated rows.
-
-    Keys (module docstring): the join probes one packed ``long`` node
-    key. An integral ``track_col`` is grouped on as it is. Any other id
-    type is grouped on its 64-bit surrogate, and a small broadcast
-    dictionary built from ``track`` maps the result back to the ids:
-    ``track`` is read once more for it (two more Spark jobs), and two ids
-    sharing a surrogate raise an error naming ``track_col``. NULL ids form
-    one group with a NULL id, as they do when grouped directly.
-
-    Geometry (module docstring): the snap reads the axis records on
-    ``grid``'s ``time_hours``/``lat``/``lon`` columns; a grid without
-    them raises a ``ValueError`` naming the column before any Spark job
-    runs. A point outside the axes in space or in time yields no rows.
+    shape: the id rides the broadcast side and becomes a group-by
+    column, so a whole storm season profiles in ONE grid scan +
+    broadcast join + hash aggregate — no window, no per-track loop, one
+    shuffle over the join output (plan-asserted in
+    tests/test_idw_profile.py and tests/test_profile_keys.py). Geometry,
+    the single track's footprint and the keys are described in the
+    module docstring.
 
     Plain double Σwv/Σw for engine use; the oracle-checked query variant
     (``queries/track_q.py``) lifts the same rows to fixed point first.
-
-    A single track reads only its footprint of ``grid`` (module
-    docstring). Building its plan reads ``track`` once, and what that read
-    costs depends on how ``track`` was built. A ``createDataFrame(list)``
-    track is a Python RDD, so the read runs ``local[n]`` Python tasks: a
-    0.27 s median for a 24-row storm on 4 vCPUs. A
-    ``createDataFrame(pyarrow.Table)`` track is a local relation, read
-    with no job: 27 ms. The result holds the track's snapped rows as a
-    local snapshot taken at call time, so a later change to ``track``'s
-    source does not reach it, and a single track must be track-sized:
-    profile many tracks with ``track_col``. With a ``hycom_grid`` DataFrame
-    loaded with ``pushdown=true`` the footprint is planned into the scan,
-    and pyspark reuses the last planned scan for a later filterless query
-    on the same DataFrame: ``grid.count()`` after this call counts the
-    footprint, not the grid. Profiling further tracks with the same
-    DataFrame is exact; use a fresh ``.load()`` for any other query.
     """
-    if interp not in ("idw", "nearest"):
-        raise ValueError(f"unknown interp {interp!r}")
-    radius = 1 if interp == "idw" else 0
     names = None
     group_col = track_col
     if track_col is not None and not isinstance(
@@ -348,18 +292,11 @@ def profile_along_track(
         names = _track_dictionary(track, track_col)
         track = track.withColumn(_TRACK_KEY, _track_surrogate(F.col(track_col)))
         group_col = _TRACK_KEY
-    rows = profile_neighbors(
-        track, grid, variable, radius, track_col=group_col
-    )
+    rows = profile_neighbors(track, grid, variable, group_col)
     keys = ([group_col] if group_col else []) + [
         "point_id", "depth_idx", "depth_m"
     ]
-    if interp == "idw":
-        prof = idw_weighted_mean(rows, keys, "v", "w")
-    else:
-        prof = rows.groupBy(*keys).agg(
-            F.count("v").alias("n_valid"), F.first("v").alias("idw_value")
-        )
+    prof = idw_weighted_mean(rows, keys, "v", "w")
     if names is None:
         return prof
     return prof.join(F.broadcast(names), _TRACK_KEY).select(

@@ -57,47 +57,30 @@ def _per_step_scan(g: DataFrame) -> DataFrame:
     )
 
 
-def _grid_fixture_file(writer, prefix: str = "") -> str:
-    """The formula grid written once by ``writer`` (a ``grid_source``
-    netCDF writer) to a version-keyed path under /tmp. The key hashes the
-    oracle formula TEXT plus the SOURCE of the Python generator/encoder
-    chain that actually produces the bytes (``grid_coords`` and
-    ``_formula_physics`` -> ``writer`` -> ``write_classic``), so a change to ANY of them gets a
-    fresh file instead of silently reusing a stale fixture; a pid-unique
-    temp name + atomic rename makes concurrent writers (parallel test
-    sessions, bench) race-safe — losers just re-publish identical bytes.
-    In production the path is shared storage; in local mode /tmp is
-    shared between driver and executor workers."""
-    import hashlib
-    import inspect
+_SCRATCH: list[str] = []
+
+
+def _scratch_file(name: str, write) -> str:
+    """The file (or Spark output directory) ``name``, written by
+    ``write(path)`` on first use and reused for the rest of the process,
+    in one temporary directory removed at exit: the formula grid as
+    netCDF files and the track CSV. In local mode the directory is
+    shared between the driver and the executor workers; in production
+    it would be shared storage."""
     import os
 
-    from modeltracking_spark.fixtures import (
-        GRID_N_DEPTH,
-        GRID_N_LAT,
-        GRID_N_LON,
-        GRID_N_TIME,
-        grid_coords,
-        grid_fixture_fingerprint,
-    )
-    from modeltracking_spark.sources import grid_source as _gs
-    from modeltracking_spark.sources import netcdf_classic as _nc
+    if not _SCRATCH:
+        import atexit
+        import shutil
+        import tempfile
 
-    gen_src = "".join(inspect.getsource(f) for f in (
-        grid_coords, _gs._formula_physics, _gs._FormulaGrid, _gs._box_mesh,
-        _gs._write_formula_grid, writer, _nc.write_classic,
-    ))
-    key = (
-        f"{prefix}{grid_fixture_fingerprint()}"
-        f"{hashlib.md5(gen_src.encode()).hexdigest()[:8]}_"
-        f"{GRID_N_TIME}x{GRID_N_DEPTH}x{GRID_N_LAT}x{GRID_N_LON}"
-    )
-    nc_path = f"/tmp/modeltracking_grid_fixture_{key}.nc"
-    if not os.path.exists(nc_path):
-        tmp = f"{nc_path}.{os.getpid()}.tmp"
-        writer(tmp)
-        os.replace(tmp, nc_path)
-    return nc_path
+        _SCRATCH.append(tempfile.mkdtemp(prefix="modeltracking_fixtures_"))
+        atexit.register(shutil.rmtree, _SCRATCH[0], True)
+    path = os.path.join(_SCRATCH[0], name)
+    if not os.path.exists(path):
+        write(f"{path}.tmp")  # a failed write is not mistaken for a file
+        os.replace(f"{path}.tmp", path)
+    return path
 
 
 @query("grid_datasource_scan", oracle=_GRID_SCAN_ORACLE)
@@ -126,7 +109,7 @@ def grid_netcdf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline end to end."""
     from modeltracking_spark.sources.grid_source import write_grid_netcdf
 
-    path = _grid_fixture_file(write_grid_netcdf)
+    path = _scratch_file("grid.nc", write_grid_netcdf)
     return _per_step_scan(_hycom_grid(spark, path))
 
 
@@ -177,7 +160,7 @@ def dap_grid_mode_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_netcdf.py."""
     from modeltracking_spark.sources.grid_source import write_grid_netcdf
 
-    url = _dap_grid_url(_grid_fixture_file(write_grid_netcdf))
+    url = _dap_grid_url(_scratch_file("grid.nc", write_grid_netcdf))
     return _per_step_scan(_hycom_grid(spark, url))
 
 
@@ -196,7 +179,7 @@ def grid_netcdf_packed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_netcdf.py)."""
     from modeltracking_spark.sources.grid_source import write_grid_netcdf_packed
 
-    path = _grid_fixture_file(write_grid_netcdf_packed, prefix="packed_")
+    path = _scratch_file("grid_packed.nc", write_grid_netcdf_packed)
     return _per_step_scan(_hycom_grid(spark, path))
 
 
@@ -719,43 +702,30 @@ def csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRACK_CSV: list[str] = []
-
-
 def _synthetic_track_csv(spark: SparkSession) -> str:
-    """The synthetic track as an NHC best-track CSV directory, written
-    once per process under a temporary directory removed at exit."""
-    if not _TRACK_CSV:
-        import atexit
-        import shutil
-        import tempfile
+    """The synthetic track as an NHC best-track CSV directory
+    (:func:`_scratch_file`)."""
+    from modeltracking_spark.functions.timefn import (
+        format_ymdh,
+        ts_from_hours_since_2000,
+    )
+    from modeltracking_spark.queries.timegeo import synthetic_track
+    from modeltracking_spark.schemas import NHC_BEST_TRACK_SCHEMA
+    from modeltracking_spark.sources.tracks import write_track_csv
 
-        from modeltracking_spark.functions.timefn import (
-            format_ymdh,
-            ts_from_hours_since_2000,
-        )
-        from modeltracking_spark.queries.timegeo import synthetic_track
-        from modeltracking_spark.schemas import NHC_BEST_TRACK_SCHEMA
-        from modeltracking_spark.sources.tracks import write_track_csv
-
-        t = synthetic_track(spark)
-        fields = {
-            "atcfdtg": format_ymdh(ts_from_hours_since_2000("t_hours")),
-            "lat": F.col("lat"),
-            "lon": F.when(F.col("lon") > 180, F.col("lon") - 360)
-            .otherwise(F.col("lon")),
-        }
-        tmp = tempfile.mkdtemp(prefix="modeltracking_track_csv_")
-        atexit.register(shutil.rmtree, tmp, True)
-        write_track_csv(
-            t.select(*[
-                fields.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in NHC_BEST_TRACK_SCHEMA
-            ]),
-            f"{tmp}/track",
-        )
-        _TRACK_CSV.append(f"{tmp}/track")
-    return _TRACK_CSV[0]
+    fields = {
+        "atcfdtg": format_ymdh(ts_from_hours_since_2000("t_hours")),
+        "lat": F.col("lat"),
+        "lon": F.when(F.col("lon") > 180, F.col("lon") - 360)
+        .otherwise(F.col("lon")),
+    }
+    return _scratch_file("track", lambda path: write_track_csv(
+        synthetic_track(spark).select(*[
+            fields.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+            for f in NHC_BEST_TRACK_SCHEMA
+        ]),
+        path,
+    ))
 
 
 @query(

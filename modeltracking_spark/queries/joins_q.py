@@ -132,7 +132,7 @@ def neighborhood_3x3(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = grid.withColumnsRenamed(
         {"lat_idx": "g_lat_idx", "lon_idx": "g_lon_idx"}
     )
-    nb = neighborhood_expand(snapped, radius=1)
+    nb = neighborhood_expand(snapped)
     j = nb.join(
         grid,
         (F.col("nb_lat_idx") == F.col("g_lat_idx"))

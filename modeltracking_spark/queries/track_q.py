@@ -3,8 +3,8 @@ reference pipeline end to end, oracle-checked:
 
 - profile_along_track_temp: snap -> 3x3 -> nearest-time -> mask -> IDW
   -> top-25 depths (``trackplot_hycom.py:199-223``), 80x25 = 2000 rows.
-- profile_multivariable_pivot: R3 — temp + salinity in one pass via
-  unpivot + pivot.
+- profile_multivariable_pivot: R3 — temp + salinity as one labelled
+  union of neighbour rows, pivoted.
 - profile_flatten_roundtrip: R1 — per-point profile array
   (collect -> array_sort) posexploded back to long rows.
 """
@@ -23,7 +23,9 @@ from modeltracking_spark.fixtures import (
     HYCOM_GRID_SQL,
     hycom_grid_fixture,
 )
-from modeltracking_spark.operators.profile import profile_neighbors
+from modeltracking_spark.operators.aggregates import mask_sentinel
+from modeltracking_spark.operators.joins import _time_bucket, grid_snap_join
+from modeltracking_spark.operators.profile import K_DEPTHS, profile_neighbors
 from modeltracking_spark.queries.common import query
 from modeltracking_spark.queries.timegeo import TRACK_SQL, synthetic_track
 
@@ -128,31 +130,26 @@ def profile_along_track_temp(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def profile_multivariable_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R3 multi-variable widening + R1/R2 reshape roundtrip: the grid's
-    two physics variables unpivoted to long form (variable, value), one
-    shared snap/expand/IDW pass, pivoted back to wide columns — the
+    two physics variables profiled to long form (variable, w, v), one
+    labelled neighbour pass each, pivoted back to wide columns — the
     notebook's TEMP+SALINITY dual run (``TrackPlotter_Hycom.ipynb``
-    cells 3-4) in a single job. The wide profile is then collected into
+    cells 3-4) in one query. The wide profile is then collected into
     an ordered per-point array (``zip_variable3D``'s block,
     ``trackplot_hycom.py:199-223``) and posexploded back to long — the
     emitted ``pos`` ordinal comes from the array roundtrip, so R1 array
     build and R2 tuple extraction are attested by this query (the
     standalone ``profile_flatten_roundtrip`` checks them alone too).
 
-    The long grid goes through the SAME profile_neighbors geometry as the
-    single-variable query — the ``variable`` label rides along via
-    ``carry_cols``, so there is one snap/expand/join implementation to
-    maintain."""
+    Each variable goes through the SAME profile_neighbors geometry as
+    the single-variable query, so there is one snap/expand/join
+    implementation to maintain."""
     track = synthetic_track(spark)
     grid = hycom_grid_fixture(spark)
-    long_grid = grid.unpivot(
-        ["time_hours", "depth_idx", "depth_m", "lat_idx", "lon_idx", "lat", "lon"],
-        ["water_temp", "salinity"],
-        "variable",
-        "raw",
+    temp, sal = (
+        profile_neighbors(track, grid, var).withColumn("variable", F.lit(var))
+        for var in ("water_temp", "salinity")
     )
-    nbrows = profile_neighbors(
-        track, long_grid, "raw", carry_cols=["variable"]
-    )
+    nbrows = temp.unionByName(sal)
     w, v = F.col("w"), F.col("v")
     rows = nbrows.select(
         "point_id",
@@ -258,12 +255,21 @@ def profile_flatten_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def profile_nearest_node(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 cheap mode: center-node value without IDW — the superseded
-    ``tempcolumn_nc4`` (``trackplot_hycom.py:117-133``) kept as
-    ``interp='nearest'``; 1/9th the join fanout of the IDW path."""
-    from modeltracking_spark.operators.profile import profile_along_track
-
-    return profile_along_track(
-        synthetic_track(spark), hycom_grid_fixture(spark), "water_temp",
-        interp="nearest",
+    """§2.10 nearest-node lookup, the reference's dead ``tempcolumn_nc4``
+    (``trackplot_hycom.py:117-133``), as J1: each point's time step
+    and its ``grid_snap_join`` node, the centre value without IDW
+    (``n_valid`` 0 or 1)."""
+    grid = hycom_grid_fixture(spark)
+    points = synthetic_track(spark).select(
+        "point_id", "lat", "lon",
+        _time_bucket(F.col("t_hours"), grid).alias("t_sel"),
+    )
+    v = mask_sentinel("water_temp")
+    return grid_snap_join(points, grid).where(
+        (F.col("time_hours") == F.col("t_sel"))
+        & (F.col("depth_idx") < K_DEPTHS)
+    ).select(
+        "point_id", "depth_idx", "depth_m",
+        v.isNotNull().cast("long").alias("n_valid"),
+        v.alias("idw_value"),
     )

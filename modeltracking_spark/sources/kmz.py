@@ -32,6 +32,10 @@ _KML_TAGS: dict[str, str] = {
     "intensitykph": "intensityKPH",
     "minsealevelpres": "minSeaLevelPres",
 }
+#: what a placemark value is trimmed of: all ASCII whitespace, so a
+#: pretty-printed tag (``<atcfdtg>\n  2000010103\n</atcfdtg>``) reads as
+#: its value
+_WHITESPACE = " \t\n\r\f\v"
 
 
 def extract_kml_text(kmz_path: str) -> str:
@@ -70,7 +74,8 @@ def placemarks_to_rows(spark: SparkSession, kml_text: str) -> DataFrame:
                     F.xpath_string(
                         "pm",
                         F.lit(f"//*[local-name()='{_KML_TAGS.get(col, col)}']"),
-                    )
+                    ),
+                    F.lit(_WHITESPACE),
                 ),
                 F.lit(""),
             ).alias(col)

@@ -329,7 +329,7 @@ def test_footprint_profiles_are_exact(spark, grid_backends, backend):
 
 def test_footprint_reads_only_the_window(spark, grid_backends):
     """The footprint filters reach the DAP server: a storm's profile
-    ships its time buckets and radius-grown box, not the grid."""
+    ships its time steps and its box grown by one node, not the grid."""
     options, n_time = grid_backends["dap"]
     sent = grid_backends["sent"]
     sent.clear()

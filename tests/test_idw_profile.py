@@ -3,13 +3,12 @@
 
 import pyspark.sql.functions as F
 
-from modeltracking_spark.fixtures import hycom_grid_fixture
+from modeltracking_spark.fixtures import GRID_N_TIME, hycom_grid_fixture
 from modeltracking_spark.operators.aggregates import idw_weighted_mean, mask_sentinel
-from modeltracking_spark.operators.profile import (
-    nearest_time_bucket,
-    profile_along_track,
-)
+from modeltracking_spark.operators.joins import axis_index
+from modeltracking_spark.operators.profile import K_DEPTHS, profile_along_track
 from modeltracking_spark.queries.timegeo import synthetic_track
+from modeltracking_spark.schemas import axis_metadata
 
 
 def test_idw_at_node_identity(spark):
@@ -51,11 +50,36 @@ def test_sentinel_threshold(spark):
 
 
 def test_nearest_time_bucket(spark):
+    grid = spark.range(0).select(F.col("id").alias(
+        "time_hours", metadata=axis_metadata(0, 3)))
     df = spark.createDataFrame([(t,) for t in range(10)], "t long").select(
-        "t", nearest_time_bucket(F.col("t"), 3).alias("b")
+        "t", (axis_index(F.col("t"), grid, "time_hours") * 3).alias("b")
     )
     got = {r["t"]: r["b"] for r in df.collect()}
     assert got == {0: 0, 1: 0, 2: 3, 3: 3, 4: 3, 5: 6, 6: 6, 7: 6, 8: 9, 9: 9}
+
+
+def test_half_step_ties_fall_outside_at_both_ends(spark):
+    """On an even-step time axis a point exactly half a step before the
+    first step, or after the last, snaps off the grid and gets no rows;
+    one hour inside either tie it snaps to the end step."""
+    origin, step = 10, 6
+    last = origin + (GRID_N_TIME - 1) * step
+    grid = hycom_grid_fixture(spark).withColumn(
+        "time_hours", F.col("time_hours") * 2 + origin
+    ).withMetadata("time_hours", axis_metadata(origin, step))
+    ts = [origin - step // 2, origin - step // 2 + 1,
+          last + step // 2 - 1, last + step // 2]
+    track = spark.createDataFrame(
+        [(t, 20.0, 285.0, t) for t in ts],
+        "point_id long, lat double, lon double, t_hours long",
+    )
+    for track_col, t in ((None, track), ("storm_id", track.withColumn(
+            "storm_id", F.lit(1)))):
+        got = profile_along_track(t, grid, track_col=track_col).collect()
+        per_point = {p: sum(r["point_id"] == p for r in got) for p in ts}
+        assert per_point == {ts[0]: 0, ts[1]: K_DEPTHS, ts[2]: K_DEPTHS,
+                             ts[3]: 0}, track_col
 
 
 def test_profile_golden_shape(spark):

@@ -1,6 +1,7 @@
 """Hypothesis property tests (SURVEY.md §5.3): the distributed operators
 must agree with brute-force Python on arbitrary small inputs."""
 
+from decimal import ROUND_HALF_UP, Decimal
 from itertools import combinations
 
 import pyspark.sql.functions as F
@@ -8,8 +9,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from modeltracking_spark.operators.dedup import jaccard_pairs
-from modeltracking_spark.operators.joins import asof_join
-from modeltracking_spark.operators.profile import nearest_time_bucket
+from modeltracking_spark.operators.joins import asof_join, axis_index
+from modeltracking_spark.schemas import axis_metadata
 
 SETTINGS = dict(
     max_examples=12,
@@ -71,8 +72,10 @@ def test_jaccard_matches_python(spark, docs):
     step=st.sampled_from([1, 3, 5, 6, 12]),
 )
 def test_nearest_time_bucket_property(spark, ts, step):
+    grid = spark.range(0).select(F.col("id").alias(
+        "time_hours", metadata=axis_metadata(0, step)))
     df = spark.createDataFrame([(t,) for t in ts], "t long").select(
-        "t", nearest_time_bucket(F.col("t"), step).alias("b")
+        "t", (axis_index(F.col("t"), grid, "time_hours") * step).alias("b")
     )
     for r in df.collect():
         t, b = r["t"], r["b"]
@@ -81,6 +84,52 @@ def test_nearest_time_bucket_property(spark, ts, step):
         # exact half-step ties round forward
         if step % 2 == 0 and t % step == step // 2:
             assert b == t + step // 2
+
+
+def _snap_rule(x, origin, step):
+    """The one snap, stated in Python: ``(x - origin) / step`` in double
+    arithmetic, rounded half away from zero; NULL past the int range."""
+    idx = int(Decimal((x - origin) / step).to_integral_value(ROUND_HALF_UP))
+    return idx if -(1 << 31) <= idx < (1 << 31) else None
+
+
+@settings(**SETTINGS)
+@given(
+    t_axis=st.tuples(st.integers(-1000, 1000), st.integers(1, 24)),
+    lat_axis=st.tuples(st.floats(-90, 90), st.floats(0.01, 2.0)),
+    lon_axis=st.tuples(st.floats(0, 360), st.floats(0.01, 2.0)),
+    offsets=st.lists(
+        st.tuples(st.integers(-600, 600), st.integers(-400, 400),
+                  st.integers(-400, 400)),
+        min_size=1, max_size=20,
+    ),
+)
+def test_axis_index_is_the_snap_rule(spark, t_axis, lat_axis, lon_axis,
+                                     offsets):
+    """``axis_index`` on each of the three axes, for points before and
+    after the origin (half-step ties included: offsets count half
+    steps), against :func:`_snap_rule`."""
+    axes = {"time_hours": t_axis, "lat": lat_axis, "lon": lon_axis}
+    grid = spark.range(0).select(*[
+        F.lit(0).cast("long" if col == "time_hours" else "double")
+        .alias(col, metadata=axis_metadata(*axis)) for col, axis in axes.items()
+    ])
+    points = [
+        (dt + t_axis[0],
+         lat_axis[0] + dlat * lat_axis[1] / 2,
+         lon_axis[0] + dlon * lon_axis[1] / 2)
+        for dt, dlat, dlon in offsets
+    ]
+    df = spark.createDataFrame(
+        points, "time_hours long, lat double, lon double"
+    ).select(*[
+        axis_index(F.col(col), grid, col).alias(col) for col in axes
+    ])
+    want = [
+        tuple(_snap_rule(x, *axes[col]) for x, col in zip(p, axes))
+        for p in points
+    ]
+    assert [tuple(r) for r in df.collect()] == want
 
 
 @given(

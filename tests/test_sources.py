@@ -46,10 +46,13 @@ IBTRACS = [
 IBTRACS_WIDE = ",35,1004,hurdat_atl,0.5,0.4,main"
 
 
-def _write_kmz(path):
+def _write_kmz(path, pad=" "):
+    """The three RECORDS as a KMZ, each tag and each value preceded by
+    ``pad`` and each value followed by it: a space, or a pretty-printer's
+    newline and indent."""
     pms = "".join(
         "<Placemark><name>TEST</name>"
-        + "".join(f"<{KML_TAGS.get(k, k)}> {v} </{KML_TAGS.get(k, k)}>"
+        + "".join(f"{pad}<{KML_TAGS.get(k, k)}>{pad}{v}{pad}</{KML_TAGS.get(k, k)}>"
                   for k, v in rec.items() if v is not None)
         + f"<Point><coordinates>{rec['lon']},{rec['lat']},0</coordinates>"
           "</Point></Placemark>"
@@ -73,15 +76,16 @@ def _write_nhc_csv(path):
 
 
 def test_kmz_track_is_the_csv_track(spark, tmp_path):
-    kmz = kmz_to_track(spark, _write_kmz(tmp_path / "t.kmz"))
     csv = read_nhc_best_track(spark, _write_nhc_csv(tmp_path / "t.csv"))
-    assert kmz.schema == csv.schema
-    rows = kmz.collect()
-    assert rows == csv.collect()
-    assert [r["lon"] for r in rows] == [-75.3 + 360.0, -75.9 + 360.0,
-                                        -76.4 + 360.0]
-    assert [r["t_hours"] for r in rows] == [3, 9, 15]
-    assert [r["intensity_kt"] for r in rows] == [35, 40, 65]
+    for name, pad in (("spaced", " "), ("pretty", "\n\t  \r\n  ")):
+        kmz = kmz_to_track(spark, _write_kmz(tmp_path / f"{name}.kmz", pad))
+        assert kmz.schema == csv.schema, name
+        rows = kmz.collect()
+        assert rows == csv.collect(), name
+        assert [r["lon"] for r in rows] == [-75.3 + 360.0, -75.9 + 360.0,
+                                            -76.4 + 360.0]
+        assert [r["t_hours"] for r in rows] == [3, 9, 15]
+        assert [r["intensity_kt"] for r in rows] == [35, 40, 65]
 
 
 def test_kmz_track_profiles_directly(spark, tmp_path):
